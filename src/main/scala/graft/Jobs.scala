@@ -24,7 +24,11 @@ package graft
   * Failure semantics: ALL in-flight siblings are awaited before the
   * first failure propagates — a caller tearing down shared state after
   * catching (e.g. [[CacheScope.withScope]] unpersisting frames) must
-  * never race a sibling job that is still reading those frames.
+  * never race a sibling job that is still reading those frames. An
+  * interrupt of the calling thread keeps the same promise: the siblings
+  * are interrupted, awaited until every pool thread has exited, and the
+  * caller's interrupt flag is restored before the
+  * `InterruptedException` propagates.
   */
 object Jobs {
 
@@ -51,8 +55,17 @@ object Jobs {
         val futures = tasks.map(t => pool.submit(
           new java.util.concurrent.Callable[A] { def call(): A = t() }))
         // await EVERY task (success or failure) before propagating, so no
-        // sibling is still running when the caller unwinds
-        val results = futures.map(f => scala.util.Try(f.get()))
+        // sibling is still running when the caller unwinds. Try does not
+        // catch InterruptedException (not NonFatal): an interrupted caller
+        // cancels the siblings and waits for them to stop instead
+        val results =
+          try futures.map(f => scala.util.Try(f.get()))
+          catch {
+            case e: InterruptedException =>
+              cancelAndAwait(pool)
+              Thread.currentThread().interrupt()
+              throw e
+          }
         results.collectFirst {
           case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
             throw e.getCause
@@ -63,6 +76,18 @@ object Jobs {
         pool.shutdown()
         ()
       }
+    }
+  }
+
+  /** Interrupt every running task and block until all pool threads have
+    * exited. Interrupts arriving while waiting are deferred, not lost: the
+    * caller re-raises the flag once the pool is down. */
+  private def cancelAndAwait(pool: java.util.concurrent.ExecutorService): Unit = {
+    pool.shutdownNow()
+    var done = false
+    while (!done) {
+      try done = pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      catch { case _: InterruptedException => () }
     }
   }
 

@@ -548,53 +548,55 @@ object Dedup {
     * derivation changes (r19 moved it from md5-prefix to xxhash64).
     * Probing a store written under a DIFFERENT format returns zero
     * matches — silently missed duplicates and mixed-key purge rewrites —
-    * so every path-level reader/writer of a gram store runs
-    * [[gramKeyFormatGuard]] first and fails fast on a mismatch. */
+    * so every gram-store writer stamps it ([[stampGramKeyFormat]]) and
+    * every path-level reader runs [[gramKeyFormatGuard]] first. */
   private[graft] val GramKeyFormat = "xxhash64.v1"
 
   private[graft] val GramKeyFormatFile = "_gram_key_format"
 
-  /** Enforce the gram-store key-format contract at `gramsPath`:
-    *
-    *  - marker present and equal to [[GramKeyFormat]] — proceed;
-    *  - marker present but different — fail fast (the store's keys and
-    *    this build's probe keys can never match);
-    *  - data present with NO marker — a store from before the marker
-    *    existed (md5-prefix era): fail fast with the migration path;
-    *  - empty/absent store — stamp the marker (underscore-prefixed, so
-    *    parquet readers and partition discovery never see it as data).
-    */
+  /** The key format stamped at `gramsPath`, if any. Read-only. */
+  private[graft] def gramKeyFormatOf(
+      spark: org.apache.spark.sql.SparkSession,
+      gramsPath: String): Option[String] = {
+    val marker = new org.apache.hadoop.fs.Path(gramsPath, GramKeyFormatFile)
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(marker)) None
+    else {
+      val in = fs.open(marker)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
+      finally in.close()
+    }
+  }
+
+  /** Enforce the gram-store key-format contract at `gramsPath`: fail fast
+    * when a marker is present and names a format other than
+    * [[GramKeyFormat]] (the store's keys and this build's probe keys can
+    * never match). A store without a marker — absent, empty, or written
+    * before writers stamped one — proceeds: the md5-prefix era's staged
+    * stores live under another path, and the next write stamps it.
+    * Read-only: creates no directory and no marker. */
   def gramKeyFormatGuard(
       spark: org.apache.spark.sql.SparkSession,
-      gramsPath: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(gramsPath), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(gramsPath)
-    val marker = new org.apache.hadoop.fs.Path(root, GramKeyFormatFile)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val found =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
+      gramsPath: String): Unit =
+    gramKeyFormatOf(spark, gramsPath).foreach { found =>
       require(found == GramKeyFormat,
         s"gram store at $gramsPath is keyed '$found' but this build derives " +
           s"'$GramKeyFormat' keys — probing it would silently miss every " +
           "duplicate; rebuild the store by re-ingesting the surviving " +
           "documents (the purgeSpanStores replay over the full corpus) " +
           "before mixing key formats")
-    } else if (fs.exists(root) &&
-        fs.listStatus(root).exists(!_.getPath.getName.startsWith("_"))) {
-      throw new IllegalStateException(
-        s"gram store at $gramsPath holds data but carries no " +
-          s"$GramKeyFormatFile marker — a pre-versioning (md5-prefix era) " +
-          s"store cannot be probed by '$GramKeyFormat' keys; rebuild it by " +
-          "re-ingesting the surviving documents, which stamps the marker")
-    } else {
-      fs.mkdirs(root)
-      val out = fs.create(marker, true)
-      try out.write(GramKeyFormat.getBytes("UTF-8")) finally out.close()
-      ()
     }
+
+  /** Record [[GramKeyFormat]] at `gramsPath` — every gram-store writer
+    * calls it after its partitions land (underscore-prefixed, so parquet
+    * readers and partition discovery never see it as data). */
+  private[graft] def stampGramKeyFormat(
+      spark: org.apache.spark.sql.SparkSession,
+      gramsPath: String): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(gramsPath, GramKeyFormatFile)
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(marker, true)
+    try out.write(GramKeyFormat.getBytes("UTF-8")) finally out.close()
   }
 
   /** Takedown over the STANDING SPANS STORES — the removal direction of
@@ -807,6 +809,7 @@ object Dedup {
           survivorIds.foreach { case (b, _) =>
             survivorGrams(b).write.mode("overwrite").parquet(s"$gramsPath/ingest_batch=$b")
           }
+          stampGramKeyFormat(spark, gramsPath)
           // ---- phase 3: retire the removed ids, last — while any removed
           // id remains here, a re-run still sees its batch as affected
           survivorIds.foreach { case (b, batchIds) =>
@@ -865,6 +868,7 @@ object Dedup {
       runConcurrently(replay.map(b => () =>
         spanGramsOf(batchDocs(b), "id", "t", k, stride, scope)
           .write.mode("overwrite").parquet(s"$gramsPath/ingest_batch=$b")))
+      stampGramKeyFormat(spark, gramsPath)
       runConcurrently(replay.map(b => () =>
         incrementalDuplicatedSpans(batchDocs(b), "id", "t",
             spark.read.parquet(gramsPath)

@@ -14,7 +14,7 @@ import graft.meta.{Currents, MetaColumns}
   * `get_valid_from_date` :88-108, `historize_dataset` :297-301,
   * `split_merged_dataset` :311-316).
   *
-  * Two physical forms behind one semantic contract:
+  * One semantic contract, one physical merge:
   *
   *  - [[mergeScd2]] — the faithful five-branch classification (current-only,
   *    new-only, unchanged, changed-current, changed-new) unioned together,
@@ -22,12 +22,17 @@ import graft.meta.{Currents, MetaColumns}
   *    four times → four shuffles of the same data. Kept as the executable
   *    specification.
   *
-  *  - [[mergeScd2Fast]] — one full-outer join of the *active* slice of the
-  *    current store against the new snapshot on KEY_HASH, classification
-  *    flags, then a single explode that emits 0–2 output rows per joined
-  *    row (close-out + successor for changes). Closed history rows never
-  *    enter the join at all. One shuffle of each input; at 100 TB this is
-  *    the difference between 2 exchanges and 8.
+  *  - [[fusedMerge]] — the merge every other form runs: one full-outer
+  *    join of the OPEN rows against the new snapshot on KEY_HASH, one
+  *    digest-only left join against a guard set of closed keys, then a
+  *    single explode that emits 0–2 output rows per joined row. Closed
+  *    history rows never enter the join. One shuffle of each input; at
+  *    100 TB this is the difference between 2 exchanges and 8. With close
+  *    and reopen off it is the plain merge ([[mergeScd2Fast]]); with them
+  *    on, the same emit also closes vanished keys and reopens closed-only
+  *    ones — the whole full-load lifecycle ([[mergeScd2FastClosing]] over
+  *    a flat store, [[Scd2Tier.historizeTiered]] over the tiered one, whose
+  *    archive keys are the guard set).
   *
   * Day-granularity anomaly reproduced as specified (SURVEY.md §7.4#4):
   * changed rows close at `date_sub(runDay, 1)` while successors open at
@@ -120,14 +125,9 @@ object Scd2 {
 
   /** Single-shuffle SCD2 merge: same result as [[mergeScd2]] (assuming
     * key-unique active slice and key-unique snapshot — the reference's
-    * implicit contract), produced from ONE full-outer join plus an explode.
-    *
-    * Physical shape: closed rows are filtered out before the join (they can
-    * never change), the active slice and the snapshot are joined once on
-    * KEY_HASH, and each joined row emits its 0–2 output rows through
-    * `explode(filter(array(structs), notNull))` — whole-stage codegen end to
-    * end, no repeated scans, no driver round-trips. A hash-only join against
-    * the distinct closed-key set preserves the faithful path's `NOT IN
+    * implicit contract): closed rows pass through untouched, the active
+    * slice runs through [[fusedMerge]] with close and reopen off, and the
+    * distinct closed keys are its guard set — the faithful path's `NOT IN
     * (full current)` semantics for keys surviving only as closed rows.
     *
     * When `currentDf` is a derived plan (not a store read), persist it first
@@ -137,109 +137,97 @@ object Scd2 {
       currentDf: DataFrame,
       newDf: DataFrame,
       currents: Currents,
-      mode: ValidFromMode): DataFrame = {
-    val outCols  = currentDf.columns.toSeq
-    val runDay   = to_date(lit(currents.runDay))
-    val closed   = currentDf.filter(col(ValidTo) =!= upperBound || col(ValidTo).isNull)
-    val active   = currentDf.filter(col(ValidTo) === upperBound)
+      mode: ValidFromMode): DataFrame =
+    flatMerge(currentDf, newDf, currents, mode, closeAndReopen = false)
 
-    val c = active.alias("c")
-    val n = newDf.alias("n")
-    // Keys that exist only as closed rows must NOT be re-inserted: the
-    // faithful path's new_only branch anti-joins against the FULL current
-    // store, closed rows included (SCDHelpers.py:154-156). The join moves
-    // only 32-byte digests; at scale it is broadcast- or bucket-joinable.
-    val closedKeys = closed.select(col(KeyHash).as("__closed_key")).distinct()
-    val joined = c.join(n, col("c." + KeyHash) === col("n." + KeyHash), "full_outer")
-      .join(closedKeys, col("n." + KeyHash) === col("__closed_key"), "left_outer")
-
-    val hasC     = col("c." + KeyHash).isNotNull
-    val hasN     = col("n." + KeyHash).isNotNull
-    val inClosed = col("__closed_key").isNotNull
-    val changed  = hasC && hasN && (col("c." + RecordHash) =!= col("n." + RecordHash))
-
-    // current-side output row: closed-out stamp when changed, else as-is
-    val currentSide = struct(outCols.map {
-      case UpdateTs    => when(changed, lit(currents.runTs).cast("timestamp"))
-                            .otherwise(col("c." + UpdateTs)).as(UpdateTs)
-      case UpdateRunId => when(changed, lit(currents.runId))
-                            .otherwise(col("c." + UpdateRunId)).as(UpdateRunId)
-      case ValidTo     => when(changed, date_sub(runDay, 1))
-                            .otherwise(col("c." + ValidTo)).as(ValidTo)
-      case other       => col("c." + other).as(other)
-    }: _*)
-
-    // new-side output row: fresh key opens per mode, successor opens at runDay
-    val newSide = struct(outCols.map {
-      case ValidFrom => when(!hasC, to_date(lit(validFromDate(mode, currents))))
-                          .otherwise(runDay).as(ValidFrom)
-      case ValidTo   => upperBound.as(ValidTo)
-      case other     => col("n." + other).as(other)
-    }: _*)
-
-    val emitted = joined.select(
-      explode(filter(array(
-        when(hasC, currentSide),
-        when(changed || (!hasC && !inClosed), newSide)
-      ), x => x.isNotNull)).as("r"))
-      .select(outCols.map(cn => col("r." + cn)): _*)
-
-    closed.unionByName(emitted)
-  }
-
-  /** [[mergeScd2Fast]] with the vanished-key CLOSURE fused into the same
-    * full-outer join — row-identical (spec-pinned in Scd2Spec) to the
-    * sequential composition
-    * `closeVanished(mergeScd2Fast(currentDf, newDf, currents, mode), newDf, currents)`
-    * under the merge forms' key-unique contract, at HALF the passes: the
-    * sequential form re-derives the merged frame's active keys and joins
-    * the whole merged output against the snapshot keys again, so the
-    * full-outer join subtree is evaluated twice; here a current-side row
-    * with no snapshot match (`hasC && !hasN`) IS the vanished key — the
-    * join already proves the absence the closure's anti-join re-proves —
-    * and it closes in the same emit (`VALID_TO = runDay − 1`,
-    * UPDATE_TS/UPDATE_RUN_ID stamped, DELETED stamped first-observation-
-    * wins when the store carries the column, exactly
-    * [[closeDeleted]]'s branches).
-    *
-    * `currentAllActive = true` additionally skips the closed-slice split
-    * and the closed-key guard join: the TIERED store's active tier
-    * contains open rows only by construction ([[splitMergedDataset]]
-    * routes every closed row to the archive; the bootstrap write is
-    * all-open), so `closed` is provably empty and the two extra scans +
-    * one distinct shuffle that derive it are dead weight per run. Callers
-    * whose current frame can hold closed rows MUST leave it false. */
+  /** The full delete lifecycle of one full load in ONE merge: [[mergeScd2Fast]]
+    * with resurrection and vanished-key closure fused into the same
+    * full-outer join. Row-identical (spec-pinned by Scd2Spec's seeded
+    * lifecycle property) to the sequential composition
+    * `closeVanished(mergeScd2Reopen(currentDf, newDf, currents, mode), newDf, currents)`
+    * under the merge forms' key-unique contract, at a fraction of the
+    * passes: the sequential form joins the snapshot three times (merge,
+    * reopen semi-join, closure anti-join) and the merged output once more;
+    * here the one join already proves what the extra joins re-prove — an
+    * active row with no snapshot match IS the vanished key, a snapshot row
+    * with no active match whose key is in the closed slice IS the
+    * closed-only key. Like the reopen delta, the reopen branch makes no
+    * key-uniqueness assumption: every snapshot row of a closed-only key
+    * opens a fresh interval. Persist `currentDf` first when it is a derived
+    * plan, as for [[mergeScd2Fast]]. */
   def mergeScd2FastClosing(
       currentDf: DataFrame,
       newDf: DataFrame,
       currents: Currents,
-      mode: ValidFromMode,
-      currentAllActive: Boolean = false): DataFrame = {
-    val outCols  = currentDf.columns.toSeq
-    val runDay   = to_date(lit(currents.runDay))
-    val closed   =
-      if (currentAllActive) None
-      else Some(currentDf.filter(col(ValidTo) =!= upperBound || col(ValidTo).isNull))
-    val active   =
-      if (currentAllActive) currentDf
-      else currentDf.filter(col(ValidTo) === upperBound)
+      mode: ValidFromMode): DataFrame =
+    flatMerge(currentDf, newDf, currents, mode, closeAndReopen = true)
 
+  /** [[fusedMerge]] over a flat store: the closed slice passes through and
+    * its distinct keys guard the active slice's merge. */
+  private def flatMerge(
+      currentDf: DataFrame,
+      newDf: DataFrame,
+      currents: Currents,
+      mode: ValidFromMode,
+      closeAndReopen: Boolean): DataFrame = {
+    val closed = currentDf.filter(col(ValidTo) =!= upperBound || col(ValidTo).isNull)
+    val active = currentDf.filter(col(ValidTo) === upperBound)
+    closed.unionByName(fusedMerge(active, newDf,
+      Some(closed.select(col(KeyHash)).distinct()), currents, mode, closeAndReopen))
+  }
+
+  /** The one physical SCD2 merge: ONE full-outer join of the open rows
+    * against the snapshot on KEY_HASH, at most one left join against the
+    * guard set, then `explode(filter(array(structs), notNull))` emits 0–2
+    * rows per joined row — whole-stage codegen end to end, one shuffle of
+    * each input, no repeated scans, no driver round-trips. Per joined row:
+    *
+    *  - both sides, same RECORD_HASH: the active row as-is;
+    *  - both sides, changed: the active row closes (`VALID_TO = runDay −
+    *    1`, UPDATE_TS/UPDATE_RUN_ID stamped) and its successor opens at
+    *    runDay;
+    *  - active row only: as-is, or with `closeAndReopen` closed like a
+    *    change plus DELETED stamped when still null (first observation
+    *    wins, [[closeDeleted]]'s branches);
+    *  - snapshot row only, key not guarded: a new key, opens at the
+    *    `mode` epoch;
+    *  - snapshot row only, key guarded (closed history, no open row):
+    *    dropped (the reference's `new_only` anti-join against the FULL
+    *    store), or with `closeAndReopen` reopened at runDay — the
+    *    validity gap since the close stays an honest `asOf` gap.
+    *
+    * @param active open rows only (VALID_TO at the upper bound); its
+    *               column order is the output's
+    * @param guardKeys distinct KEY_HASH digests of the keys with closed
+    *               history; None when none can exist (adds no join)
+    */
+  private[graft] def fusedMerge(
+      active: DataFrame,
+      newDf: DataFrame,
+      guardKeys: Option[DataFrame],
+      currents: Currents,
+      mode: ValidFromMode,
+      closeAndReopen: Boolean): DataFrame = {
+    val outCols  = active.columns.toSeq
+    val runDay   = to_date(lit(currents.runDay))
     val c = active.alias("c")
     val n = newDf.alias("n")
     val base = c.join(n, col("c." + KeyHash) === col("n." + KeyHash), "full_outer")
-    val joined = closed.fold(base) { cl =>
-      base.join(cl.select(col(KeyHash).as("__closed_key")).distinct(),
-        col("n." + KeyHash) === col("__closed_key"), "left_outer")
-    }
+    // guard on the SNAPSHOT key: only a snapshot row without an active
+    // match consults it. The join moves only 32-byte digests; at scale it
+    // is broadcast- or bucket-joinable
+    val joined = guardKeys.fold(base)(g =>
+      base.join(g.select(col(KeyHash).as("__guard_key")),
+        col("n." + KeyHash) === col("__guard_key"), "left_outer"))
 
     val hasC     = col("c." + KeyHash).isNotNull
     val hasN     = col("n." + KeyHash).isNotNull
-    val inClosed = if (currentAllActive) lit(false) else col("__closed_key").isNotNull
+    val guarded  = if (guardKeys.isEmpty) lit(false) else col("__guard_key").isNotNull
     val changed  = hasC && hasN && (col("c." + RecordHash) =!= col("n." + RecordHash))
-    // the active slice holds open rows only, so an unmatched current-side
-    // row is exactly closeVanished's "active key absent from the snapshot"
-    val vanished = hasC && !hasN
+    val vanished = if (closeAndReopen) hasC && !hasN else lit(false)
     val closeOut = changed || vanished
+    val fresh    = !hasC && !guarded
+    val opens    = changed || (if (closeAndReopen) !hasC else fresh)
 
     val currentSide = struct(outCols.map {
       case UpdateTs    => when(closeOut, lit(currents.runTs).cast("timestamp"))
@@ -254,21 +242,21 @@ object Scd2 {
       case other       => col("c." + other).as(other)
     }: _*)
 
+    // new-side output row: a fresh key opens per mode; a successor or a
+    // reopened key opens at runDay
     val newSide = struct(outCols.map {
-      case ValidFrom => when(!hasC, to_date(lit(validFromDate(mode, currents))))
+      case ValidFrom => when(fresh, to_date(lit(validFromDate(mode, currents))))
                           .otherwise(runDay).as(ValidFrom)
       case ValidTo   => upperBound.as(ValidTo)
       case other     => col("n." + other).as(other)
     }: _*)
 
-    val emitted = joined.select(
+    joined.select(
       explode(filter(array(
         when(hasC, currentSide),
-        when(changed || (!hasC && !inClosed), newSide)
+        when(opens, newSide)
       ), x => x.isNotNull)).as("r"))
       .select(outCols.map(cn => col("r." + cn)): _*)
-
-    closed.fold(emitted)(_.unionByName(emitted))
   }
 
   /** Bootstrap-aware wrapper (SCDHelpers.py:297-301): when no current store
@@ -427,24 +415,13 @@ object Scd2 {
       currentDf: DataFrame,
       newDf: DataFrame,
       currents: Currents): DataFrame = {
+    require(newDf.columns.contains(KeyHash),
+      s"newDf must carry $KeyHash (enrich the snapshot first)")
     val activeKeys = currentDf.filter(col(ValidTo) === upperBound)
       .select(col(KeyHash)).distinct()
     val closedOnly = currentDf.select(col(KeyHash)).distinct()
       .join(activeKeys, Seq(KeyHash), "left_anti")
-    reopenDeltaKeys(closedOnly, newDf, currents)
-  }
-
-  /** Fresh intervals for the snapshot rows of an EXPLICIT closed-only key
-    * set — the core [[reopenDelta]] derives its set from a flat store;
-    * [[Scd2Tier]] derives it from the history tier's key digests, where
-    * the flat derivation would see no closed rows at all. */
-  private[operators] def reopenDeltaKeys(
-      closedOnlyKeys: DataFrame,
-      newDf: DataFrame,
-      currents: Currents): DataFrame = {
-    require(newDf.columns.contains(KeyHash),
-      s"newDf must carry $KeyHash (enrich the snapshot first)")
-    newDf.join(closedOnlyKeys.select(col(KeyHash)).distinct(), Seq(KeyHash), "left_semi")
+    newDf.join(closedOnly, Seq(KeyHash), "left_semi")
       .withColumn(ValidFrom, to_date(lit(currents.runDay)))
       .withColumn(ValidTo, upperBound)
   }

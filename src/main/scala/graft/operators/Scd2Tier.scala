@@ -28,14 +28,16 @@ import graft.sources.Store
   *    archive is write-once — object-store friendly, compactable and
   *    stats-manifestable offline without touching the merge path.
   *
-  * Semantics are pinned to the flat lifecycle: [[historizeTiered]] over a
-  * sequence of full loads yields (active ∪ history) row-identical to
+  * Each run is the ONE fused merge of the flat lifecycle
+  * ([[Scd2.fusedMerge]] with close and reopen on, as
+  * [[Scd2.mergeScd2FastClosing]] runs it over a flat store): the flat form
+  * guards its active slice with its own closed slice's keys, the tier
+  * with the archive's key digests. So [[historizeTiered]] over a sequence
+  * of full loads yields (active ∪ history) row-identical to
   * [[Scd2.mergeScd2Reopen]] + [[Scd2.closeVanished]] over a flat store —
   * merge branches, vanished-key closure with the DELETED stamp, and
   * resurrection with the validity gap preserved (the `x_scd2_tiered`
-  * oracle answers the flat statement). The reopen key set derives from
-  * the history tier's digests ([[Scd2.reopenDeltaKeys]]); like
-  * [[Scd2.reopenClosed]] it makes no key-uniqueness assumption.
+  * oracle answers the flat statement; Scd2TierSpec and Scd2Spec pin it).
   *
   * Crash contract (history first, active swap second): a replay BEFORE
   * the active swap recomputes the identical closed set and overwrites
@@ -76,43 +78,24 @@ object Scd2Tier {
             + "overlapping epochs over it")
         Store.writeStoreSwap(
           Scd2.historizeDataset(newDf, None, currents, mode), activePath, Nil)
-      case Some(activeStore) =>
+      case Some(active) =>
         graft.CacheScope.withScope { scope =>
-          // the active tier is a plain STORE READ: re-scanning columnar
-          // parquet for its two merge references costs less than building
-          // a cache of it (measured r19: the cache build alone exceeded
-          // the whole uncached merge chain), and at 100 TB caching the
-          // full active tier would evict everything else on the
-          // executors. The snapshot is likewise left uncached — its
-          // references live inside the ONE materialized plan
-          // (closedFinal), and a caller whose snapshot is expensive to
-          // derive can persist it upstream. Only closedFinal persists:
-          // three actions consume it (the isEmpty guard and both writes).
-          val active = activeStore
-          val snap = newDf
-          // keys living ONLY in the archive = resurrection candidates.
-          // KEY_HASH-projected scan: the archive's payload never loads.
-          val closedOnly = historyKeys(spark, historyPath)
-            .map(_.join(active.select(col(KeyHash)).distinct(),
-              Seq(KeyHash), "left_anti"))
-          // resurrected keys must NOT reach the merge: against an
-          // active-only current they would classify new_only and open at
-          // the new-key epoch (mode) instead of the run day
-          val snapCore = closedOnly.fold(snap)(keys =>
-            snap.join(keys, Seq(KeyHash), "left_anti"))
-          val merged = Scd2.mergeScd2Fast(active, snapCore, currents, mode)
-          val withReopen = closedOnly.fold(merged)(keys =>
-            merged.unionByName(Scd2.reopenDeltaKeys(keys, snap, currents)
-              .select(merged.columns.map(col).toSeq: _*)))
-          // closure diffs the ACTIVE slice against the FULL snapshot (a
-          // resurrected key is in the snapshot — never re-closed)
-          val closedFinal = scope.persist(
-            Scd2.closeVanished(withReopen, snap, currents))
-          val (hist, activeRows) = Scd2.splitMergedDataset(closedFinal)
+          // ONE fused merge: the active tier full-outer-joins the FULL
+          // snapshot and the archive's KEY_HASH digests guard it — a
+          // snapshot key with no active row whose key is archived is a
+          // closed-only key and reopens at the run day instead of opening
+          // at the new-key epoch; an active key absent from the snapshot
+          // closes in the same emit. The active tier holds open rows only
+          // (every closed row is routed to the archive), so it needs no
+          // closed-slice split; with no archive yet there is no guard join.
+          // Each input is scanned once, so neither is cached; only the
+          // merge output persists: three actions consume it (the isEmpty
+          // guard and both writes).
+          val merged = scope.persist(Scd2.fusedMerge(active, newDf,
+            historyKeys(spark, historyPath), currents, mode, closeAndReopen = true))
+          val (hist, activeRows) = Scd2.splitMergedDataset(merged)
           appendHistory(spark, hist, historyPath, currents)
-          Store.writeStoreSwap(
-            activeRows.select(active.columns.map(col).toSeq: _*),
-            activePath, Nil)
+          Store.writeStoreSwap(activeRows, activePath, Nil)
         }
     }
   }

@@ -937,14 +937,6 @@ object TextAnalysis {
     when(n === 0, lit(0.0)).otherwise(h)
   }
 
-  /** Fraction of tokens containing at least one ASCII letter (C4-style
-    * "real word" signal). */
-  def alphaTokenRatio(text: Column): Column = {
-    val toks = tokens(text)
-    round(size(filter(toks, t => t.rlike("[A-Za-z]"))).cast("double") /
-      greatest(size(toks), lit(1)), 6)
-  }
-
   /** All five Gopher metrics derived from ONE tokenization. The
     * per-metric helpers each re-run the interpreted split+filter
     * tokenizer (HOF lambdas defeat subexpression elimination, and

@@ -171,8 +171,6 @@ private[graft] object Helpers {
     ()
   }
 
-  private[graft] def ensureWarcFixture(): Unit = writeWarcFixture(warcFixtureDir)
-
   /** SQL VALUES literal of [[warcGoodRecords]] with each record's payload
     * byte length — the oracle twin of the good-record scan. */
   private[graft] val warcValuesSql: String = {
@@ -984,7 +982,6 @@ private[graft] object Helpers {
     // directory — the identical standing set the sequential loop read —
     // and the ids wave runs last, mirroring the streaming loop's
     // spans-then-maintenance order per batch
-    Dedup.gramKeyFormatGuard(s, s"$root/grams")
     graft.CacheScope.withScope { scope =>
       val batches = (0 to 2).map { b =>
         b -> scope.persist(docs.filter(pmod(col("id"), lit(3)) === b))
@@ -992,6 +989,7 @@ private[graft] object Helpers {
       Dedup.runConcurrently((0 to 2).map(b => () =>
         Dedup.spanGramsOf(batches(b), "id", "t", k = 30, stride = 1, scope = scope)
           .write.mode("overwrite").parquet(s"$root/grams/ingest_batch=$b")))
+      Dedup.stampGramKeyFormat(s, s"$root/grams")
       Dedup.runConcurrently((0 to 2).map(b => () =>
         Dedup.incrementalDuplicatedSpans(batches(b), "id", "t",
             if (b == 0) s.range(0).select(col("id").as("gh"))
@@ -1009,12 +1007,15 @@ private[graft] object Helpers {
   private[graft] def stagedSpanStores(s: SparkSession, d: String): String = {
     // path suffix `h64`: the gram stores persist spanGrams' hash keys,
     // which moved from md5-prefix to xxhash64 in r19 — a stale committed
-    // md5-keyed store must not be probed by xxhash64 batch grams
+    // md5-keyed store must not be probed by xxhash64 batch grams. A store
+    // whose gram key-format marker is missing or stale (built before
+    // writers stamped it) rebuilds too
     val root = s"/tmp/graft_staged/${dirTag(d, "documents")}/span_stores_h64"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$root/ids/ingest_batch=2/_SUCCESS")
-    if (!fs.exists(marker)) {
+    val done = new org.apache.hadoop.fs.Path(s"$root/ids/ingest_batch=2/_SUCCESS")
+    if (!fs.exists(done) ||
+        !Dedup.gramKeyFormatOf(s, s"$root/grams").contains(Dedup.GramKeyFormat)) {
       fs.delete(new org.apache.hadoop.fs.Path(root), true)
       buildSpanStores(s, d, root)
     }

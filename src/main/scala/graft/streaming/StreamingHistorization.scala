@@ -882,15 +882,16 @@ object StreamingHistorization {
       spansPath: String,
       checkpoint: String,
       k: Int = 50,
-      stride: Int = 1): DataStreamWriter[org.apache.spark.sql.Row] =
+      stride: Int = 1): DataStreamWriter[org.apache.spark.sql.Row] = {
+    // key-format contract, checked once at stream setup: refuse to
+    // probe/extend a gram store keyed under a different hash derivation
+    // (silent zero-match otherwise)
+    graft.operators.Dedup.gramKeyFormatGuard(docs.sparkSession, gramsPath)
     docs.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
-        // key-format contract: refuse to probe/extend a gram store keyed
-        // under a different hash derivation (silent zero-match otherwise)
-        graft.operators.Dedup.gramKeyFormatGuard(session, gramsPath)
         graft.CacheScope.withScope { scope =>
           def prior(p: String) = Store.readParquetStrict(session, p)
             .map(_.filter(col("ingest_batch") < batchId))
@@ -907,11 +908,13 @@ object StreamingHistorization {
           spans.write.mode("overwrite").parquet(s"$spansPath/ingest_batch=$batchId")
           graft.operators.Dedup.spanGramsOf(novel, "id", "t", k, stride, scope)
             .write.mode("overwrite").parquet(s"$gramsPath/ingest_batch=$batchId")
+          graft.operators.Dedup.stampGramKeyFormat(session, gramsPath)
           novel.select("id").write.mode("overwrite")
             .parquet(s"$idsPath/ingest_batch=$batchId")
         }
         ()
       }
+  }
 
   /** Streaming takedown — the REMOVAL direction of the continuous
     * maintenance story ([[clusterMaintainStream]] is the ingestion
@@ -1160,17 +1163,17 @@ object StreamingHistorization {
       }
 
   /** SCD2 full-snapshot lifecycle as a stream — the streaming twin of the
-    * COMPLETE delete lifecycle ([[graft.operators.Scd2.closeVanished]] /
-    * [[graft.operators.Scd2.mergeScd2Reopen]]). Contract: each micro-batch
-    * is ONE full load (drive file sources with `maxFilesPerTrigger=1` or
-    * one trigger per drop — two coalesced snapshots would make the younger
-    * one's absences look like deletes). Per batch: the snapshot
-    * meta-enriches under a batch-derived run context, merges WITH
-    * resurrection (new/changed/unchanged branches plus closed-only keys
-    * reopening at the run day, the deleted epoch preserved as an as-of
-    * gap), then vanished keys close (active rows absent from the snapshot
-    * end the day before, `DELETED` stamped), and the result swap-replaces
-    * the store.
+    * COMPLETE delete lifecycle ([[graft.operators.Scd2.mergeScd2FastClosing]]:
+    * merge, resurrection and vanished-key closure in one fused merge).
+    * Contract: each micro-batch is ONE full load (drive file sources with
+    * `maxFilesPerTrigger=1` or one trigger per drop — two coalesced
+    * snapshots would make the younger one's absences look like deletes).
+    * Per batch: the snapshot meta-enriches under a batch-derived run
+    * context and merges WITH resurrection (new/changed/unchanged branches
+    * plus closed-only keys reopening at the run day, the deleted epoch
+    * preserved as an as-of gap) and closure (active rows absent from the
+    * snapshot end the day before, `DELETED` stamped) in the same pass,
+    * and the result swap-replaces the store.
     *
     * Exactly-once without a transaction log, by a different route than
     * the append-family streams (no batch partition to overwrite — the
@@ -1181,9 +1184,10 @@ object StreamingHistorization {
     * longer active (nothing to close), and no snapshot key is
     * closed-only (nothing to reopen). Spec'd directly on the batch core.
     *
-    * Scale shape: the batch forms' plans — one wide merge shuffle plus
-    * digest-only closure joins; the store is read once per batch and
-    * persisted across the merge's five self-references. */
+    * Scale shape: the batch form's plan — one wide merge shuffle plus a
+    * digest-only guard join; the store is read once per batch and
+    * persisted across the merge's three self-references (closed slice,
+    * its keys, active slice). */
   def scd2LifecycleStream(
       snapshots: DataFrame,
       storePath: String,
@@ -1253,10 +1257,7 @@ object StreamingHistorization {
         case None =>
           graft.operators.Scd2.historizeDataset(snap, None, cur, mode)
         case Some(store) =>
-          val current = scope.persist(store)
-          graft.operators.Scd2.closeVanished(
-            graft.operators.Scd2.mergeScd2Reopen(current, snap, cur, mode),
-            snap, cur)
+          graft.operators.Scd2.mergeScd2FastClosing(scope.persist(store), snap, cur, mode)
       }
       Store.writeStoreSwap(merged, storePath, Nil)
     }

@@ -746,6 +746,33 @@ class DedupSpec extends SparkSpec {
     assert(got(5L) === got(6L))
   }
 
+  test("gram key-format guard is read-only and fails only on a different marker") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-gram-format").toString
+    val grams = s"$dir/grams"
+    val marker = new java.io.File(grams, Dedup.GramKeyFormatFile)
+    // absent store: passes, creates nothing
+    Dedup.gramKeyFormatGuard(spark, grams)
+    assert(!new java.io.File(grams).exists(), "a read-only check created the store root")
+    // data without a marker (written before writers stamped one): passes
+    Dedup.spanGramsOf(Seq((1L, "aaaaaaaaaaZZ")).toDF("id", "t"), "id", "t", k = 10)
+      .write.parquet(s"$grams/ingest_batch=0")
+    Dedup.gramKeyFormatGuard(spark, grams)
+    assert(!marker.exists(), "a read-only check stamped the marker")
+    // a writer stamps the current format, which the guard accepts
+    Dedup.stampGramKeyFormat(spark, grams)
+    assert(Dedup.gramKeyFormatOf(spark, grams).contains(Dedup.GramKeyFormat))
+    Dedup.gramKeyFormatGuard(spark, grams)
+    // a different format fails fast — in the batch guard and at stream setup
+    val foreign = new org.apache.hadoop.fs.Path(grams, Dedup.GramKeyFormatFile)
+    val out = foreign.getFileSystem(spark.sparkContext.hadoopConfiguration).create(foreign, true)
+    try out.write("md5prefix.v0".getBytes("UTF-8")) finally out.close()
+    intercept[IllegalArgumentException](Dedup.gramKeyFormatGuard(spark, grams))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
+    val stream = spark.readStream.schema("id LONG, t STRING").parquet(s"$dir/in")
+    intercept[IllegalArgumentException](graft.streaming.StreamingHistorization.spansStream(
+      stream, "id", "t", grams, s"$dir/ids", s"$dir/spans", s"$dir/chk", k = 10))
+  }
+
   test("purgeSpanStores replays only the affected suffix and kills survivor spans that depended on a removed doc") {
     val dir = java.nio.file.Files.createTempDirectory("graft-spans-suffix").toString
     // batch 0: A/B share a 10-gram; batch 1: D's only duplicated gram is

@@ -207,6 +207,69 @@ class PlanAuditSpec extends SparkSpec {
         s"scale with history payload width:\n$p")
   }
 
+  test("tiered SCD2 merge is ONE full-outer join that scans the snapshot once") {
+    // the fused lifecycle merge in plan form: one full-outer join of the
+    // active tier against the full snapshot plus a digest-only archive
+    // guard. A sequential lifecycle (anti-joined snapshot core, reopen
+    // semi-join, closure anti-join) scans the snapshot three times.
+    // The merge output is the one persisted frame, so its adaptive plan
+    // is the cached plan of the first action over it, captured from the
+    // run itself. Both the executed (final) plan and the initial one are
+    // checked: AQE prunes a branch that turns out empty at run time, so a
+    // second pass whose input happens to be empty would vanish from the
+    // final plan alone
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    val base = java.nio.file.Files.createTempDirectory("graft-tier-plan").toString
+    val (ap, hp) = (s"$base/active", s"$base/history")
+    val mode = graft.operators.Scd2.ValidFromMode.LoadDate
+    def run(i: Int, rows: Seq[(String, String)]): Unit = {
+      rows.toDF("k", "v").write.parquet(s"$base/snap$i")
+      val cur = graft.meta.Currents(s"2024-0${i + 1}-01 09:00:00")
+      graft.operators.Scd2Tier.historizeTiered(spark,
+        graft.operators.MetaEnrichment.addMetaColumns(
+          spark.read.parquet(s"$base/snap$i"), cur, Seq("k")), ap, hp, cur, mode)
+    }
+    run(1, Seq("a" -> "1", "b" -> "2", "c" -> "3"))
+    run(2, Seq("a" -> "9", "b" -> "2", "c" -> "3")) // a's old version archived
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { plans.add(qe.executedPlan); () }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def nodes(p: SparkPlan, initial: Boolean): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(if (initial) a.initialPlan else a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => m.children :+ m.relation.cachedPlan
+      case other => other.children
+    }).flatMap(nodes(_, initial))
+    def mergePlan: Option[SparkPlan] = plans.toArray(Array.empty[SparkPlan]).iterator
+      .flatMap(nodes(_, initial = false))
+      .collectFirst { case m: InMemoryTableScanExec => m.relation.cachedPlan }
+    spark.listenerManager.register(listener)
+    try {
+      run(3, Seq("a" -> "9", "b" -> "7", "d" -> "4")) // change, vanish, new key
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (mergePlan.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val plan = mergePlan.getOrElse(fail("no action over the persisted merge was seen"))
+    for (initial <- Seq(false, true)) {
+      val merge = nodes(plan, initial)
+      val fullOuter = merge.collect { case j: BaseJoinExec if j.joinType == FullOuter => j }
+      val snapScans = merge.collect {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.endsWith("snap3")) => s
+      }
+      assert(fullOuter.size === 1, s"expected ONE full-outer join:\n$plan")
+      assert(snapScans.size === 1, s"snapshot scanned ${snapScans.size} times:\n$plan")
+    }
+  }
+
   test("bloom-routed batch delta never exchanges the standing store") {
     // the route's 100 TB claim in plan form: the store is read once,
     // map-side, under a broadcast semi-join — zero shuffle exchanges

@@ -1,11 +1,14 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.meta.{Currents, MetaColumns}
-import graft.operators.{MetaEnrichment, Scd2}
+import graft.operators.{MetaEnrichment, Scd2, Scd2Tier}
 import graft.operators.Scd2.ValidFromMode
+import graft.sources.Store
 
 class Scd2Spec extends SparkSpec {
   import spark.implicits._
@@ -248,6 +251,101 @@ class Scd2Spec extends SparkSpec {
     assertSameResult(slow, fast)
     assert(fast.count() === 1)
     assert(fast.filter(col(ValidTo) === to_date(lit("9999-12-31"))).count() === 0)
+  }
+
+  /** The sequential lifecycle composition the fused merge replaces. */
+  private def lifecycleRef(cur: DataFrame, snap: DataFrame, c: Currents): DataFrame =
+    Scd2.closeVanished(Scd2.mergeScd2Reopen(cur, snap, c, ValidFromMode.LoadDate), snap, c)
+
+  /** One lifecycle run applied three ways — the sequential reference on
+    * the flat store, the fused merge on the same flat store, and the tier
+    * form at `base` — asserting all three agree; returns the new flat
+    * store (lineage truncated, so long sequences do not re-plan history). */
+  private def lifecycleStep(flat: DataFrame, snap: DataFrame, c: Currents, base: String)
+      : DataFrame = {
+    val ref = lifecycleRef(flat, snap, c).localCheckpoint()
+    assertSameResult(Scd2.mergeScd2FastClosing(flat, snap, c, ValidFromMode.LoadDate), ref)
+    Scd2Tier.historizeTiered(spark, snap, s"$base/active", s"$base/history", c,
+      ValidFromMode.LoadDate)
+    assertSameResult(Scd2Tier.readTiered(spark, s"$base/active", s"$base/history").get, ref)
+    ref
+  }
+
+  test("fused lifecycle merge: first DELETED wins, vanish-and-return, duplicated reopen key") {
+    val base = Files.createTempDirectory("graft-fused").toString
+    val (ap, hp) = (s"$base/active", s"$base/history")
+    val m = ValidFromMode.LoadDate
+    val c4 = Currents("2024-04-10 10:00:00")
+    val s1 = snapshot(Seq("a" -> "1", "b" -> "2", "c" -> "3", "d" -> "4"), c1)
+    Scd2Tier.historizeTiered(spark, s1, ap, hp, c1, m)
+    // an in-band soft delete observed c while its row stays open (the
+    // Cdc.stampDeleted convention) — on both stores alike
+    val softTs = "2024-02-01 08:00:00"
+    def softDelete(df: DataFrame) = df.withColumn(Deleted,
+      when($"k" === "c", lit(softTs).cast("timestamp")).otherwise(col(Deleted)))
+    Store.writeStoreSwap(softDelete(spark.read.parquet(ap)), ap, Nil)
+    val v1 = softDelete(Scd2.historizeDataset(s1, None, c1, m)).localCheckpoint()
+
+    // run 2, the first merge with no archive yet: no guard join and no
+    // placeholder frame — the plan joins exactly the two inputs once
+    val s2 = snapshot(Seq("a" -> "1", "b" -> "9", "c" -> "3"), c2)
+    assert(Scd2Tier.historyKeys(spark, hp).isEmpty)
+    val first = Scd2.fusedMerge(spark.read.parquet(ap), s2,
+      Scd2Tier.historyKeys(spark, hp), c2, m, closeAndReopen = true).queryExecution.analyzed
+    assert(first.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+      .size === 1)
+    assert(first.collectLeaves().size === 2)
+    // b changes, d vanishes
+    val v2 = lifecycleStep(v1, s2, c2, base)
+    // run 3: c vanishes (its earlier soft-delete stamp must survive the
+    // closure), d returns — delivered twice, both rows reopen
+    val s3 = snapshot(Seq("a" -> "1", "b" -> "9", "d" -> "5", "d" -> "5"), c3)
+    val v3 = lifecycleStep(v2, s3, c3, base)
+    // run 4: c returns with a new value; the twice-reopened d is unchanged
+    val v4 = lifecycleStep(v3, snapshot(Seq("a" -> "1", "b" -> "9", "c" -> "7", "d" -> "5"), c4),
+      c4, base)
+
+    def rowsOf(k: String) = v4.filter($"k" === k)
+      .select(col("v"), col(ValidFrom).cast("string"), col(ValidTo).cast("string"),
+        col(Deleted).cast("string"))
+      .as[(String, String, String, String)].collect().sortBy(r => (r._2, r._1)).toSeq
+    assert(rowsOf("c") === Seq(
+      ("3", "2024-01-01", "2024-03-19", softTs),   // first observation wins
+      ("7", "2024-04-10", "9999-12-31", null)))    // resurrected at the run day
+    assert(rowsOf("d") === Seq(
+      ("4", "2024-01-01", "2024-02-14", c2.runTs),
+      ("5", "2024-03-20", "9999-12-31", null),
+      ("5", "2024-03-20", "9999-12-31", null)))
+    // the deleted epochs are as-of gaps
+    assert(Scd2.asOf(v4, "2024-03-01").filter($"k" === "d").count() === 0)
+    assert(Scd2.asOf(v4, "2024-04-01").filter($"k" === "c").count() === 0)
+  }
+
+  test("fused lifecycle merge equals closeVanished ∘ mergeScd2Reopen over seeded sequences") {
+    // random change/vanish/return interleavings over a 6-key universe;
+    // every step compares the fused flat form and the tier form with the
+    // sequential composition applied to the same store
+    val rnd = new scala.util.Random(20261017L)
+    val universe = ('a' to 'f').map(_.toString)
+    def cur(day: Int) = Currents(java.time.LocalDate.of(2024, 1, 1).plusDays(day.toLong)
+      .atTime(9, 0).format(java.time.format.DateTimeFormatter.ofPattern(TsFormat)))
+    (1 to 2).foreach { trial =>
+      val base = Files.createTempDirectory(s"graft-fused-prop$trial").toString
+      def snapAt(day: Int) = {
+        val rows = universe.flatMap(k =>
+          if (rnd.nextInt(3) < 2) Some(k -> rnd.nextInt(3).toString) else None)
+        snapshot(if (rows.isEmpty) Seq("a" -> "0") else rows, cur(day))
+      }
+      val c0 = cur(10 * trial)
+      val s0 = snapAt(10 * trial)
+      Scd2Tier.historizeTiered(spark, s0, s"$base/active", s"$base/history", c0,
+        ValidFromMode.LoadDate)
+      (1 until 5).foldLeft(Scd2.historizeDataset(s0, None, c0, ValidFromMode.LoadDate)) {
+        (flat, i) =>
+          val day = 10 * trial + i
+          lifecycleStep(flat, snapAt(day), cur(day), base)
+      }
+    }
   }
 
   private def snapshotR(rows: Seq[(String, String)], c: Currents): DataFrame =
