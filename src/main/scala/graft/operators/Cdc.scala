@@ -38,16 +38,26 @@ object Cdc {
   /** [[delta]] re-keyed for a KEY_HASH-bucketed current store. The pair
     * anti-join's (KEY_HASH, RECORD_HASH) keys cannot use KEY_HASH-only
     * bucketing — the planner disables the bucketed scan and shuffles the
-    * whole store. This form collapses the store's record hashes into a
-    * per-key set (a groupBy on KEY_HASH — satisfied BY the bucketing, no
-    * Exchange) and joins on KEY_HASH alone, so the accumulated store never
-    * moves; only the incoming snapshot is exchanged to the bucket count.
+    * whole store. This form joins on KEY_HASH alone:
+    *
+    *  1. the store side is first left-semi-joined to the batch's keys, so
+    *     only keys the batch carries survive the scan (the bucketed scan
+    *     satisfies the semi-join's distribution; only the batch's keys are
+    *     exchanged or broadcast);
+    *  2. the survivors' record hashes collapse into a per-key set (a
+    *     groupBy on KEY_HASH — satisfied BY the bucketing, no Exchange);
+    *  3. the batch left-joins the sets on KEY_HASH.
+    *
+    * The aggregate, and anything AQE broadcasts from it, is bounded by the
+    * batch's distinct keys, not by the store; the accumulated store is
+    * scanned once and never moves (CdcSpec pins the aggregate's row count).
     * A new row is delta iff its key is absent or its record hash is not in
     * the key's set — exactly [[delta]]'s pair semantics (CdcSpec pins
     * equivalence; the l09_delta oracle checks this form end-to-end).
     * Versions per key are few, so the sets stay tiny. */
   def deltaBucketed(currentData: DataFrame, newData: DataFrame): DataFrame = {
-    val sets = currentData.groupBy(col(KeyHash))
+    val sets = currentData.join(newData.select(KeyHash), Seq(KeyHash), "left_semi")
+      .groupBy(col(KeyHash))
       .agg(collect_set(col(RecordHash)).as("__cur_rhs"))
     val deltaOrder = deltaOutputOrder(newData)
     newData.join(sets, Seq(KeyHash), "left_outer")

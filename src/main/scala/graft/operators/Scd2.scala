@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.meta.{Currents, MetaColumns}
 
@@ -10,9 +10,8 @@ import graft.meta.{Currents, MetaColumns}
   *
   * Re-expresses the reference's design-spec SCD2 path — the PySpark code
   * inside the dead `'''` blocks of src/PandasETLHelpers/SCDHelpers.py
-  * (`merge_scd2` :129-220, `create_empty_hist_dataframe` :10-18,
-  * `get_valid_from_date` :88-108, `historize_dataset` :297-301,
-  * `split_merged_dataset` :311-316).
+  * (`merge_scd2` :129-220, `get_valid_from_date` :88-108,
+  * `historize_dataset` :297-301, `split_merged_dataset` :311-316).
   *
   * One semantic contract, one physical merge:
   *
@@ -63,13 +62,6 @@ object Scd2 {
   /** Empty frame from an explicit schema (SCDHelpers.py:26-30). */
   def emptyFromSchema(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-
-  /** Empty historized frame: `df`'s schema plus null-date VALID_FROM/VALID_TO
-    * (SCDHelpers.py:10-18). */
-  def createEmptyHist(df: DataFrame): DataFrame =
-    emptyFromSchema(df.sparkSession, df.schema)
-      .withColumn(ValidFrom, lit(null).cast(DateType))
-      .withColumn(ValidTo, lit(null).cast(DateType))
 
   private def upperBound: Column = to_date(lit(Scd2UpperBound))
 

@@ -66,14 +66,25 @@ object Historization {
   }
 
   /** [[historizeRun]] against a catalog BUCKETED table instead of a path —
-    * the production write path at scale. Run N's store is a
-    * `bucketBy(KEY_HASH)` table, so run N+1's delta anti-join reads the
+    * the production write path at scale, and append-only like the
+    * reference's (main.py:14-24). Run N's store is a `bucketBy(KEY_HASH)`
+    * table, so run N+1's delta ([[Cdc.deltaBucketed]]) reads the
     * accumulated store with NO Exchange (the bucketed scan IS the shuffle
-    * output; only the incoming snapshot is exchanged), and the updated
-    * generation lands via [[Store.writeStoreTableSwap]] — materialize to
-    * `__swap`, then an atomic catalog rename. The 100 TB shape: per run,
-    * the store payload never moves; shuffle volume is O(snapshot), not
-    * O(accumulated store).
+    * output; only the incoming snapshot and its keys are exchanged), and
+    * the commit appends just the delta rows under the table's own bucket
+    * spec ([[Store.appendStoreTable]]): per run, the store payload never
+    * moves and the write is O(delta) — at most `buckets` new files.
+    *
+    * `buckets` applies only at bootstrap; later runs keep the table's
+    * spec. Compaction of the accumulated small files, or re-bucketing, is
+    * `Store.writeStoreTableSwap(Store.readStoreTable(spark, t), t, n)`.
+    *
+    * Crash contract: a failed write job leaves the table as it was. A
+    * crash inside the job commit can leave part of one run's delta in the
+    * table; re-running that batch (same `loadTs`) converges to the clean
+    * store, because the delta skips every (KEY_HASH, RECORD_HASH) pair
+    * already stored — the stranded rows are re-derived identically and
+    * not appended twice (StoreSpec pins both cases).
     */
   def historizeRunTable(
       spark: SparkSession,
@@ -85,8 +96,9 @@ object Historization {
       recordHashExclude: Seq[String] = Nil): DataFrame = {
     val currents = loadTs.map(Currents(_)).getOrElse(Currents.now())
     val enriched = MetaEnrichment.addMetaColumns(newData, currents, keyColumns, recordHashExclude)
-    // a crashed swap's rename gap must not read as "no store yet" — the
-    // bootstrap branch below would silently discard the whole history
+    // a store last written by a crashed compaction swap must not read as
+    // "no store yet" — the bootstrap branch below would silently discard
+    // the whole history
     Store.healTableSwap(spark, table)
     if (!spark.catalog.tableExists(table)) {
       // Bootstrap (main.py:20-21): everything is delta.
@@ -96,8 +108,7 @@ object Historization {
       // deltaBucketed, not delta: the pair-keyed anti-join would re-shuffle
       // the store (bucketing is KEY_HASH-only); the re-keyed form reads the
       // store with zero Exchange (StoreSpec pins this on the actual plan)
-      val delta = Cdc.deltaBucketed(current, enriched)
-      Store.writeStoreTableSwap(current.unionByName(delta), table, buckets)
+      Store.appendStoreTable(Cdc.deltaBucketed(current, enriched), table)
     }
     Store.readStoreTable(spark, table)
   }

@@ -176,6 +176,10 @@ object Store {
     * 100 TB: run N's full-outer join shuffles only the (much smaller)
     * incoming snapshot; the accumulated store never moves.
     *
+    * Overwrite semantics: this creates (bootstraps) a table, or replaces
+    * one wholesale. An incremental run does not come back here — it
+    * appends its delta under the table's own bucket spec
+    * ([[appendStoreTable]]), so `buckets` is fixed at creation.
     * `buckets` should match the cluster's effective join parallelism; the
     * snapshot side is exchanged to the bucket count. */
   def writeStoreTable(
@@ -196,10 +200,39 @@ object Store {
   def readStoreTable(spark: SparkSession, table: String): DataFrame =
     spark.table(table)
 
-  /** Catalog twin of [[writeStoreSwap]]: read-safe overwrite of a bucketed
-    * TABLE the incoming plan is itself reading. The new store generation is
-    * fully materialized into `<table>__swap` FIRST (saveAsTable is eager),
-    * then the old table drops and the swap renames into place — a reader
+  /** Append `rows` to an existing [[writeStoreTable]] table under the
+    * table's own bucket spec: the commit of one incremental run, O(rows),
+    * not O(store). Rows are selected into the table's column order
+    * (`insertInto` is positional) and hash-partitioned into the table's
+    * bucket count first, so each task holds exactly one bucket and a call
+    * adds at most `buckets` files (the planner drops that exchange when
+    * the plan is already partitioned that way).
+    *
+    * Crash contract: a failed write job commits nothing and its staging
+    * files are removed; a crash INSIDE the job commit can leave part of
+    * the rows in the table. Callers whose `rows` is an anti-join against
+    * the table (the CDC delta) converge by re-running the same batch. */
+  private[graft] def appendStoreTable(rows: DataFrame, table: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val spark = rows.sparkSession
+    // the command's rows are filtered driver-side: a filter in the plan
+    // would cost a Spark job per commit
+    val buckets = spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
+      .collectFirst { case r if r.getString(0) == "Num Buckets" => r.getString(1).trim.toInt }
+      .getOrElse(throw new IllegalArgumentException(s"$table is not a bucketed table"))
+    rows.select(spark.table(table).columns.toSeq.map(col): _*)
+      .repartition(buckets, col(MetaColumns.KeyHash))
+      .write.insertInto(table)
+  }
+
+  /** Compaction / re-bucketing of a [[writeStoreTable]] table: read-safe
+    * overwrite of a bucketed TABLE the incoming plan is itself reading.
+    * Appends leave up to `buckets` small files per run; rewriting the store
+    * through here, `writeStoreTableSwap(readStoreTable(spark, t), t, n)`,
+    * folds them into a fresh generation of larger files and is also the
+    * only way to change the bucket count to `n`. The new generation is fully
+    * materialized into `<table>__swap` FIRST (saveAsTable is eager), then
+    * the old table drops and the swap renames into place — a reader
     * failing mid-choreography sees either the old or the new generation,
     * never a partial write, and the bucket spec travels with the rename.
     *

@@ -40,6 +40,41 @@ class CdcSpec extends SparkSpec {
     assert(Cdc.deltaBucketed(empty, incoming).count() === incoming.count())
   }
 
+  test("deltaBucketed aggregates only the batch's keys on the store side") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val table = "graft_cdc_bounded_delta"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    try {
+      graft.sources.Store.writeStoreTable(
+        enriched((1 to 400).map(i => s"k$i" -> s"v${i % 7}"), currents1), table, buckets = 4)
+      // 20 stored keys (half of them changed) and 5 new ones against 400
+      val batch = enriched(
+        (1 to 20).map(i => s"k${i * 13}" -> (if (i % 2 == 0) "changed" else s"v${i * 13 % 7}")) ++
+          (1 to 5).map(i => s"new$i" -> "x"), currents2)
+      val batchKeys = batch.select(graft.meta.MetaColumns.KeyHash).distinct().count()
+      // default threshold (AQE may broadcast the sets) and broadcast off
+      // (every join sort-merges against the bucketed scan)
+      for (threshold <- Seq(None, Some("-1"))) {
+        threshold.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+        try {
+          val delta = Cdc.deltaBucketed(graft.sources.Store.readStoreTable(spark, table), batch)
+          // collect runs the frame's own plan, whose metrics are read below
+          assert(delta.collect().length === 15)
+          val plan = delta.queryExecution.executedPlan
+          val aggs = Plans.collect(plan) { case a: ObjectHashAggregateExec => a }
+          assert(aggs.nonEmpty, s"no collect_set aggregate in\n$plan")
+          aggs.foreach { a =>
+            val rows = a.metrics("numOutputRows").value
+            assert(rows <= batchKeys,
+              s"store-side aggregate emitted $rows rows for $batchKeys batch keys ($threshold):\n$plan")
+          }
+        } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
   test("delta of identical snapshots is empty") {
     assert(Cdc.delta(current, current).isEmpty)
   }

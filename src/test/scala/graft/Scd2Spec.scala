@@ -29,6 +29,10 @@ class Scd2Spec extends SparkSpec {
   private def assertSameResult(a: DataFrame, b: DataFrame): Unit =
     assert(sortedRows(a) === sortedRows(b))
 
+  /** Run stamps at 09:00 on `day` days after 2024-01-01. */
+  private def cur(day: Int) = Currents(java.time.LocalDate.of(2024, 1, 1).plusDays(day.toLong)
+    .atTime(9, 0).format(java.time.format.DateTimeFormatter.ofPattern(TsFormat)))
+
   test("bootstrap merge opens every key; LowerBound mode uses 1900-01-01") {
     val s1 = snapshot(Seq("a" -> "1", "b" -> "2"), c1)
     val merged = Scd2.historizeDataset(s1, None, c1, ValidFromMode.LowerBound)
@@ -83,6 +87,35 @@ class Scd2Spec extends SparkSpec {
     val perKeyActive = fast.filter(col(ValidTo) === to_date(lit("9999-12-31")))
       .groupBy("k").count().select("count").as[Long].collect()
     assert(perKeyActive.forall(_ === 1L))
+
+    // seeded multi-run sequences over an 8-key universe, with the faithful
+    // form as the oracle at every step: random changes, vanished keys
+    // (which stay open — the plain merge detects no deletes), returning
+    // keys, and closed-only keys (an active row closed out between runs,
+    // so the key survives only as closed history)
+    val rnd = new scala.util.Random(20261018L)
+    val universe = ('a' to 'h').map(_.toString)
+    def snapAt(day: Int) = {
+      val rows = universe.flatMap(k =>
+        if (rnd.nextInt(4) < 3) Some(k -> rnd.nextInt(3).toString) else None)
+      snapshot(if (rows.isEmpty) Seq("a" -> "0") else rows, cur(day))
+    }
+    for (trial <- 1 to 3) {
+      val day0 = 100 * trial
+      (1 to 5).foldLeft(Scd2.historizeDataset(snapAt(day0), None, cur(day0),
+          ValidFromMode.LoadDate)) { (store, i) =>
+        val day = day0 + 10 * i
+        val closeOut = universe.filter(_ => rnd.nextInt(5) == 0)
+        val before = if (closeOut.isEmpty) store else Scd2.closeDeleted(store,
+          store.filter(col("k").isin(closeOut: _*)).select(KeyHash), cur(day - 5))
+        val snap = snapAt(day)
+        val faithful = Scd2.mergeScd2(before, snap, cur(day), ValidFromMode.LoadDate)
+          .localCheckpoint()
+        assertSameResult(Scd2.mergeScd2Fast(before, snap, cur(day), ValidFromMode.LoadDate),
+          faithful)
+        faithful
+      }
+    }
   }
 
   test("vanished keys stay active (no delete detection inside merge)") {
@@ -327,8 +360,6 @@ class Scd2Spec extends SparkSpec {
     // sequential composition applied to the same store
     val rnd = new scala.util.Random(20261017L)
     val universe = ('a' to 'f').map(_.toString)
-    def cur(day: Int) = Currents(java.time.LocalDate.of(2024, 1, 1).plusDays(day.toLong)
-      .atTime(9, 0).format(java.time.format.DateTimeFormatter.ofPattern(TsFormat)))
     (1 to 2).foreach { trial =>
       val base = Files.createTempDirectory(s"graft-fused-prop$trial").toString
       def snapAt(day: Int) = {

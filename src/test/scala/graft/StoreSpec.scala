@@ -207,7 +207,22 @@ class StoreSpec extends SparkSpec {
     }
   }
 
-  test("pipeline bucketed-table historization: catalog-swap runs match the in-memory chain, store never shuffles") {
+  /** A table's data files and their lengths, as its scan lists them. */
+  private def dataFiles(table: String): Map[String, Long] =
+    spark.table(table).inputFiles.map(f => f -> new java.io.File(new java.net.URI(f)).length).toMap
+
+  /** Every file under a table's location, hidden ones included. */
+  private def allFiles(table: String): Set[String] = {
+    val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $table")
+      .filter($"col_name" === "Location").select("data_type").as[String].head()
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(new java.net.URI(loc)))
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toSet
+    } finally walk.close()
+  }
+
+  test("pipeline bucketed-table historization: append-only commits match the in-memory chain, store never shuffles") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import graft.pipeline.Historization
@@ -222,6 +237,8 @@ class StoreSpec extends SparkSpec {
     val (t1, t2, t3) = ("2024-01-01 10:00:00", "2024-02-15 10:30:00", "2024-03-01 09:00:00")
     try {
       Historization.historizeRunTable(spark, snap1, table, Seq("k"), Some(t1), buckets = 4)
+      assert(!spark.catalog.tableExists(s"${table}__swap"))
+      val files1 = dataFiles(table)
 
       // the scale claim, audited on run 2's merge plan before it executes:
       // the accumulated store enters the delta join as a bucketed scan with
@@ -244,10 +261,21 @@ class StoreSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
-      // runs 2 and 3 through the catalog swap (each reads the table it
-      // replaces — the choreography writeStoreSwap proves for paths)
+      // runs 2 and 3 append their deltas (each reads the table it appends
+      // to): every earlier data file survives byte-for-byte, each run adds
+      // at most `buckets` files, and no swap table ever appears
       Historization.historizeRunTable(spark, snap2, table, Seq("k"), Some(t2), buckets = 4)
+      assert(!spark.catalog.tableExists(s"${table}__swap"))
+      val files2 = dataFiles(table)
       Historization.historizeRunTable(spark, snap3, table, Seq("k"), Some(t3), buckets = 4)
+      assert(!spark.catalog.tableExists(s"${table}__swap"))
+      val files3 = dataFiles(table)
+      for ((before, after) <- Seq(files1 -> files2, files2 -> files3, files1 -> files3))
+        assert(before.forall { case (f, n) => after.get(f).contains(n) },
+          s"an earlier data file was rewritten or removed:\n$before\n$after")
+      assert((files2.size - files1.size) <= 4 && (files3.size - files2.size) <= 4,
+        s"a run added more files than buckets: ${files1.size} -> ${files2.size} -> ${files3.size}")
+      assert(files3.size > files1.size, "the delta runs appended nothing")
 
       // final store content ≡ the storage-free historizeFrames chain
       val e1 = MetaEnrichment.addMetaColumns(snap1, Currents(t1), Seq("k"))
@@ -257,7 +285,11 @@ class StoreSpec extends SparkSpec {
       assert(got.count() === m3.count())
       assert(got.exceptAll(m3).count() === 0)
       assert(m3.exceptAll(got).count() === 0)
-      // the swap table never lingers
+
+      // compaction is the swap rewrite of the table onto itself
+      Store.writeStoreTableSwap(Store.readStoreTable(spark, table), table, 4)
+      val compacted = Store.canonicalize(Store.readStoreTable(spark, table), m3.schema)
+      assert(compacted.exceptAll(m3).count() === 0 && m3.exceptAll(compacted).count() === 0)
       assert(!spark.catalog.tableExists(s"${table}__swap"))
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -265,6 +297,51 @@ class StoreSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS ${table}__swap")
     }
+  }
+
+  test("table historization crash contract: a partial commit converges when re-run, a failed write changes nothing") {
+    import graft.operators.Cdc
+    import graft.pipeline.Historization
+    val (table, clean) = ("graft_hist_table_crash", "graft_hist_table_clean")
+    Seq(table, clean).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val snap1 = (1 to 200).map(i => (s"k$i", s"v${i % 7}")).toDF("k", "v")
+    val snap2 = (1 to 230).map(i => (s"k$i", s"v${i % 5}")).toDF("k", "v")
+    val (t1, t2, t3) = ("2024-01-01 10:00:00", "2024-02-15 10:30:00", "2024-03-01 09:00:00")
+    def run(t: String, snap: org.apache.spark.sql.DataFrame, ts: String) =
+      Historization.historizeRunTable(spark, snap, t, Seq("k"), Some(ts), buckets = 4)
+    try {
+      Seq(table, clean).foreach(run(_, snap1, t1))
+      run(clean, snap2, t2)
+
+      // a commit that crashed half-way: part of run 2's delta, with run 2's
+      // stamps, is already in the table
+      val enr2 = MetaEnrichment.addMetaColumns(snap2, Currents(t2), Seq("k"))
+      val delta2 = Cdc.delta(Store.readStoreTable(spark, table), enr2).localCheckpoint()
+      val partial = delta2.filter(pmod(hash(col(MetaColumns.KeyHash)), lit(2)) === 0)
+      val (nPartial, nDelta) = (partial.count(), delta2.count())
+      assert(nPartial > 0 && nPartial < nDelta)
+      Store.appendStoreTable(partial, table)
+      assert(Store.readStoreTable(spark, table).count() === 200 + nPartial)
+
+      // re-running the batch appends exactly the rest: the clean store
+      run(table, snap2, t2)
+      val got = Store.readStoreTable(spark, table)
+      val want = Store.readStoreTable(spark, clean)
+      assert(got.count() === want.count())
+      assert(got.exceptAll(want).count() === 0)
+      assert(want.exceptAll(got).count() === 0)
+      assert(got.groupBy(MetaColumns.KeyHash, MetaColumns.RecordHash).count()
+        .filter($"count" > 1).count() === 0, "a (KEY_HASH, RECORD_HASH) pair was stored twice")
+
+      // a load that fails at execution leaves no trace: the hashed column
+      // of one row raises while the delta is computed
+      val (rowsBefore, filesBefore) = (got.count(), allFiles(table))
+      val poisoned = (1 to 230).map(i => (s"k$i", s"w$i")).toDF("k", "v")
+        .withColumn("v", when($"k" === "k17", raise_error(lit("poisoned row"))).otherwise($"v"))
+      intercept[Exception](run(table, poisoned, t3))
+      assert(Store.readStoreTable(spark, table).count() === rowsBefore)
+      assert(allFiles(table) === filesBefore)
+    } finally Seq(table, clean).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("readOrCreate builds once, then reads the committed store") {
