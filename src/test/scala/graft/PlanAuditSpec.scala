@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Physical-plan invariants: the properties that make these operators hold
   * up at 100 TB, asserted against the actual Catalyst output so a
   * regression (a lost pushdown, a join degrading to nested-loop, an
@@ -27,6 +31,30 @@ class PlanAuditSpec extends SparkSpec {
     p
   }
 
+  /** The sorted names the whole-registry audits walk. `l01_csv_scan`
+    * scans the grades CSV at `Helpers.gradesCsvPath` (a reference-checkout
+    * fixture, overridable through GRAFT_GRADES_CSV); where that file is
+    * absent the query cannot be built, so it is left out — and said so in
+    * the run log — rather than ending the walk for every query after it.
+    * Wherever the file exists it is audited like any other query. */
+  private def auditedNames(names: Iterable[String]): Seq[String] = {
+    val csv = graft.registry.Helpers.gradesCsvPath
+    val csvPresent = Files.exists(Paths.get(csv))
+    names.toSeq.sorted.filter { name =>
+      val audited = name != "l01_csv_scan" || csvPresent
+      if (!audited) info(s"$name not audited: its input $csv does not exist")
+      audited
+    }
+  }
+
+  /** Runs one query's planning step; a throw fails the test with the
+    * query's name instead of a bare planner error, reported at the
+    * calling line. */
+  private def planned[T](name: String)(body: => T)(
+      implicit pos: org.scalactic.source.Position): T =
+    try body
+    catch { case NonFatal(e) => fail(s"$name could not be planned: ${e.getMessage}", e) }
+
   test("every registered query has an oracle; no oracle is orphaned") {
     // the round-4 regression class: a query registered without an oracleSql
     // entry silently downgrades the driver's check to rows-only. Since r17
@@ -51,8 +79,8 @@ class PlanAuditSpec extends SparkSpec {
     // may return nested types; registered dumps must flatten them
     // (array_join / getField) before exposure.
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      val schema = SparkEntry.queries(name)(spark, sfDir).schema
+    auditedNames(SparkEntry.queries.keys).foreach { name =>
+      val schema = planned(name)(SparkEntry.queries(name)(spark, sfDir).schema)
       spark.catalog.clearCache()
       val nested = schema.fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
@@ -70,8 +98,8 @@ class PlanAuditSpec extends SparkSpec {
     // Bench extras are included: they run in the scored bench, so a plan
     // regression there is a real 100 TB regression too.
     val all = SparkEntry.queries ++ SparkEntry.benchExtras
-    all.keys.toSeq.sorted.foreach { name =>
-      val p = all(name)(spark, sfDir).queryExecution.executedPlan.toString
+    auditedNames(all.keys).foreach { name =>
+      val p = planned(name)(all(name)(spark, sfDir).queryExecution.executedPlan.toString)
       spark.catalog.clearCache()
       assert(!p.contains("CartesianProduct"),
         s"$name degraded to a cartesian product")
