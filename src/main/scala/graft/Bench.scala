@@ -3,18 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill to tmpfs: /tmp is disk-backed here and periodic
-      // writeback stalls showed up as multi-second bursts on random
-      // queries (a cluster uses local SSDs; tmpfs is the single-node
-      // twin). Fall back to the JVM default where /dev/shm is absent.
-      .config("spark.local.dir", Harness.localDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Warm the JVM (classloading, codegen, parquet reader) on an uncounted
     // scan so the first measured query doesn't absorb one-time JIT cost.
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()

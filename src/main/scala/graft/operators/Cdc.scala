@@ -65,33 +65,6 @@ object Cdc {
       .select(deltaOrder.map(col): _*)
   }
 
-  /** [[delta]] with a broadcast Bloom-filter pre-route (Bloom, CACM'70):
-    * a bit array over the current store's (KEY_HASH, RECORD_HASH) pairs
-    * routes each incoming row BEFORE the anti-join shuffle. A row whose
-    * bits are not all set is definitely absent from the store — it is
-    * delta by construction and bypasses the join entirely; only the
-    * rows the filter cannot rule out (true matches plus false positives)
-    * enter the anti-join, which then decides exactly. False positives
-    * cost a join probe, never a wrong answer, so the result is
-    * row-identical to [[delta]] (the l09 oracle checks this form
-    * end-to-end against the same SQL).
-    *
-    * Scale shape: the dominant cost of [[delta]] at 100 TB is shuffling
-    * the incoming snapshot, most of which is unchanged-or-new rows that
-    * match nothing. The filter is built with one map-side-combinable
-    * aggregation over the store's digests (bit positions OR into
-    * `bits/64` longs — bounded by `bits`, never by the store), collected
-    * once (`bits` = 2^23 → 1 MiB, the same bounded-synopsis contract as
-    * the KMV/IVF collects), and evaluated map-side on the snapshot scan.
-    * With sized `bits` (~10 bits/key → <1% false positives) the shuffle
-    * carries only rows that genuinely need the join. Positions are
-    * md5-derived, so the filter is deterministic and mergeable (bitwise
-    * OR across shards/runs).
-    *
-    * @param bits filter size in bits (multiple of 64); ~10× the store's
-    *             pair count keeps false positives under 1%
-    * @param numHashes bit positions per pair; 4-7 is the standard range
-    */
   /** j-th Bloom bit position of a row's digest pair: 60-bit md5 prefix
     * mod `bits` (SQL-string form: the pos feeds variable-distance shifts,
     * which the Scala DSL wrappers fix at literal distances). */
@@ -166,25 +139,6 @@ object Cdc {
     words
   }
 
-  def deltaBloom(
-      currentData: DataFrame,
-      newData: DataFrame,
-      bits: Int = 1 << 23,
-      numHashes: Int = 4,
-      salt: String = "bloom"): DataFrame = {
-    require(bits >= 64 && bits % 64 == 0, "bits must be a positive multiple of 64")
-    require(numHashes >= 1, "numHashes must be at least 1")
-    val words = collectBloomWords(bloomSynopsis(currentData, bits, numHashes, salt), bits)
-    val flagged = bloomFlag(newData, words, bits, numHashes, salt)
-    val deltaOrder = deltaOutputOrder(newData)
-    val definite = flagged.filter(!col("__maybe"))
-      .drop("__maybe").select(deltaOrder.map(col): _*)
-    val viaJoin = flagged.filter(col("__maybe")).drop("__maybe")
-      .join(currentData.select(KeyHash, RecordHash), Seq(KeyHash, RecordHash), "left_anti")
-      .select(deltaOrder.map(col): _*)
-    definite.unionByName(viaJoin)
-  }
-
   /** Map-side Bloom probe: `newData` plus a `__maybe` flag — false means
     * definitely absent from the filtered set. One kernel call per row
     * ([[graft.functions.BloomProbe]]): the word array rides along as a
@@ -201,13 +155,13 @@ object Cdc {
       graft.functions.DedupExpressions.bloomProbeOf(
         col(KeyHash), col(RecordHash), words, bits, numHashes, salt))
 
-  /** The Bloom route in its INTENDED regime: a small incoming batch
-    * against a large standing store whose synopsis ([[bloomSynopsis]]) is
-    * already persisted. [[deltaBloom]] builds the filter in-query, so at
-    * snapshot-sized inputs it pays a full store pass that the plain
-    * anti-join doesn't — measured 5.2× slower at sf0.1 on equal-sized
-    * sides (BENCH_r10, the regime it is NOT for). This form is the
-    * production shape: the store maintains its synopsis (merge law:
+  /** [[delta]] with a Bloom-filter pre-route (Bloom, CACM'70) for a
+    * small incoming batch against a large standing store whose synopsis
+    * ([[bloomSynopsis]]) is already persisted. Building the filter
+    * in-query instead pays a full store pass that the plain anti-join
+    * doesn't (5.2× slower at sf0.1 on equal-sized sides, BENCH_r10), so
+    * snapshot-sized batches use [[delta]]. The store maintains its
+    * synopsis (merge law:
     * word-wise `bit_or` across appends), and the per-batch cost is
     *
     *  1. collect the synopsis (≤ bits/64 longs, store-size-independent);
@@ -222,7 +176,7 @@ object Cdc {
     * Output is row-identical to [[delta]] (false positives fall through
     * to the exact residual; spec-pinned). Contract: the maybe side is
     * batch-bounded, so both broadcasts are bounded by the batch — for
-    * snapshot-sized `newData` use [[delta]] or [[deltaBloom]] instead.
+    * snapshot-sized `newData` use [[delta]] instead.
     *
     * MEASURED (sf0.1, local[32], min-of-3, 1% batch vs the ~300k-pair
     * staged store): 0.92 s vs 0.51 s for the plain anti-join twin

@@ -2423,7 +2423,8 @@ object Dedup {
     import graft.sources.Store
     val ids = removed.select(col(removed.columns.head).as("id")).distinct()
     Store.deleteFromStore(spark, indexPath, ids, "id")
-    val pairsOpt = Store.readParquetSafe(spark, pairsPath).map(_.distinct())
+    // swap-committed: a rename gap must not read as "nothing to repair"
+    val pairsOpt = Store.readForSwap(spark, pairsPath).map(_.distinct())
     // labelsGenerations > 0 switches the labels store to the generation
     // layout ([[graft.sources.Store.writeStoreGeneration]]): reads pin the
     // latest committed pass, the repair commits a NEW generation, and
@@ -2444,7 +2445,7 @@ object Dedup {
         // guarantee intact
         Store.migrateToGenerations(spark, labelsPath)
         Store.readStoreLatest(spark, labelsPath).map(_._2)
-      } else Store.readParquetSafe(spark, labelsPath)
+      } else Store.readForSwap(spark, labelsPath)
     (pairsOpt, labelsOpt) match {
       case (Some(pairs), Some(labels)) => graft.CacheScope.withScope { scope =>
         val (labels2, pairs2) = removeDocsFromClusters(

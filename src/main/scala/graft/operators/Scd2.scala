@@ -263,15 +263,12 @@ object Scd2 {
       newDf: DataFrame,
       currentDf: Option[DataFrame],
       currents: Currents,
-      mode: ValidFromMode,
-      fast: Boolean = true): DataFrame = currentDf match {
+      mode: ValidFromMode): DataFrame = currentDf match {
     case None =>
       newDf
         .withColumn(ValidFrom, to_date(lit(validFromDate(mode, currents))))
         .withColumn(ValidTo, upperBound)
-    case Some(current) =>
-      if (fast) mergeScd2Fast(current, newDf, currents, mode)
-      else mergeScd2(current, newDf, currents, mode)
+    case Some(current) => mergeScd2Fast(current, newDf, currents, mode)
   }
 
   /** Delete CLOSURE — the lifecycle step the reference's dead code

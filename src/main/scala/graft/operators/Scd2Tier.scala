@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.meta.{Currents, MetaColumns}
 import graft.sources.Store
@@ -61,10 +62,9 @@ object Scd2Tier {
       historyPath: String,
       currents: Currents,
       mode: Scd2.ValidFromMode): Unit = {
-    // a replay landing in a crashed swap's rename gap must NOT mistake
-    // the mid-swap store for "no store yet" and bootstrap over it
-    Store.healSwap(spark, activePath)
-    Store.readParquetSafe(spark, activePath) match {
+    // both tiers (active: a run's swap; archive: compactHistory's) are read
+    // healed: a replay in a rename gap must NOT see "no store yet"
+    Store.readForSwap(spark, activePath) match {
       case None =>
         // bootstrap: every row is new_only; nothing can close on run 1.
         // REFUSE to bootstrap over a standing archive — an active tier
@@ -72,7 +72,7 @@ object Scd2Tier {
         // fresh mode-epoch intervals OVERLAPPING the archived ones (asOf
         // would return two rows for covered days); that store needs
         // operator repair, not a silent re-genesis
-        require(Store.readParquetSafe(spark, historyPath).forall(_.isEmpty),
+        require(Store.readForSwap(spark, historyPath, Some(ArchiveKeys)).forall(_.isEmpty),
           s"active tier at $activePath is missing but the archive at "
             + s"$historyPath holds closed history — refusing to bootstrap "
             + "overlapping epochs over it")
@@ -194,8 +194,13 @@ object Scd2Tier {
   private[graft] def historyKeys(
       spark: SparkSession,
       historyPath: String): Option[DataFrame] =
-    Store.readParquetSafe(spark, historyPath)
+    Store.readForSwap(spark, historyPath, Some(ArchiveKeys))
       .map(_.select(col(KeyHash)).distinct())
+
+  /** The archive reads' pinned schema: a failed first [[appendHistory]]
+    * leaves `run=<id>/` with no data files, which reads as empty instead
+    * of failing inference on every later run. */
+  private val ArchiveKeys = StructType(Seq(StructField(KeyHash, StringType)))
 
   /** Commit this run's closed rows as `run=<runId>`. Overwrite makes the
     * pre-swap replay idempotent; the non-empty guard makes the post-swap

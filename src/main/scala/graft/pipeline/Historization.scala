@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.meta.Currents
 import graft.operators.{Cdc, MetaEnrichment, SchemaEvolution}
@@ -42,27 +43,32 @@ object Historization {
     val currents = loadTs.map(Currents(_)).getOrElse(Currents.now())
     val enriched = MetaEnrichment.addMetaColumns(newData, currents, keyColumns, recordHashExclude)
 
-    // a crashed swap's rename gap must not read as "no store yet" — the
-    // bootstrap branch would recreate the store from this one snapshot
-    // and the next swap would delete the `.old` aside holding the whole
-    // accumulated history (historizeStream replays batches through here)
-    Store.healSwap(spark, storePath)
-    // schema-enforced read: the store is hive-partitioned by the business
-    // keys, and partition type INFERENCE would re-type numeric-looking
-    // string keys ("007" -> 7 -> canonicalized "7"), silently rewriting
-    // stored key values while their KEY_HASH still encodes the original
-    Store.readParquetSafeAs(spark, storePath, enriched.schema) match {
+    // healed read: a rename gap must not bootstrap over the history
+    Store.readForSwap(spark, storePath) match {
       case None =>
         // Bootstrap: no current store yet (main.py:20-21) — everything is delta.
         Store.writeStore(enriched, storePath, keyColumns)
-      case Some(stored) =>
+      case Some(inferred) =>
+        val pinned = keysPinned(inferred.schema, enriched.schema, keyColumns)
+        val stored = spark.read.schema(pinned).parquet(storePath)
         val current = Store.canonicalize(stored, enriched.schema)
         val delta   = Cdc.delta(current, enriched)
         val updated = current.unionByName(delta)
         // The plan reads storePath; swap-write avoids overwrite-while-reading.
         Store.writeStoreSwap(updated, storePath, keyColumns)
     }
-    Store.readParquetSafeAs(spark, storePath, enriched.schema).get
+    spark.read.schema(enriched.schema).parquet(storePath)
+  }
+
+  /** `stored` with the key (partition) columns and the columns it lacks
+    * taken from `target`: inference re-types all-numeric string keys
+    * ("007" -> 7 -> "7") while KEY_HASH still encodes the original; every
+    * other column keeps its stored type for [[Store.canonicalize]] to cast
+    * (int to string, which the parquet reader cannot convert). */
+  private def keysPinned(stored: StructType, target: StructType, keys: Seq[String]) = {
+    def in(fs: Seq[StructField])(f: StructField) = fs.exists(_.name.equalsIgnoreCase(f.name))
+    val pinned = target.filter(f => keys.exists(_.equalsIgnoreCase(f.name)) || !in(stored)(f))
+    StructType(stored.filterNot(in(pinned)) ++ pinned)
   }
 
   /** [[historizeRun]] against a catalog BUCKETED table instead of a path —
@@ -167,8 +173,8 @@ object Historization {
       recordHashExclude: Seq[String] = Nil): DataFrame = {
     val evolved =
       SchemaEvolution.prepareSchema(newData, targetSchema, defaultValues, removeColumns = true)
-    // widen the STANDING frame too, exactly like [[historizeRunEvolving]]
-    // widens the stored generation: a current accumulated under an older
+    // widen the STANDING frame too, as [[historizeRunEvolving]] widens the
+    // stored generation: a current accumulated under an older
     // schema would otherwise fail the unionByName with the new-column
     // delta — the advertised drift case would crash instead of evolving.
     // The enriched target schema derives from an empty-plan enrichment
@@ -181,16 +187,17 @@ object Historization {
   }
 
   /** [[historizeRun]] with in-loop schema evolution: the persisted twin of
-    * [[historizeFramesEvolving]]. The stored generation is ALSO widened to
-    * the enriched target schema before the delta, so a store bootstrapped
-    * under an older schema evolves in place the first time a run arrives
-    * with new columns — old rows take a null default in the new columns.
-    * Their stored RECORD_HASH values are kept as-is (hashes are facts
-    * about what was loaded), which means a key re-delivered unchanged
-    * except for the widening re-versions exactly once: its record now
-    * hashes with the new column's default included. After that one bump
-    * the feed is stable again — the schema change itself is versioned,
-    * which is the honest historization of a contract change. */
+    * [[historizeFramesEvolving]]: [[historizeRun]] over the snapshot
+    * coerced to `targetSchema`. Its store read evolves a store
+    * bootstrapped under an older schema in place: old rows take null in
+    * new columns and every stored column is cast to its target type (int
+    * to long, int to string), except the partition keys, which are read
+    * as the target types them ("007" stays "007"). Stored RECORD_HASH values are
+    * kept as-is (hashes are facts about what was loaded), so a key
+    * re-delivered unchanged except for the widening re-versions exactly
+    * once: its record now hashes with the new column's default included.
+    * After that one bump the feed is stable again — the schema change
+    * itself is versioned, the honest historization of a contract change. */
   def historizeRunEvolving(
       spark: SparkSession,
       newData: DataFrame,
@@ -199,22 +206,10 @@ object Historization {
       targetSchema: org.apache.spark.sql.types.StructType,
       defaultValues: Map[String, Any] = Map.empty,
       loadTs: Option[String] = None,
-      recordHashExclude: Seq[String] = Nil): DataFrame = {
-    val currents = loadTs.map(Currents(_)).getOrElse(Currents.now())
-    val evolved = SchemaEvolution.prepareSchema(
-      newData, targetSchema, defaultValues, removeColumns = true)
-    val enriched = MetaEnrichment.addMetaColumns(evolved, currents, keyColumns, recordHashExclude)
-    Store.readParquetSafe(spark, storePath) match {
-      case None =>
-        Store.writeStore(enriched, storePath, keyColumns)
-      case Some(stored) =>
-        val widened = SchemaEvolution.prepareSchema(stored, enriched.schema)
-        val current = Store.canonicalize(widened, enriched.schema)
-        val delta   = Cdc.delta(current, enriched)
-        Store.writeStoreSwap(current.unionByName(delta), storePath, keyColumns)
-    }
-    Store.readParquetSafe(spark, storePath).get
-  }
+      recordHashExclude: Seq[String] = Nil): DataFrame =
+    historizeRun(spark,
+      SchemaEvolution.prepareSchema(newData, targetSchema, defaultValues, removeColumns = true),
+      storePath, keyColumns, loadTs, recordHashExclude)
 
   /** Run-based time travel filter over an append-only hash-historized
     * frame: rows inserted at or before `runId`, minus rows whose

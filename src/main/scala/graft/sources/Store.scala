@@ -94,19 +94,6 @@ object Store {
     else Some(spark.read.parquet(path))
   }
 
-  /** [[readParquetSafe]] with an ENFORCED schema. Partition-column type
-    * inference otherwise re-types numeric-LOOKING string partition values
-    * on read-back ("007" infers as int 7, and the canonicalizing cast
-    * back to string yields "7"): a store hive-partitioned by string
-    * business keys would silently rewrite those key values across runs
-    * while KEY_HASH still encodes the original — the schema pins the
-    * partition columns' types so values round-trip. */
-  def readParquetSafeAs(
-      spark: SparkSession,
-      path: String,
-      schema: org.apache.spark.sql.types.StructType): Option[DataFrame] =
-    Try(spark.read.schema(schema).parquet(path)).toOption
-
   /** Projected read of only the two hash columns (MetaColumnHelpers.py:164-169).
     * Parquet column pruning keeps the scan minimal. */
   def readCurrentHashes(spark: SparkSession, path: String): Option[DataFrame] =
@@ -257,7 +244,7 @@ object Store {
     ()
   }
 
-  /** Catalog twin of [[healSwap]]: if `table` is missing but its
+  /** Catalog twin of [[readForSwap]]'s heal: if `table` is missing but its
     * `__swap` sibling exists, a [[writeStoreTableSwap]] crashed between
     * its DROP and RENAME — restore the swap. MUST run before any
     * bootstrap-vs-merge decision that branches on the table's existence
@@ -314,6 +301,32 @@ object Store {
 
   private val KeyBucket = "KEY_BUCKET"
 
+  /** The writer-side read of a [[writeStoreSwap]] store: heal a crashed
+    * swap's rename gap, then read. None only when the path is absent; any
+    * other failure (corrupt footer, IO error) propagates. A writer that
+    * took either for "no store yet" would bootstrap over the history, and
+    * its next swap would delete the `.old` aside holding it.
+    * `schema` pins the read (no inference): a store whose first write
+    * left no data files reads as empty, a column it lacks as null. */
+  def readForSwap(
+      spark: SparkSession,
+      path: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): Option[DataFrame] =
+    if (!healSwap(spark, path)) None
+    else Some(schema.fold(spark.read)(spark.read.schema).parquet(path))
+
+  /** Repair a crashed [[writeStoreSwap]] and say whether the store is
+    * present: a missing target beside its `.old` aside means the crash
+    * fell between the swap's two renames, so the aside is renamed back. */
+  private def healSwap(spark: SparkSession, path: String): Boolean = {
+    val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
+    val target = new Path(path)
+    val aside = new Path(path + ".old")
+    // a failed restore must not read as "no store yet"
+    fs.exists(target) || fs.exists(aside) && (fs.rename(aside, target) ||
+      (throw new java.io.IOException(s"cannot restore $aside to $path")))
+  }
+
   /** Read-safe overwrite of a store the current plan may be reading from:
     * write to `<path>.tmp`, rename the old generation aside to
     * `<path>.old`, rename the tmp in, then drop the aside copy.
@@ -328,20 +341,6 @@ object Store {
     * resolves `path` in the instant between the two renames fails to list
     * it — is closed by the generation layout ([[writeStoreGeneration]]),
     * where commits never touch the directory a reader resolved. */
-  /** Repair a crashed [[writeStoreSwap]]: if the target is missing and
-    * the `.old` aside exists, the crash fell between the swap's two
-    * renames — restore the aside. MUST run before any decision that
-    * branches on the store's existence (e.g. an SCD2 lifecycle's
-    * bootstrap-vs-merge choice): deciding from a raw read first would
-    * see the mid-swap gap as "no store yet" and bootstrap OVER the
-    * store the next swap's inline self-heal restores a moment later. */
-  def healSwap(spark: SparkSession, path: String): Unit = {
-    val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
-    val target = new Path(path)
-    val aside = new Path(path + ".old")
-    if (!fs.exists(target) && fs.exists(aside)) { fs.rename(aside, target); () }
-  }
-
   def writeStoreSwap(df: DataFrame, path: String, partitionColumns: Seq[String]): Unit = {
     val spark = df.sparkSession
     val tmp   = path + ".tmp"
@@ -1207,7 +1206,8 @@ object Store {
       partitionColumns: Seq[String] = Nil,
       countDeleted: Boolean = false): Option[Long] = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    readParquetSafe(spark, path) match {
+    // a rename gap read as "no store" would skip the takedown
+    readForSwap(spark, path) match {
       case Some(df) =>
         val ids = broadcast(removalIds(removed, idCol))
         val kept = df.join(ids, Seq(idCol), "left_anti")

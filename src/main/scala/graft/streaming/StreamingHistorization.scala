@@ -750,7 +750,7 @@ object StreamingHistorization {
               // flag flips on an existing deployment
               Store.migrateToGenerations(session, labelsPath)
               Store.readStoreLatest(session, labelsPath).map(_._2)
-            } else Store.readParquetStrict(session, labelsPath))
+            } else Store.readForSwap(session, labelsPath))
             .getOrElse(pairs.select(col("id_a").as("id"), col("id_a").as("cluster_id")).limit(0))
           val updated = graft.operators.Dedup.updateClusters(
             standing, pairs, maxIters = maxIters, scope = scope)
@@ -1245,15 +1245,14 @@ object StreamingHistorization {
       loadTs: String): Unit = {
     val session = batch.sparkSession
     val cur = Currents(loadTs)
-    // a replay landing in a crashed swap's rename gap must NOT mistake
-    // the mid-swap store for "no store yet" and bootstrap over it
-    Store.healSwap(session, storePath)
     graft.CacheScope.withScope { scope =>
       // full loads are key-unique by contract; at-least-once re-delivery
       // within the batch collapses to the deterministic survivor first
       val snap = scope.persist(graft.operators.MetaEnrichment.addMetaColumns(
         survivorFirst(batch, keyColumns), cur, keyColumns))
-      val merged = Store.readParquetStrict(session, storePath) match {
+      // a replay landing in a crashed swap's rename gap must NOT mistake
+      // the mid-swap store for "no store yet" and bootstrap over it
+      val merged = Store.readForSwap(session, storePath) match {
         case None =>
           graft.operators.Scd2.historizeDataset(snap, None, cur, mode)
         case Some(store) =>

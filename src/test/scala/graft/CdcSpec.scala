@@ -79,22 +79,24 @@ class CdcSpec extends SparkSpec {
     assert(Cdc.delta(current, current).isEmpty)
   }
 
-  test("deltaBloom is row- and column-identical to delta at any filter size") {
+  test("deltaBloomWith is row- and column-identical to delta at any filter size") {
+    def routed(store: org.apache.spark.sql.DataFrame, batch: org.apache.spark.sql.DataFrame, bits: Int) =
+      Cdc.deltaBloomWith(store, batch, Cdc.bloomSynopsis(store, bits), bits)
     val pair = Cdc.delta(current, incoming)
     // realistic size (few false positives: most rows bypass the join) and
     // a pathological 64-bit filter (everything collides into the join
     // path) must both reproduce the exact anti-join
     Seq(1 << 16, 64).foreach { bits =>
-      val routed = Cdc.deltaBloom(current, incoming, bits = bits)
-      assert(routed.columns.toSeq === pair.columns.toSeq)
-      assert(routed.exceptAll(pair).count() === 0)
-      assert(pair.exceptAll(routed).count() === 0)
+      val got = routed(current, incoming, bits)
+      assert(got.columns.toSeq === pair.columns.toSeq)
+      assert(got.exceptAll(pair).count() === 0)
+      assert(pair.exceptAll(got).count() === 0)
     }
     // empty store: the filter is all-zero, every row is definite-new
     val empty = current.filter($"k" === "zzz")
-    assert(Cdc.deltaBloom(empty, incoming).count() === incoming.count())
+    assert(routed(empty, incoming, 1 << 23).count() === incoming.count())
     // identical snapshots: every pair is in the filter, nothing survives
-    assert(Cdc.deltaBloom(current, current, bits = 1 << 16).isEmpty)
+    assert(routed(current, current, 1 << 16).isEmpty)
   }
 
   test("deltaBloomWith over a prebuilt synopsis equals delta; merge law holds") {

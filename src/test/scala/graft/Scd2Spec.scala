@@ -76,7 +76,9 @@ class Scd2Spec extends SparkSpec {
 
     def drive(fast: Boolean): DataFrame =
       runs.foldLeft(Option.empty[DataFrame]) { case (cur, (rows, cts)) =>
-        Some(Scd2.historizeDataset(snapshot(rows, cts), cur, cts, ValidFromMode.LoadDate, fast))
+        val snap = snapshot(rows, cts)
+        Some(if (fast || cur.isEmpty) Scd2.historizeDataset(snap, cur, cts, ValidFromMode.LoadDate)
+          else Scd2.mergeScd2(cur.get, snap, cts, ValidFromMode.LoadDate))
       }.get
 
     val slow = drive(false)
@@ -279,8 +281,8 @@ class Scd2Spec extends SparkSpec {
     // incoming 'a' must be dropped, not re-opened
     val closedOnly = v1.withColumn(ValidTo, to_date(lit("2024-02-01")))
     val s2 = snapshot(Seq("a" -> "2"), c2)
-    val slow = Scd2.historizeDataset(s2, Some(closedOnly), c2, ValidFromMode.LoadDate, fast = false)
-    val fast = Scd2.historizeDataset(s2, Some(closedOnly), c2, ValidFromMode.LoadDate, fast = true)
+    val slow = Scd2.mergeScd2(closedOnly, s2, c2, ValidFromMode.LoadDate)
+    val fast = Scd2.historizeDataset(s2, Some(closedOnly), c2, ValidFromMode.LoadDate)
     assertSameResult(slow, fast)
     assert(fast.count() === 1)
     assert(fast.filter(col(ValidTo) === to_date(lit("9999-12-31"))).count() === 0)
