@@ -134,13 +134,7 @@ object SparkEntry {
          |      i -> CAST(p.qv[i] AS DOUBLE) * CAST(a.vv[i] AS DOUBLE))) / (p.qn * a.nrm), 6) AS cos
          |  FROM probe p JOIN a2 a ON a.cid = p.cid AND a.id <> p.query_id
          |),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY cos DESC, corpus_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, corpus_id, cos, CAST(rank AS INT) AS rank
-         |FROM ranked WHERE rank <= 10""".stripMargin,
+         |${duckTopKTail()}""".stripMargin,
     // the composed-index oracle reproduces the whole IVFADC pipeline:
     // IVF assignment, residuals, the Lloyd trainer over residuals, the
     // q·c + ADC(q·r) probe, exact re-rank
@@ -149,28 +143,7 @@ object SparkEntry {
     // incremental ≡ the full-corpus spans statement restricted to the
     // batch's documents: a gram is in ≥2 distinct docs overall iff it
     // hits the standing store or a second batch doc
-    "x_dedup_spans_incremental" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents WHERE length(text) >= 30
-        |),
-        |pos AS (
-        |  SELECT doc_id, CAST(p AS INT) AS p, substring(text, CAST(p AS INT), 30) AS gram
-        |  FROM (SELECT doc_id, text, unnest(range(1, length(text) - 28)) AS p FROM docs)
-        |),
-        |dup AS (
-        |  SELECT gram FROM pos GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
-        |),
-        |dp AS (
-        |  SELECT pos.doc_id, pos.p FROM pos JOIN dup USING (gram)
-        |  WHERE pos.doc_id % 2 = 1
-        |),
-        |isl AS (
-        |  SELECT doc_id, p,
-        |    p - CAST(row_number() OVER (PARTITION BY doc_id ORDER BY p) AS INT) AS grp
-        |  FROM dp
-        |)
-        |SELECT doc_id, min(p) AS span_start, max(p) + 29 AS span_end
-        |FROM isl GROUP BY doc_id, grp""".stripMargin,
+    "x_dedup_spans_incremental" -> duckSpansSql(dpWhere = "\n  WHERE pos.doc_id % 2 = 1"),
     // the exact spans row shares x_dedup_spans' statement: that oracle
     // already decides duplication by the gram STRING, which is exactly
     // the exact operator's semantics (the hashed operator merely has no

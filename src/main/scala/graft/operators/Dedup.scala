@@ -371,23 +371,27 @@ object Dedup {
       minDocFreq: Int = 2,
       scope: graft.CacheScope = graft.CacheScope.Global): DataFrame = {
     val grams = spanGrams(df, idCol, textCol, k, stride, minDocFreq, scope)
-    // "in >= 2 distinct docs" is min(id) != max(id): a plain min/max
-    // aggregate partial-aggregates map-side and plans ONE exchange on gh,
-    // where count(DISTINCT id) plans a (gh, id) dedup exchange FIRST —
-    // two shuffles and no map-side reduction of repeated-gram positions
-    val dupGrams =
-      if (minDocFreq == 2)
-        grams.groupBy("gh")
-          .agg(min(col("id")).as("__mn"), max(col("id")).as("__mx"))
-          .filter(col("__mn") =!= col("__mx"))
-      else
-        grams.groupBy("gh")
-          .agg(countDistinct(col("id")).as("df"))
-          .filter(col("df") >= minDocFreq)
-    val dupPos = grams.join(dupGrams.select("gh"), Seq("gh"), "left_semi")
+    val dupPos = grams.join(inDistinctIds(grams, "gh", minDocFreq), Seq("gh"), "left_semi")
     spanIslands(dupPos, k, stride)
       .select(col("id").as("doc_id"), col("s").as("span_start"), col("e").as("span_end"))
   }
+
+  /** The values of column `key` of `rows` that occur with at least
+    * `minDocFreq` distinct `id`s, as a one-column frame. At 2 that is
+    * min(id) != max(id): a plain min/max aggregate partial-aggregates
+    * map-side and plans ONE exchange on `key`, where count(DISTINCT id)
+    * plans a (key, id) dedup exchange FIRST — two shuffles and no
+    * map-side reduction of a key's repeated positions. */
+  private def inDistinctIds(rows: DataFrame, key: String, minDocFreq: Int): DataFrame =
+    (if (minDocFreq == 2)
+      rows.groupBy(key)
+        .agg(min(col("id")).as("__mn"), max(col("id")).as("__mx"))
+        .filter(col("__mn") =!= col("__mx"))
+    else
+      rows.groupBy(key)
+        .agg(countDistinct(col("id")).as("df"))
+        .filter(col("df") >= minDocFreq)
+    ).select(key)
 
   /** EXACT cross-document duplicated-substring spans — the suffix-array
     * SEMANTICS of Lee et al. ACL'22, computed distributively. A position
@@ -425,19 +429,8 @@ object Dedup {
     // caching gram STRINGS for every position would hold k× the corpus
     val grams = spanGrams(df, idCol, textCol, k, stride = 1, minDocFreq, scope)
     // hash-level candidates: a 60-bit hash with doc frequency < minDocFreq
-    // cannot hide a string with doc frequency >= minDocFreq. minDocFreq=2
-    // decides by min(id) != max(id) — one exchange, map-side-combined —
-    // instead of count(DISTINCT id)'s extra (gh, id) dedup shuffle
-    val candHash = (
-      if (minDocFreq == 2)
-        grams.groupBy("gh")
-          .agg(min(col("id")).as("__mn"), max(col("id")).as("__mx"))
-          .filter(col("__mn") =!= col("__mx"))
-      else
-        grams.groupBy("gh")
-          .agg(countDistinct(col("id")).as("hdf"))
-          .filter(col("hdf") >= minDocFreq)
-      ).select("gh")
+    // cannot hide a string with doc frequency >= minDocFreq
+    val candHash = inDistinctIds(grams, "gh", minDocFreq)
     // pass 2: re-derive gram strings for CANDIDATE DOCS only (the cached
     // hash frame names them — docs with no hash-candidate position cannot
     // contribute a duplicated gram), then keep only hash-candidate
@@ -454,18 +447,8 @@ object Dedup {
           // must match spanGrams' gh derivation (the candHash semi-join key)
           xxhash64(t.substr(col("p"), lit(k))).as("gh"))
         .join(candHash, Seq("gh"), "left_semi"))
-    // string-level verify: exact duplication, collision-free (same
-    // min/max-vs-countDistinct split as the hash level)
-    val dupStr = (
-      if (minDocFreq == 2)
-        cand.groupBy("g")
-          .agg(min(col("id")).as("__mn"), max(col("id")).as("__mx"))
-          .filter(col("__mn") =!= col("__mx"))
-      else
-        cand.groupBy("g")
-          .agg(countDistinct(col("id")).as("df"))
-          .filter(col("df") >= minDocFreq)
-      ).select("g")
+    // string-level verify: exact duplication, collision-free
+    val dupStr = inDistinctIds(cand, "g", minDocFreq)
     val dupPos = cand.join(dupStr, Seq("g"), "left_semi").select("id", "p")
     spanIslands(dupPos, k, 1)
       .select(col("id").as("doc_id"), col("s").as("span_start"), col("e").as("span_end"))

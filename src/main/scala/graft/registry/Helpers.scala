@@ -813,17 +813,22 @@ private[graft] object Helpers {
   private[graft] def stagedTierRuns13(s: SparkSession, d: String): (String, String) = {
     val root = Store.ensureStagedDir(s,
       s"/tmp/graft_staged/${dirTag(d, "orders")}/scd2_tier_r13") { tmp =>
-      val keysO = Seq("o_orderkey")
-      val m = ValidFromMode.LoadDate
-      val (ap, hp) = (s"$tmp/active", s"$tmp/history")
-      val b = MetaEnrichment.addMetaColumns(ordSnapB(s, d), cur2, keysO)
-      Scd2Tier.historizeTiered(s,
-        MetaEnrichment.addMetaColumns(ordProj(s, d), cur1, keysO), ap, hp, cur1, m)
-      Scd2Tier.historizeTiered(s, b, ap, hp, cur2, m)
-      Scd2Tier.historizeTiered(s,
-        b.filter(pmod(col("o_orderkey"), lit(7)) =!= 0), ap, hp, cur3, m)
+      historizeTierRuns13(s, d, s"$tmp/active", s"$tmp/history")
     }
     (s"$root/active", s"$root/history")
+  }
+
+  /** Runs 1–3 of the tiered orders fixture (bootstrap, the 53-bump, the
+    * 7-vanish) loaded into the tiered store (`ap`, `hp`). */
+  private def historizeTierRuns13(s: SparkSession, d: String, ap: String, hp: String): Unit = {
+    val keysO = Seq("o_orderkey")
+    val m = ValidFromMode.LoadDate
+    val b = MetaEnrichment.addMetaColumns(ordSnapB(s, d), cur2, keysO)
+    Scd2Tier.historizeTiered(s,
+      MetaEnrichment.addMetaColumns(ordProj(s, d), cur1, keysO), ap, hp, cur1, m)
+    Scd2Tier.historizeTiered(s, b, ap, hp, cur2, m)
+    Scd2Tier.historizeTiered(s,
+      b.filter(pmod(col("o_orderkey"), lit(7)) =!= 0), ap, hp, cur3, m)
   }
 
   /** Staged tiered SCD2 store (orders) after the FULL 4-run compaction
@@ -835,17 +840,10 @@ private[graft] object Helpers {
   private[graft] def stagedTier4Runs(s: SparkSession, d: String): (String, String) = {
     val root = Store.ensureStagedDir(s,
       s"/tmp/graft_staged/${dirTag(d, "orders")}/scd2_tier_4run") { tmp =>
-      val keysO = Seq("o_orderkey")
-      val m = ValidFromMode.LoadDate
       val (ap, hp) = (s"$tmp/active", s"$tmp/history")
-      val b = MetaEnrichment.addMetaColumns(ordSnapB(s, d), cur2, keysO)
-      Scd2Tier.historizeTiered(s,
-        MetaEnrichment.addMetaColumns(ordProj(s, d), cur1, keysO), ap, hp, cur1, m)
-      Scd2Tier.historizeTiered(s, b, ap, hp, cur2, m)
-      Scd2Tier.historizeTiered(s,
-        b.filter(pmod(col("o_orderkey"), lit(7)) =!= 0), ap, hp, cur3, m)
-      Scd2Tier.historizeTiered(s,
-        MetaEnrichment.addMetaColumns(ordSnapC(s, d), cur4, keysO), ap, hp, cur4, m)
+      historizeTierRuns13(s, d, ap, hp)
+      Scd2Tier.historizeTiered(s, MetaEnrichment.addMetaColumns(ordSnapC(s, d), cur4,
+        Seq("o_orderkey")), ap, hp, cur4, ValidFromMode.LoadDate)
     }
     (s"$root/active", s"$root/history")
   }

@@ -9,6 +9,49 @@ import graft.registry.Helpers._
   * driven by the SAME Scala vals the Spark queries use, so the two engines
   * cannot drift. Moved verbatim from SparkEntry (r14 split). */
 private[graft] object OracleCtes {
+  /** Meta enrichment of the two lineitem snapshots `snapA` and `snapB`
+    * (`enrichA`, `enrichB`): the key hash, the record hash over every
+    * column (`extraHash`: further hash terms, each on a new line), and the
+    * insert/update stamps of run 1 resp. run 2. */
+  private[registry] def duckEnrichCtes(snapA: String, snapB: String,
+      extraHash: String = ""): String = {
+    def enrich(name: String, snap: String, ts: String, runId: String): String =
+      s"""$name AS (
+         |  SELECT *,
+         |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
+         |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'))) AS "KEY_HASH",
+         |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
+         |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'),
+         |                        coalesce(CAST(quantity AS VARCHAR),'nan'),
+         |                        coalesce(returnflag,'nan'), coalesce(linestatus,'nan'),
+         |                        coalesce(CAST(shipdate AS VARCHAR),'nan')$extraHash)) AS "RECORD_HASH",
+         |    TIMESTAMP '$ts' AS "INSERT_TS", TIMESTAMP '$ts' AS "UPDATE_TS",
+         |    '$runId' AS "INSERT_RUN_ID", '$runId' AS "UPDATE_RUN_ID",
+         |    CAST(NULL AS TIMESTAMP) AS "DELETED"
+         |  FROM $snap
+         |)""".stripMargin
+    enrich("enrichA", snapA, ts1, "20240101100000") + ",\n" +
+      enrich("enrichB", snapB, ts2, "20240215103000")
+  }
+
+  /** Run 2's delta (`delta`): the `enrichB` rows whose (key, record) hash
+    * pair is not in `enrichA`. */
+  private[registry] val duckRun2DeltaCte: String =
+    """delta AS (
+      |  SELECT n.* FROM enrichB n LEFT JOIN enrichA c
+      |    ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
+      |  WHERE c."KEY_HASH" IS NULL
+      |)""".stripMargin
+
+  /** The two-run append-only store over `ctes` (ending in `enrichA` and
+    * `enrichB`): run 1's rows plus run 2's delta, quantity as double;
+    * `where` (a trailing line, or empty) filters it. */
+  private[registry] def duckTwoRunStoreSql(ctes: String, where: String = ""): String =
+    s"""$ctes,
+       |$duckRun2DeltaCte
+       |SELECT * REPLACE (CAST(quantity AS DOUBLE) AS quantity)
+       |FROM (SELECT * FROM enrichA UNION ALL BY NAME SELECT * FROM delta)$where""".stripMargin
+
   /** Shared CTE text: deterministic snapshots + meta enrichment. */
   private[graft] val snapshotsCte: String =
     s"""WITH base AS (
@@ -26,34 +69,7 @@ private[graft] object OracleCtes {
        |         returnflag, linestatus, shipdate
        |  FROM base
        |),
-       |enrichA AS (
-       |  SELECT *,
-       |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
-       |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'))) AS "KEY_HASH",
-       |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
-       |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'),
-       |                        coalesce(CAST(quantity AS VARCHAR),'nan'),
-       |                        coalesce(returnflag,'nan'), coalesce(linestatus,'nan'),
-       |                        coalesce(CAST(shipdate AS VARCHAR),'nan'))) AS "RECORD_HASH",
-       |    TIMESTAMP '$ts1' AS "INSERT_TS", TIMESTAMP '$ts1' AS "UPDATE_TS",
-       |    '20240101100000' AS "INSERT_RUN_ID", '20240101100000' AS "UPDATE_RUN_ID",
-       |    CAST(NULL AS TIMESTAMP) AS "DELETED"
-       |  FROM snapA
-       |),
-       |enrichB AS (
-       |  SELECT *,
-       |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
-       |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'))) AS "KEY_HASH",
-       |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
-       |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'),
-       |                        coalesce(CAST(quantity AS VARCHAR),'nan'),
-       |                        coalesce(returnflag,'nan'), coalesce(linestatus,'nan'),
-       |                        coalesce(CAST(shipdate AS VARCHAR),'nan'))) AS "RECORD_HASH",
-       |    TIMESTAMP '$ts2' AS "INSERT_TS", TIMESTAMP '$ts2' AS "UPDATE_TS",
-       |    '20240215103000' AS "INSERT_RUN_ID", '20240215103000' AS "UPDATE_RUN_ID",
-       |    CAST(NULL AS TIMESTAMP) AS "DELETED"
-       |  FROM snapB
-       |)""".stripMargin
+       |${duckEnrichCtes("snapA", "snapB")}""".stripMargin
 
   /** SCD2 CTE chain on top of the snapshots: bootstrap merge of A, then the
     * five-branch merge of B (semantics of SCDHelpers.py:129-220). */
@@ -315,22 +331,27 @@ private[graft] object OracleCtes {
       |  FROM toks
       |)""".stripMargin
 
-  /** MinHash sig + LSH banded CTE chain ending in `banded (id, band,
-    * key)` — shared by the all-pairs and incremental-probe oracles. */
-  private[graft] lazy val minhashBandedCte: String =
-    s"""$docShinglesCte,
-       |sig AS (
+  /** MinHash signatures (`sig`) and LSH band keys (`banded (id, band,
+    * key)`) of the docs' shingle lists in `shingles (doc_id, shingles)`. */
+  private[registry] def duckMinhashBands(shingles: String): String =
+    s"""sig AS (
        |  SELECT doc_id AS id,
        |    list_transform(range(0, 8),
        |      j -> list_min(list_transform(shingles,
        |             s -> md5(concat(CAST(j AS VARCHAR), '#', s))))) AS sig
-       |  FROM sh
+       |  FROM $shingles
        |),
        |banded AS (
        |  SELECT id, g.band,
        |         md5(array_to_string(sig[g.band*2+1:g.band*2+2], '|')) AS key
        |  FROM sig, generate_series(0, 3) g(band)
        |)""".stripMargin
+
+  /** MinHash sig + LSH banded CTE chain ending in `banded (id, band,
+    * key)` — shared by the all-pairs and incremental-probe oracles. */
+  private[graft] lazy val minhashBandedCte: String =
+    s"""$docShinglesCte,
+       |${duckMinhashBands("sh")}""".stripMargin
 
   /** Grouped HLL estimate over `events` — mirrors [[graft.operators
     * .Sketches.hllRegisters]]/[[graft.operators.Sketches.hllEstimate]]
@@ -496,23 +517,44 @@ private[graft] object OracleCtes {
        |         substring(md5(CAST($idExpr AS VARCHAR) || '#$salt'), j, 1)) - 1)
        |      * CAST(pow(16, 8 - j) AS BIGINT))) AS DOUBLE) / 4294967296.0""".stripMargin
 
+  /** The order snapshot of run 1 (`obase`). */
+  private[registry] val duckOrdersBaseCte: String =
+    """obase AS (
+      |  SELECT o_orderkey, o_orderstatus AS orderstatus,
+      |         CAST(o_totalprice AS DECIMAL(18,2)) AS totalprice,
+      |         CAST(o_orderdate AS DATE) AS orderdate
+      |  FROM orders
+      |)""".stripMargin
+
+  /** The tiered-SCD2 fixtures' first two order snapshots: run 1 (`obase`)
+    * and run 2 (`snapb`, every 53rd order repriced). */
+  private val duckTieredSnapsCte: String =
+    s"""$duckOrdersBaseCte,
+       |snapb AS (
+       |  SELECT o_orderkey, orderstatus,
+       |         CASE WHEN o_orderkey % 53 = 0
+       |              THEN CAST(totalprice + 100 AS DECIMAL(18,2))
+       |              ELSE totalprice END AS totalprice,
+       |         orderdate
+       |  FROM obase
+       |)""".stripMargin
+
+  /** The tiered closed forms' first row class: the run-1 versions (`h1`)
+    * of the orders run 2 repriced, closed the day before run 2. */
+  private val duckTieredRun1ClosedSelect: String =
+    s"""SELECT o_orderkey, CAST(totalprice AS DOUBLE) AS totalprice,
+       |       rh AS "RECORD_HASH",
+       |       TIMESTAMP '$ts1' AS "INSERT_TS", '20240101100000' AS "INSERT_RUN_ID",
+       |       TIMESTAMP '$ts2' AS "UPDATE_TS", '20240215103000' AS "UPDATE_RUN_ID",
+       |       DATE '2024-01-01' AS "VALID_FROM", DATE '2024-02-14' AS "VALID_TO",
+       |       CAST(NULL AS TIMESTAMP) AS "DELETED"
+       |FROM h1 WHERE o_orderkey % 53 = 0
+       |UNION ALL BY NAME""".stripMargin
+
   /** 4-run tiered delete-lifecycle closed form — shared by the fresh
     * (`x_scd2_tiered`) and steady-state (`x_scd2_tiered_run`) rows. */
   private[graft] val scd2TieredLifecycleSql: String =
-    s"""WITH obase AS (
-         |  SELECT o_orderkey, o_orderstatus AS orderstatus,
-         |         CAST(o_totalprice AS DECIMAL(18,2)) AS totalprice,
-         |         CAST(o_orderdate AS DATE) AS orderdate
-         |  FROM orders
-         |),
-         |snapb AS (
-         |  SELECT o_orderkey, orderstatus,
-         |         CASE WHEN o_orderkey % 53 = 0
-         |              THEN CAST(totalprice + 100 AS DECIMAL(18,2))
-         |              ELSE totalprice END AS totalprice,
-         |         orderdate
-         |  FROM obase
-         |),
+    s"""WITH $duckTieredSnapsCte,
          |h1 AS (
          |  SELECT *, md5(concat_ws('#?',
          |    coalesce(CAST(o_orderkey AS VARCHAR),'nan'),
@@ -527,14 +569,7 @@ private[graft] object OracleCtes {
          |    coalesce(CAST(totalprice AS VARCHAR),'nan'),
          |    coalesce(CAST(orderdate AS VARCHAR),'nan'))) AS rh FROM snapb
          |)
-         |SELECT o_orderkey, CAST(totalprice AS DOUBLE) AS totalprice,
-         |       rh AS "RECORD_HASH",
-         |       TIMESTAMP '$ts1' AS "INSERT_TS", '20240101100000' AS "INSERT_RUN_ID",
-         |       TIMESTAMP '$ts2' AS "UPDATE_TS", '20240215103000' AS "UPDATE_RUN_ID",
-         |       DATE '2024-01-01' AS "VALID_FROM", DATE '2024-02-14' AS "VALID_TO",
-         |       CAST(NULL AS TIMESTAMP) AS "DELETED"
-         |FROM h1 WHERE o_orderkey % 53 = 0
-         |UNION ALL BY NAME
+         |$duckTieredRun1ClosedSelect
          |SELECT o_orderkey, CAST(totalprice AS DOUBLE) AS totalprice,
          |       rh AS "RECORD_HASH",
          |       CASE WHEN o_orderkey % 53 = 0 THEN TIMESTAMP '$ts2'
@@ -566,20 +601,7 @@ private[graft] object OracleCtes {
   /** Closed form of the 4-run COMPACTION fixture ([[stagedTier4Runs]]);
     * see the `x_scd2_tiered_compact` registration for the row classes. */
   private[graft] val scd2TieredCompactSql: String =
-    s"""WITH obase AS (
-       |  SELECT o_orderkey, o_orderstatus AS orderstatus,
-       |         CAST(o_totalprice AS DECIMAL(18,2)) AS totalprice,
-       |         CAST(o_orderdate AS DATE) AS orderdate
-       |  FROM orders
-       |),
-       |snapb AS (
-       |  SELECT o_orderkey, orderstatus,
-       |         CASE WHEN o_orderkey % 53 = 0
-       |              THEN CAST(totalprice + 100 AS DECIMAL(18,2))
-       |              ELSE totalprice END AS totalprice,
-       |         orderdate
-       |  FROM obase
-       |),
+    s"""WITH $duckTieredSnapsCte,
        |snapc AS (
        |  SELECT o_orderkey, orderstatus,
        |         CASE WHEN o_orderkey % 31 = 0
@@ -591,14 +613,7 @@ private[graft] object OracleCtes {
        |h1 AS (SELECT *, md5(concat_ws('#?', coalesce(CAST(o_orderkey AS VARCHAR),'nan'), coalesce(orderstatus,'nan'), coalesce(CAST(totalprice AS VARCHAR),'nan'), coalesce(CAST(orderdate AS VARCHAR),'nan'))) AS rh FROM obase),
        |h2 AS (SELECT *, md5(concat_ws('#?', coalesce(CAST(o_orderkey AS VARCHAR),'nan'), coalesce(orderstatus,'nan'), coalesce(CAST(totalprice AS VARCHAR),'nan'), coalesce(CAST(orderdate AS VARCHAR),'nan'))) AS rh FROM snapb),
        |h4 AS (SELECT *, md5(concat_ws('#?', coalesce(CAST(o_orderkey AS VARCHAR),'nan'), coalesce(orderstatus,'nan'), coalesce(CAST(totalprice AS VARCHAR),'nan'), coalesce(CAST(orderdate AS VARCHAR),'nan'))) AS rh FROM snapc)
-       |SELECT o_orderkey, CAST(totalprice AS DOUBLE) AS totalprice,
-       |       rh AS "RECORD_HASH",
-       |       TIMESTAMP '$ts1' AS "INSERT_TS", '20240101100000' AS "INSERT_RUN_ID",
-       |       TIMESTAMP '$ts2' AS "UPDATE_TS", '20240215103000' AS "UPDATE_RUN_ID",
-       |       DATE '2024-01-01' AS "VALID_FROM", DATE '2024-02-14' AS "VALID_TO",
-       |       CAST(NULL AS TIMESTAMP) AS "DELETED"
-       |FROM h1 WHERE o_orderkey % 53 = 0
-       |UNION ALL BY NAME
+       |$duckTieredRun1ClosedSelect
        |SELECT o_orderkey, CAST(totalprice AS DOUBLE) AS totalprice,
        |       rh AS "RECORD_HASH",
        |       CASE WHEN o_orderkey % 53 = 0 THEN TIMESTAMP '$ts2'
@@ -760,16 +775,95 @@ private[graft] object OracleCtes {
   /** Run-1 store content minus the erased keys — shared by the
     * generation-purge and manifest-purge rows (both read "pass 1, after
     * erasure" through different resolution axes). */
-  private[graft] lazy val duckRun1PurgedSql: String =
-    s"""$snapshotsCte,
-       |delta AS (
-       |  SELECT n.* FROM enrichB n LEFT JOIN enrichA c
-       |    ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-       |  WHERE c."KEY_HASH" IS NULL
+  private[graft] lazy val duckRun1PurgedSql: String = duckTwoRunStoreSql(snapshotsCte,
+    "\nWHERE \"INSERT_RUN_ID\" <= '20240101100000' AND l_orderkey % 7 <> 0")
+
+  /** The span rows' 30-gram positions (1-based starts, every `stride`-th)
+    * of the docs of at least 30 chars: `docs`, `pos (doc_id, p, gram)`. */
+  private[registry] def duckSpanPositionsCte(stride: Int = 1): String = {
+    val step = if (stride == 1) "" else s", $stride"
+    s"""WITH docs AS (
+       |  SELECT doc_id, text FROM documents WHERE length(text) >= 30
+       |),
+       |pos AS (
+       |  SELECT doc_id, CAST(p AS INT) AS p, substring(text, CAST(p AS INT), 30) AS gram
+       |  FROM (SELECT doc_id, text, unnest(range(1, length(text) - 28$step)) AS p FROM docs)
+       |)""".stripMargin
+  }
+
+  /** Islands of the positions `rel (doc_id, p)` taken every `stride`
+    * chars: a run of consecutive positions shares `grp` (`isl`). */
+  private[registry] def duckIslandsCte(rel: String, stride: Int = 1): String = {
+    val step = if (stride == 1) "" else s" * $stride"
+    s"""isl AS (
+       |  SELECT doc_id, p,
+       |    p - CAST(row_number() OVER (PARTITION BY doc_id ORDER BY p) AS INT)$step AS grp
+       |  FROM $rel
+       |)""".stripMargin
+  }
+
+  /** The exact-span statement over raw substrings instead of the 60-bit
+    * hashes: a position is duplicated when its 30-gram is in ≥ 2
+    * distinct docs, `dpWhere` (a trailing predicate line, or empty)
+    * restricts the reported positions, and each island of duplicated
+    * positions is one span. */
+  private[graft] def duckSpansSql(stride: Int = 1, dpWhere: String = ""): String =
+    s"""${duckSpanPositionsCte(stride)},
+       |dup AS (
+       |  SELECT gram FROM pos GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
+       |),
+       |dp AS (
+       |  SELECT pos.doc_id, pos.p FROM pos JOIN dup USING (gram)$dpWhere
+       |),
+       |${duckIslandsCte("dp", stride)}
+       |SELECT doc_id, min(p) AS span_start, max(p) + 29 AS span_end
+       |FROM isl GROUP BY doc_id, grp""".stripMargin
+
+  /** The span-removal surgery over the cut positions `cut (doc_id, p)`:
+    * islands become spans, spans interval-merge (strictly-overlapping
+    * only), and each doc of `textRel (doc_id, text)` is reassembled from
+    * the lag-segments between its merged spans + string_agg + the tail —
+    * equivalent to the Spark fold over disjoint sorted spans. A doc with
+    * no cut keeps its text. */
+  private[registry] def duckSpanSurgery(textRel: String): String =
+    s"""${duckIslandsCte("cut")},
+       |sp AS (
+       |  SELECT doc_id, min(p) AS s, max(p) + 29 AS e FROM isl GROUP BY doc_id, grp
+       |),
+       |mk AS (
+       |  SELECT doc_id, s, e,
+       |    max(e) OVER (PARTITION BY doc_id ORDER BY s
+       |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
+       |  FROM sp
+       |),
+       |mg AS (
+       |  SELECT doc_id, s, e,
+       |    sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
+       |      OVER (PARTITION BY doc_id ORDER BY s ROWS UNBOUNDED PRECEDING) AS mgrp
+       |  FROM mk
+       |),
+       |merged AS (
+       |  SELECT doc_id, min(s) AS s, max(e) AS e FROM mg GROUP BY doc_id, mgrp
+       |),
+       |segs AS (
+       |  SELECT m.doc_id, m.s,
+       |    substring(d.text,
+       |      coalesce(lag(m.e) OVER (PARTITION BY m.doc_id ORDER BY m.s), 0) + 1,
+       |      m.s - coalesce(lag(m.e) OVER (PARTITION BY m.doc_id ORDER BY m.s), 0) - 1) AS seg
+       |  FROM merged m JOIN $textRel d USING (doc_id)
+       |),
+       |heads AS (
+       |  SELECT doc_id, string_agg(seg, '' ORDER BY s) AS head FROM segs GROUP BY doc_id
+       |),
+       |tails AS (
+       |  SELECT doc_id, max(e) AS me FROM merged GROUP BY doc_id
        |)
-       |SELECT * REPLACE (CAST(quantity AS DOUBLE) AS quantity)
-       |FROM (SELECT * FROM enrichA UNION ALL BY NAME SELECT * FROM delta)
-       |WHERE "INSERT_RUN_ID" <= '20240101100000' AND l_orderkey % 7 <> 0""".stripMargin
+       |SELECT d.doc_id,
+       |  CASE WHEN t.me IS NULL THEN d.text
+       |       ELSE coalesce(h.head, '') || substring(d.text, t.me + 1) END AS cleaned
+       |FROM $textRel d
+       |LEFT JOIN heads h USING (doc_id)
+       |LEFT JOIN tails t USING (doc_id)""".stripMargin
 
   /** Batch-aware spans twin shared by the staged-build and purge rows:
     * the spansStream contract is prefix-asymmetric — a position of a doc

@@ -8,6 +8,46 @@ import graft.operators.{Dedup, TextAnalysis}
   * generated from the SAME constants the operators use, so the two
   * engines cannot drift. */
 private[graft] object OracleCtesVectors {
+  /** The vectors with their L2 norms: `v (id, vv, nrm)`. */
+  private[registry] def duckVecNormsCte(dims: Int = 64): String =
+    s"""v AS (
+       |  SELECT vec_id AS id, embedding AS vv,
+       |    sqrt(list_sum(list_transform(range(1, ${dims + 1}),
+       |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
+       |  FROM embeddings
+       |)""".stripMargin
+
+  /** The top-k tail of the ANN oracles over `scored (query_id, corpus_id,
+    * cos)`: the first `k` corpus ids per query by (cos DESC, id ASC). */
+  private[graft] def duckTopKTail(k: Int = 10): String =
+    s"""ranked AS (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |                               ORDER BY cos DESC, corpus_id ASC) AS rank
+       |  FROM scored
+       |)
+       |SELECT query_id, corpus_id, cos, CAST(rank AS INT) AS rank
+       |FROM ranked WHERE rank <= $k""".stripMargin
+
+  /** The PQ oracles' re-rank over the ADC scores `adc`: the `probe` best
+    * corpus ids per query (`sl`), rescored by exact cosine over `v` and
+    * cut to the top `k`. */
+  private def duckShortlistRerank(probe: Int, k: Int, dims: Int): String =
+    s"""sl AS (
+       |  SELECT query_id, corpus_id FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY query_id
+       |                                 ORDER BY cos DESC, corpus_id ASC) AS rn
+       |    FROM adc
+       |  ) WHERE rn <= $probe
+       |),
+       |scored AS (
+       |  SELECT query_id, corpus_id,
+       |    round(list_sum(list_transform(range(1, ${dims + 1}),
+       |            i -> CAST(vq.vv[i] AS DOUBLE) * CAST(vc.vv[i] AS DOUBLE)))
+       |          / (vq.nrm * vc.nrm), 6) AS cos
+       |  FROM sl JOIN v vq ON vq.id = query_id JOIN v vc ON vc.id = corpus_id
+       |),
+       |${duckTopKTail(k)}""".stripMargin
+
   /** Deterministic-k-means CTE chain (the SQL twin of
     * [[Similarity.kmeansAssign]]): `v` = vectors with norms, `c0` =
     * smallest-md5(id) seed centroids as doubles, then per Lloyd round r a
@@ -20,12 +60,7 @@ private[graft] object OracleCtesVectors {
   private[graft] def duckKmeansCtes(k: Int, iters: Int, dims: Int = 64): String = {
     val d1 = dims + 1
     val head =
-      s"""v AS (
-         |  SELECT vec_id AS id, embedding AS vv,
-         |    sqrt(list_sum(list_transform(range(1, $d1),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-         |  FROM embeddings
-         |),
+      s"""${duckVecNormsCte(dims)},
          |c0 AS (
          |  SELECT CAST(row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS INT) AS cid,
          |         list_transform(range(1, $d1), i -> CAST(vv[i] AS DOUBLE)) AS cv
@@ -63,12 +98,7 @@ private[graft] object OracleCtesVectors {
     * cell scores, per-vector argmax. The x_sim_ivf probe statement and
     * the batch-assign oracle both build on it. */
   private[graft] val duckIvfAssignCtes: String =
-    """v AS (
-      |  SELECT vec_id AS id, embedding AS vv,
-      |    sqrt(list_sum(list_transform(range(1, 65),
-      |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-      |  FROM embeddings
-      |),
+    s"""${duckVecNormsCte()},
       |cent AS (
       |  SELECT CAST(row_number() OVER (ORDER BY md5(CAST(id AS VARCHAR))) - 1 AS INT) AS cid,
       |         vv AS cv, nrm AS cnrm
@@ -95,12 +125,7 @@ private[graft] object OracleCtesVectors {
     val d0 = dims / m
     val d1 = d0 + 1
     val head =
-      s"""WITH v AS (
-         |  SELECT vec_id AS id, embedding AS vv,
-         |    sqrt(list_sum(list_transform(range(1, ${dims + 1}),
-         |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-         |  FROM embeddings
-         |),
+      s"""WITH ${duckVecNormsCte(dims)},
          |sub AS (
          |  SELECT id, CAST(t.s AS INT) AS s,
          |    list_transform(range(CAST(t.s AS INT) * $d0 + 1, CAST(t.s AS INT) * $d0 + $d1),
@@ -259,27 +284,7 @@ private[graft] object OracleCtesVectors {
          |  JOIN v vq ON vq.id = q.qid
          |  JOIN v ve ON ve.id = e.id
          |),
-         |sl AS (
-         |  SELECT query_id, corpus_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |                                 ORDER BY cos DESC, corpus_id ASC) AS rn
-         |    FROM adc
-         |  ) WHERE rn <= $probe
-         |),
-         |scored AS (
-         |  SELECT query_id, corpus_id,
-         |    round(list_sum(list_transform(range(1, ${dims + 1}),
-         |            i -> CAST(vq.vv[i] AS DOUBLE) * CAST(vc.vv[i] AS DOUBLE)))
-         |          / (vq.nrm * vc.nrm), 6) AS cos
-         |  FROM sl JOIN v vq ON vq.id = query_id JOIN v vc ON vc.id = corpus_id
-         |),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY cos DESC, corpus_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, corpus_id, cos, CAST(rank AS INT) AS rank
-         |FROM ranked WHERE rank <= $k""".stripMargin
+         |${duckShortlistRerank(probe, k, dims)}""".stripMargin
     (head +: rounds :+ tail).mkString(",\n")
   }
 
@@ -315,27 +320,7 @@ private[graft] object OracleCtesVectors {
          |  FROM ec e CROSS JOIN tqq t JOIN v vq ON vq.id = t.qid
          |  WHERE t.qid <> e.id
          |),
-         |sl AS (
-         |  SELECT query_id, corpus_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |                                 ORDER BY cos DESC, corpus_id ASC) AS rn
-         |    FROM adc
-         |  ) WHERE rn <= $probe
-         |),
-         |scored AS (
-         |  SELECT query_id, corpus_id,
-         |    round(list_sum(list_transform(range(1, ${dims + 1}),
-         |            i -> CAST(vq.vv[i] AS DOUBLE) * CAST(vc.vv[i] AS DOUBLE)))
-         |          / (vq.nrm * vc.nrm), 6) AS cos
-         |  FROM sl JOIN v vq ON vq.id = query_id JOIN v vc ON vc.id = corpus_id
-         |),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |                               ORDER BY cos DESC, corpus_id ASC) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, corpus_id, cos, CAST(rank AS INT) AS rank
-         |FROM ranked WHERE rank <= $k""".stripMargin
+         |${duckShortlistRerank(probe, k, dims)}""".stripMargin
     duckPqCtes(m, ks, iters, dims) + ",\n" + tail
   }
 

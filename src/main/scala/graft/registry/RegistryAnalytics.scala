@@ -384,43 +384,9 @@ private[graft] object RegistryAnalytics {
         |FROM daily""".stripMargin,
     // merged synopsis ≡ single pass (the merge law), so the oracle IS
     // x_sketch_quantiles' single-pass form on the same parameters
-    "x_agg_maintain_quantile" ->
-      s"""WITH d AS (
-         |  SELECT DISTINCT o_orderpriority, ${duckHashUniform("o_orderkey", "bkq")} AS u,
-         |         CAST(o_totalprice AS DOUBLE) AS v
-         |  FROM orders WHERE o_orderkey IS NOT NULL AND o_totalprice IS NOT NULL
-         |),
-         |r AS (
-         |  SELECT o_orderpriority, u, v,
-         |         row_number() OVER (PARTITION BY o_orderpriority ORDER BY u, v) AS rn
-         |  FROM d
-         |),
-         |s AS (
-         |  SELECT o_orderpriority, list_sort(list(v)) AS vs, count(*) AS m
-         |  FROM r WHERE rn <= 256 GROUP BY o_orderpriority
-         |)
-         |SELECT o_orderpriority, CAST(q AS DOUBLE) AS q,
-         |       round(vs[CAST(floor(CAST(q AS DOUBLE) * (m - 1)) AS INT) + 1], 6) AS est_value,
-         |       CAST(m AS INT) AS n_sample
-         |FROM s, (SELECT unnest([0.25, 0.5, 0.75, 0.9, 0.99]) AS q)""".stripMargin,
+    "x_agg_maintain_quantile" -> RegistrySampling.duckBottomKQuantilesSql,
     // same estimator twin as x_sketch_distinct: the merged synopsis must
     // equal the single-pass KMV, so the oracle IS the single-pass form
-    "x_agg_maintain_distinct" ->
-      s"""WITH u AS (
-         |  SELECT DISTINCT event_type, ${duckHashUniform("user_id", "kmv")} AS u
-         |  FROM events
-         |),
-         |r AS (
-         |  SELECT event_type, u,
-         |         row_number() OVER (PARTITION BY event_type ORDER BY u) AS rn,
-         |         count(*) OVER (PARTITION BY event_type) AS nd
-         |  FROM u
-         |)
-         |SELECT event_type,
-         |       round(CASE WHEN max(nd) < 64 THEN CAST(max(nd) AS DOUBLE)
-         |             ELSE 63.0 / max(CASE WHEN rn = 64 THEN u END) END, 6)
-         |         AS est_distinct,
-         |       CAST(least(max(nd), 64) AS INT) AS n_kept
-         |FROM r GROUP BY event_type""".stripMargin,
+    "x_agg_maintain_distinct" -> RegistrySampling.duckKmvDistinctSql,
   )
 }

@@ -354,6 +354,134 @@ private[graft] object RegistryCuration {
        |    SELECT md5(coalesce(CAST(text AS VARCHAR), 'nan'))
        |    FROM src WHERE doc_id < 10000 AND doc_id % 10 = 2)""".stripMargin
 
+  /** The exact-dedup election of the curate rows as CTE `name`: the
+    * first doc per content hash of `hashed`. */
+  private def duckFirstPerContentHash(name: String): String =
+    s"""$name AS (
+       |  SELECT doc_id FROM (
+       |    SELECT doc_id,
+       |      row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
+       |    FROM hashed
+       |  ) WHERE rn = 1
+       |)""".stripMargin
+
+  /** The split of the `u` draws; the val bound is written (0.9 + 0.05)
+    * so both engines accumulate the identical IEEE double. */
+  private val duckSplitSelect: String =
+    """SELECT doc_id,
+      |  CASE WHEN u < 0.9 THEN 'train'
+      |       WHEN u < (0.9 + 0.05) THEN 'val'
+      |       ELSE 'test' END AS split
+      |FROM u""".stripMargin
+
+  /** The bench docs' shingle set (every 20th doc of `sh`). */
+  private val duckBenchShinglesCte: String =
+    """bench AS (
+      |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 20 = 0
+      |)""".stripMargin
+
+  /** The corpus-wide curate rows' quality gate over the train docs,
+    * narrowed by `extra` (further predicate lines). */
+  private def duckCurateBase(extra: String = ""): String =
+    s"""base AS (
+       |  SELECT doc_id FROM m
+       |  WHERE $qualityKeepPredicate AND doc_id % 20 <> 0$extra
+       |)""".stripMargin
+
+  /** The corpus-wide curate statement: shingles and quality metrics,
+    * `gate` (the CTEs ending in `base`), exact dedup of the gated docs,
+    * `cluster` (CTEs ending in `ndd`, the near-dup survivors of `dedup`;
+    * none for the rows without that stage), decontamination of the
+    * survivors against the bench shingles, split. */
+  private def duckCurateSql(gate: String, cluster: Seq[String] = Nil): String = {
+    val (head, kept) =
+      if (cluster.isEmpty) (docShinglesCte, "dedup")
+      else (docShinglesCte.replaceFirst("^WITH ", "WITH RECURSIVE "), "ndd")
+    val ctes = Seq(head, qualityMetricsCte, gate,
+      """hashed AS (
+        |  SELECT d.doc_id, md5(coalesce(CAST(d.text AS VARCHAR), 'nan')) AS content_hash
+        |  FROM documents d JOIN base USING (doc_id)
+        |)""".stripMargin,
+      duckFirstPerContentHash("dedup")) ++ cluster ++ Seq(duckBenchShinglesCte,
+      s"""tr AS (
+         |  SELECT sh.doc_id, unnest(sh.shingles) AS s FROM sh JOIN $kept USING (doc_id)
+         |),
+         |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bench USING (s)),
+         |clean AS (
+         |  SELECT d.doc_id FROM $kept d LEFT JOIN hits h USING (doc_id)
+         |  WHERE h.doc_id IS NULL
+         |),
+         |u AS (
+         |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u FROM clean
+         |)""".stripMargin)
+    ctes.mkString(",\n") + "\n" + duckSplitSelect
+  }
+
+  /** The near-dup cluster stage of [[duckCurateSql]]: Hamming pairs
+    * within `maxHamming` of `fpTail`'s 16-bit fingerprints, restricted to
+    * the dedup survivors; the non-minimum members of their components
+    * are dropped. */
+  private def duckCurateCluster(fpTail: String, maxHamming: Int): Seq[String] = Seq(
+    fpTail, duckHammingPairs(16, maxHamming),
+    """pairs2 AS (
+      |  SELECT p.id_a, p.id_b FROM pairs p
+      |  JOIN dedup da ON da.doc_id = p.id_a
+      |  JOIN dedup db ON db.doc_id = p.id_b
+      |)""".stripMargin,
+    duckCcLosers("pairs2"),
+    """ndd AS (
+      |  SELECT d.doc_id FROM dedup d
+      |  WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.id = d.doc_id)
+      |)""".stripMargin)
+
+  /** The incremental law rows after their near-dup election: the bench
+    * docs' shingles (`bsh`), `tr` (the CTE pairing each `kept` doc with
+    * its shingles), decontamination and the split of the batch docs. */
+  private def duckIncDecontamSplit(tr: String, kept: String): String =
+    s"""btoks AS (
+       |  SELECT doc_id,
+       |    list_filter(regexp_split_to_array(text, '\\s+'), t -> length(t) > 0) AS w
+       |  FROM documents WHERE doc_id % 20 = 0
+       |),
+       |bsh AS (
+       |  SELECT DISTINCT unnest(list_distinct(list_transform(
+       |    range(0, greatest(len(w) - 3, 0) + 1),
+       |    i -> array_to_string(w[i+1:i+3], ' ')))) AS s
+       |  FROM btoks
+       |),
+       |$tr,
+       |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bsh USING (s)),
+       |clean AS (
+       |  SELECT k.doc_id FROM $kept k LEFT JOIN hits h USING (doc_id)
+       |  WHERE h.doc_id IS NULL
+       |),
+       |u AS (
+       |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u
+       |  FROM clean WHERE doc_id >= 10000
+       |)
+       |$duckSplitSelect""".stripMargin
+
+  /** The drift row's profile of the orders side `side` (`p<side>`): per
+    * column the row count, completeness and uniqueness, each ratio
+    * rounded to 6. */
+  private def duckDriftProfileCte(side: String): String =
+    s"""p$side AS (
+       |  SELECT 'o_orderkey' AS "column", count(*) AS n_rows_$side,
+       |         round(CAST(count(o_orderkey) AS DOUBLE) / count(*), 6) AS completeness_$side,
+       |         round(CAST(count(DISTINCT o_orderkey) AS DOUBLE) / count(*), 6) AS uniqueness_$side
+       |  FROM $side
+       |  UNION ALL
+       |  SELECT 'o_custkey', count(*),
+       |         round(CAST(count(o_custkey) AS DOUBLE) / count(*), 6),
+       |         round(CAST(count(DISTINCT o_custkey) AS DOUBLE) / count(*), 6)
+       |  FROM $side
+       |  UNION ALL
+       |  SELECT 'o_orderstatus', count(*),
+       |         round(CAST(count(o_orderstatus) AS DOUBLE) / count(*), 6),
+       |         round(CAST(count(DISTINCT o_orderstatus) AS DOUBLE) / count(*), 6)
+       |  FROM $side
+       |)""".stripMargin
+
   val oracles: Seq[(String, String)] = Seq(
     // the staged prefix's FULL CONTENT replayed: quality keep predicate
     // and model score over the shared metric CTE, the stopword-profile
@@ -382,118 +510,18 @@ private[graft] object RegistryCuration {
          |JOIN documents d USING (doc_id)
          |LEFT JOIN hits h USING (doc_id)
          |WHERE m.doc_id % 20 <> 0""".stripMargin,
-    // the four curation stages in one statement; quality CTEs and the
-    // keep predicate are the SAME vals the standalone x_text_quality
-    // oracle uses, the split bound is written (0.9 + 0.05) so both
-    // engines accumulate the identical IEEE double
     // x_curate plus the near-dup cluster stage between exact dedup and
     // decontamination: simhash fps (shared tail CTE) -> pigeonhole pairs
     // restricted to dedup survivors -> recursive min-label components ->
     // drop non-minimum members. Restricting PAIRS to survivors equals the
     // operator's pairs-over-survivors (blocking commutes with the subset)
     "x_curate_neardup" ->
-      s"""WITH RECURSIVE $duckToksCte,
-         |$duckShinglesTailCte,
-         |$qualityMetricsCte,
-         |base AS (
-         |  SELECT doc_id FROM m
-         |  WHERE $qualityKeepPredicate AND doc_id % 20 <> 0
-         |),
-         |hashed AS (
-         |  SELECT d.doc_id, md5(coalesce(CAST(d.text AS VARCHAR), 'nan')) AS content_hash
-         |  FROM documents d JOIN base USING (doc_id)
-         |),
-         |dedup AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id,
-         |      row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
-         |    FROM hashed
-         |  ) WHERE rn = 1
-         |),
-         |$simhashFpTailCte,
-         |${duckHammingPairs(16, 1)},
-         |pairs2 AS (
-         |  SELECT p.id_a, p.id_b FROM pairs p
-         |  JOIN dedup da ON da.doc_id = p.id_a
-         |  JOIN dedup db ON db.doc_id = p.id_b
-         |),
-         |${duckCcLosers("pairs2")},
-         |ndd AS (
-         |  SELECT d.doc_id FROM dedup d
-         |  WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.id = d.doc_id)
-         |),
-         |bench AS (
-         |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 20 = 0
-         |),
-         |tr AS (
-         |  SELECT sh.doc_id, unnest(sh.shingles) AS s FROM sh JOIN ndd USING (doc_id)
-         |),
-         |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bench USING (s)),
-         |clean AS (
-         |  SELECT d.doc_id FROM ndd d LEFT JOIN hits h USING (doc_id)
-         |  WHERE h.doc_id IS NULL
-         |),
-         |u AS (
-         |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u FROM clean
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < (0.9 + 0.05) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM u""".stripMargin,
+      duckCurateSql(duckCurateBase(), duckCurateCluster(simhashFpTailCte, 1)),
     // the x_curate_neardup statement with the pair source swapped: phash
     // fingerprints (the x_media_phash derivation) instead of simhash —
     // the media cluster stage composed into curation
     "x_curate_media" ->
-      s"""WITH RECURSIVE $duckToksCte,
-         |$duckShinglesTailCte,
-         |$qualityMetricsCte,
-         |base AS (
-         |  SELECT doc_id FROM m
-         |  WHERE $qualityKeepPredicate AND doc_id % 20 <> 0
-         |),
-         |hashed AS (
-         |  SELECT d.doc_id, md5(coalesce(CAST(d.text AS VARCHAR), 'nan')) AS content_hash
-         |  FROM documents d JOIN base USING (doc_id)
-         |),
-         |dedup AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id,
-         |      row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
-         |    FROM hashed
-         |  ) WHERE rn = 1
-         |),
-         |$phashFpTailCte,
-         |${duckHammingPairs(16, 2)},
-         |pairs2 AS (
-         |  SELECT p.id_a, p.id_b FROM pairs p
-         |  JOIN dedup da ON da.doc_id = p.id_a
-         |  JOIN dedup db ON db.doc_id = p.id_b
-         |),
-         |${duckCcLosers("pairs2")},
-         |ndd AS (
-         |  SELECT d.doc_id FROM dedup d
-         |  WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.id = d.doc_id)
-         |),
-         |bench AS (
-         |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 20 = 0
-         |),
-         |tr AS (
-         |  SELECT sh.doc_id, unnest(sh.shingles) AS s FROM sh JOIN ndd USING (doc_id)
-         |),
-         |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bench USING (s)),
-         |clean AS (
-         |  SELECT d.doc_id FROM ndd d LEFT JOIN hits h USING (doc_id)
-         |  WHERE h.doc_id IS NULL
-         |),
-         |u AS (
-         |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u FROM clean
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < (0.9 + 0.05) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM u""".stripMargin,
+      duckCurateSql(duckCurateBase(), duckCurateCluster(phashFpTailCte, 2)),
     // the incremental law AS the oracle: the corpus-wide composition
     // (url blocklist + canonical keep-min → quality → exact keep-min →
     // banded bucket keep-min → decontaminate → split) over
@@ -522,13 +550,7 @@ private[graft] object RegistryCuration {
     // registered row computes through the standing fp index + labeling
     "x_curate_incremental_cc" ->
       s"""WITH RECURSIVE $duckCurateIncPrefixBody,
-         |exact AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id,
-         |      row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
-         |    FROM hashed
-         |  ) WHERE rn = 1
-         |),
+         |${duckFirstPerContentHash("exact")},
          |${simhashFpTail(64)},
          |${duckHammingPairs(64, 3)},
          |pairs2 AS (
@@ -547,59 +569,17 @@ private[graft] object RegistryCuration {
          |      i -> array_to_string(w[i+1:i+3], ' '))) AS shingles
          |  FROM toks t JOIN cckept USING (doc_id)
          |),
-         |btoks AS (
-         |  SELECT doc_id,
-         |    list_filter(regexp_split_to_array(text, '\\s+'), t -> length(t) > 0) AS w
-         |  FROM documents WHERE doc_id % 20 = 0
-         |),
-         |bsh AS (
-         |  SELECT DISTINCT unnest(list_distinct(list_transform(
-         |    range(0, greatest(len(w) - 3, 0) + 1),
-         |    i -> array_to_string(w[i+1:i+3], ' ')))) AS s
-         |  FROM btoks
-         |),
-         |tr AS (SELECT doc_id, unnest(shingles) AS s FROM shx),
-         |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bsh USING (s)),
-         |clean AS (
-         |  SELECT k.doc_id FROM cckept k LEFT JOIN hits h USING (doc_id)
-         |  WHERE h.doc_id IS NULL
-         |),
-         |u AS (
-         |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u
-         |  FROM clean WHERE doc_id >= 10000
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < (0.9 + 0.05) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM u""".stripMargin,
+         |${duckIncDecontamSplit("tr AS (SELECT doc_id, unnest(shingles) AS s FROM shx)", "cckept")}""".stripMargin,
     "x_curate_incremental" ->
       s"""WITH $duckCurateIncPrefixBody,
-         |exact AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id,
-         |      row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
-         |    FROM hashed
-         |  ) WHERE rn = 1
-         |),
+         |${duckFirstPerContentHash("exact")},
          |shx AS (
          |  SELECT t.doc_id,
          |    list_distinct(list_transform(range(0, greatest(len(w) - 3, 0) + 1),
          |      i -> array_to_string(w[i+1:i+3], ' '))) AS shingles
          |  FROM toks t JOIN exact USING (doc_id)
          |),
-         |sig AS (
-         |  SELECT doc_id AS id,
-         |    list_transform(range(0, 8),
-         |      j -> list_min(list_transform(shingles,
-         |             s -> md5(concat(CAST(j AS VARCHAR), '#', s))))) AS sig
-         |  FROM shx
-         |),
-         |banded AS (
-         |  SELECT id, g.band,
-         |         md5(array_to_string(sig[g.band*2+1:g.band*2+2], '|')) AS key
-         |  FROM sig, generate_series(0, 3) g(band)
-         |),
+         |${duckMinhashBands("shx")},
          |nearcut AS (
          |  SELECT DISTINCT id FROM (
          |    SELECT id, min(id) OVER (PARTITION BY band, key) AS mn FROM banded
@@ -609,203 +589,47 @@ private[graft] object RegistryCuration {
          |  SELECT e.doc_id FROM exact e LEFT JOIN nearcut n ON n.id = e.doc_id
          |  WHERE n.id IS NULL
          |),
-         |btoks AS (
-         |  SELECT doc_id,
-         |    list_filter(regexp_split_to_array(text, '\\s+'), t -> length(t) > 0) AS w
-         |  FROM documents WHERE doc_id % 20 = 0
-         |),
-         |bsh AS (
-         |  SELECT DISTINCT unnest(list_distinct(list_transform(
-         |    range(0, greatest(len(w) - 3, 0) + 1),
-         |    i -> array_to_string(w[i+1:i+3], ' ')))) AS s
-         |  FROM btoks
-         |),
-         |tr AS (
-         |  SELECT k.doc_id, unnest(x.shingles) AS s
-         |  FROM nearkept k JOIN shx x USING (doc_id)
-         |),
-         |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bsh USING (s)),
-         |clean AS (
-         |  SELECT k.doc_id FROM nearkept k LEFT JOIN hits h USING (doc_id)
-         |  WHERE h.doc_id IS NULL
-         |),
-         |u AS (
-         |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u
-         |  FROM clean WHERE doc_id >= 10000
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < (0.9 + 0.05) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM u""".stripMargin,
-    "x_curate" ->
-      s"""$docShinglesCte,
-         |$qualityMetricsCte,
-         |base AS (
-         |  SELECT doc_id FROM m
-         |  WHERE $qualityKeepPredicate AND doc_id % 20 <> 0
-         |),
-         |hashed AS (
-         |  SELECT d.doc_id, md5(coalesce(CAST(d.text AS VARCHAR), 'nan')) AS content_hash
-         |  FROM documents d JOIN base USING (doc_id)
-         |),
-         |dedup AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id,
-         |      row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
-         |    FROM hashed
-         |  ) WHERE rn = 1
-         |),
-         |bench AS (
-         |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 20 = 0
-         |),
-         |tr AS (
-         |  SELECT sh.doc_id, unnest(sh.shingles) AS s FROM sh JOIN dedup USING (doc_id)
-         |),
-         |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bench USING (s)),
-         |clean AS (
-         |  SELECT d.doc_id FROM dedup d LEFT JOIN hits h USING (doc_id)
-         |  WHERE h.doc_id IS NULL
-         |),
-         |u AS (
-         |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u FROM clean
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < (0.9 + 0.05) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM u""".stripMargin,
+         |${duckIncDecontamSplit(
+              """tr AS (
+                |  SELECT k.doc_id, unnest(x.shingles) AS s
+                |  FROM nearkept k JOIN shx x USING (doc_id)
+                |)""".stripMargin, "nearkept")}""".stripMargin,
+    // the four curation stages in one statement; quality CTEs and the
+    // keep predicate are the SAME vals the standalone x_text_quality
+    // oracle uses, the split bound is written (0.9 + 0.05) so both
+    // engines accumulate the identical IEEE double
+    "x_curate" -> duckCurateSql(duckCurateBase()),
     // x_curate with the URL blocklist gate: identical statement except
     // `base` additionally excludes blocked hosts — the oracle replays the
     // gate's SEMANTICS over the same deterministic host derivation
     // (exact rule hits the non-ads host, the wildcard rule hits only the
     // ads. proper subdomain)
     "x_curate_url" ->
-      s"""$docShinglesCte,
-         |$qualityMetricsCte,
-         |base AS (
-         |  SELECT doc_id FROM m
-         |  WHERE $qualityKeepPredicate AND doc_id % 20 <> 0
-         |    AND NOT ((doc_id % 11 <> 0 AND doc_id % 37 = 5)
-         |          OR (doc_id % 11 = 0 AND doc_id % 37 = 7))
-         |),
-         |hashed AS (
-         |  SELECT d.doc_id, md5(coalesce(CAST(d.text AS VARCHAR), 'nan')) AS content_hash
-         |  FROM documents d JOIN base USING (doc_id)
-         |),
-         |dedup AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id,
-         |      row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
-         |    FROM hashed
-         |  ) WHERE rn = 1
-         |),
-         |bench AS (
-         |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 20 = 0
-         |),
-         |tr AS (
-         |  SELECT sh.doc_id, unnest(sh.shingles) AS s FROM sh JOIN dedup USING (doc_id)
-         |),
-         |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bench USING (s)),
-         |clean AS (
-         |  SELECT d.doc_id FROM dedup d LEFT JOIN hits h USING (doc_id)
-         |  WHERE h.doc_id IS NULL
-         |),
-         |u AS (
-         |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u FROM clean
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < (0.9 + 0.05) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM u""".stripMargin,
+      duckCurateSql(duckCurateBase(
+        """
+          |    AND NOT ((doc_id % 11 <> 0 AND doc_id % 37 = 5)
+          |          OR (doc_id % 11 = 0 AND doc_id % 37 = 7))""".stripMargin)),
     // x_curate with the model gate: identical statement except `base`
     // additionally requires the shared-weight sigmoid score >= 0.5
     "x_curate_quality" ->
-      s"""$docShinglesCte,
-         |$qualityMetricsCte,
-         |base AS (
-         |  SELECT doc_id FROM m
-         |  WHERE $qualityKeepPredicate AND doc_id % 20 <> 0
-         |    AND ${duckQualityScore(qualityWeights, qualityBias)} >= $qualityMinScore
-         |),
-         |hashed AS (
-         |  SELECT d.doc_id, md5(coalesce(CAST(d.text AS VARCHAR), 'nan')) AS content_hash
-         |  FROM documents d JOIN base USING (doc_id)
-         |),
-         |dedup AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id,
-         |      row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
-         |    FROM hashed
-         |  ) WHERE rn = 1
-         |),
-         |bench AS (
-         |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 20 = 0
-         |),
-         |tr AS (
-         |  SELECT sh.doc_id, unnest(sh.shingles) AS s FROM sh JOIN dedup USING (doc_id)
-         |),
-         |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bench USING (s)),
-         |clean AS (
-         |  SELECT d.doc_id FROM dedup d LEFT JOIN hits h USING (doc_id)
-         |  WHERE h.doc_id IS NULL
-         |),
-         |u AS (
-         |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u FROM clean
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < (0.9 + 0.05) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM u""".stripMargin,
+      duckCurateSql(duckCurateBase(
+        s"\n    AND ${duckQualityScore(qualityWeights, qualityBias)} >= $qualityMinScore")),
     // x_curate with the language gate: identical statement except `base`
     // additionally requires the generated stopword-profile argmax = 'en';
     // the lang CASE is built from the same vals as the x_text_lang oracle
     "x_curate_lang" ->
-      s"""$docShinglesCte,
-         |$qualityMetricsCte,
-         |lng AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id,
-         |      ${TextAnalysis.langOrder.map(l => s"${duckLangHits(l)} AS c_$l").mkString(", ")}
-         |    FROM toks
-         |  ) WHERE ($duckLangCase) = 'en'
-         |),
-         |base AS (
-         |  SELECT m.doc_id FROM m JOIN lng USING (doc_id)
-         |  WHERE $qualityKeepPredicate AND doc_id % 20 <> 0
-         |),
-         |hashed AS (
-         |  SELECT d.doc_id, md5(coalesce(CAST(d.text AS VARCHAR), 'nan')) AS content_hash
-         |  FROM documents d JOIN base USING (doc_id)
-         |),
-         |dedup AS (
-         |  SELECT doc_id FROM (
-         |    SELECT doc_id,
-         |      row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
-         |    FROM hashed
-         |  ) WHERE rn = 1
-         |),
-         |bench AS (
-         |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 20 = 0
-         |),
-         |tr AS (
-         |  SELECT sh.doc_id, unnest(sh.shingles) AS s FROM sh JOIN dedup USING (doc_id)
-         |),
-         |hits AS (SELECT DISTINCT t.doc_id FROM tr t JOIN bench USING (s)),
-         |clean AS (
-         |  SELECT d.doc_id FROM dedup d LEFT JOIN hits h USING (doc_id)
-         |  WHERE h.doc_id IS NULL
-         |),
-         |u AS (
-         |  SELECT doc_id, ${duckHashUniform("doc_id", "split")} AS u FROM clean
-         |)
-         |SELECT doc_id,
-         |  CASE WHEN u < 0.9 THEN 'train'
-         |       WHEN u < (0.9 + 0.05) THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM u""".stripMargin,
+      duckCurateSql(
+        s"""lng AS (
+           |  SELECT doc_id FROM (
+           |    SELECT doc_id,
+           |      ${TextAnalysis.langOrder.map(l => s"${duckLangHits(l)} AS c_$l").mkString(", ")}
+           |    FROM toks
+           |  ) WHERE ($duckLangCase) = 'en'
+           |),
+           |base AS (
+           |  SELECT m.doc_id FROM m JOIN lng USING (doc_id)
+           |  WHERE $qualityKeepPredicate AND doc_id % 20 <> 0
+           |)""".stripMargin),
     "x_decontaminate_by" ->
       s"""$docShinglesCte,
          |bench AS (
@@ -822,9 +646,7 @@ private[graft] object RegistryCuration {
          |GROUP BY 1, 2""".stripMargin,
     "x_decontaminate" ->
       s"""$docShinglesCte,
-         |bench AS (
-         |  SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id % 20 = 0
-         |),
+         |$duckBenchShinglesCte,
          |train AS (
          |  SELECT doc_id, unnest(shingles) AS s FROM sh WHERE doc_id % 20 <> 0
          |),
@@ -843,128 +665,53 @@ private[graft] object RegistryCuration {
     // island-merge window — the x_dedup_spans oracle with the bench gram
     // set replacing the df >= 2 duplication gate
     "x_decontaminate_spans" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents WHERE length(text) >= 30
-        |),
-        |bench AS (
-        |  SELECT DISTINCT substring(text, CAST(p AS INT), 30) AS gram
-        |  FROM (SELECT text, unnest(range(1, length(text) - 28)) AS p
-        |        FROM docs WHERE doc_id % 20 = 0)
-        |),
-        |pos AS (
-        |  SELECT doc_id, CAST(p AS INT) AS p, substring(text, CAST(p AS INT), 30) AS gram
-        |  FROM (SELECT doc_id, text, unnest(range(1, length(text) - 28)) AS p
-        |        FROM docs WHERE doc_id % 20 <> 0)
-        |),
-        |hit AS (SELECT pos.doc_id, pos.p FROM pos JOIN bench USING (gram)),
-        |isl AS (
-        |  SELECT doc_id, p,
-        |    p - CAST(row_number() OVER (PARTITION BY doc_id ORDER BY p) AS INT) AS grp
-        |  FROM hit
-        |)
-        |SELECT doc_id, min(p) AS span_start, max(p) + 29 AS span_end
-        |FROM isl GROUP BY doc_id, grp""".stripMargin,
+      s"""WITH docs AS (
+         |  SELECT doc_id, text FROM documents WHERE length(text) >= 30
+         |),
+         |bench AS (
+         |  SELECT DISTINCT substring(text, CAST(p AS INT), 30) AS gram
+         |  FROM (SELECT text, unnest(range(1, length(text) - 28)) AS p
+         |        FROM docs WHERE doc_id % 20 = 0)
+         |),
+         |pos AS (
+         |  SELECT doc_id, CAST(p AS INT) AS p, substring(text, CAST(p AS INT), 30) AS gram
+         |  FROM (SELECT doc_id, text, unnest(range(1, length(text) - 28)) AS p
+         |        FROM docs WHERE doc_id % 20 <> 0)
+         |),
+         |hit AS (SELECT pos.doc_id, pos.p FROM pos JOIN bench USING (gram)),
+         |${duckIslandsCte("hit")}
+         |SELECT doc_id, min(p) AS span_start, max(p) + 29 AS span_end
+         |FROM isl GROUP BY doc_id, grp""".stripMargin,
     // the scrub twin: the x_dedup_spans_removed surgery (interval merge,
     // segment stitch, tail append) with the contaminated-island cut set,
     // final select over the TRAIN rows so clean and short/null texts
     // pass through
     "x_decontaminate_scrub" ->
-      """WITH train AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0
-        |),
-        |docs AS (SELECT doc_id, text FROM train WHERE length(text) >= 30),
-        |bench AS (
-        |  SELECT DISTINCT substring(text, CAST(p AS INT), 30) AS gram
-        |  FROM (SELECT text, unnest(range(1, length(text) - 28)) AS p
-        |        FROM documents WHERE doc_id % 20 = 0 AND length(text) >= 30)
-        |),
-        |pos AS (
-        |  SELECT doc_id, CAST(p AS INT) AS p, substring(text, CAST(p AS INT), 30) AS gram
-        |  FROM (SELECT doc_id, text, unnest(range(1, length(text) - 28)) AS p FROM docs)
-        |),
-        |cut AS (SELECT pos.doc_id, pos.p FROM pos JOIN bench USING (gram)),
-        |isl AS (
-        |  SELECT doc_id, p,
-        |    p - CAST(row_number() OVER (PARTITION BY doc_id ORDER BY p) AS INT) AS grp
-        |  FROM cut
-        |),
-        |sp AS (
-        |  SELECT doc_id, min(p) AS s, max(p) + 29 AS e FROM isl GROUP BY doc_id, grp
-        |),
-        |mk AS (
-        |  SELECT doc_id, s, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY s
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM sp
-        |),
-        |mg AS (
-        |  SELECT doc_id, s, e,
-        |    sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY s ROWS UNBOUNDED PRECEDING) AS mgrp
-        |  FROM mk
-        |),
-        |merged AS (
-        |  SELECT doc_id, min(s) AS s, max(e) AS e FROM mg GROUP BY doc_id, mgrp
-        |),
-        |segs AS (
-        |  SELECT m.doc_id, m.s,
-        |    substring(d.text,
-        |      coalesce(lag(m.e) OVER (PARTITION BY m.doc_id ORDER BY m.s), 0) + 1,
-        |      m.s - coalesce(lag(m.e) OVER (PARTITION BY m.doc_id ORDER BY m.s), 0) - 1) AS seg
-        |  FROM merged m JOIN train d USING (doc_id)
-        |),
-        |heads AS (
-        |  SELECT doc_id, string_agg(seg, '' ORDER BY s) AS head FROM segs GROUP BY doc_id
-        |),
-        |tails AS (
-        |  SELECT doc_id, max(e) AS me FROM merged GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |  CASE WHEN t.me IS NULL THEN d.text
-        |       ELSE coalesce(h.head, '') || substring(d.text, t.me + 1) END AS cleaned
-        |FROM train d
-        |LEFT JOIN heads h USING (doc_id)
-        |LEFT JOIN tails t USING (doc_id)""".stripMargin,
+      s"""WITH train AS (
+         |  SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0
+         |),
+         |docs AS (SELECT doc_id, text FROM train WHERE length(text) >= 30),
+         |bench AS (
+         |  SELECT DISTINCT substring(text, CAST(p AS INT), 30) AS gram
+         |  FROM (SELECT text, unnest(range(1, length(text) - 28)) AS p
+         |        FROM documents WHERE doc_id % 20 = 0 AND length(text) >= 30)
+         |),
+         |pos AS (
+         |  SELECT doc_id, CAST(p AS INT) AS p, substring(text, CAST(p AS INT), 30) AS gram
+         |  FROM (SELECT doc_id, text, unnest(range(1, length(text) - 28)) AS p FROM docs)
+         |),
+         |cut AS (SELECT pos.doc_id, pos.p FROM pos JOIN bench USING (gram)),
+         |${duckSpanSurgery("train")}""".stripMargin,
     // definitional FK check: orphans = non-null child keys absent from
     // the (shrunken) parent; NULL match_ratio when no key is checkable
     // (n_rows = n_null_key), mirroring the operator's convention
     // two profile CTEs (one aggregation pass each) joined per column;
     // ratios round at 6 BEFORE differencing, exactly like the operator
     "x_quality_drift" ->
-      """WITH a AS (SELECT * FROM orders WHERE o_orderkey % 3 <> 0),
+      s"""WITH a AS (SELECT * FROM orders WHERE o_orderkey % 3 <> 0),
         |b AS (SELECT * FROM orders),
-        |pa AS (
-        |  SELECT 'o_orderkey' AS "column", count(*) AS n_rows_a,
-        |         round(CAST(count(o_orderkey) AS DOUBLE) / count(*), 6) AS completeness_a,
-        |         round(CAST(count(DISTINCT o_orderkey) AS DOUBLE) / count(*), 6) AS uniqueness_a
-        |  FROM a
-        |  UNION ALL
-        |  SELECT 'o_custkey', count(*),
-        |         round(CAST(count(o_custkey) AS DOUBLE) / count(*), 6),
-        |         round(CAST(count(DISTINCT o_custkey) AS DOUBLE) / count(*), 6)
-        |  FROM a
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', count(*),
-        |         round(CAST(count(o_orderstatus) AS DOUBLE) / count(*), 6),
-        |         round(CAST(count(DISTINCT o_orderstatus) AS DOUBLE) / count(*), 6)
-        |  FROM a
-        |),
-        |pb AS (
-        |  SELECT 'o_orderkey' AS "column", count(*) AS n_rows_b,
-        |         round(CAST(count(o_orderkey) AS DOUBLE) / count(*), 6) AS completeness_b,
-        |         round(CAST(count(DISTINCT o_orderkey) AS DOUBLE) / count(*), 6) AS uniqueness_b
-        |  FROM b
-        |  UNION ALL
-        |  SELECT 'o_custkey', count(*),
-        |         round(CAST(count(o_custkey) AS DOUBLE) / count(*), 6),
-        |         round(CAST(count(DISTINCT o_custkey) AS DOUBLE) / count(*), 6)
-        |  FROM b
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', count(*),
-        |         round(CAST(count(o_orderstatus) AS DOUBLE) / count(*), 6),
-        |         round(CAST(count(DISTINCT o_orderstatus) AS DOUBLE) / count(*), 6)
-        |  FROM b
-        |)
+        |${duckDriftProfileCte("a")},
+        |${duckDriftProfileCte("b")}
         |SELECT pa."column", n_rows_a, completeness_a, uniqueness_a,
         |       n_rows_b, completeness_b, uniqueness_b,
         |       round(completeness_b - completeness_a, 6) AS d_completeness,

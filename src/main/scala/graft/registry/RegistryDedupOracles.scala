@@ -18,30 +18,181 @@ import graft.registry.OracleCtesVectors._
   * the pre-r14 monolith); keys are byte-identical to the query side,
   * enforced by SparkEntry's key-parity check. */
 private[graft] object RegistryDedupOracles {
+  /** Survivor = rank-1 by (n_chars DESC, id) within each recursive-CTE
+    * component of `pairs`; NULLS LAST mirrors the struct-max's null-loses
+    * rule. The statement after the CTEs ending in `pairs`: every doc that
+    * loses no election. */
+  private val duckKeepBestTail: String =
+    s"""${duckConnectedComponents("pairs")},
+       |comp AS (SELECT id, min(label) AS cluster_id FROM cc GROUP BY id),
+       |ranked AS (
+       |  SELECT c.id, row_number() OVER (PARTITION BY c.cluster_id
+       |    ORDER BY d.n_chars DESC NULLS LAST, c.id) AS rn
+       |  FROM comp c JOIN documents d ON d.doc_id = c.id
+       |),
+       |losers AS (SELECT id FROM ranked WHERE rn > 1)
+       |SELECT d.doc_id FROM documents d
+       |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.id = d.doc_id)""".stripMargin
+
+  /** The paragraph rows' chain: every 7th doc upper-cased (`up`), for the
+    * `near` rows every 3rd doc's "the" mutated (`mu`), paragraphs of 20
+    * words (`para`, split into `sp.ls`), each canonicalized (`cn`) and
+    * hashed (`el`, which keeps the canonical text `cu` when `near`). */
+  private def duckParagraphsCte(near: Boolean): String = {
+    val mu =
+      if (near)
+        s"""
+           |mu AS (
+           |  SELECT doc_id,
+           |         CASE WHEN doc_id % 3 = 1
+           |              THEN regexp_replace(text, '\\bthe\\b', 'th3', 'g')
+           |              ELSE text END AS text
+           |  FROM up
+           |),""".stripMargin
+      else ""
+    s"""WITH up AS (
+       |  SELECT doc_id,
+       |         CASE WHEN doc_id % 7 = 0 THEN upper(text) ELSE text END AS text
+       |  FROM documents
+       |),$mu
+       |para AS (
+       |  SELECT doc_id,
+       |         regexp_replace(text, '((?:\\S+ ){20})',
+       |                        '\\1' || chr(10) || chr(10), 'g') AS text
+       |  FROM ${if (near) "mu" else "up"}
+       |),
+       |sp AS (SELECT doc_id, text,
+       |              string_split(text, chr(10) || chr(10)) AS ls FROM para),
+       |ex AS (
+       |  SELECT doc_id, CAST(i AS INT) - 1 AS p, ls[CAST(i AS INT)] AS u
+       |  FROM (SELECT doc_id, ls, unnest(range(1, len(ls) + 1)) AS i FROM sp)
+       |),
+       |cn AS (SELECT doc_id, p,
+       |              lower(trim(regexp_replace(u, '\\s+', ' ', 'g'))) AS cu
+       |       FROM ex),
+       |el AS (SELECT doc_id, p, ${if (near) "cu, " else ""}${duckHash60("cu")} AS ph FROM cn
+       |       WHERE length(cu) >= 1)""".stripMargin
+  }
+
+  /** MinHash bands of paragraph classes — the minhash oracles' hash
+    * arithmetic: the signature of each class's words `<p>cw.w` (`<p>sg`)
+    * and its band keys (`<p>bd`). */
+  private def duckParagraphBands(p: String): String =
+    s"""${p}sg AS (
+       |  SELECT ph,
+       |    list_transform(range(0, 8), j -> list_min(list_transform(
+       |      list_distinct(list_transform(range(0, greatest(len(w) - 3, 0) + 1),
+       |        i -> array_to_string(w[i+1:i+3], ' '))),
+       |      s -> md5(CAST(j AS VARCHAR) || '#' || s)))) AS sig
+       |  FROM ${p}cw
+       |),
+       |${p}bd AS (
+       |  SELECT s.ph, g.band,
+       |         md5(array_to_string(s.sig[g.band*2+1:g.band*2+2], '|')) AS key
+       |  FROM ${p}sg s, generate_series(0, 3) g(band)
+       |)""".stripMargin
+
+  /** The bucket-election losers (`lsr`) among the classes banded in
+    * `bands`: every class that is not the first, by its first occurrence
+    * `mk`, of a bucket it is in. */
+  private def duckParagraphLosers(bands: String): String =
+    s"""bj AS (SELECT b.ph, b.band, b.key, m.mk_doc, m.mk_p
+       |       FROM $bands b JOIN mk m USING (ph)),
+       |lsr AS (
+       |  SELECT DISTINCT ph FROM (
+       |    SELECT ph, row_number() OVER (PARTITION BY band, key
+       |                                  ORDER BY mk_doc, mk_p) AS brn
+       |    FROM bj
+       |  ) WHERE brn > 1
+       |)""".stripMargin
+
+  /** The paragraph rows' final select: each doc's paragraphs without the
+    * dropped positions `dl.dp`, rejoined from the ORIGINAL text. */
+  private val duckParagraphsCut: String =
+    """SELECT s.doc_id,
+      |       CASE WHEN d.dp IS NULL THEN s.text
+      |            ELSE coalesce(array_to_string(
+      |              list_filter(s.ls, (x, i) -> NOT list_contains(d.dp, i - 1)),
+      |              chr(10) || chr(10)), '')
+      |       END AS cleaned
+      |FROM sp s LEFT JOIN dl d USING (doc_id)""".stripMargin
+
+  /** The robots rows' parse of each host's `txt` (CTE `robots`): numbered
+    * lines (`l`); comment-only and blank lines dropped before grouping
+    * (they end no UA run — RFC 9309) and each remaining line flagged as a
+    * User-agent (`is_ua`), Allow (`is_allow`, only with `allowRules`) or
+    * Disallow (`is_dis`) line with its value `after` (`f`); a group
+    * starts at each User-agent RUN (`g.grp`). */
+  private def duckRobotsGroupsCte(allowRules: Boolean): String = {
+    val flags = Seq("user-agent" -> "is_ua") ++
+      (if (allowRules) Seq("allow" -> "is_allow") else Nil) :+ ("disallow" -> "is_dis")
+    val flagCols = flags.map { case (directive, col) =>
+      s"""         starts_with(lower(trim(regexp_replace(line, '#.*', ''))),
+         |                     '$directive:') AS $col,""".stripMargin
+    }.mkString("\n")
+    s"""l AS (
+       |  SELECT host, CAST(i AS INT) AS i, ls[CAST(i AS INT)] AS line
+       |  FROM (SELECT host,
+       |               string_split(regexp_replace(txt, chr(13), '', 'g'),
+       |                            chr(10)) AS ls,
+       |               unnest(range(1,
+       |                 len(string_split(regexp_replace(txt, chr(13), '', 'g'),
+       |                                  chr(10))) + 1)) AS i
+       |        FROM robots)
+       |),
+       |f AS (
+       |  SELECT host, i,
+       |$flagCols
+       |         trim(regexp_replace(trim(regexp_replace(line, '#.*', '')),
+       |                             '^[^:]*:', '')) AS after
+       |  FROM l
+       |  WHERE trim(regexp_replace(line, '#.*', '')) <> ''
+       |),
+       |r AS (
+       |  SELECT *, coalesce(lag(is_ua) OVER (PARTITION BY host ORDER BY i),
+       |                     false) AS prev_ua
+       |  FROM f
+       |),
+       |g AS (
+       |  SELECT *, sum(CASE WHEN is_ua AND NOT prev_ua THEN 1 ELSE 0 END)
+       |              OVER (PARTITION BY host ORDER BY i) AS grp
+       |  FROM r
+       |)""".stripMargin
+  }
+
+  /** The fuzzy-join fixture: each customer's 12-hex key (`clean`) and a
+    * copy with one character replaced (`dirty`). */
+  private val duckFuzzyKeysCte: String =
+    """WITH clean AS (
+      |  SELECT c_custkey AS cid,
+      |         substr(md5(CAST(c_custkey AS VARCHAR)), 1, 12) AS k
+      |  FROM customer
+      |),
+      |dirty AS (
+      |  SELECT cid AS did,
+      |         substr(k, 1, CAST(cid % 12 AS INT)) || 'x' ||
+      |           substr(k, CAST(cid % 12 AS INT) + 2) AS k2
+      |  FROM clean
+      |)""".stripMargin
+
+  /** The pairs of `inter (id_a, id_b, n_inter)` whose shingle Jaccard
+    * over `sizes (id, n_sh)`, rounded to 6, is at least `min`. */
+  private def duckJaccardSelect(min: String): String =
+    s"""SELECT id_a, id_b,
+       |       round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
+       |FROM inter
+       |JOIN sizes sa ON sa.id = id_a
+       |JOIN sizes sb ON sb.id = id_b
+       |WHERE round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) >= $min""".stripMargin
+
   val oracles: Seq[(String, String)] = Seq(
     "x_dedup_exact" ->
       """SELECT md5(coalesce(CAST(text AS VARCHAR), 'nan')) AS content_hash,
         |       min(doc_id) AS keep_id, count(*) AS n_dups
         |FROM documents GROUP BY 1""".stripMargin,
     "x_dedup_jaccard" ->
-      s"""$docShinglesCte,
-         |ex AS (SELECT doc_id AS id, unnest(shingles) AS s FROM sh),
-         |joinable AS (
-         |  SELECT s FROM ex GROUP BY s HAVING count(*) BETWEEN 2 AND 1000
-         |),
-         |fil AS (SELECT ex.* FROM ex JOIN joinable USING (s)),
-         |sizes AS (SELECT id, count(*) AS n_sh FROM ex GROUP BY id),
-         |inter AS (
-         |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-         |  FROM fil a JOIN fil b ON a.s = b.s AND a.id < b.id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT id_a, id_b,
-         |       round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
-         |FROM inter
-         |JOIN sizes sa ON sa.id = id_a
-         |JOIN sizes sb ON sb.id = id_b
-         |WHERE round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.1""".stripMargin,
+      s"""$containmentInterCte
+         |${duckJaccardSelect("0.1")}""".stripMargin,
     // same CTE chain as the Jaccard statement; only the denominator
     // changes — containment of the smaller shingle set (shared CTE with
     // the election twin so the derivations cannot drift)
@@ -63,16 +214,7 @@ private[graft] object RegistryDedupOracles {
          |  JOIN sizes sb ON sb.id = id_b
          |  WHERE round(CAST(n_inter AS DOUBLE) / least(sa.n_sh, sb.n_sh), 6) >= 0.5
          |),
-         |${duckConnectedComponents("pairs")},
-         |comp AS (SELECT id, min(label) AS cluster_id FROM cc GROUP BY id),
-         |ranked AS (
-         |  SELECT c.id, row_number() OVER (PARTITION BY c.cluster_id
-         |    ORDER BY d.n_chars DESC NULLS LAST, c.id) AS rn
-         |  FROM comp c JOIN documents d ON d.doc_id = c.id
-         |),
-         |losers AS (SELECT id FROM ranked WHERE rn > 1)
-         |SELECT d.doc_id FROM documents d
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.id = d.doc_id)""".stripMargin,
+         |$duckKeepBestTail""".stripMargin,
     "x_dedup_minhash" ->
       s"""$minhashBandedCte
          |SELECT DISTINCT a.id AS id_a, b.id AS id_b
@@ -87,19 +229,7 @@ private[graft] object RegistryDedupOracles {
          |  ON b.band = c.band AND b.key = c.key
          | AND b.id % 2 = 1 AND c.id % 2 = 0""".stripMargin,
     "x_dedup_minhash_verified" ->
-      s"""$docShinglesCte,
-         |sig AS (
-         |  SELECT doc_id AS id,
-         |    list_transform(range(0, 8),
-         |      j -> list_min(list_transform(shingles,
-         |             s -> md5(concat(CAST(j AS VARCHAR), '#', s))))) AS sig
-         |  FROM sh
-         |),
-         |banded AS (
-         |  SELECT id, g.band,
-         |         md5(array_to_string(sig[g.band*2+1:g.band*2+2], '|')) AS key
-         |  FROM sig, generate_series(0, 3) g(band)
-         |),
+      s"""$minhashBandedCte,
          |cand AS (
          |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
          |  FROM banded a JOIN banded b
@@ -114,12 +244,7 @@ private[graft] object RegistryDedupOracles {
          |  JOIN ex b ON b.id = c.id_b AND b.s = a.s
          |  GROUP BY 1, 2
          |)
-         |SELECT id_a, id_b,
-         |       round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
-         |FROM inter
-         |JOIN sizes sa ON sa.id = id_a
-         |JOIN sizes sb ON sb.id = id_b
-         |WHERE round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.3""".stripMargin,
+         |${duckJaccardSelect("0.3")}""".stripMargin,
     "x_dedup_simhash" ->
       s"""$simhashFpCte
          |SELECT fp AS simhash, min(doc_id) AS keep_id, count(*) AS n_docs
@@ -146,16 +271,7 @@ private[graft] object RegistryDedupOracles {
          |SELECT id AS doc_id, min(label) AS cluster_id FROM cc GROUP BY id""".stripMargin,
     "x_dedup_keep_best_wide" ->
       s"""${simhashWideNearPairsCte.replaceFirst("^WITH ", "WITH RECURSIVE ")},
-         |${duckConnectedComponents("pairs")},
-         |comp AS (SELECT id, min(label) AS cluster_id FROM cc GROUP BY id),
-         |ranked AS (
-         |  SELECT c.id, row_number() OVER (PARTITION BY c.cluster_id
-         |    ORDER BY d.n_chars DESC NULLS LAST, c.id) AS rn
-         |  FROM comp c JOIN documents d ON d.doc_id = c.id
-         |),
-         |losers AS (SELECT id FROM ranked WHERE rn > 1)
-         |SELECT d.doc_id FROM documents d
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.id = d.doc_id)""".stripMargin,
+         |$duckKeepBestTail""".stripMargin,
     // the blocking is an implementation detail; the contract is the O(n²)
     // definition, which the oracle states directly
     "x_dedup_editdist" ->
@@ -207,39 +323,10 @@ private[graft] object RegistryDedupOracles {
     // component — NULLS LAST mirrors the struct-max's null-loses rule
     "x_dedup_keep_best" ->
       s"""${simhashNearPairsCte.replaceFirst("^WITH ", "WITH RECURSIVE ")},
-         |${duckConnectedComponents("pairs")},
-         |comp AS (SELECT id, min(label) AS cluster_id FROM cc GROUP BY id),
-         |ranked AS (
-         |  SELECT c.id, row_number() OVER (PARTITION BY c.cluster_id
-         |    ORDER BY d.n_chars DESC NULLS LAST, c.id) AS rn
-         |  FROM comp c JOIN documents d ON d.doc_id = c.id
-         |),
-         |losers AS (SELECT id FROM ranked WHERE rn > 1)
-         |SELECT d.doc_id FROM documents d
-         |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.id = d.doc_id)""".stripMargin,
+         |$duckKeepBestTail""".stripMargin,
     // same position set (1-based starts, stride 1), raw-substring joins
     // instead of the 60-bit hashes, identical island-merge windows
-    "x_dedup_spans" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents WHERE length(text) >= 30
-        |),
-        |pos AS (
-        |  SELECT doc_id, CAST(p AS INT) AS p, substring(text, CAST(p AS INT), 30) AS gram
-        |  FROM (SELECT doc_id, text, unnest(range(1, length(text) - 28)) AS p FROM docs)
-        |),
-        |dup AS (
-        |  SELECT gram FROM pos GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
-        |),
-        |dp AS (
-        |  SELECT pos.doc_id, pos.p FROM pos JOIN dup USING (gram)
-        |),
-        |isl AS (
-        |  SELECT doc_id, p,
-        |    p - CAST(row_number() OVER (PARTITION BY doc_id ORDER BY p) AS INT) AS grp
-        |  FROM dp
-        |)
-        |SELECT doc_id, min(p) AS span_start, max(p) + 29 AS span_end
-        |FROM isl GROUP BY doc_id, grp""".stripMargin,
+    "x_dedup_spans" -> duckSpansSql(),
     // the staged spans stores' accumulated content: the ingestion loop
     // over the full corpus, replayed batch-aware
     "x_stage_build_spans" -> duckSpansBatchedSql("1 = 1"),
@@ -250,90 +337,23 @@ private[graft] object RegistryDedupOracles {
     // strided twin: position set steps by 4 and the island-merge group key
     // subtracts row_number()*4, so runs of stride-spaced duplicated
     // positions merge exactly as the Scala window does
-    "x_dedup_spans_strided" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents WHERE length(text) >= 30
-        |),
-        |pos AS (
-        |  SELECT doc_id, CAST(p AS INT) AS p, substring(text, CAST(p AS INT), 30) AS gram
-        |  FROM (SELECT doc_id, text, unnest(range(1, length(text) - 28, 4)) AS p FROM docs)
-        |),
-        |dup AS (
-        |  SELECT gram FROM pos GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
-        |),
-        |dp AS (
-        |  SELECT pos.doc_id, pos.p FROM pos JOIN dup USING (gram)
-        |),
-        |isl AS (
-        |  SELECT doc_id, p,
-        |    p - CAST(row_number() OVER (PARTITION BY doc_id ORDER BY p) AS INT) * 4 AS grp
-        |  FROM dp
-        |)
-        |SELECT doc_id, min(p) AS span_start, max(p) + 29 AS span_end
-        |FROM isl GROUP BY doc_id, grp""".stripMargin,
+    "x_dedup_spans_strided" -> duckSpansSql(stride = 4),
     // removal twin of the span report: same position set, but a position
     // is cut only when this doc is not the gram's min-id keeper; islands
     // interval-merge (strictly-overlapping only), then the cleaned text
     // reassembles from lag-segments + string_agg + tail — equivalent to
     // the Spark fold over disjoint sorted spans
     "x_dedup_spans_removed" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents WHERE length(text) >= 30
-        |),
-        |pos AS (
-        |  SELECT doc_id, CAST(p AS INT) AS p, substring(text, CAST(p AS INT), 30) AS gram
-        |  FROM (SELECT doc_id, text, unnest(range(1, length(text) - 28)) AS p FROM docs)
-        |),
-        |st AS (
-        |  SELECT gram, min(doc_id) AS keeper FROM pos
-        |  GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
-        |),
-        |cut AS (
-        |  SELECT pos.doc_id, pos.p FROM pos JOIN st USING (gram)
-        |  WHERE pos.doc_id <> st.keeper
-        |),
-        |isl AS (
-        |  SELECT doc_id, p,
-        |    p - CAST(row_number() OVER (PARTITION BY doc_id ORDER BY p) AS INT) AS grp
-        |  FROM cut
-        |),
-        |sp AS (
-        |  SELECT doc_id, min(p) AS s, max(p) + 29 AS e FROM isl GROUP BY doc_id, grp
-        |),
-        |mk AS (
-        |  SELECT doc_id, s, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY s
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM sp
-        |),
-        |mg AS (
-        |  SELECT doc_id, s, e,
-        |    sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY s ROWS UNBOUNDED PRECEDING) AS mgrp
-        |  FROM mk
-        |),
-        |merged AS (
-        |  SELECT doc_id, min(s) AS s, max(e) AS e FROM mg GROUP BY doc_id, mgrp
-        |),
-        |segs AS (
-        |  SELECT m.doc_id, m.s,
-        |    substring(d.text,
-        |      coalesce(lag(m.e) OVER (PARTITION BY m.doc_id ORDER BY m.s), 0) + 1,
-        |      m.s - coalesce(lag(m.e) OVER (PARTITION BY m.doc_id ORDER BY m.s), 0) - 1) AS seg
-        |  FROM merged m JOIN documents d USING (doc_id)
-        |),
-        |heads AS (
-        |  SELECT doc_id, string_agg(seg, '' ORDER BY s) AS head FROM segs GROUP BY doc_id
-        |),
-        |tails AS (
-        |  SELECT doc_id, max(e) AS me FROM merged GROUP BY doc_id
-        |)
-        |SELECT d.doc_id,
-        |  CASE WHEN t.me IS NULL THEN d.text
-        |       ELSE coalesce(h.head, '') || substring(d.text, t.me + 1) END AS cleaned
-        |FROM documents d
-        |LEFT JOIN heads h USING (doc_id)
-        |LEFT JOIN tails t USING (doc_id)""".stripMargin,
+      s"""${duckSpanPositionsCte()},
+         |st AS (
+         |  SELECT gram, min(doc_id) AS keeper FROM pos
+         |  GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
+         |),
+         |cut AS (
+         |  SELECT pos.doc_id, pos.p FROM pos JOIN st USING (gram)
+         |  WHERE pos.doc_id <> st.keeper
+         |),
+         |${duckSpanSurgery("documents")}""".stripMargin,
     "x_dedup_incremental" ->
       """WITH h AS (
         |  SELECT doc_id, md5(coalesce(CAST(text AS VARCHAR), 'nan')) AS content_hash
@@ -372,7 +392,7 @@ private[graft] object RegistryDedupOracles {
     // UA lines names '*', blocked = matching group holding a root
     // Disallow
     "x_text_robots" ->
-      """WITH robots AS (
+      s"""WITH robots AS (
         |  SELECT DISTINCT
         |    'site' || CAST(doc_id % 37 AS VARCHAR) || '.example.com' AS host,
         |    CASE CAST((doc_id % 37) % 6 AS INT)
@@ -391,37 +411,7 @@ private[graft] object RegistryDedupOracles {
         |    END AS txt
         |  FROM documents
         |),
-        |l AS (
-        |  SELECT host, CAST(i AS INT) AS i, ls[CAST(i AS INT)] AS line
-        |  FROM (SELECT host,
-        |               string_split(regexp_replace(txt, chr(13), '', 'g'),
-        |                            chr(10)) AS ls,
-        |               unnest(range(1,
-        |                 len(string_split(regexp_replace(txt, chr(13), '', 'g'),
-        |                                  chr(10))) + 1)) AS i
-        |        FROM robots)
-        |),
-        |f AS (
-        |  SELECT host, i,
-        |         starts_with(lower(trim(regexp_replace(line, '#.*', ''))),
-        |                     'user-agent:') AS is_ua,
-        |         starts_with(lower(trim(regexp_replace(line, '#.*', ''))),
-        |                     'disallow:') AS is_dis,
-        |         trim(regexp_replace(trim(regexp_replace(line, '#.*', '')),
-        |                             '^[^:]*:', '')) AS after
-        |  FROM l
-        |  WHERE trim(regexp_replace(line, '#.*', '')) <> ''
-        |),
-        |r AS (
-        |  SELECT *, coalesce(lag(is_ua) OVER (PARTITION BY host ORDER BY i),
-        |                     false) AS prev_ua
-        |  FROM f
-        |),
-        |g AS (
-        |  SELECT *, sum(CASE WHEN is_ua AND NOT prev_ua THEN 1 ELSE 0 END)
-        |              OVER (PARTITION BY host ORDER BY i) AS grp
-        |  FROM r
-        |),
+        |${duckRobotsGroupsCte(allowRules = false)},
         |m AS (
         |  SELECT host, grp, bool_or(is_ua AND lower(after) = '*') AS matches
         |  FROM g GROUP BY host, grp
@@ -464,39 +454,7 @@ private[graft] object RegistryDedupOracles {
         |    END AS txt
         |  FROM documents
         |),
-        |l AS (
-        |  SELECT host, CAST(i AS INT) AS i, ls[CAST(i AS INT)] AS line
-        |  FROM (SELECT host,
-        |               string_split(regexp_replace(txt, chr(13), '', 'g'),
-        |                            chr(10)) AS ls,
-        |               unnest(range(1,
-        |                 len(string_split(regexp_replace(txt, chr(13), '', 'g'),
-        |                                  chr(10))) + 1)) AS i
-        |        FROM robots)
-        |),
-        |f AS (
-        |  SELECT host, i,
-        |         starts_with(lower(trim(regexp_replace(line, '#.*', ''))),
-        |                     'user-agent:') AS is_ua,
-        |         starts_with(lower(trim(regexp_replace(line, '#.*', ''))),
-        |                     'allow:') AS is_allow,
-        |         starts_with(lower(trim(regexp_replace(line, '#.*', ''))),
-        |                     'disallow:') AS is_dis,
-        |         trim(regexp_replace(trim(regexp_replace(line, '#.*', '')),
-        |                             '^[^:]*:', '')) AS after
-        |  FROM l
-        |  WHERE trim(regexp_replace(line, '#.*', '')) <> ''
-        |),
-        |r AS (
-        |  SELECT *, coalesce(lag(is_ua) OVER (PARTITION BY host ORDER BY i),
-        |                     false) AS prev_ua
-        |  FROM f
-        |),
-        |g AS (
-        |  SELECT *, sum(CASE WHEN is_ua AND NOT prev_ua THEN 1 ELSE 0 END)
-        |              OVER (PARTITION BY host ORDER BY i) AS grp
-        |  FROM r
-        |),
+        |${duckRobotsGroupsCte(allowRules = true)},
         |m AS (
         |  SELECT host, grp,
         |         bool_or(is_ua AND lower(after) = '*') AS m_star,
@@ -569,65 +527,17 @@ private[graft] object RegistryDedupOracles {
     // survivors rejoin with ORIGINAL text. Mirrors x_text_dedup_lines'
     // CTE chain with the canonicalization inserted before the hash.
     "x_dedup_paragraphs" ->
-      s"""WITH up AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 7 = 0 THEN upper(text) ELSE text END AS text
-         |  FROM documents
-         |),
-         |para AS (
-         |  SELECT doc_id,
-         |         regexp_replace(text, '((?:\\S+ ){20})',
-         |                        '\\1' || chr(10) || chr(10), 'g') AS text
-         |  FROM up
-         |),
-         |sp AS (SELECT doc_id, text,
-         |              string_split(text, chr(10) || chr(10)) AS ls FROM para),
-         |ex AS (
-         |  SELECT doc_id, CAST(i AS INT) - 1 AS p, ls[CAST(i AS INT)] AS u
-         |  FROM (SELECT doc_id, ls, unnest(range(1, len(ls) + 1)) AS i FROM sp)
-         |),
-         |cn AS (SELECT doc_id, p,
-         |              lower(trim(regexp_replace(u, '\\s+', ' ', 'g'))) AS cu
-         |       FROM ex),
-         |el AS (SELECT doc_id, p, ${duckHash60("cu")} AS ph FROM cn
-         |       WHERE length(cu) >= 1),
+      s"""${duckParagraphsCte(near = false)},
          |rk AS (SELECT doc_id, p,
          |              row_number() OVER (PARTITION BY ph ORDER BY doc_id, p) AS rn
          |       FROM el),
          |dl AS (SELECT doc_id, list(p) AS dp FROM rk WHERE rn > 1 GROUP BY doc_id)
-         |SELECT s.doc_id,
-         |       CASE WHEN d.dp IS NULL THEN s.text
-         |            ELSE coalesce(array_to_string(
-         |              list_filter(s.ls, (x, i) -> NOT list_contains(d.dp, i - 1)),
-         |              chr(10) || chr(10)), '')
-         |       END AS cleaned
-         |FROM sp s LEFT JOIN dl d USING (doc_id)""".stripMargin,
+         |$duckParagraphsCut""".stripMargin,
     // incremental paragraph dedup: the exact-paragraph chain with the
     // keep-min election split into the standing-store hit (every batch
     // occurrence cut) and the batch-internal keep-min (rest cut)
     "x_dedup_paragraphs_incremental" ->
-      s"""WITH up AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 7 = 0 THEN upper(text) ELSE text END AS text
-         |  FROM documents
-         |),
-         |para AS (
-         |  SELECT doc_id,
-         |         regexp_replace(text, '((?:\\S+ ){20})',
-         |                        '\\1' || chr(10) || chr(10), 'g') AS text
-         |  FROM up
-         |),
-         |sp AS (SELECT doc_id, text,
-         |              string_split(text, chr(10) || chr(10)) AS ls FROM para),
-         |ex AS (
-         |  SELECT doc_id, CAST(i AS INT) - 1 AS p, ls[CAST(i AS INT)] AS u
-         |  FROM (SELECT doc_id, ls, unnest(range(1, len(ls) + 1)) AS i FROM sp)
-         |),
-         |cn AS (SELECT doc_id, p,
-         |              lower(trim(regexp_replace(u, '\\s+', ' ', 'g'))) AS cu
-         |       FROM ex),
-         |el AS (SELECT doc_id, p, ${duckHash60("cu")} AS ph FROM cn
-         |       WHERE length(cu) >= 1),
+      s"""${duckParagraphsCte(near = false)},
          |standing AS (SELECT DISTINCT ph FROM el WHERE doc_id % 2 = 0),
          |batch AS (SELECT * FROM el WHERE doc_id % 2 = 1),
          |rk AS (
@@ -638,13 +548,7 @@ private[graft] object RegistryDedupOracles {
          |),
          |dl AS (SELECT doc_id, list(p) AS dp FROM rk
          |       WHERE hit OR rn > 1 GROUP BY doc_id)
-         |SELECT s.doc_id,
-         |       CASE WHEN d.dp IS NULL THEN s.text
-         |            ELSE coalesce(array_to_string(
-         |              list_filter(s.ls, (x, i) -> NOT list_contains(d.dp, i - 1)),
-         |              chr(10) || chr(10)), '')
-         |       END AS cleaned
-         |FROM sp s LEFT JOIN dl d USING (doc_id)
+         |$duckParagraphsCut
          |WHERE s.doc_id % 2 = 1""".stripMargin,
     // paragraph NEAR-dup: the exact-paragraph chain extended by the
     // MinHash/LSH replay (identical hash arithmetic to the minhash
@@ -652,35 +556,7 @@ private[graft] object RegistryDedupOracles {
     // and the per-bucket keep-min election; drops = every occurrence of
     // a losing class + every non-first occurrence of a survivor
     "x_dedup_paragraphs_near" ->
-      s"""WITH up AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 7 = 0 THEN upper(text) ELSE text END AS text
-         |  FROM documents
-         |),
-         |mu AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 3 = 1
-         |              THEN regexp_replace(text, '\\bthe\\b', 'th3', 'g')
-         |              ELSE text END AS text
-         |  FROM up
-         |),
-         |para AS (
-         |  SELECT doc_id,
-         |         regexp_replace(text, '((?:\\S+ ){20})',
-         |                        '\\1' || chr(10) || chr(10), 'g') AS text
-         |  FROM mu
-         |),
-         |sp AS (SELECT doc_id, text,
-         |              string_split(text, chr(10) || chr(10)) AS ls FROM para),
-         |ex AS (
-         |  SELECT doc_id, CAST(i AS INT) - 1 AS p, ls[CAST(i AS INT)] AS u
-         |  FROM (SELECT doc_id, ls, unnest(range(1, len(ls) + 1)) AS i FROM sp)
-         |),
-         |cn AS (SELECT doc_id, p,
-         |              lower(trim(regexp_replace(u, '\\s+', ' ', 'g'))) AS cu
-         |       FROM ex),
-         |el AS (SELECT doc_id, p, cu, ${duckHash60("cu")} AS ph FROM cn
-         |       WHERE length(cu) >= 1),
+      s"""${duckParagraphsCte(near = true)},
          |occ AS (SELECT ph, doc_id, p,
          |               row_number() OVER (PARTITION BY ph ORDER BY doc_id, p) AS rn
          |        FROM el),
@@ -690,40 +566,14 @@ private[graft] object RegistryDedupOracles {
          |                         t -> length(t) > 0) AS w
          |  FROM el GROUP BY ph
          |),
-         |sg AS (
-         |  SELECT ph,
-         |    list_transform(range(0, 8), j -> list_min(list_transform(
-         |      list_distinct(list_transform(range(0, greatest(len(w) - 3, 0) + 1),
-         |        i -> array_to_string(w[i+1:i+3], ' '))),
-         |      s -> md5(CAST(j AS VARCHAR) || '#' || s)))) AS sig
-         |  FROM cw
-         |),
-         |bd AS (
-         |  SELECT s.ph, g.band,
-         |         md5(array_to_string(s.sig[g.band*2+1:g.band*2+2], '|')) AS key
-         |  FROM sg s, generate_series(0, 3) g(band)
-         |),
-         |bj AS (SELECT b.ph, b.band, b.key, m.mk_doc, m.mk_p
-         |       FROM bd b JOIN mk m USING (ph)),
-         |lsr AS (
-         |  SELECT DISTINCT ph FROM (
-         |    SELECT ph, row_number() OVER (PARTITION BY band, key
-         |                                  ORDER BY mk_doc, mk_p) AS brn
-         |    FROM bj
-         |  ) WHERE brn > 1
-         |),
+         |${duckParagraphBands("")},
+         |${duckParagraphLosers("bd")},
          |drops AS (
          |  SELECT o.doc_id, o.p FROM occ o LEFT JOIN lsr USING (ph)
          |  WHERE lsr.ph IS NOT NULL OR o.rn > 1
          |),
          |dl AS (SELECT doc_id, list(p) AS dp FROM drops GROUP BY doc_id)
-         |SELECT s.doc_id,
-         |       CASE WHEN d.dp IS NULL THEN s.text
-         |            ELSE coalesce(array_to_string(
-         |              list_filter(s.ls, (x, i) -> NOT list_contains(d.dp, i - 1)),
-         |              chr(10) || chr(10)), '')
-         |       END AS cleaned
-         |FROM sp s LEFT JOIN dl d USING (doc_id)""".stripMargin,
+         |$duckParagraphsCut""".stripMargin,
     // incremental paragraph NEAR-dup: the near chain split into the
     // standing (even-doc) side — distinct classes + their band keys —
     // and the batch (odd-doc) side; cuts = exact standing hits, batch
@@ -732,35 +582,7 @@ private[graft] object RegistryDedupOracles {
     // still occupies its buckets, the one-pass election), and survivors'
     // non-first occurrences
     "x_dedup_paragraphs_near_incremental" ->
-      s"""WITH up AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 7 = 0 THEN upper(text) ELSE text END AS text
-         |  FROM documents
-         |),
-         |mu AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 3 = 1
-         |              THEN regexp_replace(text, '\\bthe\\b', 'th3', 'g')
-         |              ELSE text END AS text
-         |  FROM up
-         |),
-         |para AS (
-         |  SELECT doc_id,
-         |         regexp_replace(text, '((?:\\S+ ){20})',
-         |                        '\\1' || chr(10) || chr(10), 'g') AS text
-         |  FROM mu
-         |),
-         |sp AS (SELECT doc_id, text,
-         |              string_split(text, chr(10) || chr(10)) AS ls FROM para),
-         |ex AS (
-         |  SELECT doc_id, CAST(i AS INT) - 1 AS p, ls[CAST(i AS INT)] AS u
-         |  FROM (SELECT doc_id, ls, unnest(range(1, len(ls) + 1)) AS i FROM sp)
-         |),
-         |cn AS (SELECT doc_id, p,
-         |              lower(trim(regexp_replace(u, '\\s+', ' ', 'g'))) AS cu
-         |       FROM ex),
-         |el AS (SELECT doc_id, p, cu, ${duckHash60("cu")} AS ph FROM cn
-         |       WHERE length(cu) >= 1),
+      s"""${duckParagraphsCte(near = true)},
          |sel AS (SELECT * FROM el WHERE doc_id % 2 = 0),
          |bel AS (SELECT * FROM el WHERE doc_id % 2 = 1),
          |sph AS (SELECT DISTINCT ph FROM sel),
@@ -769,19 +591,7 @@ private[graft] object RegistryDedupOracles {
          |                         t -> length(t) > 0) AS w
          |  FROM sel GROUP BY ph
          |),
-         |ssg AS (
-         |  SELECT ph,
-         |    list_transform(range(0, 8), j -> list_min(list_transform(
-         |      list_distinct(list_transform(range(0, greatest(len(w) - 3, 0) + 1),
-         |        i -> array_to_string(w[i+1:i+3], ' '))),
-         |      s -> md5(CAST(j AS VARCHAR) || '#' || s)))) AS sig
-         |  FROM scw
-         |),
-         |sbd AS (
-         |  SELECT s.ph, g.band,
-         |         md5(array_to_string(s.sig[g.band*2+1:g.band*2+2], '|')) AS key
-         |  FROM ssg s, generate_series(0, 3) g(band)
-         |),
+         |${duckParagraphBands("s")},
          |occ AS (SELECT ph, doc_id, p,
          |               row_number() OVER (PARTITION BY ph ORDER BY doc_id, p) AS rn
          |        FROM bel),
@@ -794,32 +604,12 @@ private[graft] object RegistryDedupOracles {
          |                           t -> length(t) > 0) AS w
          |  FROM bel b JOIN mk USING (ph) GROUP BY b.ph
          |),
-         |bsg AS (
-         |  SELECT ph,
-         |    list_transform(range(0, 8), j -> list_min(list_transform(
-         |      list_distinct(list_transform(range(0, greatest(len(w) - 3, 0) + 1),
-         |        i -> array_to_string(w[i+1:i+3], ' '))),
-         |      s -> md5(CAST(j AS VARCHAR) || '#' || s)))) AS sig
-         |  FROM bcw
-         |),
-         |bbd AS (
-         |  SELECT s.ph, g.band,
-         |         md5(array_to_string(s.sig[g.band*2+1:g.band*2+2], '|')) AS key
-         |  FROM bsg s, generate_series(0, 3) g(band)
-         |),
+         |${duckParagraphBands("b")},
          |nearhit AS (
          |  SELECT DISTINCT b.ph FROM bbd b
          |  JOIN sbd s ON b.band = s.band AND b.key = s.key
          |),
-         |bj AS (SELECT b.ph, b.band, b.key, m.mk_doc, m.mk_p
-         |       FROM bbd b JOIN mk m USING (ph)),
-         |lsr AS (
-         |  SELECT DISTINCT ph FROM (
-         |    SELECT ph, row_number() OVER (PARTITION BY band, key
-         |                                  ORDER BY mk_doc, mk_p) AS brn
-         |    FROM bj
-         |  ) WHERE brn > 1
-         |),
+         |${duckParagraphLosers("bbd")},
          |cut AS (SELECT ph FROM nearhit UNION SELECT ph FROM lsr),
          |drops AS (
          |  SELECT doc_id, p FROM hitocc
@@ -828,42 +618,16 @@ private[graft] object RegistryDedupOracles {
          |  WHERE cut.ph IS NOT NULL OR o.rn > 1
          |),
          |dl AS (SELECT doc_id, list(p) AS dp FROM drops GROUP BY doc_id)
-         |SELECT s.doc_id,
-         |       CASE WHEN d.dp IS NULL THEN s.text
-         |            ELSE coalesce(array_to_string(
-         |              list_filter(s.ls, (x, i) -> NOT list_contains(d.dp, i - 1)),
-         |              chr(10) || chr(10)), '')
-         |       END AS cleaned
-         |FROM sp s LEFT JOIN dl d USING (doc_id)
+         |$duckParagraphsCut
          |WHERE s.doc_id % 2 = 1""".stripMargin,
     "x_fuzzy_join" ->
-      """WITH clean AS (
-        |  SELECT c_custkey AS cid,
-        |         substr(md5(CAST(c_custkey AS VARCHAR)), 1, 12) AS k
-        |  FROM customer
-        |),
-        |dirty AS (
-        |  SELECT cid AS did,
-        |         substr(k, 1, CAST(cid % 12 AS INT)) || 'x' ||
-        |           substr(k, CAST(cid % 12 AS INT) + 2) AS k2
-        |  FROM clean
-        |)
+      s"""$duckFuzzyKeysCte
         |SELECT c.cid AS left_id, d.did AS right_id,
         |       CAST(levenshtein(c.k, d.k2) AS INT) AS dist
         |FROM clean c CROSS JOIN dirty d
         |WHERE levenshtein(c.k, d.k2) <= 1""".stripMargin,
     "x_fuzzy_join_best" ->
-      """WITH clean AS (
-        |  SELECT c_custkey AS cid,
-        |         substr(md5(CAST(c_custkey AS VARCHAR)), 1, 12) AS k
-        |  FROM customer
-        |),
-        |dirty AS (
-        |  SELECT cid AS did,
-        |         substr(k, 1, CAST(cid % 12 AS INT)) || 'x' ||
-        |           substr(k, CAST(cid % 12 AS INT) + 2) AS k2
-        |  FROM clean
-        |),
+      s"""$duckFuzzyKeysCte,
         |pairs AS (
         |  SELECT c.cid AS left_id, d.did AS right_id,
         |         CAST(levenshtein(c.k, d.k2) AS INT) AS dist

@@ -248,6 +248,47 @@ private[graft] object RegistryEvents {
       EventAnalytics.attributionCounts(Tables.events(s, d), "purchase", "click", 120)),
   )
 
+  /** The main-site law after its `boiler` (host, text) CTE: the blocks
+    * of `pages` that are not boilerplate and pass the density rule,
+    * joined per doc of `docs` by '<NL>' (NULL for a doc without html). */
+  private def duckMainSiteTail(pages: String): String =
+    s"""kept AS (
+       |  SELECT b.doc_id, b.block_idx, b.text
+       |  FROM $pages b LEFT JOIN boiler o
+       |    ON b.host = o.host AND b.text = o.text
+       |  WHERE o.text IS NULL AND b.chars >= ${WebVectors.mainMinChars}
+       |    AND b.links <= b.chars * ${WebVectors.mainMaxLinkDensity}
+       |), agg AS (
+       |  SELECT doc_id, string_agg(text, '<NL>' ORDER BY block_idx) AS m
+       |  FROM kept GROUP BY doc_id
+       |)
+       |SELECT d.doc_id,
+       |       CASE WHEN NOT d.has_html THEN NULL
+       |            ELSE coalesce(a.m, '') END AS main_nl
+       |FROM docs d LEFT JOIN agg a USING (doc_id)""".stripMargin
+
+  /** The main-site law of the incremental rows: the boilerplate census
+    * over `standing` UNION `batch`, the batch pages' main text. */
+  private val duckMainSiteUnionTail: String =
+    s"""boiler AS (
+       |  SELECT host, text FROM (
+       |    SELECT host, text, doc_id FROM standing
+       |    UNION ALL SELECT host, text, doc_id FROM batch
+       |  ) GROUP BY host, text
+       |  HAVING count(DISTINCT doc_id) >= ${WebVectors.siteHostRepeatMin}
+       |), ${duckMainSiteTail("batch")}""".stripMargin
+
+  /** The as-of rows' sides: clicks (`l`) and purchases (`r`). */
+  private val duckClicksPurchasesCtes: String =
+    """l AS (
+      |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
+      |  FROM events WHERE event_type = 'click'
+      |),
+      |r AS (
+      |  SELECT user_id, event_id AS p_event_id, CAST(ts AS TIMESTAMP) AS p_ts, value AS p_value
+      |  FROM events WHERE event_type = 'purchase'
+      |)""".stripMargin
+
   val oracles: Seq[(String, String)] = Seq(
     // DuckDB reads the same on-disk JSONL fixture the Spark query ingests
     // with an equivalent explicit column spec — null literals, missing
@@ -327,20 +368,7 @@ private[graft] object RegistryEvents {
          |  SELECT host, text FROM blocks
          |  GROUP BY host, text
          |  HAVING count(DISTINCT doc_id) >= ${WebVectors.siteHostRepeatMin}
-         |), kept AS (
-         |  SELECT b.doc_id, b.block_idx, b.text
-         |  FROM blocks b LEFT JOIN boiler o
-         |    ON b.host = o.host AND b.text = o.text
-         |  WHERE o.text IS NULL AND b.chars >= ${WebVectors.mainMinChars}
-         |    AND b.links <= b.chars * ${WebVectors.mainMaxLinkDensity}
-         |), agg AS (
-         |  SELECT doc_id, string_agg(text, '<NL>' ORDER BY block_idx) AS m
-         |  FROM kept GROUP BY doc_id
-         |)
-         |SELECT d.doc_id,
-         |       CASE WHEN NOT d.has_html THEN NULL
-         |            ELSE coalesce(a.m, '') END AS main_nl
-         |FROM docs d LEFT JOIN agg a USING (doc_id)""".stripMargin,
+         |), ${duckMainSiteTail("blocks")}""".stripMargin,
     // the corpus-wide law over standing UNION batch, restricted to the
     // batch — exactly what the incremental probe must reproduce
     "x_warc_main_site_incremental" ->
@@ -353,26 +381,7 @@ private[graft] object RegistryEvents {
          |    t(doc_id, host, block_idx, text, links, chars)
          |), docs AS (
          |  SELECT * FROM (VALUES ${WebVectors.siteIncDocsValuesSql}) d(doc_id, has_html)
-         |), boiler AS (
-         |  SELECT host, text FROM (
-         |    SELECT host, text, doc_id FROM standing
-         |    UNION ALL SELECT host, text, doc_id FROM batch
-         |  ) GROUP BY host, text
-         |  HAVING count(DISTINCT doc_id) >= ${WebVectors.siteHostRepeatMin}
-         |), kept AS (
-         |  SELECT b.doc_id, b.block_idx, b.text
-         |  FROM batch b LEFT JOIN boiler o
-         |    ON b.host = o.host AND b.text = o.text
-         |  WHERE o.text IS NULL AND b.chars >= ${WebVectors.mainMinChars}
-         |    AND b.links <= b.chars * ${WebVectors.mainMaxLinkDensity}
-         |), agg AS (
-         |  SELECT doc_id, string_agg(text, '<NL>' ORDER BY block_idx) AS m
-         |  FROM kept GROUP BY doc_id
-         |)
-         |SELECT d.doc_id,
-         |       CASE WHEN NOT d.has_html THEN NULL
-         |            ELSE coalesce(a.m, '') END AS main_nl
-         |FROM docs d LEFT JOIN agg a USING (doc_id)""".stripMargin,
+         |), $duckMainSiteUnionTail""".stripMargin,
     // the union census over (standing MINUS removed) and the batch —
     // erased pages never count, retained pages still do
     "x_warc_main_site_takedown" ->
@@ -387,26 +396,7 @@ private[graft] object RegistryEvents {
          |  WHERE doc_id <= ${WebVectors.siteTakedownBatchMaxId}
          |), docs AS (
          |  SELECT * FROM (VALUES ${WebVectors.siteTakedownDocsValuesSql}) d(doc_id, has_html)
-         |), boiler AS (
-         |  SELECT host, text FROM (
-         |    SELECT host, text, doc_id FROM standing
-         |    UNION ALL SELECT host, text, doc_id FROM batch
-         |  ) GROUP BY host, text
-         |  HAVING count(DISTINCT doc_id) >= ${WebVectors.siteHostRepeatMin}
-         |), kept AS (
-         |  SELECT b.doc_id, b.block_idx, b.text
-         |  FROM batch b LEFT JOIN boiler o
-         |    ON b.host = o.host AND b.text = o.text
-         |  WHERE o.text IS NULL AND b.chars >= ${WebVectors.mainMinChars}
-         |    AND b.links <= b.chars * ${WebVectors.mainMaxLinkDensity}
-         |), agg AS (
-         |  SELECT doc_id, string_agg(text, '<NL>' ORDER BY block_idx) AS m
-         |  FROM kept GROUP BY doc_id
-         |)
-         |SELECT d.doc_id,
-         |       CASE WHEN NOT d.has_html THEN NULL
-         |            ELSE coalesce(a.m, '') END AS main_nl
-         |FROM docs d LEFT JOIN agg a USING (doc_id)""".stripMargin,
+         |), $duckMainSiteUnionTail""".stripMargin,
     "x_media_meta" ->
       """SELECT CAST(doc_id AS BIGINT) AS id,
         |       CAST(length(text) AS INT) AS "byteLen",
@@ -427,25 +417,11 @@ private[graft] object RegistryEvents {
         |       md5(substring(text, unnest(frames) * 16 + 1, 16)) AS frame_hash
         |FROM fl""".stripMargin,
     "x_asof_purchase" ->
-      """WITH l AS (
-        |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-        |  FROM events WHERE event_type = 'click'
-        |),
-        |r AS (
-        |  SELECT user_id, event_id AS p_event_id, CAST(ts AS TIMESTAMP) AS p_ts, value AS p_value
-        |  FROM events WHERE event_type = 'purchase'
-        |)
+      s"""WITH $duckClicksPurchasesCtes
         |SELECT l.user_id, l.event_id, l.ts, r.p_event_id, r.p_ts, r.p_value
         |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.p_ts""".stripMargin,
     "x_asof_tolerance" ->
-      """WITH l AS (
-        |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-        |  FROM events WHERE event_type = 'click'
-        |),
-        |r AS (
-        |  SELECT user_id, event_id AS p_event_id, CAST(ts AS TIMESTAMP) AS p_ts, value AS p_value
-        |  FROM events WHERE event_type = 'purchase'
-        |),
+      s"""WITH $duckClicksPurchasesCtes,
         |m AS (
         |  SELECT l.user_id, l.event_id, l.ts, r.p_event_id, r.p_ts, r.p_value
         |  FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.p_ts

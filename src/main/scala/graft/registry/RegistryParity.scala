@@ -478,6 +478,33 @@ private[graft] object RegistryParity {
     }),
   )
 
+  /** The run-2 delta of the snapshots chain — the `enrichB` rows whose
+    * (key, record) hash pair is not in `enrichA` — narrowed by `and` (a
+    * further conjunct, or empty). */
+  private def duckDeltaSql(and: String): String =
+    s"""$snapshotsCte
+       |SELECT n.l_orderkey, n.l_linenumber, CAST(n.quantity AS DOUBLE) AS quantity,
+       |       n."KEY_HASH", n."RECORD_HASH"
+       |FROM enrichB n LEFT JOIN enrichA c
+       |  ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
+       |WHERE c."KEY_HASH" IS NULL$and""".stripMargin
+
+  /** The two-run store over the SHRUNK run-2 snapshot (`store`) and the
+    * keys it holds that the shrunk snapshot lacks (`gone`). */
+  private val duckShrunkStoreCtes: String =
+    s"""$snapshotsCte,
+       |shrunk AS (SELECT * FROM enrichB WHERE l_orderkey % 3 <> 0),
+       |delta AS (
+       |  SELECT n.* FROM shrunk n LEFT JOIN enrichA c
+       |    ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
+       |  WHERE c."KEY_HASH" IS NULL
+       |),
+       |store AS (SELECT * FROM enrichA UNION ALL BY NAME SELECT * FROM delta),
+       |gone AS (
+       |  SELECT DISTINCT s."KEY_HASH" FROM store s
+       |  WHERE NOT EXISTS (SELECT 1 FROM shrunk n WHERE n."KEY_HASH" = s."KEY_HASH")
+       |)""".stripMargin
+
   val oracles: Seq[(String, String)] = Seq(
     "l01_csv_scan" ->
       s"""SELECT Lastname, Firstname, SSN,
@@ -485,43 +512,16 @@ private[graft] object RegistryParity {
         |       CAST(Test3 AS DOUBLE) AS Test3, CAST(Test4 AS DOUBLE) AS Test4,
         |       CAST(Final AS DOUBLE) AS Final, Grade
         |FROM read_csv('$gradesCsvPath', header = true)""".stripMargin,
-    "l16_historize_runs" ->
-      s"""$snapshotsCte,
-         |delta AS (
-         |  SELECT n.* FROM enrichB n LEFT JOIN enrichA c
-         |    ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |  WHERE c."KEY_HASH" IS NULL
-         |)
-         |SELECT * REPLACE (CAST(quantity AS DOUBLE) AS quantity)
-         |FROM (SELECT * FROM enrichA UNION ALL BY NAME SELECT * FROM delta)""".stripMargin,
+    "l16_historize_runs" -> duckTwoRunStoreSql(snapshotsCte),
     // the l16 statement filtered to run 1's INSERT_RUN_ID: run-based
     // time travel over the append-only store = the run-1 snapshot content
     "x_store_asof_run" ->
-      s"""$snapshotsCte,
-         |delta AS (
-         |  SELECT n.* FROM enrichB n LEFT JOIN enrichA c
-         |    ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |  WHERE c."KEY_HASH" IS NULL
-         |)
-         |SELECT * REPLACE (CAST(quantity AS DOUBLE) AS quantity)
-         |FROM (SELECT * FROM enrichA UNION ALL BY NAME SELECT * FROM delta)
-         |WHERE "INSERT_RUN_ID" <= '20240101100000'""".stripMargin,
+      duckTwoRunStoreSql(snapshotsCte, "\nWHERE \"INSERT_RUN_ID\" <= '20240101100000'"),
     // the l16 chain over the SHRUNK run-2 snapshot, then the stamp: keys
     // in the store absent from the shrunk snapshot get DELETED = run-2 ts
     // (all rows kept; first observation wins)
     "x_store_deleted_stamp" ->
-      s"""$snapshotsCte,
-         |shrunk AS (SELECT * FROM enrichB WHERE l_orderkey % 3 <> 0),
-         |delta AS (
-         |  SELECT n.* FROM shrunk n LEFT JOIN enrichA c
-         |    ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |  WHERE c."KEY_HASH" IS NULL
-         |),
-         |store AS (SELECT * FROM enrichA UNION ALL BY NAME SELECT * FROM delta),
-         |gone AS (
-         |  SELECT DISTINCT s."KEY_HASH" FROM store s
-         |  WHERE NOT EXISTS (SELECT 1 FROM shrunk n WHERE n."KEY_HASH" = s."KEY_HASH")
-         |)
+      s"""$duckShrunkStoreCtes
          |SELECT s.l_orderkey, s.l_linenumber, CAST(s.quantity AS DOUBLE) AS quantity,
          |  s."KEY_HASH", s."RECORD_HASH", s."INSERT_RUN_ID",
          |  CASE WHEN g."KEY_HASH" IS NOT NULL AND s."DELETED" IS NULL
@@ -530,18 +530,7 @@ private[graft] object RegistryParity {
     // the stamped store traveled to run 2: inserted at or before run 2
     // AND not deleted at or before it — the vanished keys' rows drop out
     "x_store_asof_run_deleted" ->
-      s"""$snapshotsCte,
-         |shrunk AS (SELECT * FROM enrichB WHERE l_orderkey % 3 <> 0),
-         |delta AS (
-         |  SELECT n.* FROM shrunk n LEFT JOIN enrichA c
-         |    ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |  WHERE c."KEY_HASH" IS NULL
-         |),
-         |store AS (SELECT * FROM enrichA UNION ALL BY NAME SELECT * FROM delta),
-         |gone AS (
-         |  SELECT DISTINCT s."KEY_HASH" FROM store s
-         |  WHERE NOT EXISTS (SELECT 1 FROM shrunk n WHERE n."KEY_HASH" = s."KEY_HASH")
-         |),
+      s"""$duckShrunkStoreCtes,
          |stamped AS (
          |  SELECT s.*, CASE WHEN g."KEY_HASH" IS NOT NULL AND s."DELETED" IS NULL
          |                   THEN TIMESTAMP '$ts2' ELSE s."DELETED" END AS "DELETED2"
@@ -556,7 +545,7 @@ private[graft] object RegistryParity {
     // (base + source_sys) BEFORE enrichment, so source_sys participates
     // in RECORD_HASH — run-2 rows where it left the default re-version,
     // rows still at the default (and otherwise unchanged) do not
-    "x_historize_evolving" ->
+    "x_historize_evolving" -> duckTwoRunStoreSql(
       s"""WITH base AS (
          |  SELECT l_orderkey, l_linenumber,
          |         CAST(l_quantity AS DECIMAL(18,2)) AS quantity,
@@ -576,43 +565,7 @@ private[graft] object RegistryParity {
          |         CASE WHEN l_orderkey % 5 = 0 THEN 'sys2' END AS source_sys
          |  FROM base
          |),
-         |enrichA AS (
-         |  SELECT *,
-         |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
-         |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'))) AS "KEY_HASH",
-         |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
-         |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'),
-         |                        coalesce(CAST(quantity AS VARCHAR),'nan'),
-         |                        coalesce(returnflag,'nan'), coalesce(linestatus,'nan'),
-         |                        coalesce(CAST(shipdate AS VARCHAR),'nan'),
-         |                        coalesce(source_sys,'nan'))) AS "RECORD_HASH",
-         |    TIMESTAMP '$ts1' AS "INSERT_TS", TIMESTAMP '$ts1' AS "UPDATE_TS",
-         |    '20240101100000' AS "INSERT_RUN_ID", '20240101100000' AS "UPDATE_RUN_ID",
-         |    CAST(NULL AS TIMESTAMP) AS "DELETED"
-         |  FROM evA
-         |),
-         |enrichB AS (
-         |  SELECT *,
-         |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
-         |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'))) AS "KEY_HASH",
-         |    md5(concat_ws('#?', coalesce(CAST(l_orderkey AS VARCHAR),'nan'),
-         |                        coalesce(CAST(l_linenumber AS VARCHAR),'nan'),
-         |                        coalesce(CAST(quantity AS VARCHAR),'nan'),
-         |                        coalesce(returnflag,'nan'), coalesce(linestatus,'nan'),
-         |                        coalesce(CAST(shipdate AS VARCHAR),'nan'),
-         |                        coalesce(source_sys,'nan'))) AS "RECORD_HASH",
-         |    TIMESTAMP '$ts2' AS "INSERT_TS", TIMESTAMP '$ts2' AS "UPDATE_TS",
-         |    '20240215103000' AS "INSERT_RUN_ID", '20240215103000' AS "UPDATE_RUN_ID",
-         |    CAST(NULL AS TIMESTAMP) AS "DELETED"
-         |  FROM evB
-         |),
-         |delta AS (
-         |  SELECT n.* FROM enrichB n LEFT JOIN enrichA c
-         |    ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |  WHERE c."KEY_HASH" IS NULL
-         |)
-         |SELECT * REPLACE (CAST(quantity AS DOUBLE) AS quantity)
-         |FROM (SELECT * FROM enrichA UNION ALL BY NAME SELECT * FROM delta)""".stripMargin,
+         |${duckEnrichCtes("evA", "evB", ",\n                        coalesce(source_sys,'nan')")}""".stripMargin),
     "d05_valid_from_lower" ->
       s"""$snapshotsCte
          |SELECT * REPLACE (CAST(quantity AS DOUBLE) AS quantity),
@@ -628,40 +581,16 @@ private[graft] object RegistryParity {
          |SELECT * REPLACE (CAST(quantity AS DOUBLE) AS quantity) FROM enrichA""".stripMargin,
     "l11_hash_projection" ->
       s"""$snapshotsCte SELECT "KEY_HASH", "RECORD_HASH" FROM enrichA""",
-    "l09_delta" ->
-      s"""$snapshotsCte
-         |SELECT n.l_orderkey, n.l_linenumber, CAST(n.quantity AS DOUBLE) AS quantity,
-         |       n."KEY_HASH", n."RECORD_HASH"
-         |FROM enrichB n LEFT JOIN enrichA c
-         |  ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |WHERE c."KEY_HASH" IS NULL""".stripMargin,
+    "l09_delta" -> duckDeltaSql(""),
     // deliberately the SAME statement as l09_delta: the bucketed re-keyed
     // join is an implementation strategy, not a semantic change
-    "l09_delta_bucketed" ->
-      s"""$snapshotsCte
-         |SELECT n.l_orderkey, n.l_linenumber, CAST(n.quantity AS DOUBLE) AS quantity,
-         |       n."KEY_HASH", n."RECORD_HASH"
-         |FROM enrichB n LEFT JOIN enrichA c
-         |  ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |WHERE c."KEY_HASH" IS NULL""".stripMargin,
+    "l09_delta_bucketed" -> duckDeltaSql(""),
     // the incremental-feed regime: the delta statement restricted to the
     // 1% batch — identical SQL for the plain twin and the Bloom route
     // (the route is an implementation strategy: false positives fall
     // through to the exact residual, so the output is the anti-join's)
-    "l09_delta_batch" ->
-      s"""$snapshotsCte
-         |SELECT n.l_orderkey, n.l_linenumber, CAST(n.quantity AS DOUBLE) AS quantity,
-         |       n."KEY_HASH", n."RECORD_HASH"
-         |FROM enrichB n LEFT JOIN enrichA c
-         |  ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |WHERE c."KEY_HASH" IS NULL AND n.l_orderkey % 100 = 0""".stripMargin,
-    "l09_delta_bloom" ->
-      s"""$snapshotsCte
-         |SELECT n.l_orderkey, n.l_linenumber, CAST(n.quantity AS DOUBLE) AS quantity,
-         |       n."KEY_HASH", n."RECORD_HASH"
-         |FROM enrichB n LEFT JOIN enrichA c
-         |  ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |WHERE c."KEY_HASH" IS NULL AND n.l_orderkey % 100 = 0""".stripMargin,
+    "l09_delta_batch" -> duckDeltaSql(" AND n.l_orderkey % 100 = 0"),
+    "l09_delta_bloom" -> duckDeltaSql(" AND n.l_orderkey % 100 = 0"),
     // build-accounting rows return the built artifact's content, so the
     // oracle is the artifact's defining statement. The bloom synopsis
     // twin walks the identical md5 bit derivation: 15-hex-char prefix →
@@ -703,11 +632,7 @@ private[graft] object RegistryParity {
          |  ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" <> c."RECORD_HASH"""".stripMargin,
     "l10_union_append" ->
       s"""$snapshotsCte,
-         |delta AS (
-         |  SELECT n.* FROM enrichB n LEFT JOIN enrichA c
-         |    ON n."KEY_HASH" = c."KEY_HASH" AND n."RECORD_HASH" = c."RECORD_HASH"
-         |  WHERE c."KEY_HASH" IS NULL
-         |)
+         |$duckRun2DeltaCte
          |SELECT l_orderkey, l_linenumber, CAST(quantity AS DOUBLE) AS quantity,
          |       returnflag, linestatus, shipdate,
          |       "KEY_HASH", "RECORD_HASH", "INSERT_RUN_ID"
@@ -832,12 +757,7 @@ private[graft] object RegistryParity {
     // 2024-02-15 for them — the same rows the five-branch chain yields
     "x_store_temporal_join" ->
       s"""$scd2Cte,
-         |obase AS (
-         |  SELECT o_orderkey, o_orderstatus AS orderstatus,
-         |         CAST(o_totalprice AS DECIMAL(18,2)) AS totalprice,
-         |         CAST(o_orderdate AS DATE) AS orderdate
-         |  FROM orders
-         |),
+         |$duckOrdersBaseCte,
          |ohist AS (
          |  SELECT o_orderkey, totalprice,
          |         md5(concat_ws('#?', coalesce(CAST(o_orderkey AS VARCHAR),'nan'),

@@ -151,6 +151,50 @@ private[graft] object RegistrySampling {
       Sketches.heavyHitters(Tables.events(s, d), "user_id", minShare = 0.005)),
   )
 
+  /** KMV distinct-count estimate per event type: the k-th smallest
+    * distinct hash-uniform of user_id; 63.0/U(64) is the same double
+    * division on the same operands in both engines. */
+  private[registry] val duckKmvDistinctSql: String =
+    s"""WITH u AS (
+       |  SELECT DISTINCT event_type, ${duckHashUniform("user_id", "kmv")} AS u
+       |  FROM events
+       |),
+       |r AS (
+       |  SELECT event_type, u,
+       |         row_number() OVER (PARTITION BY event_type ORDER BY u) AS rn,
+       |         count(*) OVER (PARTITION BY event_type) AS nd
+       |  FROM u
+       |)
+       |SELECT event_type,
+       |       round(CASE WHEN max(nd) < 64 THEN CAST(max(nd) AS DOUBLE)
+       |             ELSE 63.0 / max(CASE WHEN rn = 64 THEN u END) END, 6)
+       |         AS est_distinct,
+       |       CAST(least(max(nd), 64) AS INT) AS n_kept
+       |FROM r GROUP BY event_type""".stripMargin
+
+  /** Bottom-k quantiles per order priority: the k hash-smallest DISTINCT
+    * (uniform, value) pairs are the sample in both engines; quantile q
+    * reads the sorted sample at floor(q*(m-1)) (lower-value convention). */
+  private[registry] val duckBottomKQuantilesSql: String =
+    s"""WITH d AS (
+       |  SELECT DISTINCT o_orderpriority, ${duckHashUniform("o_orderkey", "bkq")} AS u,
+       |         CAST(o_totalprice AS DOUBLE) AS v
+       |  FROM orders WHERE o_orderkey IS NOT NULL AND o_totalprice IS NOT NULL
+       |),
+       |r AS (
+       |  SELECT o_orderpriority, u, v,
+       |         row_number() OVER (PARTITION BY o_orderpriority ORDER BY u, v) AS rn
+       |  FROM d
+       |),
+       |s AS (
+       |  SELECT o_orderpriority, list_sort(list(v)) AS vs, count(*) AS m
+       |  FROM r WHERE rn <= 256 GROUP BY o_orderpriority
+       |)
+       |SELECT o_orderpriority, CAST(q AS DOUBLE) AS q,
+       |       round(vs[CAST(floor(CAST(q AS DOUBLE) * (m - 1)) AS INT) + 1], 6) AS est_value,
+       |       CAST(m AS INT) AS n_sample
+       |FROM s, (SELECT unnest([0.25, 0.5, 0.75, 0.9, 0.99]) AS q)""".stripMargin
+
   val oracles: Seq[(String, String)] = Seq(
     // same bottom-k sample CTE as x_sketch_quantiles (one global group,
     // salt "mad"); med and MAD read the sorted sample / sorted absolute
@@ -222,25 +266,7 @@ private[graft] object RegistrySampling {
          |FROM documents d JOIN f USING (source)
          |WHERE ${duckHashUniform("d.doc_id", "mixture")} < frac""".stripMargin
     },
-    // KMV: k-th smallest distinct hash-uniform per group; 63.0/U(64) is
-    // the same double division on the same operands in both engines
-    "x_sketch_distinct" ->
-      s"""WITH u AS (
-         |  SELECT DISTINCT event_type, ${duckHashUniform("user_id", "kmv")} AS u
-         |  FROM events
-         |),
-         |r AS (
-         |  SELECT event_type, u,
-         |         row_number() OVER (PARTITION BY event_type ORDER BY u) AS rn,
-         |         count(*) OVER (PARTITION BY event_type) AS nd
-         |  FROM u
-         |)
-         |SELECT event_type,
-         |       round(CASE WHEN max(nd) < 64 THEN CAST(max(nd) AS DOUBLE)
-         |             ELSE 63.0 / max(CASE WHEN rn = 64 THEN u END) END, 6)
-         |         AS est_distinct,
-         |       CAST(least(max(nd), 64) AS INT) AS n_kept
-         |FROM r GROUP BY event_type""".stripMargin,
+    "x_sketch_distinct" -> duckKmvDistinctSql,
     // Count-Min: cell counts are plain sums over md5-bucketed rows, the
     // estimate is the min over the 4 hash rows — identical integer
     // arithmetic in both engines
@@ -282,28 +308,7 @@ private[graft] object RegistrySampling {
          |         AS est_value,
          |       CAST(m AS INT) AS n_sample
          |FROM s, (SELECT unnest([0.25, 0.5, 0.75, 0.9, 0.99]) AS q)""".stripMargin,
-    // bottom-k quantiles: the k hash-smallest DISTINCT (uniform, value)
-    // pairs per group are the sample in both engines; quantile q reads
-    // the sorted sample at floor(q*(m-1)) (lower-value convention)
-    "x_sketch_quantiles" ->
-      s"""WITH d AS (
-         |  SELECT DISTINCT o_orderpriority, ${duckHashUniform("o_orderkey", "bkq")} AS u,
-         |         CAST(o_totalprice AS DOUBLE) AS v
-         |  FROM orders WHERE o_orderkey IS NOT NULL AND o_totalprice IS NOT NULL
-         |),
-         |r AS (
-         |  SELECT o_orderpriority, u, v,
-         |         row_number() OVER (PARTITION BY o_orderpriority ORDER BY u, v) AS rn
-         |  FROM d
-         |),
-         |s AS (
-         |  SELECT o_orderpriority, list_sort(list(v)) AS vs, count(*) AS m
-         |  FROM r WHERE rn <= 256 GROUP BY o_orderpriority
-         |)
-         |SELECT o_orderpriority, CAST(q AS DOUBLE) AS q,
-         |       round(vs[CAST(floor(CAST(q AS DOUBLE) * (m - 1)) AS INT) + 1], 6) AS est_value,
-         |       CAST(m AS INT) AS n_sample
-         |FROM s, (SELECT unnest([0.25, 0.5, 0.75, 0.9, 0.99]) AS q)""".stripMargin,
+    "x_sketch_quantiles" -> duckBottomKQuantilesSql,
     // heavy hitters are EXACT (the sketch only proposes candidates), so
     // the oracle is the definition itself; the threshold literal is cast
     // to DOUBLE so both engines compare against the identical IEEE value

@@ -237,9 +237,60 @@ private[graft] object RegistrySimilarity {
     }),
   )
 
+  /** Sign-random-projection buckets `b (id, tbl, bucket)` of the vector
+    * column `col` over `from`: bit p of table t is the sign of the dot
+    * product with the md5-derived ±1 plane t * `planes` + p, exactly
+    * Similarity's srpBucketKeys. */
+  private def duckSrpBucketsCte(col: String, planes: String, from: String): String =
+    s"""b AS (
+       |  SELECT id, t.t AS tbl,
+       |    array_to_string(list_transform(range(0, $planes), p ->
+       |      CASE WHEN list_sum(list_transform(range(1, 65),
+       |             i -> CAST($col[i] AS DOUBLE) *
+       |                  ((strpos('0123456789abcdef',
+       |                     substring(md5(concat(CAST(t.t * $planes + p AS VARCHAR), '#', CAST(i - 1 AS VARCHAR))), 1, 1))
+       |                    - 1) % 2 * 2 - 1))) > 0
+       |      THEN '1' ELSE '0' END), '') AS bucket
+       |  FROM $from
+       |)""".stripMargin
+
+  /** The LSH top-k rows after their buckets `b`: the bucket-mates of the
+    * query vectors (id < 5), de-duplicated across tables, scored by
+    * cosine over `v` and ranked. */
+  private val duckLshTopKTail: String =
+    s"""cand AS (
+       |  SELECT DISTINCT q.id AS query_id, c.id AS corpus_id
+       |  FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
+       |                    AND q.id < 5 AND q.id <> c.id
+       |),
+       |scored AS (
+       |  SELECT query_id, corpus_id,
+       |    round(list_sum(list_transform(range(1, 65),
+       |            i -> CAST(vq.vv[i] AS DOUBLE) * CAST(vc.vv[i] AS DOUBLE)))
+       |          / (vq.nrm * vc.nrm), 6) AS cos
+       |  FROM cand JOIN v vq ON vq.id = query_id JOIN v vc ON vc.id = corpus_id
+       |),
+       |${duckTopKTail()}""".stripMargin
+
+  /** The near-duplicate rows after their buckets `b`: every bucket-mate
+    * pair with cosine over `v` of at least 0.4. */
+  private val duckLshNearPairsTail: String =
+    """cand AS (
+      |  SELECT DISTINCT a.id AS id_a, b2.id AS id_b
+      |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket AND a.id < b2.id
+      |),
+      |scored AS (
+      |  SELECT id_a, id_b,
+      |    round(list_sum(list_transform(range(1, 65),
+      |            i -> CAST(va.vv[i] AS DOUBLE) * CAST(vb.vv[i] AS DOUBLE)))
+      |          / (va.nrm * vb.nrm), 6) AS cos
+      |  FROM cand JOIN v va ON va.id = id_a JOIN v vb ON vb.id = id_b
+      |)
+      |SELECT id_a, id_b, cos FROM scored WHERE cos >= 0.4""".stripMargin
+
   val oracles: Seq[(String, String)] = Seq(
     "x_sim_topk" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
         |    round(
         |      list_sum(list_transform(range(1, 65),
@@ -251,64 +302,20 @@ private[graft] object RegistrySimilarity {
         |    , 6) AS cos
         |  FROM embeddings q JOIN embeddings c ON q.vec_id < 5 AND q.vec_id <> c.vec_id
         |),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |                               ORDER BY cos DESC, corpus_id ASC) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, corpus_id, cos, CAST(rank AS INT) AS rank
-        |FROM ranked WHERE rank <= 10""".stripMargin,
+        |${duckTopKTail()}""".stripMargin,
     // 4 OR'd tables x 2 planes, global plane index t*2+p — exactly
     // srpBucketKeys(planes = 2, tables = 4); candidate pairs are
     // de-duplicated across tables before scoring, like lshTopK
     "x_sim_ann_lsh" ->
-      """WITH v AS (
-        |  SELECT vec_id AS id, embedding AS vv,
-        |    sqrt(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings
-        |),
-        |b AS (
-        |  SELECT id, t.t AS tbl,
-        |    array_to_string(list_transform(range(0, 2), p ->
-        |      CASE WHEN list_sum(list_transform(range(1, 65),
-        |             i -> CAST(vv[i] AS DOUBLE) *
-        |                  ((strpos('0123456789abcdef',
-        |                     substring(md5(concat(CAST(t.t * 2 + p AS VARCHAR), '#', CAST(i - 1 AS VARCHAR))), 1, 1))
-        |                    - 1) % 2 * 2 - 1))) > 0
-        |      THEN '1' ELSE '0' END), '') AS bucket
-        |  FROM v, generate_series(0, 3) t(t)
-        |),
-        |cand AS (
-        |  SELECT DISTINCT q.id AS query_id, c.id AS corpus_id
-        |  FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
-        |                    AND q.id < 5 AND q.id <> c.id
-        |),
-        |scored AS (
-        |  SELECT query_id, corpus_id,
-        |    round(list_sum(list_transform(range(1, 65),
-        |            i -> CAST(vq.vv[i] AS DOUBLE) * CAST(vc.vv[i] AS DOUBLE)))
-        |          / (vq.nrm * vc.nrm), 6) AS cos
-        |  FROM cand JOIN v vq ON vq.id = query_id JOIN v vc ON vc.id = corpus_id
-        |),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |                               ORDER BY cos DESC, corpus_id ASC) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, corpus_id, cos, CAST(rank AS INT) AS rank
-        |FROM ranked WHERE rank <= 10""".stripMargin,
+      s"""WITH ${duckVecNormsCte()},
+        |${duckSrpBucketsCte("vv", "2", "v, generate_series(0, 3) t(t)")},
+        |$duckLshTopKTail""".stripMargin,
     // x_sim_ann_lsh's statement with one substitution: bucket signs come
     // from the int8 codes (same scale/round derivation as x_sim_quantize);
     // scoring still reads the original vectors — mirroring the operator's
     // quantized-candidates / exact-re-rank split
     "x_sim_ann_quantized" ->
-      """WITH v AS (
-        |  SELECT vec_id AS id, embedding AS vv,
-        |    sqrt(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings
-        |),
+      s"""WITH ${duckVecNormsCte()},
         |s AS (
         |  SELECT vec_id AS id, embedding,
         |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
@@ -322,36 +329,8 @@ private[graft] object RegistrySimilarity {
         |                x -> CAST(round(CAST(x AS DOUBLE) / scale) AS INT)) END AS codes
         |  FROM s
         |),
-        |b AS (
-        |  SELECT id, t.t AS tbl,
-        |    array_to_string(list_transform(range(0, 2), p ->
-        |      CASE WHEN list_sum(list_transform(range(1, 65),
-        |             i -> CAST(codes[i] AS DOUBLE) *
-        |                  ((strpos('0123456789abcdef',
-        |                     substring(md5(concat(CAST(t.t * 2 + p AS VARCHAR), '#', CAST(i - 1 AS VARCHAR))), 1, 1))
-        |                    - 1) % 2 * 2 - 1))) > 0
-        |      THEN '1' ELSE '0' END), '') AS bucket
-        |  FROM qz, generate_series(0, 3) t(t)
-        |),
-        |cand AS (
-        |  SELECT DISTINCT q.id AS query_id, c.id AS corpus_id
-        |  FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
-        |                    AND q.id < 5 AND q.id <> c.id
-        |),
-        |scored AS (
-        |  SELECT query_id, corpus_id,
-        |    round(list_sum(list_transform(range(1, 65),
-        |            i -> CAST(vq.vv[i] AS DOUBLE) * CAST(vc.vv[i] AS DOUBLE)))
-        |          / (vq.nrm * vc.nrm), 6) AS cos
-        |  FROM cand JOIN v vq ON vq.id = query_id JOIN v vc ON vc.id = corpus_id
-        |),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |                               ORDER BY cos DESC, corpus_id ASC) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, corpus_id, cos, CAST(rank AS INT) AS rank
-        |FROM ranked WHERE rank <= 10""".stripMargin,
+        |${duckSrpBucketsCte("codes", "2", "qz, generate_series(0, 3) t(t)")},
+        |$duckLshTopKTail""".stripMargin,
     // full PQ mirror: subspace-indexed kmeans CTEs, ADC lookup tables,
     // shortlist + exact re-rank — see duckPqSql for the parity pins
     "x_sim_pq" -> duckPqSql(m = 16, ks = 16, iters = 2, probe = 40, k = 10),
@@ -369,13 +348,7 @@ private[graft] object RegistrySimilarity {
         |      i -> CAST(p.qv[i] AS DOUBLE) * CAST(a.vv[i] AS DOUBLE))) / (p.qn * a.nrm), 6) AS cos
         |  FROM probe p JOIN assign a ON a.cid = p.cid AND a.id <> p.query_id
         |),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |                               ORDER BY cos DESC, corpus_id ASC) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, corpus_id, cos, CAST(rank AS INT) AS rank
-        |FROM ranked WHERE rank <= 10""".stripMargin,
+        |${duckTopKTail()}""".stripMargin,
     // same per-vector max/127 scale and round-half-away-from-zero code
     // derivation as quantizeInt8; CAST of the already-integral round()
     // output is exact in both engines. codes flattened to CSV so the
@@ -395,75 +368,24 @@ private[graft] object RegistrySimilarity {
         |    ',') AS codes_csv
         |FROM s""".stripMargin,
     "x_sim_near_dup" ->
-      """WITH v AS (
-        |  SELECT vec_id AS id, embedding AS vv,
-        |    sqrt(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings
-        |),
-        |b AS (
-        |  SELECT id, t.t AS tbl,
-        |    array_to_string(list_transform(range(0, 4), p ->
-        |      CASE WHEN list_sum(list_transform(range(1, 65),
-        |             i -> CAST(vv[i] AS DOUBLE) *
-        |                  ((strpos('0123456789abcdef',
-        |                     substring(md5(concat(CAST(t.t * 4 + p AS VARCHAR), '#', CAST(i - 1 AS VARCHAR))), 1, 1))
-        |                    - 1) % 2 * 2 - 1))) > 0
-        |      THEN '1' ELSE '0' END), '') AS bucket
-        |  FROM v, generate_series(0, 1) t(t)
-        |),
-        |cand AS (
-        |  SELECT DISTINCT a.id AS id_a, b2.id AS id_b
-        |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket AND a.id < b2.id
-        |),
-        |scored AS (
-        |  SELECT id_a, id_b,
-        |    round(list_sum(list_transform(range(1, 65),
-        |            i -> CAST(va.vv[i] AS DOUBLE) * CAST(vb.vv[i] AS DOUBLE)))
-        |          / (va.nrm * vb.nrm), 6) AS cos
-        |  FROM cand JOIN v va ON va.id = id_a JOIN v vb ON vb.id = id_b
-        |)
-        |SELECT id_a, id_b, cos FROM scored WHERE cos >= 0.4""".stripMargin,
+      s"""WITH ${duckVecNormsCte()},
+        |${duckSrpBucketsCte("vv", "4", "v, generate_series(0, 1) t(t)")},
+        |$duckLshNearPairsTail""".stripMargin,
     // batch (odd ids) probes the accumulated bucket index (even ids):
     // the same bucket derivation as x_sim_near_dup, restricted per side
     "x_sim_near_dup_incremental" ->
-      """WITH v AS (
+      s"""WITH v AS (
         |  SELECT vec_id AS id, embedding AS vv FROM embeddings
         |),
-        |b AS (
-        |  SELECT id, t.t AS tbl,
-        |    array_to_string(list_transform(range(0, 4), p ->
-        |      CASE WHEN list_sum(list_transform(range(1, 65),
-        |             i -> CAST(vv[i] AS DOUBLE) *
-        |                  ((strpos('0123456789abcdef',
-        |                     substring(md5(concat(CAST(t.t * 4 + p AS VARCHAR), '#', CAST(i - 1 AS VARCHAR))), 1, 1))
-        |                    - 1) % 2 * 2 - 1))) > 0
-        |      THEN '1' ELSE '0' END), '') AS bucket
-        |  FROM v, generate_series(0, 1) t(t)
-        |)
+        |${duckSrpBucketsCte("vv", "4", "v, generate_series(0, 1) t(t)")}
         |SELECT DISTINCT b1.id AS batch_id, c.id AS corpus_id
         |FROM b b1 JOIN b c ON b1.tbl = c.tbl AND b1.bucket = c.bucket
         | AND b1.id % 2 = 1 AND c.id % 2 = 0""".stripMargin,
     // candidates CTE as above, then the x_sim_near_dup cosine verify
     // restricted to them
     "x_sim_near_dup_incr_verified" ->
-      """WITH v AS (
-        |  SELECT vec_id AS id, embedding AS vv,
-        |    sqrt(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings
-        |),
-        |b AS (
-        |  SELECT id, t.t AS tbl,
-        |    array_to_string(list_transform(range(0, 4), p ->
-        |      CASE WHEN list_sum(list_transform(range(1, 65),
-        |             i -> CAST(vv[i] AS DOUBLE) *
-        |                  ((strpos('0123456789abcdef',
-        |                     substring(md5(concat(CAST(t.t * 4 + p AS VARCHAR), '#', CAST(i - 1 AS VARCHAR))), 1, 1))
-        |                    - 1) % 2 * 2 - 1))) > 0
-        |      THEN '1' ELSE '0' END), '') AS bucket
-        |  FROM v, generate_series(0, 1) t(t)
-        |),
+      s"""WITH ${duckVecNormsCte()},
+        |${duckSrpBucketsCte("vv", "4", "v, generate_series(0, 1) t(t)")},
         |cand AS (
         |  SELECT DISTINCT b1.id AS batch_id, c.id AS corpus_id
         |  FROM b b1 JOIN b c ON b1.tbl = c.tbl AND b1.bucket = c.bucket
@@ -483,39 +405,13 @@ private[graft] object RegistrySimilarity {
     // targetPerBucket = 64 — the shared epsilon absorbs 1-ulp ln()
     // divergence between engines at exact-power-of-two bucket counts
     "x_sim_near_dup_auto" ->
-      """WITH params AS (
+      s"""WITH params AS (
         |  SELECT greatest(1, CAST(ceil(ln(greatest(count(*) / 64.0, 1.0)) / ln(2.0) - 1e-9) AS INT)) AS planes
         |  FROM embeddings
         |),
-        |v AS (
-        |  SELECT vec_id AS id, embedding AS vv,
-        |    sqrt(list_sum(list_transform(range(1, 65),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-        |  FROM embeddings
-        |),
-        |b AS (
-        |  SELECT id, t.t AS tbl,
-        |    array_to_string(list_transform(range(0, params.planes), p ->
-        |      CASE WHEN list_sum(list_transform(range(1, 65),
-        |             i -> CAST(vv[i] AS DOUBLE) *
-        |                  ((strpos('0123456789abcdef',
-        |                     substring(md5(concat(CAST(t.t * params.planes + p AS VARCHAR), '#', CAST(i - 1 AS VARCHAR))), 1, 1))
-        |                    - 1) % 2 * 2 - 1))) > 0
-        |      THEN '1' ELSE '0' END), '') AS bucket
-        |  FROM v, generate_series(0, 1) t(t), params
-        |),
-        |cand AS (
-        |  SELECT DISTINCT a.id AS id_a, b2.id AS id_b
-        |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket AND a.id < b2.id
-        |),
-        |scored AS (
-        |  SELECT id_a, id_b,
-        |    round(list_sum(list_transform(range(1, 65),
-        |            i -> CAST(va.vv[i] AS DOUBLE) * CAST(vb.vv[i] AS DOUBLE)))
-        |          / (va.nrm * vb.nrm), 6) AS cos
-        |  FROM cand JOIN v va ON va.id = id_a JOIN v vb ON vb.id = id_b
-        |)
-        |SELECT id_a, id_b, cos FROM scored WHERE cos >= 0.4""".stripMargin,
+        |${duckVecNormsCte()},
+        |${duckSrpBucketsCte("vv", "params.planes", "v, generate_series(0, 1) t(t), params")},
+        |$duckLshNearPairsTail""".stripMargin,
     "x_skew_join" ->
       """WITH li AS (
         |  SELECT l_orderkey, l_linenumber, l_returnflag AS returnflag,

@@ -18,6 +18,38 @@ import graft.registry.RegistryText.{duckBpeTrainSql, duckBpeVocabSql, duckDni, d
   * the pre-r14 monolith); keys are byte-identical to the query side,
   * enforced by SparkEntry's key-parity check. */
 private[graft] object RegistryTextOracles {
+  /** The packing rows' token counts: whitespace words per doc, sharded by
+    * doc_id % 8 (`t (doc_id, shard, n_tokens)`). */
+  private val duckWordCountsCte: String =
+    """t AS (
+      |  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
+      |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
+      |      x -> length(x) > 0)) AS BIGINT) AS n_tokens
+      |  FROM documents
+      |)""".stripMargin
+
+  /** [[duckWordCountsCte]] over the BPE rows' per-doc counts `cnt`. */
+  private val duckShardedCountsCte: String =
+    """t AS (
+      |  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard, n_tokens FROM cnt
+      |)""".stripMargin
+
+  /** The greedy sequence-packing chain over the counts `counts` (the CTE
+    * `t`): each shard's running token sum in doc order (`c`), and a doc's
+    * pack = floor(tokens before it / `capacity`) (`p`, keeping `cols`). */
+  private def duckPackCtes(counts: String, cols: String, capacity: String): String =
+    s"""$counts,
+       |c AS (
+       |  SELECT doc_id, shard, n_tokens,
+       |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
+       |  FROM t
+       |),
+       |p AS (
+       |  SELECT $cols,
+       |    CAST(floor(CAST(cum - n_tokens AS DOUBLE) / $capacity) AS BIGINT) AS pack_id
+       |  FROM c
+       |)""".stripMargin
+
   val oracles: Seq[(String, String)] = Seq(
     // the full-depth stress-table replay: re-derive all 55,005 rules from
     // the published construction (95 printable bytes -> digrams in
@@ -150,19 +182,7 @@ private[graft] object RegistryTextOracles {
          |  LEFT JOIN ord o ON o.doc_id = d.doc_id
          |  GROUP BY d.doc_id
          |),
-         |t AS (
-         |  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard, n_tokens FROM cnt
-         |),
-         |c AS (
-         |  SELECT doc_id, shard, n_tokens,
-         |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-         |  FROM t
-         |),
-         |p AS (
-         |  SELECT doc_id, shard,
-         |    CAST(floor(CAST(cum - n_tokens AS DOUBLE) / 2048.0) AS BIGINT) AS pack_id
-         |  FROM c
-         |),
+         |${duckPackCtes(duckShardedCountsCte, "doc_id, shard", "2048.0")},
          |pp AS (
          |  SELECT doc_id, shard, pack_id,
          |    row_number() OVER (PARTITION BY shard, pack_id ORDER BY doc_id) AS pack_pos
@@ -197,19 +217,7 @@ private[graft] object RegistryTextOracles {
          |  FROM documents d LEFT JOIN sym ON sym.doc_id = d.doc_id
          |  GROUP BY d.doc_id
          |),
-         |t AS (
-         |  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard, n_tokens FROM cnt
-         |),
-         |c AS (
-         |  SELECT doc_id, shard, n_tokens,
-         |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-         |  FROM t
-         |),
-         |p AS (
-         |  SELECT doc_id, shard, n_tokens,
-         |    CAST(floor(CAST(cum - n_tokens AS DOUBLE) / 2048.0) AS BIGINT) AS pack_id
-         |  FROM c
-         |)
+         |${duckPackCtes(duckShardedCountsCte, "doc_id, shard, n_tokens", "2048.0")}
          |SELECT doc_id, shard, n_tokens, pack_id,
          |  CAST(row_number() OVER (PARTITION BY shard, pack_id ORDER BY doc_id) AS BIGINT)
          |    AS pack_pos
@@ -266,22 +274,7 @@ private[graft] object RegistryTextOracles {
         |       AS BIGINT) AS pack_pos
         |FROM step WHERE doc_id IS NOT NULL""".stripMargin,
     "x_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> length(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |),
-        |c AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-        |  FROM t
-        |),
-        |p AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    CAST(floor(CAST(cum - n_tokens AS DOUBLE) / 512.0) AS BIGINT) AS pack_id
-        |  FROM c
-        |)
+      s"""WITH ${duckPackCtes(duckWordCountsCte, "doc_id, shard, n_tokens", "512.0")}
         |SELECT doc_id, shard, n_tokens, pack_id,
         |  CAST(row_number() OVER (PARTITION BY shard, pack_id ORDER BY doc_id) AS BIGINT)
         |    AS pack_pos
@@ -290,22 +283,7 @@ private[graft] object RegistryTextOracles {
     // rolled to pack level, file_idx = floor(rank/16) per shard stream,
     // manifest = per-file counts + the deterministic address
     "x_pack_shard_export" ->
-      """WITH t AS (
-        |  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> length(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |),
-        |c AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-        |  FROM t
-        |),
-        |p AS (
-        |  SELECT shard, n_tokens,
-        |    CAST(floor(CAST(cum - n_tokens AS DOUBLE) / 512.0) AS BIGINT) AS pack_id
-        |  FROM c
-        |),
+      s"""WITH ${duckPackCtes(duckWordCountsCte, "shard, n_tokens", "512.0")},
         |seqs AS (SELECT shard, pack_id FROM p GROUP BY shard, pack_id),
         |a AS (
         |  SELECT shard, pack_id,
@@ -318,22 +296,7 @@ private[graft] object RegistryTextOracles {
     // the boundary arrays replayed flat: per (shard, pack) position in
     // doc_id order, offset = running token sum of the PRECEDING members
     "x_pack_shard_boundaries" ->
-      """WITH t AS (
-        |  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> length(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |),
-        |c AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-        |  FROM t
-        |),
-        |p AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    CAST(floor(CAST(cum - n_tokens AS DOUBLE) / 512.0) AS BIGINT) AS pack_id
-        |  FROM c
-        |)
+      s"""WITH ${duckPackCtes(duckWordCountsCte, "doc_id, shard, n_tokens", "512.0")}
         |SELECT shard, pack_id,
         |  CAST(row_number() OVER (PARTITION BY shard, pack_id ORDER BY doc_id)
         |       AS BIGINT) AS seq_pos,
@@ -423,22 +386,7 @@ private[graft] object RegistryTextOracles {
         |                                       ORDER BY rn) AS BIGINT) AS pack_pos
         |             FROM step WHERE grp IS NOT NULL) p USING (grp)""".stripMargin,
     "x_pack_summary" ->
-      """WITH t AS (
-        |  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
-        |    CAST(len(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> length(x) > 0)) AS BIGINT) AS n_tokens
-        |  FROM documents
-        |),
-        |c AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-        |  FROM t
-        |),
-        |p AS (
-        |  SELECT shard, n_tokens,
-        |    CAST(floor(CAST(cum - n_tokens AS DOUBLE) / 512.0) AS BIGINT) AS pack_id
-        |  FROM c
-        |)
+      s"""WITH ${duckPackCtes(duckWordCountsCte, "shard, n_tokens", "512.0")}
         |SELECT shard, pack_id, count(*) AS n_docs,
         |       CAST(sum(n_tokens) AS BIGINT) AS tokens_total,
         |       round(CAST(sum(n_tokens) AS DOUBLE) / 512.0, 6) AS fill_ratio

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -399,27 +399,22 @@ object Store {
     val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     val root = new Path(path)
     if (!fs.exists(root)) Seq.empty
-    else
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(GenPrefix))
-        .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-        // non-numeric suffixes (an operator's gen-...bak copy) are not
-        // generations — skip them like existingGenerations does, instead
-        // of one stray directory poisoning every read of the store
-        .flatMap(s => scala.util.Try(
-          s.getPath.getName.stripPrefix(GenPrefix).toLong).toOption)
-        .sorted
+    else generations(fs, fs.listStatus(root).toSeq, committedOnly = true).map(_._1)
   }
 
-  /** Existing generation sequence numbers, committed or not: an
-    * uncommitted leftover must never be re-entered (a dead writer's
-    * executor could still be writing into it), so the next sequence is
-    * one past the highest EXISTING directory. */
-  private def existingGenerations(fs: FileSystem, root: Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty[Long]
-    else fs.listStatus(root).toSeq
+  /** The generation directories among the `entries` of a store root, as
+    * (sequence number, directory) in ascending order; `committedOnly`
+    * keeps those holding `_SUCCESS`. A non-numeric suffix (an operator's
+    * gen-...bak copy) is not a generation, so one stray directory cannot
+    * poison every read of the store. */
+  private def generations(
+      fs: FileSystem, entries: Seq[FileStatus], committedOnly: Boolean): Seq[(Long, Path)] =
+    entries
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(GenPrefix))
-      .flatMap(s => scala.util.Try(s.getPath.getName.stripPrefix(GenPrefix).toLong).toOption)
+      .flatMap(s => Try(s.getPath.getName.stripPrefix(GenPrefix).toLong).toOption
+        .map(_ -> s.getPath))
+      .filter { case (_, dir) => !committedOnly || fs.exists(new Path(dir, "_SUCCESS")) }
+      .sortBy(_._1)
 
   /** CAS-commit a fully-written build directory (its `_SUCCESS` already
     * inside) as the next generation: rename-if-absent of `gen-<seq>`,
@@ -433,7 +428,11 @@ object Store {
   private def commitGeneration(fs: FileSystem, root: Path, build: Path): Long = {
     var attempts = 0
     while (attempts < 1000) {
-      val next = existingGenerations(fs, root).foldLeft(0L)(math.max) + 1
+      // one past the highest EXISTING directory, committed or not: an
+      // uncommitted leftover must never be re-entered (a dead writer's
+      // executor could still be writing into it)
+      val next = generations(fs, fs.listStatus(root).toSeq, committedOnly = false)
+        .lastOption.fold(0L)(_._1) + 1
       val target = new Path(root, genDirName(next))
       val nested = new Path(target, build.getName)
       if (fs.rename(build, target) && !fs.exists(nested)) return next
@@ -454,22 +453,17 @@ object Store {
   private def pruneGenerations(
       fs: FileSystem, root: Path, keep: Int, newest: Long,
       staleBuildMillis: Long = 24L * 3600 * 1000): Unit = {
-    val committed = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(GenPrefix))
-      .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .flatMap(s => scala.util.Try(s.getPath.getName.stripPrefix(GenPrefix).toLong).toOption)
-      .sorted
-    val cut = committed.takeRight(keep).headOption.getOrElse(newest)
+    val entries = fs.listStatus(root).toSeq
+    val cut = generations(fs, entries, committedOnly = true)
+      .takeRight(keep).headOption.fold(newest)(_._1)
+    generations(fs, entries, committedOnly = false).foreach { case (g, dir) =>
+      if (g < cut) fs.delete(dir, true)
+    }
     val now = System.currentTimeMillis()
-    fs.listStatus(root).toSeq.foreach { s =>
-      val name = s.getPath.getName
-      if (s.isDirectory && name.startsWith(GenPrefix)) {
-        val g = scala.util.Try(name.stripPrefix(GenPrefix).toLong).toOption
-        if (g.exists(_ < cut)) fs.delete(s.getPath, true)
-      } else if (s.isDirectory && name.startsWith(GenBuildPrefix)
-          && now - s.getModificationTime > staleBuildMillis) {
+    entries.foreach { s =>
+      if (s.isDirectory && s.getPath.getName.startsWith(GenBuildPrefix)
+          && now - s.getModificationTime > staleBuildMillis)
         fs.delete(s.getPath, true)
-      }
     }
   }
 
@@ -636,12 +630,12 @@ object Store {
   private def prunePrePurge(spark: SparkSession, path: String, firstNew: Long): Unit = {
     val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     val root = new Path(path)
-    fs.listStatus(root).toSeq.foreach { s =>
-      val name = s.getPath.getName
-      val preGen = name.startsWith(GenPrefix) &&
-        scala.util.Try(name.stripPrefix(GenPrefix).toLong).toOption.exists(_ < firstNew)
-      if (s.isDirectory && (preGen || name.startsWith(GenBuildPrefix)))
-        fs.delete(s.getPath, true)
+    val entries = fs.listStatus(root).toSeq
+    generations(fs, entries, committedOnly = false).foreach { case (g, dir) =>
+      if (g < firstNew) fs.delete(dir, true)
+    }
+    entries.foreach { s =>
+      if (s.isDirectory && s.getPath.getName.startsWith(GenBuildPrefix)) fs.delete(s.getPath, true)
     }
     Seq(".old", ".tmp").foreach { suffix =>
       val aside = new Path(path + suffix)
@@ -1116,23 +1110,10 @@ object Store {
     * carry their own `_SUCCESS`) and nothing is read back — the caller
     * addresses the sub-paths itself. Returns `path` for chaining. */
   def ensureStagedDir(spark: SparkSession, path: String)(build: String => Unit): String = {
-    val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
-    val target = new Path(path)
-    if (!fs.exists(new Path(target, "_STAGED"))) {
-      val tmpName = s"_build_${java.util.UUID.randomUUID().toString.take(8)}"
-      val tmp = new Path(target.getParent, tmpName)
-      build(tmp.toString)
-      fs.create(new Path(tmp, "_STAGED")).close()
-      if (!fs.rename(tmp, target) || fs.exists(new Path(target, tmpName))) {
-        fs.delete(new Path(target, tmpName), true)
-        fs.delete(tmp, true)
-        ()
-      }
-      if (!fs.exists(new Path(target, "_STAGED")))
-        throw new IllegalStateException(
-          s"ensureStagedDir: commit of $path did not land and no concurrent builder " +
-            "committed it either — rename failed for a non-race reason " +
-            "(permissions, quota, missing parent directory?)")
+    stageOnce(spark, path, "_STAGED", "ensureStagedDir") { tmp =>
+      build(tmp)
+      val marker = new Path(tmp, "_STAGED")
+      marker.getFileSystem(spark.sparkContext.hadoopConfiguration).create(marker).close()
     }
     path
   }
@@ -1141,12 +1122,25 @@ object Store {
     * store content at the path it is given (any layout — partitioned,
     * bucketed directories, …); commit-if-absent choreography as above. */
   def readOrCreateWith(spark: SparkSession, path: String)(writeTo: String => Unit): DataFrame = {
+    stageOnce(spark, path, "_SUCCESS", "readOrCreate")(writeTo)
+    spark.read.parquet(path)
+  }
+
+  /** The commit of [[readOrCreateWith]] and [[ensureStagedDir]]: `path`
+    * counts as committed once it holds `marker`. Until then `build` writes
+    * into a unique `_build_*` sibling (which it must leave holding
+    * `marker`) and the sibling is renamed in only if `path` is still
+    * absent; a builder that lost the race discards its copy. Once `path`
+    * is committed, crashed builders' stale `_build_*` siblings are swept.
+    * `caller` names the public entry in a commit failure. */
+  private def stageOnce(spark: SparkSession, path: String, marker: String, caller: String)(
+      build: String => Unit): Unit = {
     val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     val target = new Path(path)
-    if (!fs.exists(new Path(target, "_SUCCESS"))) {
+    if (!fs.exists(new Path(target, marker))) {
       val tmpName = s"_build_${java.util.UUID.randomUUID().toString.take(8)}"
       val tmp = new Path(target.getParent, tmpName)
-      writeTo(tmp.toString)
+      build(tmp.toString)
       // CAS: rename lands iff `path` is still absent. A lost race either
       // returns false or relocates tmp INSIDE the winner's directory —
       // detect both and discard our copy.
@@ -1156,12 +1150,12 @@ object Store {
         ()
       }
       // the rename can also fail for non-race reasons (permissions, quota,
-      // missing parent) with `path` still absent — then the read below
-      // would surface a confusing missing-path error and the built tmp
-      // was just discarded. Fail descriptively instead.
-      if (!fs.exists(new Path(target, "_SUCCESS")))
+      // missing parent) with `path` still absent — then a read would
+      // surface a confusing missing-path error and the built tmp was just
+      // discarded. Fail descriptively instead.
+      if (!fs.exists(new Path(target, marker)))
         throw new IllegalStateException(
-          s"readOrCreate: commit of $path did not land and no concurrent builder " +
+          s"$caller: commit of $path did not land and no concurrent builder " +
             "committed it either — rename failed for a non-race reason " +
             "(permissions, quota, missing parent directory?)")
     } else {
@@ -1179,7 +1173,6 @@ object Store {
           fs.delete(s.getPath, true)
       }
     }
-    spark.read.parquet(path)
   }
 
   /** Delete rows from a standing store by id — the takedown primitive

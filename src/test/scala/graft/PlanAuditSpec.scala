@@ -72,6 +72,26 @@ class PlanAuditSpec extends SparkSpec {
       "a bench extra has an oracle — register it as a query instead")
   }
 
+  test("every oracle statement is fully rendered: no interpolator or margin left over") {
+    // the oracles interpolate shared CTE text; a block that lost its `s`
+    // interpolator ships `${cte}` / `$name` to DuckDB, and one that lost
+    // its `stripMargin` ships `  |SELECT ...`. DuckDB is not on the test
+    // classpath, so this reads the rendered text. A line may start with
+    // the `||` concat operator, so only an odd run of leading bars is a
+    // margin (`|||` is a margin before `||`). Regex anchors (`:80$'`)
+    // are not followed by an identifier and pass.
+    val placeholder = """\$\{|\$[A-Za-z_]""".r
+    val margin = """^\s*(\|\|)*\|(?!\|)""".r
+    val leftovers = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+      placeholder.findFirstIn(sql).map(p => s"$name: unrendered '$p'").toSeq ++
+        sql.linesIterator.zipWithIndex.collectFirst {
+          case (line, i) if margin.findFirstIn(line).isDefined =>
+            s"$name: line ${i + 1} keeps its margin: ${line.trim}"
+        }
+    }
+    assert(leftovers.isEmpty, leftovers.mkString("\n"))
+  }
+
   test("registered dumps expose only atomic-typed columns") {
     // the round-6 regression class: the driver's checker sorts every dumped
     // column with pandas, and array/map/struct cells crash that sort

@@ -847,6 +847,21 @@ class StoreSpec extends SparkSpec {
     assert(Store.readOrCreate(spark, path)(Seq(1L, 2L).toDF("id")).count() === 2)
     assert(!stale.exists(), "stale builder debris not swept")
     assert(live.exists(), "live builder directory must not be touched")
+    // ensureStagedDir (a tiered or span staging root, committed by its own
+    // `_STAGED` marker) sweeps its crashed builders' debris the same way
+    val stagedDir = java.nio.file.Files.createTempDirectory("graft_sweep_staged").toString
+    val staged = s"$stagedDir/tiered"
+    Store.ensureStagedDir(spark, staged)(tmp => Seq(1L).toDF("id").write.parquet(s"$tmp/active"))
+    val staleStaged = new java.io.File(stagedDir, "_build_deadbeef")
+    assert(staleStaged.mkdirs())
+    assert(staleStaged.setLastModified(System.currentTimeMillis() - 25L * 3600 * 1000))
+    val liveStaged = new java.io.File(stagedDir, "_build_12345678")
+    assert(liveStaged.mkdirs())
+    var rebuilt = false
+    assert(Store.ensureStagedDir(spark, staged)(_ => rebuilt = true) === staged)
+    assert(!rebuilt, "a committed staged dir must not be rebuilt")
+    assert(!staleStaged.exists(), "stale builder debris beside a staged dir not swept")
+    assert(liveStaged.exists(), "live builder directory beside a staged dir must not be touched")
   }
 
   test("writeStoreSwap self-heals a crash between the aside and final renames") {
