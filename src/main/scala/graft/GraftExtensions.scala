@@ -4,32 +4,18 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graftbridge.CatalystBridge
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType}
 
-import graft.functions.{BpeCount, BpeEncode, CharEntropy, CollapseRuns, DotProduct, MinHashSig, NfcNormalize, PhashFp, RepeatRatio, Shingles, SimHash, TokenPairs, WinnowFps}
+import graft.functions._
 
 /** SQL-surface registration of graft's native expressions, so SQL-string
-  * pipelines can call them like built-ins:
-  *
-  *  - `graft_dot(a, b)` — codegen'd array dot product
-  *  - `graft_minhash(shingles, k)` — MinHash signature (k: int literal)
-  *  - `graft_simhash(tokens, bits)` — SimHash fingerprint (bits: int literal)
-  *  - `graft_shingles(tokens, n)` — distinct word n-gram shingles
-  *  - `graft_repeat_ratio(tokens, n)` — top full-n-gram frequency ratio
-  *  - `graft_collapse_runs(tokens, maxRun)` — consecutive-duplicate-run
-  *    collapsing (intra-document repetition removal)
-  *  - `graft_phash(payload, bits)` — average-hash perceptual fingerprint
-  *    of a binary payload
-  *  - `graft_token_pairs(text)` — adjacent whitespace-token bigram pairs
-  *    as `array<struct<w1, w2>>` (non-distinct, reading order)
-  *  - `graft_char_entropy(text)` — code-point Shannon entropy in bits
-  *  - `graft_nfc_normalize(text)` — Unicode NFC canonical composition
-  *  - `graft_winnow(text, k, w)` — positional winnowing fingerprints
-  *    as `array<struct<gh, p>>` (k-gram hashes, window w)
-  *  - `graft_bpe_count(text)` — byte-level BPE token count over the
-  *    library's default merges table (packing budgets in plain SQL;
-  *    custom vocabularies go through the Column API, a merges table is
-  *    not SQL-literal-shaped)
+  * pipelines can call them like built-ins. [[GraftExtensions.functions]]
+  * is the list: each entry's usage text is what `DESCRIBE FUNCTION`
+  * prints. The SQL forms of the [[graft.functions.NativeKernel]]
+  * declarations derive their arity and "must be an integer literal"
+  * checks from the declaration; `graft_bpe_count` / `graft_bpe_encode`
+  * run over the library's default merges table (custom vocabularies go
+  * through the Column API, a merges table is not SQL-literal-shaped).
   *
   * Production path: `spark.sql.extensions=graft.GraftExtensions` (applied
   * at session build). For an existing session or REPL,
@@ -42,79 +28,50 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  private type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private def intLit(e: Expression, fn: String, arg: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: $arg must be an integer literal, got $other")
+  private def entry(name: String, params: Seq[String], doc: String)(
+      build: Seq[Expression] => Expression): Entry =
+    (FunctionIdentifier(name), new ExpressionInfo(classOf[GraftExtensions].getName, null, name,
+        s"$name(${params.mkString(", ")}) - $doc", ""),
+      args => {
+        if (args.size != params.size) throw new IllegalArgumentException(
+          s"$name expects ${params.size} arg${if (params.size == 1) "" else "s"}, got ${args.size}")
+        build(args)
+      })
+
+  private def kernel(k: NativeKernel, doc: String): Entry = {
+    val inputs = k.inputTypes.map(t =>
+      if (t == BinaryType) "payload" else if (t == StringType) "text" else "tokens")
+    entry(k.name, inputs ++ k.intArgs, doc) { args =>
+      val (in, ints) = args.splitAt(inputs.size)
+      KernelCall(k, in, ints.zip(k.intArgs).map {
+        case (Literal(v: Int, IntegerType), _) => v
+        case (other, arg) => throw new IllegalArgumentException(
+          s"${k.name}: $arg must be an integer literal, got $other")
+      })
+    }
   }
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - codegen'd dot product of two numeric arrays"),
-      { case Seq(a, b) => DotProduct(a, b)
-        case args => throw new IllegalArgumentException(s"graft_dot expects 2 args, got ${args.size}") }),
-    (FunctionIdentifier("graft_minhash"),
-      info("graft_minhash", "graft_minhash(shingles, k) - k-wide MinHash signature"),
-      { case Seq(arr, k) => MinHashSig(arr, intLit(k, "graft_minhash", "k"))
-        case args => throw new IllegalArgumentException(s"graft_minhash expects 2 args, got ${args.size}") }),
-    (FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "graft_simhash(tokens, bits) - bits-wide SimHash fingerprint"),
-      { case Seq(arr, b) => SimHash(arr, intLit(b, "graft_simhash", "bits"))
-        case args => throw new IllegalArgumentException(s"graft_simhash expects 2 args, got ${args.size}") }),
-    (FunctionIdentifier("graft_shingles"),
-      info("graft_shingles", "graft_shingles(tokens, n) - distinct word n-gram shingles"),
-      { case Seq(arr, n) => Shingles(arr, intLit(n, "graft_shingles", "n"))
-        case args => throw new IllegalArgumentException(s"graft_shingles expects 2 args, got ${args.size}") }),
-    (FunctionIdentifier("graft_repeat_ratio"),
-      info("graft_repeat_ratio",
-        "graft_repeat_ratio(tokens, n) - top full-n-gram frequency over all full n-grams"),
-      { case Seq(arr, n) => RepeatRatio(arr, intLit(n, "graft_repeat_ratio", "n"))
-        case args => throw new IllegalArgumentException(s"graft_repeat_ratio expects 2 args, got ${args.size}") }),
-    (FunctionIdentifier("graft_collapse_runs"),
-      info("graft_collapse_runs",
-        "graft_collapse_runs(tokens, maxRun) - collapse consecutive duplicate-token runs to maxRun"),
-      { case Seq(arr, m) => CollapseRuns(arr, intLit(m, "graft_collapse_runs", "maxRun"))
-        case args => throw new IllegalArgumentException(s"graft_collapse_runs expects 2 args, got ${args.size}") }),
-    (FunctionIdentifier("graft_phash"),
-      info("graft_phash",
-        "graft_phash(payload, bits) - bits-wide average-hash perceptual fingerprint of a binary payload"),
-      { case Seq(p, b) => PhashFp(p, intLit(b, "graft_phash", "bits"))
-        case args => throw new IllegalArgumentException(s"graft_phash expects 2 args, got ${args.size}") }),
-    (FunctionIdentifier("graft_token_pairs"),
-      info("graft_token_pairs",
-        "graft_token_pairs(text) - adjacent whitespace-token bigram pairs, non-distinct, reading order"),
-      { case Seq(t) => TokenPairs(t)
-        case args => throw new IllegalArgumentException(s"graft_token_pairs expects 1 arg, got ${args.size}") }),
-    (FunctionIdentifier("graft_char_entropy"),
-      info("graft_char_entropy",
-        "graft_char_entropy(text) - Shannon entropy (bits) over the text's code points"),
-      { case Seq(t) => CharEntropy(t)
-        case args => throw new IllegalArgumentException(s"graft_char_entropy expects 1 arg, got ${args.size}") }),
-    (FunctionIdentifier("graft_nfc_normalize"),
-      info("graft_nfc_normalize",
-        "graft_nfc_normalize(text) - Unicode NFC canonical composition"),
-      { case Seq(t) => NfcNormalize(t)
-        case args => throw new IllegalArgumentException(s"graft_nfc_normalize expects 1 arg, got ${args.size}") }),
-    (FunctionIdentifier("graft_winnow"),
-      info("graft_winnow",
-        "graft_winnow(text, k, w) - positional winnowing fingerprints (k-gram hashes, window w)"),
-      { case Seq(t, k, w) => WinnowFps(t, intLit(k, "graft_winnow", "k"), intLit(w, "graft_winnow", "w"))
-        case args => throw new IllegalArgumentException(s"graft_winnow expects 3 args, got ${args.size}") }),
-    (FunctionIdentifier("graft_bpe_count"),
-      info("graft_bpe_count",
-        "graft_bpe_count(text) - byte-level BPE token count over the library's default merges table"),
-      { case Seq(t) => BpeCount(t, graft.operators.TextAnalysis.DefaultBpeMerges)
-        case args => throw new IllegalArgumentException(s"graft_bpe_count expects 1 arg, got ${args.size}") }),
-    (FunctionIdentifier("graft_bpe_encode"),
-      info("graft_bpe_encode",
-        "graft_bpe_encode(text) - byte-level BPE token ids (array<int>) over the library's default merges table"),
-      { case Seq(t) => BpeEncode(t, graft.operators.TextAnalysis.DefaultBpeMerges)
-        case args => throw new IllegalArgumentException(s"graft_bpe_encode expects 1 arg, got ${args.size}") })
-  )
+  val functions: Seq[Entry] = Seq(
+    entry("graft_dot", Seq("a", "b"), "codegen'd dot product of two numeric arrays")(
+      args => DotProduct(args(0), args(1))),
+    kernel(MinHashSig, "k-wide MinHash signature"),
+    kernel(SimHash, "bits-wide SimHash fingerprint"),
+    kernel(Shingles, "distinct word n-gram shingles"),
+    kernel(RepeatRatio, "top full-n-gram frequency over all full n-grams"),
+    kernel(CollapseRuns, "collapse consecutive duplicate-token runs to maxRun"),
+    kernel(PhashFp, "bits-wide average-hash perceptual fingerprint of a binary payload"),
+    kernel(TokenPairs, "adjacent whitespace-token bigram pairs, non-distinct, reading order"),
+    kernel(CharEntropy, "Shannon entropy (bits) over the text's code points"),
+    kernel(NfcNormalize, "Unicode NFC canonical composition"),
+    kernel(WinnowFps, "positional winnowing fingerprints (k-gram hashes, window w)"),
+    entry("graft_bpe_count", Seq("text"),
+        "byte-level BPE token count over the library's default merges table")(
+      args => BpeCount(args(0), graft.operators.TextAnalysis.DefaultBpeMerges)),
+    entry("graft_bpe_encode", Seq("text"),
+        "byte-level BPE token ids (array<int>) over the library's default merges table")(
+      args => BpeEncode(args(0), graft.operators.TextAnalysis.DefaultBpeMerges)))
 
   /** Register on a live session (tests, REPL, existing sessions). */
   def register(spark: SparkSession): Unit =

@@ -11,12 +11,13 @@ import org.apache.spark.sql.graftbridge.CatalystBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** JVM kernels behind the native dedup expressions.
+/** JVM kernels behind the native dedup expressions (declared in
+  * [[NativeKernel]]).
   *
-  * Each computes bit-identical values to the `functions._` higher-order
-  * forms in [[graft.operators.Dedup]] (kept there as `...Fold` executable
-  * specs): md5 is MD5 over UTF-8 bytes rendered lowercase-hex, exactly
-  * Spark's `md5(concat(...))`. The kernels exist because HOF trees are
+  * Each computes bit-identical values to its `functions._` higher-order
+  * form (the test-side `Oracles` executable specs): md5 is MD5 over UTF-8
+  * bytes rendered lowercase-hex, exactly Spark's `md5(concat(...))`. The
+  * kernels exist because HOF trees are
   * `CodegenFallback` — per-element interpreted evaluation with an
   * intermediate array allocation per lambda — while a kernel call is one
   * virtual dispatch per row from generated code.
@@ -314,7 +315,7 @@ object HashKernels {
     * `n` tokens joined by a single space, first-occurrence order, window
     * starts 0..max(size-n, 0) — value-identical to the HOF form
     * `array_distinct(transform(sequence(...), i => concat_ws(" ",
-    * slice(toks, i+1, n))))` in [[graft.operators.Dedup.shinglesFold]],
+    * slice(toks, i+1, n))))` in the test-side `Oracles.shinglesFold`,
     * including the empty-token edge ([""]). Assumes non-null tokens (the
     * tokenizer filters empties). */
   def shingles(tokens: ArrayData, n: Int): ArrayData = {
@@ -665,259 +666,6 @@ object HashKernels {
   }
 }
 
-/** Codegen'd MinHash signature over a shingle array column. */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.minhashSignature(input.asInstanceOf[ArrayData], k)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.minhashSignature($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** Codegen'd distinct n-gram shingling over a token array column. */
-case class Shingles(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.shingles(input.asInstanceOf[ArrayData], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.shingles($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Shingles =
-    copy(child = newChild)
-}
-
-/** Codegen'd top-n-gram repetition ratio over a token array column. */
-case class RepeatRatio(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_repeat_ratio"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.repeatRatio(input.asInstanceOf[ArrayData], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.repeatRatio($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): RepeatRatio =
-    copy(child = newChild)
-}
-
-/** Codegen'd consecutive-duplicate-run collapsing over a token array column. */
-case class CollapseRuns(child: Expression, maxRun: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_collapse_runs"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.collapseRuns(input.asInstanceOf[ArrayData], maxRun)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.collapseRuns($c, $maxRun)")
-
-  override protected def withNewChildInternal(newChild: Expression): CollapseRuns =
-    copy(child = newChild)
-}
-
-/** Codegen'd SimHash fingerprint over a token array column. */
-case class SimHash(child: Expression, bits: Int) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.simhash(input.asInstanceOf[ArrayData], bits)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhash($c, $bits)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash =
-    copy(child = newChild)
-}
-
-case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("gh", LongType, nullable = false),
-      StructField("p", IntegerType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true // short texts yield null
-  override def prettyName: String = "graft_winnow"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.winnow(input.asInstanceOf[UTF8String], k, w)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val f = s"graft.functions.HashKernels.winnow"
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $f($c, $k, $w);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFps =
-    copy(child = newChild)
-}
-
-/** Codegen'd Unicode NFC canonical composition of a string column. */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nfc_normalize"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.nfcNormalize(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.nfcNormalize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
-/** Codegen'd Shannon entropy (bits) over a string column's code points. */
-/** Codegen'd code-point n-gram array over a string column. */
-case class CharGrams(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_char_grams"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.charGrams(input.asInstanceOf[UTF8String], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.charGrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharGrams =
-    copy(child = newChild)
-}
-
-/** Codegen'd IDN (punycode) host-label decode over a string column. */
-case class IdnDecodeHost(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_idn_host"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.idnDecodeHost(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.idnDecodeHost($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): IdnDecodeHost =
-    copy(child = newChild)
-}
-
-case class CharEntropy(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_char_entropy"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.charEntropy(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.charEntropy($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropy =
-    copy(child = newChild)
-}
-
-/** Codegen'd average-hash perceptual fingerprint over a binary payload. */
-case class PhashFp(child: Expression, bits: Int) extends UnaryExpression {
-  // Shared contract for the Column and SQL surfaces: below 2 the mean is
-  // degenerate, above 62 the 1L << (bits-1-i) weights wrap mod 64.
-  require(bits >= 2 && bits <= 62, s"graft_phash bits must be in [2, 62], got $bits")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_phash"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires binary, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.phashFp(input.asInstanceOf[Array[Byte]], bits)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.phashFp($c, $bits)")
-
-  override protected def withNewChildInternal(newChild: Expression): PhashFp =
-    copy(child = newChild)
-}
-
-/** Codegen'd adjacent-token bigram pair generator over a string column. */
-case class TokenPairs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("w1", StringType, nullable = false),
-      StructField("w2", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_token_pairs"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.tokenPairs(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.tokenPairs($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenPairs =
-    copy(child = newChild)
-}
-
 /** Codegen'd Bloom-filter membership probe over the (KEY_HASH,
   * RECORD_HASH) digest pair. The word array and per-hash salt suffixes
   * ride along as REFERENCED objects (`ctx.addReferenceObj`), not plan
@@ -983,12 +731,23 @@ case class BloomProbe(
     copy(left = newLeft, right = newRight)
 }
 
-/** Codegen'd byte-level BPE token count over a merges table. The rank map
-  * rides along as a referenced object; merging walks the GPT-2 encoder
-  * loop (lowest-rank adjacent pair, all occurrences, to fixpoint). For a
-  * training-well-formed merges table — every rule's symbols formed only
-  * by strictly earlier rules — this loop coincides with sequential
-  * rank-order application, which is what the DuckDB oracle replays. */
+/** The byte-level BPE kernels' shared shape: a string column over a
+  * merges table whose rank map rides along as a referenced object. */
+private[functions] sealed trait BpeKernel extends UnaryExpression {
+  def merges: Seq[(String, String)]
+
+  @transient protected lazy val ranks: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer](merges.size * 2)
+    merges.zipWithIndex.foreach { case ((a, b), i) => m.put(a + " " + b, Integer.valueOf(i)) }
+    m
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
+  }
+}
+
 /** Byte-level BPE ENCODE of a string to vocabulary ids — the id-emitting
   * twin of [[BpeCount]] (same pre-tokenization and merge loop, so the
   * array's length equals the count kernel's value on every input).
@@ -997,12 +756,7 @@ case class BloomProbe(
   * 256 + r. This is what a training pipeline feeds the model: packing
   * decides membership by [[BpeCount]], this kernel emits the actual
   * token stream the pack concatenates. */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)]) extends UnaryExpression {
-  @transient private lazy val ranks: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](merges.size * 2)
-    merges.zipWithIndex.foreach { case ((a, b), i) => m.put(a + " " + b, Integer.valueOf(i)) }
-    m
-  }
+case class BpeEncode(child: Expression, merges: Seq[(String, String)]) extends BpeKernel {
   @transient private lazy val vocab: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer](merges.size * 2)
     merges.zipWithIndex.foreach { case ((a, b), i) =>
@@ -1012,11 +766,6 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)]) extends U
   }
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_bpe_encode"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
 
   override def nullSafeEval(input: Any): Any =
     HashKernels.bpeEncodeIds(input.asInstanceOf[UTF8String], ranks, vocab)
@@ -1031,19 +780,15 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)]) extends U
     copy(child = newChild)
 }
 
-case class BpeCount(child: Expression, merges: Seq[(String, String)]) extends UnaryExpression {
-  @transient private lazy val ranks: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](merges.size * 2)
-    merges.zipWithIndex.foreach { case ((a, b), i) => m.put(a + " " + b, Integer.valueOf(i)) }
-    m
-  }
+/** Codegen'd byte-level BPE token count over a merges table. The rank map
+  * rides along as a referenced object; merging walks the GPT-2 encoder
+  * loop (lowest-rank adjacent pair, all occurrences, to fixpoint). For a
+  * training-well-formed merges table — every rule's symbols formed only
+  * by strictly earlier rules — this loop coincides with sequential
+  * rank-order application, which is what the DuckDB oracle replays. */
+case class BpeCount(child: Expression, merges: Seq[(String, String)]) extends BpeKernel {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_bpe_count"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
 
   override def nullSafeEval(input: Any): Any =
     HashKernels.bpeTokenCount(input.asInstanceOf[UTF8String], ranks)
@@ -1059,52 +804,40 @@ case class BpeCount(child: Expression, merges: Seq[(String, String)]) extends Un
 
 object DedupExpressions {
   /** Codegen'd MinHash signature of an `array<string>` shingle column. */
-  def minhashSig(shingles: Column, k: Int): Column =
-    CatalystBridge.column(MinHashSig(CatalystBridge.expression(shingles), k))
+  def minhashSig(shingles: Column, k: Int): Column = MinHashSig(Seq(shingles), k)
 
   /** Codegen'd positional winnowing fingerprints of a string column. */
-  def winnowOf(text: Column, k: Int, w: Int): Column =
-    CatalystBridge.column(WinnowFps(CatalystBridge.expression(text), k, w))
+  def winnowOf(text: Column, k: Int, w: Int): Column = WinnowFps(Seq(text), k, w)
 
   /** Codegen'd distinct n-gram shingles of an `array<string>` token column. */
-  def shinglesOf(tokens: Column, n: Int): Column =
-    CatalystBridge.column(Shingles(CatalystBridge.expression(tokens), n))
+  def shinglesOf(tokens: Column, n: Int): Column = Shingles(Seq(tokens), n)
 
   /** Codegen'd top-n-gram repetition ratio of an `array<string>` token column. */
-  def repeatRatioOf(tokens: Column, n: Int): Column =
-    CatalystBridge.column(RepeatRatio(CatalystBridge.expression(tokens), n))
+  def repeatRatioOf(tokens: Column, n: Int): Column = RepeatRatio(Seq(tokens), n)
 
   /** Codegen'd SimHash fingerprint of an `array<string>` token column. */
-  def simhashOf(tokens: Column, bits: Int): Column =
-    CatalystBridge.column(SimHash(CatalystBridge.expression(tokens), bits))
+  def simhashOf(tokens: Column, bits: Int): Column = SimHash(Seq(tokens), bits)
 
   /** Codegen'd consecutive-run collapsing of an `array<string>` token column. */
-  def collapseRunsOf(tokens: Column, maxRun: Int): Column =
-    CatalystBridge.column(CollapseRuns(CatalystBridge.expression(tokens), maxRun))
+  def collapseRunsOf(tokens: Column, maxRun: Int): Column = CollapseRuns(Seq(tokens), maxRun)
 
   /** Codegen'd code-point Shannon entropy (bits) of a string column. */
-  def charEntropyOf(text: Column): Column =
-    CatalystBridge.column(CharEntropy(CatalystBridge.expression(text)))
+  def charEntropyOf(text: Column): Column = CharEntropy(Seq(text))
 
   /** Codegen'd code-point n-gram array of a string column. */
-  def charGramsOf(text: Column, n: Int): Column =
-    CatalystBridge.column(CharGrams(CatalystBridge.expression(text), n))
+  def charGramsOf(text: Column, n: Int): Column = CharGrams(Seq(text), n)
 
   /** Codegen'd Unicode NFC composition of a string column. */
-  def nfcNormalizeOf(text: Column): Column =
-    CatalystBridge.column(NfcNormalize(CatalystBridge.expression(text)))
+  def nfcNormalizeOf(text: Column): Column = NfcNormalize(Seq(text))
 
   /** Codegen'd IDN (punycode) host-label decode of a string column. */
-  def idnDecodeHostOf(host: Column): Column =
-    CatalystBridge.column(IdnDecodeHost(CatalystBridge.expression(host)))
+  def idnDecodeHostOf(host: Column): Column = IdnDecodeHost(Seq(host))
 
   /** Codegen'd average-hash perceptual fingerprint of a binary column. */
-  def phashOf(payload: Column, bits: Int): Column =
-    CatalystBridge.column(PhashFp(CatalystBridge.expression(payload), bits))
+  def phashOf(payload: Column, bits: Int): Column = PhashFp(Seq(payload), bits)
 
   /** Codegen'd adjacent-token bigram pairs of a string column. */
-  def tokenPairsOf(text: Column): Column =
-    CatalystBridge.column(TokenPairs(CatalystBridge.expression(text)))
+  def tokenPairsOf(text: Column): Column = TokenPairs(Seq(text))
 
   /** Codegen'd byte-level BPE token count of a string column. */
   def bpeCountOf(text: Column, merges: Seq[(String, String)]): Column =

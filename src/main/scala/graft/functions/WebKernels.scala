@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.CatalystBridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** JVM kernels behind the web-capture extraction expressions — the stages
@@ -22,9 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * first-class path next to [[graft.sources.Warc.readWet]].
   *
   * All three stages are per-row byte/char state machines with bounded
-  * state, exposed as codegen'd Catalyst expressions (the HashKernels
-  * convention: `nullSafeEval` and the generated code call the SAME static
-  * function, so interpreted and codegen paths cannot drift). Malformed
+  * state, exposed as codegen'd Catalyst expressions declared in
+  * [[NativeKernel]] (the interpreted and the generated path call the SAME
+  * static function, so they cannot drift). Malformed
   * input never throws — it surfaces in the struct's `err` field (the
   * [[graft.sources.Warc]] quarantine posture at column granularity: a bad
   * body costs its own `text`, never the task).
@@ -582,139 +578,26 @@ object WebKernels {
   }
 }
 
-/** Codegen'd HTTP response-message split: binary payload →
-  * struct(status, content_type, body, err). */
-case class HttpParse(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HttpParse.schema
-  override def prettyName: String = "graft_http_parse"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires binary, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebKernels.httpParse(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WebKernels.httpParse($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HttpParse =
-    copy(child = newChild)
-}
-
-object HttpParse {
-  val schema: StructType = StructType(Seq(
-    StructField("status", IntegerType),
-    StructField("content_type", StringType),
-    StructField("body", BinaryType),
-    StructField("err", StringType)))
-}
-
-/** Codegen'd charset resolution + decode: (binary body, content_type) →
-  * struct(charset, text). Standard null-intolerant binary expression —
-  * callers pass a MISSING Content-Type as the empty string (the factory
-  * below coalesces), which resolves through the sniff/fallback chain. */
-case class CharsetDecode(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("charset", StringType),
-    StructField("text", StringType)))
-  override def prettyName: String = "graft_charset_decode"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, string), got (${l.sql}, ${r.sql})")
-    }
-
-  override def nullSafeEval(body: Any, ct: Any): Any =
-    WebKernels.charsetDecode(body.asInstanceOf[Array[Byte]],
-      ct.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (b, c) => s"graft.functions.WebKernels.charsetDecode($b, $c)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CharsetDecode =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd HTML visible-text extraction of a string column. */
-case class HtmlToText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_html_text"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebKernels.htmlToText(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WebKernels.htmlToText($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlToText =
-    copy(child = newChild)
-}
-
-/** Codegen'd HTML block segmentation of a string column:
-  * array(struct(text, links, chars)) — see [[WebKernels.htmlToBlocks]]. */
-case class HtmlBlocks(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HtmlBlocks.schema
-  override def prettyName: String = "graft_html_blocks"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires string, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WebKernels.htmlToBlocks(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WebKernels.htmlToBlocks($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlBlocks =
-    copy(child = newChild)
-}
-
-object HtmlBlocks {
-  val schema: DataType = ArrayType(StructType(Seq(
-    StructField("text", StringType),
-    StructField("links", IntegerType),
-    StructField("chars", IntegerType))), containsNull = false)
-}
-
 /** Column factories for the web-extraction kernels. */
 object WebExpressions {
   /** HTTP message split of a binary payload column:
     * struct(status, content_type, body, err). */
-  def httpParseOf(payload: Column): Column =
-    CatalystBridge.column(HttpParse(CatalystBridge.expression(payload)))
+  def httpParseOf(payload: Column): Column = HttpParse(Seq(payload))
 
   /** Charset resolution + decode of (body, content_type):
     * struct(charset, text). A null content type means "no header" and
     * resolves through the sniff/fallback chain (coalesced to ""). */
   def charsetDecodeOf(body: Column, contentType: Column): Column =
-    CatalystBridge.column(CharsetDecode(
-      CatalystBridge.expression(body),
-      CatalystBridge.expression(
-        org.apache.spark.sql.functions.coalesce(contentType,
-          org.apache.spark.sql.functions.lit("")))))
+    CharsetDecode(Seq(body, org.apache.spark.sql.functions.coalesce(contentType,
+      org.apache.spark.sql.functions.lit(""))))
 
   /** Visible text of an HTML string column. */
-  def htmlTextOf(html: Column): Column =
-    CatalystBridge.column(HtmlToText(CatalystBridge.expression(html)))
+  def htmlTextOf(html: Column): Column = HtmlToText(Seq(html))
 
   /** Visible-text BLOCKS of an HTML string column with per-block link /
     * char counts: array(struct(text, links, chars)) — the input every
     * density-based boilerplate classifier scores. */
-  def htmlBlocksOf(html: Column): Column =
-    CatalystBridge.column(HtmlBlocks(CatalystBridge.expression(html)))
+  def htmlBlocksOf(html: Column): Column = HtmlBlocks(Seq(html))
 
   /** MAIN-CONTENT text of an HTML string column — the jusText-style
     * density selection every WARC-first recipe applies where

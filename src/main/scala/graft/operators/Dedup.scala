@@ -45,18 +45,11 @@ object Dedup {
 
   /** Distinct word n-gram shingles of a text column. A text with fewer
     * than n tokens yields its full-token join as the single shingle.
-    * Codegen'd kernel ([[graft.functions.Shingles]]); [[shinglesFold]] is
-    * the HOF executable spec it is property-tested against. */
+    * Codegen'd kernel ([[graft.functions.Shingles]]); the test-side
+    * `Oracles.shinglesFold` is the HOF executable spec it is
+    * property-tested against. */
   def shingles(text: Column, n: Int): Column =
     graft.functions.DedupExpressions.shinglesOf(tokens(text), n)
-
-  /** HOF fold form of [[shingles]] — interpreted; spec/tests only. */
-  def shinglesFold(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    array_distinct(
-      transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-  }
 
   /** Exact deduplication by content digest over `contentCols`: one row per
     * distinct content with the smallest `idCol` as the kept representative
@@ -222,14 +215,6 @@ object Dedup {
     * always yields at least one element, so no "g" survives. */
   def minhashSignature(text: Column, n: Int, k: Int): Column =
     graft.functions.DedupExpressions.minhashSig(shingles(text, n), k)
-
-  /** Single-pass HOF fold form over an already-computed shingle array — the
-    * executable specification the codegen'd kernel is property-tested
-    * against. */
-  def minhashSignatureFold(sh: Column, k: Int): Column =
-    aggregate(sh, array_repeat(lit("g"), k),
-      (acc, s) => zip_with(acc, sequence(lit(0), lit(k - 1)),
-        (m, j) => least(m, md5(concat(j.cast("string"), lit("#"), s)))))
 
   /** LSH band keys over a minhash signature: `bands` buckets of
     * `rowsPerBand` signature entries each, digested to one key per band.
@@ -1626,19 +1611,6 @@ object Dedup {
       .select("left_id", "right_id", "dist")
   }
 
-  /** Value (0..15) of the hex digit at 1-based position `pos` of `hex`. */
-  private def hexDigitVal(hex: Column, pos: Column): Column =
-    conv(hex.substr(pos, lit(1)), 16, 10).cast("int")
-
-  /** Bit `b` (0 = most significant of the first hex digit) of md5 hex
-    * string `h`: arithmetic only, reproducible in engines without bitwise
-    * builtins. */
-  private def md5Bit(h: Column, b: Column): Column = {
-    val digit = hexDigitVal(h, floor(b / 4).cast("int") + 1)
-    val shift = lit(3) - pmod(b, lit(4))
-    pmod(floor(digit / pow(lit(2.0), shift.cast("double"))).cast("int"), lit(2))
-  }
-
   /** SimHash fingerprint over whitespace tokens: `bits`-wide (max 64,
     * default 16) weighted-majority of per-token md5 bits, returned as a
     * long (bit 0 of the fingerprint is the long's bit `bits-1`, so at
@@ -1649,27 +1621,6 @@ object Dedup {
   def simhash(text: Column, bits: Int = 16): Column = {
     require(bits >= 1 && bits <= 64, "bits must be in [1, 64]")
     graft.functions.DedupExpressions.simhashOf(tokens(text), bits)
-  }
-
-  /** HOF fold form of [[simhash]] — one digest per token, one fold carrying
-    * all bit balances; the executable specification the codegen'd kernel is
-    * property-tested against. */
-  def simhashFold(text: Column, bits: Int = 16): Column = {
-    require(bits >= 1 && bits <= 64, "bits must be in [1, 64]")
-    val digests = transform(tokens(text), t => md5(t))
-    val balances = aggregate(digests, array_repeat(lit(0), bits),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(bits - 1)),
-        (bal, b) => bal + md5Bit(h, b) * 2 - 1))
-    aggregate(
-      zip_with(balances, sequence(lit(bits - 1), lit(0), lit(-1)),
-        // pow(2, 63) does not survive a double->long cast (saturates at
-        // Long.MaxValue), so the sign bit is set directly; positions <= 62
-        // are exact powers of two in a double
-        (bal, pos) => when(bal > 0,
-          when(pos === lit(63), lit(Long.MinValue))
-            .otherwise(pow(lit(2.0), pos.cast("double")).cast("long")))
-          .otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc + v)
   }
 
   /** Group documents by SimHash fingerprint: returns (simhash, n_docs,

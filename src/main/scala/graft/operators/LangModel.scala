@@ -78,17 +78,11 @@ object LangModel {
     * than n. The codegen'd [[graft.functions.CharGrams]] kernel — one
     * boundary pass per row where the HOF form's repeated codepoint-
     * addressed `substr` re-scans the prefix per gram (the measured hot
-    * spot of classification); [[gramArrayFold]] is the interpreted twin
-    * the parity spec folds. */
+    * spot of classification); the test-side `Oracles.gramArrayFold` is
+    * the interpreted twin the parity spec folds. */
   private def gramArray(t: Column, n: Int): Column =
     coalesce(graft.functions.DedupExpressions.charGramsOf(t, n),
       array().cast("array<string>"))
-
-  /** Interpreted HOF form of [[gramArray]] — spec/parity only. */
-  private[graft] def gramArrayFold(t: Column, n: Int): Column =
-    when(length(t) >= n,
-      transform(sequence(lit(1), length(t) - (n - 1)), i => t.substr(i, lit(n))))
-      .otherwise(array().cast("array<string>"))
 
   /** Train per-language character-n-gram profiles from a (lang, text)
     * seed table: add-one smoothing over the GLOBAL gram vocabulary,

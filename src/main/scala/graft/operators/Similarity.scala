@@ -51,15 +51,9 @@ object Similarity {
 
   /** Dot product of two equal-length numeric arrays: the codegen'd native
     * [[graft.functions.DotProduct]] expression — one fused primitive loop in
-    * whole-stage codegen, bit-identical to the ordered fold [[dotFold]]. */
+    * whole-stage codegen, bit-identical to the ordered `zip_with` +
+    * `aggregate` fold (the test-side `Oracles.dotFold`). */
   def dot(a: Column, b: Column): Column = VectorExpressions.dotProduct(a, b)
-
-  /** Ordered-fold (`zip_with` + `aggregate`) dot product — the executable
-    * specification [[dot]] is property-tested against; interpreted, so only
-    * for tests/verification. */
-  def dotFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   /** Ordered-fold L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))

@@ -534,18 +534,11 @@ object TextAnalysis {
   def winnowFingerprints(text: Column, k: Int = 12, w: Int = 8): Column =
     graft.functions.DedupExpressions.winnowOf(text, k, w)
 
-  /** Staged HOF form of [[winnowFingerprints]] — interpreted; the
-    * executable specification the kernel is property-tested against (and
-    * the shape the DuckDB oracle mirrors). At corpus scale use the
-    * kernel: the HOF tree made the two winnow queries 24% of the whole
-    * benchmark. */
-  def winnowFingerprintsFold(text: Column, k: Int = 12, w: Int = 8): Column =
-    winnowSelect(winnowGramHashes(text, k), w)
-
   /** Stage 1 of winnowing: (gh, p) structs for every k-gram position.
     * Typed NULL (not a fingerprint) when the text is shorter than k —
-    * the `when` with no otherwise; [[winnowFingerprintsFold]] and the
-    * kernel both propagate it, and callers aggregate with explode /
+    * the `when` with no otherwise; the staged fold (the test-side
+    * `Oracles.winnowFingerprintsFold`) and the kernel both propagate it,
+    * and callers aggregate with explode /
     * flatten semantics where NULL contributes nothing. */
   def winnowGramHashes(text: Column, k: Int): Column = {
     require(k >= 2, "k must be at least 2")
@@ -785,23 +778,11 @@ object TextAnalysis {
     * → "buy now"). The token-level sibling of [[dedupLines]]; whitespace
     * canonicalizes to single spaces. Codegen'd kernel
     * ([[graft.functions.CollapseRuns]]) — per-row, zero shuffle, scan
-    * speed; [[collapseTokenRunsFold]] is the HOF executable spec. */
+    * speed; the test-side `Oracles.collapseTokenRunsFold` is the HOF
+    * executable spec. */
   def collapseTokenRuns(text: Column, maxRun: Int = 1): Column =
     array_join(
       graft.functions.DedupExpressions.collapseRunsOf(tokens(text), maxRun), " ")
-
-  /** HOF fold form of [[collapseTokenRuns]] at maxRun = 1 — interpreted;
-    * spec/tests only (also the shape the DuckDB oracle mirrors). */
-  def collapseTokenRunsFold(text: Column): Column = {
-    val toks = tokens(text)
-    array_join(
-      filter(
-        transform(sequence(lit(1), size(toks)),
-          i => when(i === 1 || element_at(toks, i) =!= element_at(toks, i - 1),
-            element_at(toks, i))),
-        x => x.isNotNull),
-      " ")
-  }
 
   /** C4-style duplicate-line removal INSIDE a document: split on `sep`,
     * keep each distinct line's first occurrence (Spark's `array_distinct`
@@ -814,22 +795,10 @@ object TextAnalysis {
   /** Frequency of the most common full n-token window over all full
     * windows — the standard repetition signal for corpus filtering. 0.0
     * for texts with fewer than n tokens. Codegen'd kernel
-    * ([[graft.functions.RepeatRatio]]); [[topNgramRatioFold]] is the HOF
-    * executable spec. */
+    * ([[graft.functions.RepeatRatio]]); the test-side
+    * `Oracles.topNgramRatioFold` is the HOF executable spec. */
   def topNgramRatio(text: Column, n: Int): Column =
     round(graft.functions.DedupExpressions.repeatRatioOf(tokens(text), n), 6)
-
-  /** HOF fold form of [[topNgramRatio]] — interpreted; spec/tests only. */
-  def topNgramRatioFold(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    val total = size(toks) - (n - 1)
-    val grams = transform(sequence(lit(0), greatest(total - 1, lit(0))),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n))))
-    val top = array_max(transform(array_distinct(grams),
-      g => size(filter(grams, x => x === g))))
-    when(total <= 0, lit(0.0))
-      .otherwise(round(top.cast("double") / total.cast("double"), 6))
-  }
 
   /** Split documents into fixed-size overlapping character windows — the
     * chunking step ahead of embedding/indexing (a retrieval or semantic-
@@ -920,22 +889,10 @@ object TextAnalysis {
     * 4-4.7 bits, base64/hex dumps higher, single-char padding near 0, so
     * band filters on it catch both extremes. Codegen'd kernel
     * ([[graft.functions.CharEntropy]]) — per-row, zero shuffle, scan
-    * speed; [[charEntropyFold]] is the HOF executable spec. Empty string
-    * → 0.0, null → null. */
+    * speed; the test-side `Oracles.charEntropyFold` is the HOF executable
+    * spec. Empty string → 0.0, null → null. */
   def charEntropy(text: Column): Column =
     graft.functions.DedupExpressions.charEntropyOf(text)
-
-  /** HOF fold form of [[charEntropy]] — interpreted; spec/tests only. */
-  def charEntropyFold(text: Column): Column = {
-    val n = length(text)
-    val chars = transform(sequence(lit(1), n), i => text.substr(i, lit(1)))
-    val h = aggregate(
-      transform(array_distinct(chars),
-        c => size(filter(chars, x => x === c)).cast("double") / n.cast("double")),
-      lit(0.0),
-      (acc, p) => acc - p * log2(p))
-    when(n === 0, lit(0.0)).otherwise(h)
-  }
 
   /** All five Gopher metrics derived from ONE tokenization. The
     * per-metric helpers each re-run the interpreted split+filter

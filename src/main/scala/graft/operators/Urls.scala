@@ -205,22 +205,10 @@ object Urls {
     *
     * Hot path = the codegen'd [[graft.functions.IdnDecodeHost]] kernel
     * (one `contains` scan for the ~every-host non-IDN case); the
-    * interpreted relational twin [[decodeIdnHostFold]] is kept as the
-    * executable specification, parity-pinned in UrlsSpec. */
+    * interpreted relational twin (the test-side `Oracles.decodeIdnHostFold`)
+    * is the executable specification, parity-pinned in UrlsSpec. */
   def decodeIdnHost(host: Column): Column =
     graft.functions.DedupExpressions.idnDecodeHostOf(host)
-
-  /** [[decodeIdnHost]] as pure relational expressions (split / transform /
-    * the [[punycodeDecodeLabel]] fold) — the executable specification the
-    * kernel is pinned against. Not the hot path: see
-    * [[punycodeDecodeLabel]]. */
-  private[graft] def decodeIdnHostFold(host: Column): Column =
-    when(host.contains("xn--"),
-      array_join(transform(split(host, "\\."), lbl =>
-        when(lbl.startsWith("xn--"),
-          coalesce(punycodeDecodeLabel(lbl.substr(lit(5), length(lbl) - 4)), lbl))
-          .otherwise(lbl)), "."))
-      .otherwise(host)
 
   /** Canonical form of `url` per the rule list above. Null-safe (null →
     * null); never throws on malformed input — a string that does not

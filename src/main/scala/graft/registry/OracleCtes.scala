@@ -71,8 +71,6 @@ private[graft] object OracleCtes {
        |),
        |${duckEnrichCtes("snapA", "snapB")}""".stripMargin
 
-  /** SCD2 CTE chain on top of the snapshots: bootstrap merge of A, then the
-    * five-branch merge of B (semantics of SCDHelpers.py:129-220). */
   /** The delete-closure SELECT over `v2` — shared by `x_scd2_delete_close`
     * and the reopen row so the two statements cannot drift. */
   private[graft] val scd2CloseSelect: String =
@@ -89,6 +87,8 @@ private[graft] object OracleCtes {
        |            THEN TIMESTAMP '$ts3' ELSE "DELETED" END AS "DELETED"
        |FROM v2""".stripMargin
 
+  /** SCD2 CTE chain on top of the snapshots: bootstrap merge of A, then the
+    * five-branch merge of B (semantics of SCDHelpers.py:129-220). */
   private[graft] val scd2Cte: String =
     s"""$snapshotsCte,
        |v1 AS (
@@ -277,9 +277,6 @@ private[graft] object OracleCtes {
 
   private[graft] lazy val phashFpCte: String = s"WITH $phashFpTailCte"
 
-  /** SimHash fingerprint CTE (16-bit, mirrors the kernel bit-for-bit) shared
-    * by the grouping and Hamming-neighborhood oracles. `fp` is the
-    * null-coalesced BIGINT fingerprint. */
   /** Shared whitespace-token CTE body (no WITH prefix) — the one `toks`
     * definition every document oracle builds on. */
   private[graft] val duckToksCte: String =
@@ -293,8 +290,8 @@ private[graft] object OracleCtes {
     * `bits-1-b`, so at bits = 64 fingerprint bit 0 is the SIGN bit —
     * `pow(2, 63)` does not fit a BIGINT, so that one position adds
     * Long.MinValue directly, exactly as the Spark fold does
-    * (`Dedup.simhashFold`); every lower position is an exact power of
-    * two in a double. */
+    * (the test-side `Oracles.simhashFold`); every lower position is an
+    * exact power of two in a double. */
   private[graft] def simhashFpTail(bits: Int): String = {
     val signSafePow =
       if (bits == 64)
@@ -318,6 +315,9 @@ private[graft] object OracleCtes {
 
   private[graft] val simhashFpTailCte: String = simhashFpTail(16)
 
+  /** SimHash fingerprint CTE (16-bit, mirrors the kernel bit-for-bit) shared
+    * by the grouping and Hamming-neighborhood oracles. `fp` is the
+    * null-coalesced BIGINT fingerprint. */
   private[graft] val simhashFpCte: String =
     s"""WITH $duckToksCte,
        |$simhashFpTailCte""".stripMargin

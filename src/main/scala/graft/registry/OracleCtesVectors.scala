@@ -84,15 +84,6 @@ private[graft] object OracleCtesVectors {
     (head +: (0 to iters).map(round_)).mkString(",\n")
   }
 
-  /** Product-quantization ANN mirror ([[graft.operators.Similarity.pqTopK]]):
-    * every CTE carries the subspace index `s` as a column, so one set of
-    * CTEs covers all m subspaces. Parity pins, operand for operand:
-    * md5-smallest seed rows sliced per subspace; L2 assignment score
-    * `2.0 * dot - cn2` with ties toward the larger code; decimal-sum
-    * means rounded to 6; ADC dot and reconstructed norm as list_sum over
-    * ascending s (Spark's reduceLeft order); the zero-denominator guard;
-    * round-then-rank with (cos DESC, id ASC) at both the probe shortlist
-    * and the final exact re-rank. */
   /** Shared IVF CTE chain through the inverted file `assign` (id, vv,
     * nrm, cid): vectors+norms, deterministic centroid sample, all-pairs
     * cell scores, per-vector argmax. The x_sim_ivf probe statement and
@@ -288,6 +279,15 @@ private[graft] object OracleCtesVectors {
     (head +: rounds :+ tail).mkString(",\n")
   }
 
+  /** Product-quantization ANN mirror ([[graft.operators.Similarity.pqTopK]]):
+    * every CTE carries the subspace index `s` as a column, so one set of
+    * CTEs covers all m subspaces. Parity pins, operand for operand:
+    * md5-smallest seed rows sliced per subspace; L2 assignment score
+    * `2.0 * dot - cn2` with ties toward the larger code; decimal-sum
+    * means rounded to 6; ADC dot and reconstructed norm as list_sum over
+    * ascending s (Spark's reduceLeft order); the zero-denominator guard;
+    * round-then-rank with (cos DESC, id ASC) at both the probe shortlist
+    * and the final exact re-rank. */
   private[graft] def duckPqSql(m: Int, ks: Int, iters: Int, probe: Int, k: Int,
       dims: Int = 64): String = {
     val d0 = dims / m

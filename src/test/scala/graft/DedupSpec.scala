@@ -131,7 +131,7 @@ class DedupSpec extends SparkSpec {
       .select($"text").unionByName(docs.select($"text")) // include edge cases
     val both = docsReal.select(
       Dedup.shingles($"text", 3).as("kernel"),
-      Dedup.shinglesFold($"text", 3).as("fold"))
+      Oracles.shinglesFold($"text", 3).as("fold"))
     assert(both.filter(!($"kernel" <=> $"fold")).count() === 0)
   }
 
@@ -140,7 +140,7 @@ class DedupSpec extends SparkSpec {
     val both = docsReal.select(Dedup.shingles($"text", 3).as("sh"))
       .select(
         graft.functions.DedupExpressions.minhashSig($"sh", 8).as("kernel"),
-        Dedup.minhashSignatureFold($"sh", 8).as("fold"))
+        Oracles.minhashSignatureFold($"sh", 8).as("fold"))
     assert(both.filter(!($"kernel" <=> $"fold")).count() === 0)
   }
 
@@ -148,12 +148,12 @@ class DedupSpec extends SparkSpec {
     val docsReal = spark.read.parquet(s"$sfDir/documents.parquet").limit(200)
     val both = docsReal.select(
       Dedup.simhash($"text", 16).as("kernel"),
-      Dedup.simhashFold($"text", 16).as("fold"))
+      Oracles.simhashFold($"text", 16).as("fold"))
     assert(both.filter(!($"kernel" <=> $"fold")).count() === 0)
     // full width: fingerprint bit 0 rides the sign bit at bits = 64
     val wide = docsReal.select(
       Dedup.simhash($"text", 64).as("kernel"),
-      Dedup.simhashFold($"text", 64).as("fold"))
+      Oracles.simhashFold($"text", 64).as("fold"))
     assert(wide.filter(!($"kernel" <=> $"fold")).count() === 0)
     assert(wide.filter($"kernel" < 0).count() > 0,
       "fixture sanity: some 64-bit fingerprint should set the sign bit")

@@ -129,4 +129,50 @@ class GraftExtensionsSpec extends SparkSpec {
       assert(e2.getMessage.contains("[2, 62]"), s"bits=$bad column: ${e2.getMessage}")
     }
   }
+
+  // name -> (valid argument list, positions of the integer-literal args);
+  // the 13 names of README § SQL, no more and no fewer
+  private val sqlSurface: Map[String, (Seq[String], Seq[Int])] = Map(
+    "graft_dot" -> ((Seq("array(1.0D)", "array(2.0D)"), Nil)),
+    "graft_minhash" -> ((Seq("array('a')", "4"), Seq(1))),
+    "graft_simhash" -> ((Seq("array('a')", "16"), Seq(1))),
+    "graft_shingles" -> ((Seq("array('a')", "2"), Seq(1))),
+    "graft_repeat_ratio" -> ((Seq("array('a')", "2"), Seq(1))),
+    "graft_collapse_runs" -> ((Seq("array('a')", "1"), Seq(1))),
+    "graft_phash" -> ((Seq("CAST('x' AS BINARY)", "16"), Seq(1))),
+    "graft_token_pairs" -> ((Seq("'a b'"), Nil)),
+    "graft_char_entropy" -> ((Seq("'a'"), Nil)),
+    "graft_nfc_normalize" -> ((Seq("'a'"), Nil)),
+    "graft_winnow" -> ((Seq("'abcdef'", "3", "4"), Seq(1, 2))),
+    "graft_bpe_count" -> ((Seq("'a'"), Nil)),
+    "graft_bpe_encode" -> ((Seq("'a'"), Nil)))
+
+  test("the function registry holds exactly the 13 graft_* SQL names") {
+    val registered = spark.catalog.listFunctions().collect().map(_.name)
+      .filter(_.startsWith("graft_")).toSet
+    assert(registered === sqlSurface.keySet)
+    assert(GraftExtensions.functions.map(_._1.funcName).toSet === sqlSurface.keySet)
+    // the Column-only kernels stay off the SQL surface
+    for (name <- Seq("graft_char_grams", "graft_idn_host", "graft_http_parse",
+        "graft_charset_decode", "graft_html_text", "graft_html_blocks")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $name('a')").collect())
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+  }
+
+  test("every graft_* name runs its valid call and names itself on a bad call") {
+    for ((name, (args, intArgs)) <- sqlSurface) {
+      def call(as: Seq[String]) = spark.sql(s"SELECT $name(${as.mkString(", ")})").collect()
+      assert(call(args).length === 1, name)
+      for (bad <- Seq(args :+ "1", args.dropRight(1))) {
+        val e = intercept[Exception](call(bad))
+        assert(e.getMessage.contains(s"$name expects ${args.size} arg"), s"$name: ${e.getMessage}")
+      }
+      for (i <- intArgs) {
+        val e = intercept[Exception](call(args.updated(i, "length('ab')")))
+        assert(e.getMessage.contains(name) && e.getMessage.contains("must be an integer literal"),
+          s"$name arg $i: ${e.getMessage}")
+      }
+    }
+  }
 }

@@ -80,7 +80,7 @@ class LangModelSpec extends SparkSpec {
     val cases = Seq("hello there", "ab", "a", "", "𝄞a𝄞b",
       "человек добрый", "人人生而自由", null.asInstanceOf[String])
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    assert(cases.select(kernel(2).as("k"), LangModel.gramArrayFold($"text", 2).as("f"))
+    assert(cases.select(kernel(2).as("k"), Oracles.gramArrayFold($"text", 2).as("f"))
       .filter(not($"k" <=> $"f")).count() === 0)
     // astral-plane sanity: 𝄞a𝄞b has 4 code points -> 3 bigrams
     val astral = cases.filter($"id" === 4L).select(kernel(2)).head().getSeq[String](0)
@@ -88,7 +88,7 @@ class LangModelSpec extends SparkSpec {
     // and on the real corpus at both model widths
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     Seq(2, 3).foreach { n =>
-      assert(docs.select(kernel(n).as("k"), LangModel.gramArrayFold($"text", n).as("f"))
+      assert(docs.select(kernel(n).as("k"), Oracles.gramArrayFold($"text", n).as("f"))
         .filter(not($"k" <=> $"f")).count() === 0, s"kernel/fold divergence at n=$n")
     }
   }

@@ -106,7 +106,7 @@ class SimilaritySpec extends SparkSpec {
       col("a.vec_id") < col("b.vec_id") && col("b.vec_id") < 30)
     val diff = pairs.select(
         Similarity.dot(col("a.embedding"), col("b.embedding")).as("n"),
-        Similarity.dotFold(col("a.embedding"), col("b.embedding")).as("f"))
+        Oracles.dotFold(col("a.embedding"), col("b.embedding")).as("f"))
       .filter(col("n") =!= col("f"))
     assert(diff.count() === 0)
   }
@@ -119,7 +119,7 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("a", "b")
     val rows = odd.select(
         Similarity.dot($"a", $"b").as("n"),
-        Similarity.dotFold($"a", $"b").as("f"))
+        Oracles.dotFold($"a", $"b").as("f"))
       .collect()
     rows.foreach { r => assert(r.isNullAt(0) === r.isNullAt(1)) }
     assert(rows(0).isNullAt(0) && rows(1).isNullAt(0))

@@ -191,7 +191,7 @@ class TextAnalysisSpec extends SparkSpec {
       .select($"text").unionByName(docs.select($"text"))
     val both = docsReal.select(
       TextAnalysis.topNgramRatio($"text", 2).as("kernel"),
-      TextAnalysis.topNgramRatioFold($"text", 2).as("fold"))
+      Oracles.topNgramRatioFold($"text", 2).as("fold"))
     assert(both.filter(!($"kernel" <=> $"fold")).count() === 0)
 
     val q = Seq(
@@ -239,7 +239,7 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val diff = docs.select(
         TextAnalysis.collapseTokenRuns($"text").as("k"),
-        TextAnalysis.collapseTokenRunsFold($"text").as("f"))
+        Oracles.collapseTokenRunsFold($"text").as("f"))
       .filter($"k" =!= $"f")
     assert(diff.count() === 0)
     // and it does real work on this corpus (adjacent repeats exist)
@@ -331,7 +331,7 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val diff = docs.select(
         TextAnalysis.charEntropy($"text").as("k"),
-        TextAnalysis.charEntropyFold($"text").as("f"))
+        Oracles.charEntropyFold($"text").as("f"))
       .filter(abs($"k" - $"f") > 1e-9)
     assert(diff.count() === 0)
   }
@@ -552,7 +552,7 @@ class TextAnalysisSpec extends SparkSpec {
         (5L, "😀😁 leading astral pair plus some padding"))
       .toDF("doc_id", "text")
       .select(TextAnalysis.winnowFingerprints($"text", 12, 8).as("kernel"),
-        TextAnalysis.winnowFingerprintsFold($"text", 12, 8).as("fold"))
+        Oracles.winnowFingerprintsFold($"text", 12, 8).as("fold"))
     assert(edges.filter(!($"kernel" <=> $"fold")).count() === 0)
   }
 

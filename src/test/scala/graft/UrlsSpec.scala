@@ -360,7 +360,7 @@ class UrlsSpec extends SparkSpec {
       "xn--abc", "xn--abc-", "mixed.xn--mnchen-3ya.de", "plain.example.com",
       "xn--80akhbyknj4f.example", "")
     val got = hosts.toDF("h")
-      .select(Urls.decodeIdnHost($"h").as("k"), Urls.decodeIdnHostFold($"h").as("f"))
+      .select(Urls.decodeIdnHost($"h").as("k"), Oracles.decodeIdnHostFold($"h").as("f"))
       .as[(String, String)].collect()
     hosts.zip(got).foreach { case (h, (k, f)) =>
       assert(k === f, s"kernel/fold divergence on $h")
@@ -411,7 +411,7 @@ class UrlsSpec extends SparkSpec {
     // verbatim on BOTH paths, never throw.
     val crafted = "xn--j416146o.com"
     val k1 = Seq(crafted).toDF("h").select(Urls.decodeIdnHost($"h")).as[String].head()
-    val f1 = Seq(crafted).toDF("h").select(Urls.decodeIdnHostFold($"h")).as[String].head()
+    val f1 = Seq(crafted).toDF("h").select(Oracles.decodeIdnHostFold($"h")).as[String].head()
     assert(k1 === crafted && f1 === crafted)
     // a long basic prefix + astral code point: VALID punycode whose delta
     // (~2.9e7) exceeded the fold's old 1e7 bound — the fold rejected what
@@ -420,7 +420,7 @@ class UrlsSpec extends SparkSpec {
     val exotic = "xn--aaaaaaaaaaaaaaaaaaaaaaaaaaaaaa-1j923u.example"
     val want = ("a" * 30) + new String(Character.toChars(0xE0001)) + ".example"
     val k2 = Seq(exotic).toDF("h").select(Urls.decodeIdnHost($"h")).as[String].head()
-    val f2 = Seq(exotic).toDF("h").select(Urls.decodeIdnHostFold($"h")).as[String].head()
+    val f2 = Seq(exotic).toDF("h").select(Oracles.decodeIdnHostFold($"h")).as[String].head()
     assert(k2 === want, "kernel must decode the exotic-but-valid label")
     assert(f2 === want, "fold must agree past its old under-bound")
   }
