@@ -250,7 +250,7 @@ object HashKernels {
     * bytes, exactly `conv(md5(substr(text,p,k)),16,10)`) at every
     * position, then the rightmost-min of each w-window — value-identical
     * to the staged HOF form in
-    * [[graft.operators.TextAnalysis.winnowSelect]]. Texts shorter than k
+    * the test-side `Oracles.winnowSelect`. Texts shorter than k
     * yield null (no gram); fewer than w grams winnow the single
     * truncated window. One md5 per position and O(n·w) long compares —
     * versus the HOF tree's per-element interpreted evaluation, which made
@@ -594,7 +594,7 @@ object HashKernels {
     * too — an Int `n` here once wrapped negative on a crafted group,
     * passed the range checks, and crashed appendCodePoint. The
     * interpreted expression-fold twin lives in
-    * [[graft.operators.Urls.punycodeDecodeLabel]]; kernel ≡ fold is
+    * the test-side `Oracles.punycodeDecodeLabel`; kernel ≡ fold is
     * spec-pinned. */
   def punycodeDecodeLabel(body: String): String = {
     val d = body.lastIndexOf('-')

@@ -68,6 +68,11 @@ case class KernelCall(kernel: NativeKernel, children: Seq[Expression], args: Seq
   override def foldable: Boolean = children.forall(_.foldable)
   override def prettyName: String = kernel.name
   override protected def stringArgs: Iterator[Any] = children.iterator ++ args.iterator
+  // the int arguments are part of the call: Spark names an unaliased
+  // column by its `sql`, so graft_minhash(toks, 4) and graft_minhash(toks, 8)
+  // must not both print as graft_minhash(toks)
+  override def sql: String =
+    s"$prettyName(${(children.map(_.sql) ++ args.map(_.toString)).mkString(", ")})"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val accepted = kernel.inputTypes.zip(children.map(_.dataType)).forall {

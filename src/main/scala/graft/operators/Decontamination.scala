@@ -264,10 +264,11 @@ object Decontamination {
     * consuming lambda when it is referenced once — so an inline `hitSet`
     * expression would re-derive the FULL gram-hash array (one md5 per
     * position) inside the position filter's body, once per position:
-    * O(n²) md5 work per document, exactly the HOF-inlining trap
-    * [[TextAnalysis.winnowSelect]]'s scaladoc warns about. The lambda
-    * binding caps the chain at one evaluation each: grams once, intersect
-    * once, spans once (the guard and the cut read the bound variable). */
+    * O(n²) md5 work per document, exactly the HOF-inlining trap the
+    * test-side `Oracles.winnowSelect` fold's scaladoc warns about. The
+    * lambda binding caps the chain at one evaluation each: grams once,
+    * intersect once, spans once (the guard and the cut read the bound
+    * variable). */
   def scrubSpansExpr(text: Column, benchSet: Column, k: Int): Column = {
     // bind(v)(f): evaluate v once per row, hand f an O(1) lambda-variable
     // reference. aggregate over a 1-element array = merge(init, v); the

@@ -107,9 +107,14 @@ object Dedup {
     * paths: per-doc distinct-shingle sizes joined onto intersection
     * counts, thresholded. */
   private def scoreJaccard(inter: DataFrame, sizes: DataFrame, minSim: Double): DataFrame =
-    inter
+    thresholdJaccard(inter
       .join(sizes.toDF("id_a", "sh_a"), Seq("id_a"))
-      .join(sizes.toDF("id_b", "sh_b"), Seq("id_b"))
+      .join(sizes.toDF("id_b", "sh_b"), Seq("id_b")), minSim)
+
+  /** (id_a, id_b, jaccard) rows of an (id_a, id_b, n_inter, sh_a, sh_b)
+    * frame whose 6-place-rounded Jaccard reaches `minSim`. */
+  private def thresholdJaccard(scored: DataFrame, minSim: Double): DataFrame =
+    scored
       .withColumn("jaccard",
         round(col("n_inter").cast("double") / (col("sh_a") + col("sh_b") - col("n_inter")), 6))
       .filter(col("jaccard") >= minSim)
@@ -293,9 +298,17 @@ object Dedup {
   /** MinHash-LSH near-duplicates with exact verification — the production
     * composition: LSH banding bounds candidate generation (bucket join,
     * never all-pairs), then TRUE Jaccard over each candidate's distinct
-    * shingles removes LSH false positives. Per-pair verify cost is
-    * candidates × shingles-per-doc, never corpus². Returns
-    * (id_a, id_b, jaccard) with id_a < id_b and jaccard >= minSim. */
+    * shingles removes LSH false positives. Returns (id_a, id_b, jaccard)
+    * with id_a < id_b and jaccard >= minSim (pairs sharing no shingle are
+    * never returned).
+    *
+    * Scale shape: one shingle pass into a persisted (id, shingle array)
+    * frame that feeds both the signature chain and the verify; the band-
+    * key self-join yields the distinct candidate pairs; each pair then
+    * joins the two docs' arrays (by id_a, then by id_b) and scores
+    * |A∩B| = size(array_intersect) against size(A) and size(B) per row.
+    * Verify cost is candidates × shingles-per-doc, never corpus², and it
+    * intersects shingle STRINGS, so it is exact. */
   def minhashNearDuplicates(
       df: DataFrame,
       idCol: String,
@@ -307,23 +320,25 @@ object Dedup {
       scope: graft.CacheScope = graft.CacheScope.Global): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     // ONE shingle pass: the persisted array frame feeds both the signature
-    // chain (candidates) and the exact-verify explode — the kernel never
-    // runs twice over the corpus
+    // chain (candidates) and the exact verify — the kernel never runs
+    // twice over the corpus
     val shArr = scope.persist(
       df.select(col(idCol).as("id"), shingles(col(textCol), n).as("shs")))
     val sig = shArr.select(col("id"),
       graft.functions.DedupExpressions.minhashSig(col("shs"), k).as("sig"))
     val banded = scope.persist(sig.select(col("id"),
       posexplode(lshBandKeys(col("sig"), bands, k / bands)).as(Seq("band", "key"))))
-    val cand = bandPairs(banded)
-    val sh = shArr.select(col("id"), explode(col("shs")).as("s"))
-      .select(col("id"), shingleHash(col("s")).as("sh"))
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val inter = cand
-      .join(sh.toDF("id_a", "sh"), Seq("id_a"))
-      .join(sh.toDF("id_b", "sh"), Seq("id_b", "sh"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-    scoreJaccard(inter, sizes, minSim)
+    // shingle arrays are distinct, so array sizes are the set sizes; a
+    // null array yields a null (or -1) intersection, dropped with the
+    // disjoint pairs
+    val scored = bandPairs(banded)
+      .join(shArr.toDF("id_a", "sa"), Seq("id_a"))
+      .join(shArr.toDF("id_b", "sb"), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sa"), col("sb"))).as("n_inter"),
+        size(col("sa")).as("sh_a"), size(col("sb")).as("sh_b"))
+      .filter(col("n_inter") > 0)
+    thresholdJaccard(scored, minSim)
   }
 
   /** Cross-document duplicated-substring spans: the hashed character-k-gram
@@ -339,10 +354,11 @@ object Dedup {
     * correct because island-merge groups positions `stride` apart).
     * Docs shorter than k have no full gram and produce no spans.
     *
-    * Scale shape: per-row bounded explode (≤ len/stride positions), one
-    * (gram-hash, id) shuffle for document frequency, a semi-join back,
-    * and one per-doc window for island merge. Never all-pairs; gram
-    * payloads move as 60-bit longs.
+    * Scale shape: per-row bounded explode (≤ len/stride positions) into
+    * narrow (id, p, gh) rows, ONE shuffle of those rows by gram hash whose
+    * window keeps the positions of hashes seen in ≥ `minDocFreq` distinct
+    * docs ([[multiDocRows]]), and one per-doc window for island merge.
+    * Never all-pairs; gram payloads move as 64-bit longs.
     *
     * @return (doc_id, span_start, span_end) — 1-based inclusive character
     *         positions of each maximal duplicated region
@@ -356,27 +372,30 @@ object Dedup {
       minDocFreq: Int = 2,
       scope: graft.CacheScope = graft.CacheScope.Global): DataFrame = {
     val grams = spanGrams(df, idCol, textCol, k, stride, minDocFreq, scope)
-    val dupPos = grams.join(inDistinctIds(grams, "gh", minDocFreq), Seq("gh"), "left_semi")
-    spanIslands(dupPos, k, stride)
+    spanIslands(multiDocRows(grams, Seq("gh"), minDocFreq).select("id", "p"), k, stride)
       .select(col("id").as("doc_id"), col("s").as("span_start"), col("e").as("span_end"))
   }
 
-  /** The values of column `key` of `rows` that occur with at least
-    * `minDocFreq` distinct `id`s, as a one-column frame. At 2 that is
-    * min(id) != max(id): a plain min/max aggregate partial-aggregates
-    * map-side and plans ONE exchange on `key`, where count(DISTINCT id)
-    * plans a (key, id) dedup exchange FIRST — two shuffles and no
-    * map-side reduction of a key's repeated positions. */
-  private def inDistinctIds(rows: DataFrame, key: String, minDocFreq: Int): DataFrame =
-    (if (minDocFreq == 2)
-      rows.groupBy(key)
-        .agg(min(col("id")).as("__mn"), max(col("id")).as("__mx"))
-        .filter(col("__mn") =!= col("__mx"))
-    else
-      rows.groupBy(key)
-        .agg(countDistinct(col("id")).as("df"))
-        .filter(col("df") >= minDocFreq)
-    ).select(key)
+  /** The rows of `rows` whose `keys` group holds at least `minDocFreq`
+    * distinct `id`s: ONE window partitioned by `keys`, so the rows route
+    * once and come back already filtered (an aggregate joined back to
+    * `rows` reads them twice). At 2 the test is min(id) != max(id);
+    * above it, the size of the group's id set. */
+  private def multiDocRows(rows: DataFrame, keys: Seq[String], minDocFreq: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
+    val multi =
+      if (minDocFreq == 2) min(col("id")).over(w) =!= max(col("id")).over(w)
+      else size(collect_set(col("id")).over(w)) >= minDocFreq
+    rows.withColumn("__multi", multi).filter(col("__multi")).drop("__multi")
+  }
+
+  /** The string verify of [[duplicatedSpansExact]]: the (id, p) of the
+    * (id, p, gh, g) candidate rows whose gram STRING `g` occurs in at
+    * least `minDocFreq` distinct docs. Partitioned by (gh, g): a hash
+    * collision only splits a gh group into its strings and never merges
+    * two strings, so the result is collision-free. */
+  private[graft] def verifyGramStrings(cand: DataFrame, minDocFreq: Int): DataFrame =
+    multiDocRows(cand, Seq("gh", "g"), minDocFreq).select("id", "p")
 
   /** EXACT cross-document duplicated-substring spans — the suffix-array
     * SEMANTICS of Lee et al. ACL'22, computed distributively. A position
@@ -392,10 +411,20 @@ object Dedup {
     * computation; the distributed form routes by gram hash first (a
     * collision can only ADD candidates, never drop a true duplicate, so
     * the hash prefilter is a sound negative filter) and verifies only
-    * hash-candidate positions by full string — gram strings shuffle only
-    * for candidates, not the k× corpus. [[duplicatedSpans]] stops at the
-    * hash level (rare false-positive spans under 60-bit collisions);
-    * this form is collision-free and costs the verify pass.
+    * hash-candidate positions by full string. [[duplicatedSpans]] stops
+    * at the hash level (rare false-positive spans under 64-bit
+    * collisions); this form is collision-free and costs the verify.
+    *
+    * Scale shape: the narrow (id, p, gh) positions of [[spanGrams]] route
+    * ONCE by gram hash, and that window keeps the hash-candidate positions
+    * ([[multiDocRows]], shared with [[duplicatedSpans]]). Each candidate
+    * slices its gram string from its own text by a join on id (the planner
+    * picks broadcast or sort-merge by size), and [[verifyGramStrings]]
+    * decides by string in a window partitioned by (gh, g): gram strings
+    * exist only for candidates (≈ the duplicated volume, not k× the
+    * corpus) and cross the network at most once. The per-doc island
+    * window runs last. Ids identify documents: each candidate position
+    * reads the text of its own id.
     *
     * @return (doc_id, span_start, span_end) — 1-based inclusive character
     *         positions of each maximal duplicated region
@@ -410,32 +439,15 @@ object Dedup {
     require(k >= 2, "k must be at least 2")
     require(minDocFreq >= 2, "minDocFreq below 2 would flag every position")
     val t = col("t")
-    // pass 1, NARROW: hashed positions only (the [[spanGrams]] shape) —
-    // caching gram STRINGS for every position would hold k× the corpus
+    // NARROW: hashed positions only (the [[spanGrams]] shape) — caching
+    // gram STRINGS for every position would hold k× the corpus
     val grams = spanGrams(df, idCol, textCol, k, stride = 1, minDocFreq, scope)
-    // hash-level candidates: a 60-bit hash with doc frequency < minDocFreq
+    // hash-level candidates: a 64-bit hash with doc frequency < minDocFreq
     // cannot hide a string with doc frequency >= minDocFreq
-    val candHash = inDistinctIds(grams, "gh", minDocFreq)
-    // pass 2: re-derive gram strings for CANDIDATE DOCS only (the cached
-    // hash frame names them — docs with no hash-candidate position cannot
-    // contribute a duplicated gram), then keep only hash-candidate
-    // positions BEFORE anything shuffles or caches — the persisted frame
-    // is candidate-sized (≈ the duplicated volume), not k× the corpus
-    val candDocs = grams.join(candHash, Seq("gh"), "left_semi").select("id").distinct()
-    val cand = scope.persist(
-      df.select(col(idCol).as("id"), col(textCol).as("t"))
-        .join(candDocs, Seq("id"), "left_semi")
-        .filter(length(t) >= k)
-        .select(col("id"),
-          explode(sequence(lit(1), length(t) - (k - 1), lit(1))).as("p"), t)
-        .select(col("id"), col("p"), t.substr(col("p"), lit(k)).as("g"),
-          // must match spanGrams' gh derivation (the candHash semi-join key)
-          xxhash64(t.substr(col("p"), lit(k))).as("gh"))
-        .join(candHash, Seq("gh"), "left_semi"))
-    // string-level verify: exact duplication, collision-free
-    val dupStr = inDistinctIds(cand, "g", minDocFreq)
-    val dupPos = cand.join(dupStr, Seq("g"), "left_semi").select("id", "p")
-    spanIslands(dupPos, k, 1)
+    val text = df.select(col(idCol).as("id"), col(textCol).as("t")).filter(length(t) >= k)
+    val cand = multiDocRows(grams, Seq("gh"), minDocFreq).join(text, Seq("id"))
+      .select(col("id"), col("p"), col("gh"), t.substr(col("p"), lit(k)).as("g"))
+    spanIslands(verifyGramStrings(cand, minDocFreq), k, 1)
       .select(col("id").as("doc_id"), col("s").as("span_start"), col("e").as("span_end"))
   }
 

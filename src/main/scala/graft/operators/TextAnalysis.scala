@@ -548,25 +548,6 @@ object TextAnalysis {
       .otherwise(lit(null).cast("array<struct<gh:bigint,p:int>>"))
   }
 
-  /** Stage 2 of winnowing: rightmost-min selection over every w-window of
-    * an already-computed gram-hash array. KEEP THE TWO STAGES IN SEPARATE
-    * PROJECTIONS when composing manually ([[winnow]] does): higher-order
-    * functions are interpreted, so if `ghs` is an inline expression rather
-    * than an attribute reference, every one of the ~n windows re-evaluates
-    * all n md5 hashes — O(n²) per document instead of O(n·w). The
-    * many-reference shape here also stops `CollapseProject` from
-    * re-inlining a staged alias. */
-  def winnowSelect(ghs: Column, w: Int): Column = {
-    require(w >= 1, "w must be positive")
-    val n = size(ghs)
-    val sel = transform(sequence(lit(1), greatest(n - (w - 1), lit(1))), a =>
-      aggregate(slice(ghs, a, lit(w)), element_at(ghs, a),
-        (best, x) => when(x("gh") < best("gh") ||
-          (x("gh") === best("gh") && x("p") > best("p")), x).otherwise(best)))
-    when(n >= 1, array_distinct(sel))
-      .otherwise(lit(null).cast("array<struct<gh:bigint,p:int>>"))
-  }
-
   /** Exploded winnowing fingerprint table: one row per selected position.
     * @return (doc_id, pos, fp) */
   def winnow(df: DataFrame, idCol: String, textCol: String,

@@ -126,6 +126,32 @@ class DedupSpec extends SparkSpec {
     assert(got.forall(_._3 >= 0.3))           // every pair is exact-verified
   }
 
+  test("verified near-dups are exactly the LSH candidates at exact shingle Jaccard >= minSim") {
+    val real = spark.read.parquet(s"$sfDir/documents.parquet").limit(200)
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq.toDF("doc_id", "text")
+    for ((corpus, minSim) <- Seq(docs -> 0.3, real -> 0.3, real -> 0.5)) {
+      val sh = corpus.select($"doc_id", Dedup.shingles($"text", 3))
+        .as[(Long, Seq[String])].collect().collect { case (id, s) if s != null => id -> s.toSet }
+        .toMap
+      // Spark's round(x, 6): HALF_UP on the double's decimal form; the
+      // operator thresholds the rounded value
+      def round6(x: Double) =
+        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val expected = Dedup.minhashCandidates(corpus, "doc_id", "text", n = 3, k = 8, bands = 4)
+        .as[(Long, Long)].collect().toSeq
+        .collect { case (a, b) if sh.contains(a) && sh.contains(b) =>
+          val inter = (sh(a) intersect sh(b)).size
+          (a, b) -> round6(inter.toDouble / (sh(a).size + sh(b).size - inter))
+        }
+        .filter { case (_, j) => j >= minSim && j > 0 }.toMap
+      val got = Dedup.minhashNearDuplicates(corpus, "doc_id", "text", n = 3, k = 8, bands = 4,
+        minSim = minSim).as[(Long, Long, Double)].collect()
+      assert(got.length === got.map(r => (r._1, r._2)).distinct.length)
+      assert(got.map(r => (r._1, r._2) -> r._3).toMap === expected)
+      assert(expected.nonEmpty, s"fixture sanity: verified pairs exist at $minSim")
+    }
+  }
+
   test("codegen'd shingles kernel equals the HOF fold on real documents") {
     val docsReal = spark.read.parquet(s"$sfDir/documents.parquet").limit(200)
       .select($"text").unionByName(docs.select($"text")) // include edge cases
@@ -498,6 +524,73 @@ class DedupSpec extends SparkSpec {
     assert(got.exists(s => s._1 == 1L && s._2 == 6 && s._3 == 6 + shared.length - 1))
     assert(got.contains((3L, 1L, 20L)) && got.contains((4L, 1L, 20L)))
     assert(!got.exists(_._1 == 5L))
+  }
+
+  /** Brute-force spans: a 0-based position is duplicated iff its k-gram
+    * string occurs in >= minDocFreq distinct docs; consecutive duplicated
+    * positions merge into 1-based inclusive (doc, start, end) islands. */
+  private def bruteSpans(rows: Seq[(Long, String)], k: Int, minDocFreq: Int)
+      : Set[(Long, Long, Long)] = {
+    val docsOf = rows.flatMap { case (id, t) =>
+      (0 to t.length - k).map(p => t.substring(p, p + k) -> id)
+    }.groupBy(_._1).map { case (g, ids) => g -> ids.map(_._2).distinct.size }
+    rows.flatMap { case (id, t) =>
+      val dup = (0 to t.length - k).filter(p => docsOf(t.substring(p, p + k)) >= minDocFreq)
+      dup.foldLeft(List.empty[(Long, Long)]) {
+        case ((s, e) :: tail, p) if p == e + 1 => (s, p.toLong) :: tail
+        case (acc, p) => (p.toLong, p.toLong) :: acc
+      }.map { case (s, e) => (id, s + 1, e + k) }
+    }.toSet
+  }
+
+  test("exact-span string verify keeps a forced gram-hash collision apart") {
+    // gh 42 is a forced collision: "alpha" (doc 1) and "bravo" (doc 2)
+    // are different strings under one hash, and "charlie" sits under the
+    // same hash in docs 3 and 4; "delta" repeats inside doc 5 only
+    val cand = Seq(
+      (1L, 1, 42L, "alpha"),
+      (2L, 7, 42L, "bravo"),
+      (3L, 2, 42L, "charlie"),
+      (4L, 9, 42L, "charlie"),
+      (5L, 1, 7L, "delta"),
+      (5L, 4, 7L, "delta"),
+      (6L, 3, 8L, "echo"),
+      (7L, 5, 8L, "echo")
+    ).toDF("id", "p", "gh", "g")
+    def flagged(minDocFreq: Int) =
+      Dedup.verifyGramStrings(cand, minDocFreq).as[(Long, Int)].collect().toSet
+    assert(flagged(2) === Set((3L, 2), (4L, 9), (6L, 3), (7L, 5)))
+    assert(flagged(3) === Set.empty)
+  }
+
+  test("duplicatedSpansExact and duplicatedSpans at minDocFreq 3 equal brute force") {
+    val k = 10
+    val in3 = "ABCDEFGHIJKL"   // in docs 1, 2, 3
+    val in2 = "mnopqrstuvwx"   // in docs 1, 4 only
+    val rep = "0123456789ab"   // twice in doc 5, once in doc 6: 2 docs, 3 occurrences
+    val rows = Seq(
+      1L -> s"a${in3}#${in2}b",
+      2L -> s"cc${in3}%%",
+      3L -> s"${in3}&dd",
+      4L -> s"e${in2}ff",
+      5L -> s"g${rep}*${rep}h",
+      6L -> s"${rep}!",
+      7L -> "nothing in common here")
+    val fixture = rows.toDF("doc_id", "text")
+    val expected = bruteSpans(rows, k, minDocFreq = 3)
+    val exact = Dedup.duplicatedSpansExact(fixture, "doc_id", "text", k = k, minDocFreq = 3)
+      .as[(Long, Long, Long)].collect().toSet
+    val hashed = Dedup.duplicatedSpans(fixture, "doc_id", "text", k = k, stride = 1,
+        minDocFreq = 3)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(exact === expected)
+    assert(hashed === expected)
+    // fixture sanity: the 3-doc block is flagged in each of its docs, the
+    // 2-doc block and the 3-occurrence-in-2-docs block are not
+    assert(expected.contains((1L, 2L, 13L)) && expected.contains((2L, 3L, 14L)) &&
+      expected.contains((3L, 1L, 12L)))
+    assert(!expected.exists(s => s._1 == 4L || s._1 == 5L || s._1 == 6L))
+    assert(bruteSpans(rows, k, minDocFreq = 2).exists(_._1 == 4L))
   }
 
   test("incremental spans accumulate: each batch equals the full run restricted to it") {

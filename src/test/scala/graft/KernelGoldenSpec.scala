@@ -115,29 +115,29 @@ class KernelGoldenSpec extends SparkSpec {
   private val golden: Map[String, (String, String, DataType, Boolean, Boolean, String)] = {
     val strArr = ArrayType(StringType, containsNull = false)
     Map(
-      "minhash" -> (("graft_minhash(toks, 4)", "graft_minhash(toks)", strArr, true, false,
+      "minhash" -> (("graft_minhash(toks, 4)", "graft_minhash(toks, 4)", strArr, true, false,
         "graft_minhash requires array<string>, got INT")),
-      "shingles" -> (("graft_shingles(toks, 2)", "graft_shingles(toks)", strArr, true, false,
+      "shingles" -> (("graft_shingles(toks, 2)", "graft_shingles(toks, 2)", strArr, true, false,
         "graft_shingles requires array<string>, got INT")),
-      "repeat_ratio" -> (("graft_repeat_ratio(toks, 2)", "graft_repeat_ratio(toks)", DoubleType,
+      "repeat_ratio" -> (("graft_repeat_ratio(toks, 2)", "graft_repeat_ratio(toks, 2)", DoubleType,
         true, false, "graft_repeat_ratio requires array<string>, got INT")),
-      "collapse_runs" -> (("graft_collapse_runs(toks, 1)", "graft_collapse_runs(toks)", strArr,
+      "collapse_runs" -> (("graft_collapse_runs(toks, 1)", "graft_collapse_runs(toks, 1)", strArr,
         true, false, "graft_collapse_runs requires array<string>, got INT")),
-      "simhash" -> (("graft_simhash(toks, 16)", "graft_simhash(toks)", LongType, true, false,
+      "simhash" -> (("graft_simhash(toks, 16)", "graft_simhash(toks, 16)", LongType, true, false,
         "graft_simhash requires array<string>, got INT")),
-      "winnow" -> (("graft_winnow(s, 3, 4)", "graft_winnow(s)",
+      "winnow" -> (("graft_winnow(s, 3, 4)", "graft_winnow(s, 3, 4)",
         ArrayType(StructType(Seq(StructField("gh", LongType, nullable = false),
           StructField("p", IntegerType, nullable = false))), containsNull = false),
         true, true, "graft_winnow requires string, got INT")),
       "nfc" -> (("graft_nfc_normalize(s)", "graft_nfc_normalize(s)", StringType, true, false,
         "graft_nfc_normalize requires string, got INT")),
-      "char_grams" -> (("graft_char_grams(s, 2)", "graft_char_grams(s)", strArr, true, false,
+      "char_grams" -> (("graft_char_grams(s, 2)", "graft_char_grams(s, 2)", strArr, true, false,
         "graft_char_grams requires string, got INT")),
       "idn_host" -> (("graft_idn_host(s)", "graft_idn_host(s)", StringType, true, false,
         "graft_idn_host requires string, got INT")),
       "char_entropy" -> (("graft_char_entropy(s)", "graft_char_entropy(s)", DoubleType, true,
         false, "graft_char_entropy requires string, got INT")),
-      "phash" -> (("graft_phash(bin, 16)", "graft_phash(bin)", LongType, true, false,
+      "phash" -> (("graft_phash(bin, 16)", "graft_phash(bin, 16)", LongType, true, false,
         "graft_phash requires binary, got INT")),
       "token_pairs" -> (("graft_token_pairs(s)", "graft_token_pairs(s)",
         ArrayType(StructType(Seq(StructField("w1", StringType, nullable = false),
@@ -177,6 +177,15 @@ class KernelGoldenSpec extends SparkSpec {
   test("the golden table covers every kernel") {
     assert(golden.keySet === kernels.map(_.name).toSet)
     assert(kernels.size === 22)
+  }
+
+  test("unaliased calls that differ only in an int argument get distinct column names") {
+    val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema(nullable = true))
+      .select(DedupExpressions.minhashSig(col("toks"), 4),
+        DedupExpressions.minhashSig(col("toks"), 8))
+    assert(df.columns.toSeq === Seq("graft_minhash(toks, 4)", "graft_minhash(toks, 8)"))
+    assert(df.select(col("`graft_minhash(toks, 8)`")).columns.toSeq ===
+      Seq("graft_minhash(toks, 8)"))
   }
 
   for (k <- kernels) test(s"${k.name}: toString, sql, dataType, nullable and type-check text") {

@@ -542,7 +542,7 @@ class TextAnalysisSpec extends SparkSpec {
     val both = docsReal
       .select($"doc_id", TextAnalysis.winnowGramHashes($"text", 12).as("ghs"),
         TextAnalysis.winnowFingerprints($"text", 12, 8).as("kernel"))
-      .select($"doc_id", $"kernel", TextAnalysis.winnowSelect($"ghs", 8).as("fold"))
+      .select($"doc_id", $"kernel", Oracles.winnowSelect($"ghs", 8).as("fold"))
     assert(both.filter(!($"kernel" <=> $"fold")).count() === 0)
     // short-text edges: below k -> null, truncated window -> one selection;
     // non-BMP chars: kernel must slice by code points like substr does
