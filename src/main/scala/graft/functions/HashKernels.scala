@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.CatalystBridge
@@ -688,6 +688,11 @@ case class BloomProbe(
     Array.tabulate(numHashes)(j => s"#$salt#$j".getBytes("UTF-8"))
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_bloom_probe"
+  // the plan-time arguments are part of the call: Spark names an
+  // unaliased column by its `sql`, so two probes that differ only in the
+  // filter (its words printed as a content digest) must not print alike
+  override def sql: String = s"$prettyName(${left.sql}, ${right.sql}, " +
+    s"${ArgDigest(words)}, $bits, $numHashes, ${Literal(salt).sql})"
 
   // case-class equality on Array is REFERENCE equality, which would make
   // two semantically identical probes never compare equal — harmless for

@@ -227,3 +227,19 @@ case object HtmlBlocks extends NativeKernel("graft_html_blocks",
     StructField("text", StringType),
     StructField("links", IntegerType),
     StructField("chars", IntegerType))), containsNull = false))
+
+/** How a kernel's `sql` prints a plan-time array argument (a codebook, a
+  * filter's words): the first 8 hex digits of the SHA-256 of its content,
+  * so two calls that differ only in that array name their columns apart
+  * without the array being printed. */
+private[functions] object ArgDigest {
+  def apply(values: Array[Long]): String = {
+    val bytes = java.nio.ByteBuffer.allocate(8 * values.length)
+    values.foreach(bytes.putLong)
+    java.security.MessageDigest.getInstance("SHA-256").digest(bytes.array())
+      .take(4).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  def apply(values: Seq[Double]): String =
+    apply(values.map(java.lang.Double.doubleToLongBits).toArray)
+}

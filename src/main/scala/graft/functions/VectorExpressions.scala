@@ -136,6 +136,10 @@ case class PqAdcTable(
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_pq_adc"
+  // the plan-time arguments are part of the call: Spark names an
+  // unaliased column by its `sql`, so two calls that differ only in the
+  // codebook (printed as a content digest) or the window must not print alike
+  override def sql: String = s"$prettyName(${child.sql}, ${ArgDigest(codebook)}, $offset, $d0)"
 
   private def elemType: DataType = child.dataType.asInstanceOf[ArrayType].elementType
 
@@ -260,6 +264,9 @@ case class PqArgBest(
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_pq_argbest"
+  // plan-time arguments printed as in [[PqAdcTable]]
+  override def sql: String =
+    s"$prettyName(${child.sql}, ${ArgDigest(codebook)}, ${ArgDigest(norms2)}, $offset, $d0)"
 
   private def elemType: DataType = child.dataType.asInstanceOf[ArrayType].elementType
 

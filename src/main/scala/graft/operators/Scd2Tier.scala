@@ -102,7 +102,15 @@ object Scd2Tier {
 
   /** The whole historized table: archive ∪ active — row-identical to the
     * flat store the same runs would have produced. None until the first
-    * run commits. */
+    * run commits.
+    *
+    * Each tier's schema is read from one parquet footer on the driver
+    * ([[Store.readParquet]]): building this frame runs no Spark job, and
+    * a count over it runs two. A tier falls back to Spark's own schema
+    * inference only where that footer cannot decide (a non-Spark writer,
+    * `spark.sql.parquet.mergeSchema` on); a tier with no data files
+    * (an archive holding only a failed append's empty `run=` directory)
+    * reads as absent, as before. */
   def readTiered(
       spark: SparkSession,
       activePath: String,
@@ -179,7 +187,7 @@ object Scd2Tier {
       .map(_.stripPrefix("run=")).sorted
     if (runs.length <= keepRuns) return
     val cutoff = runs(runs.length - keepRuns)
-    val remapped = spark.read.parquet(historyPath)
+    val remapped = Store.readParquet(spark, historyPath)
       .withColumn("run",
         when(col("run").cast("string") < lit(cutoff), lit(cutoff))
           .otherwise(col("run").cast("string")))

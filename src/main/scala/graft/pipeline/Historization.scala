@@ -48,8 +48,11 @@ object Historization {
       case None =>
         // Bootstrap: no current store yet (main.py:20-21) — everything is delta.
         Store.writeStore(enriched, storePath, keyColumns)
-      case Some(inferred) =>
-        val pinned = keysPinned(inferred.schema, enriched.schema, keyColumns)
+      case Some(standing) =>
+        // the standing schema comes from one footer read on the driver (no
+        // job); the re-read pins the keys' types, which path inference
+        // may have changed
+        val pinned = keysPinned(standing.schema, enriched.schema, keyColumns)
         val stored = spark.read.schema(pinned).parquet(storePath)
         val current = Store.canonicalize(stored, enriched.schema)
         val delta   = Cdc.delta(current, enriched)

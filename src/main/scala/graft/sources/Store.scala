@@ -3,8 +3,14 @@ package graft.sources
 import java.net.URI
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.meta.MetaColumns
 
@@ -76,10 +82,103 @@ object Store {
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
 
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * same frame (schema, partition columns, rows), with the schema read
+    * from one footer on the driver.
+    *
+    * With `mergeSchema` off, Spark infers a parquet directory's schema
+    * from ONE file — a `_common_metadata`, else a `_metadata` summary,
+    * else the data file first in full-path order — but ships that footer
+    * read as a one-task job. Here the driver reads the same footer's
+    * Spark schema (`ParquetReadSupport.SPARK_METADATA_KEY`) and pins it
+    * on the read. Partition columns stay with Spark's path inference, so
+    * keys like "007" come back inferred exactly as before. Finding the
+    * file lists only the directories on the way to it (see
+    * [[schemaFile]]).
+    *
+    * The read falls back to plain `spark.read.parquet(path)` — its job,
+    * or its error — whenever the footer alone cannot decide: a missing,
+    * glob or single-file path; no data file; a data file under a
+    * directory that is not a `col=value` partition; a footer without the
+    * Spark key (a non-Spark writer) or naming a partition column; an
+    * unreadable footer; or `spark.sql.parquet.mergeSchema` on. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).flatMap(s => Try(spark.read.schema(s)).toOption)
+      .getOrElse(spark.read).parquet(path)
+
+  /** The schema Spark's inference would give `path`'s data columns, read
+    * on the driver; None where [[readParquet]] falls back. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val merging = spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean
+    // Spark globs any path holding one of these (SparkHadoopUtil.isGlobPath)
+    if (merging || path.exists("{}[]*?\\".contains(_))) None
+    else Try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val root = new Path(path)
+      val fs = root.getFileSystem(conf)
+      if (!fs.getFileStatus(root).isDirectory) None
+      else schemaFile(fs, root).flatMap { case (file, partitions) =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+          HadoopReadOptions.builder(conf)
+            .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+        val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY)
+        finally reader.close()
+        Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+          .filterNot(_.fieldNames.exists(f => partitions.exists(_.equalsIgnoreCase(f))))
+      }
+    }.toOption.flatten
+  }
+
+  /** The file Spark's parquet schema inference reads under the directory
+    * `root`, with the partition column names on the way to it; None when
+    * there is none, or when the first data file sits below a directory
+    * that is not a `col=value` partition (Spark's partition discovery
+    * decides those layouts).
+    *
+    * Spark sorts every visible leaf file by its full path and takes the
+    * first `_common_metadata`, else the first `_metadata`, else the first
+    * data file (`ParquetUtils.splitFiles`). The first data file in
+    * full-path order is the first leaf of a depth-first walk that orders
+    * each directory's children by `name` for files and `name + "/"` for
+    * directories and skips directories with no data file, so only the
+    * directories on the way to it are listed. Summary files are looked
+    * for in those directories: parquet-mr writes them at the root of a
+    * job's output. Hidden names are the listing's
+    * (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def schemaFile(fs: FileSystem, root: Path): Option[(FileStatus, Seq[String])] = {
+    import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+    def hidden(name: String) =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !(name.startsWith(PARQUET_COMMON_METADATA_FILE) || name.startsWith(PARQUET_METADATA_FILE))
+    def summary(s: FileStatus) = s.isFile &&
+      Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)(s.getPath.getName)
+    val summaries = Seq.newBuilder[FileStatus]
+    def firstLeaf(dir: Path, chain: List[String]): Option[(FileStatus, List[String])] = {
+      val (sums, children) = fs.listStatus(dir).filterNot(s => hidden(s.getPath.getName))
+        .partition(summary)
+      summaries ++= sums
+      children.sortBy(s => s.getPath.getName + (if (s.isDirectory) "/" else "")).iterator
+        .map(s => if (s.isDirectory) firstLeaf(s.getPath, s.getPath.getName :: chain)
+          else Some(s -> chain))
+        .collectFirst { case Some(leaf) => leaf }
+    }
+    val leaf = firstLeaf(root, Nil)
+    val bySpark = summaries.result().sortBy(_.getPath.toString)
+    Seq(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE).iterator
+      .flatMap(n => bySpark.find(_.getPath.getName == n)).map(_ -> Nil).nextOption()
+      .orElse(leaf.filter(_._2.forall(_.contains("="))))
+      .map { case (file, chain) => file -> chain.map(_.takeWhile(_ != '=')) }
+  }
+
   /** Safe Parquet read: None when the path is missing/unreadable
-    * (SCDHelpers.py:276-281 returns None on any error). */
+    * (SCDHelpers.py:276-281 returns None on any error). The schema comes
+    * from one footer read on the driver ([[readParquet]]); where the
+    * footer cannot decide, Spark infers it as before, and a path with no
+    * data files still reads as None. */
   def readParquetSafe(spark: SparkSession, path: String): Option[DataFrame] =
-    Try(spark.read.parquet(path)).toOption
+    Try(readParquet(spark, path)).toOption
 
   /** [[readParquetSafe]] that only treats a MISSING path as absent: any
     * other failure (transient FS error, corrupt footer) propagates. The
@@ -91,7 +190,7 @@ object Store {
   def readParquetStrict(spark: SparkSession, path: String): Option[DataFrame] = {
     val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) None
-    else Some(spark.read.parquet(path))
+    else Some(readParquet(spark, path))
   }
 
   /** Projected read of only the two hash columns (MetaColumnHelpers.py:164-169).
@@ -264,7 +363,7 @@ object Store {
   def readStoreBucket(spark: SparkSession, path: String, keyHash: String, buckets: Int = 256): DataFrame = {
     import org.apache.spark.sql.functions.col
     val bucket = (Integer.parseInt(keyHash.substring(0, 4), 16) % buckets + buckets) % buckets
-    spark.read.parquet(path).filter(col(KeyBucket) === bucket).drop(KeyBucket)
+    readParquet(spark, path).filter(col(KeyBucket) === bucket).drop(KeyBucket)
   }
 
   /** Point-in-time point lookup against a [[writeStoreBucketed]] SCD2
@@ -306,14 +405,20 @@ object Store {
     * other failure (corrupt footer, IO error) propagates. A writer that
     * took either for "no store yet" would bootstrap over the history, and
     * its next swap would delete the `.old` aside holding it.
-    * `schema` pins the read (no inference): a store whose first write
-    * left no data files reads as empty, a column it lacks as null. */
+    *
+    * Schema: `schema` pins the read, so nothing is inferred — a store
+    * whose first write left no data files reads as empty, a column it
+    * lacks as null. Without it the schema is the one Spark would infer,
+    * read from one footer on the driver ([[readParquet]]), and the read
+    * falls back to Spark's own inference (and its job, or its error)
+    * only where that footer cannot decide, e.g. a store with no data
+    * files. */
   def readForSwap(
       spark: SparkSession,
       path: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Option[DataFrame] =
+      schema: Option[StructType] = None): Option[DataFrame] =
     if (!healSwap(spark, path)) None
-    else Some(schema.fold(spark.read)(spark.read.schema).parquet(path))
+    else Some(schema.fold(readParquet(spark, path))(spark.read.schema(_).parquet(path)))
 
   /** Repair a crashed [[writeStoreSwap]] and say whether the store is
     * present: a missing target beside its `.old` aside means the crash
@@ -692,7 +797,7 @@ object Store {
     val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     require(fs.exists(new Path(generationPath(path, gen), "_SUCCESS")),
       s"generation $gen of $path is not committed (never written, mid-write, or pruned)")
-    spark.read.parquet(generationPath(path, gen))
+    readParquet(spark, generationPath(path, gen))
   }
 
   /** Resolve-and-pin read of the newest committed generation: the
@@ -1123,7 +1228,7 @@ object Store {
     * bucketed directories, …); commit-if-absent choreography as above. */
   def readOrCreateWith(spark: SparkSession, path: String)(writeTo: String => Unit): DataFrame = {
     stageOnce(spark, path, "_SUCCESS", "readOrCreate")(writeTo)
-    spark.read.parquet(path)
+    readParquet(spark, path)
   }
 
   /** The commit of [[readOrCreateWith]] and [[ensureStagedDir]]: `path`
@@ -1246,7 +1351,7 @@ object Store {
     val before = countParquetFiles(fs, new Path(path))
     val bytes = fs.getContentSummary(new Path(path)).getLength
     val numFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read.parquet(path)
+    val df = readParquet(spark, path)
     // the swap write fully materializes into <path>.tmp BEFORE the old
     // generation is deleted, so the rewrite streams straight from the
     // store it is compacting — no staging copy, no read-overwrite race

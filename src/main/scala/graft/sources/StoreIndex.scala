@@ -151,7 +151,7 @@ object StoreIndex {
       groupSize: Int = DefaultManifestGroupSize): Unit = {
     val names = dataFileNames(spark, path).toSeq
     writeManifestGrouped(spark, path,
-      padMissingFiles(spark, names, statsFrame(spark.read.parquet(path), cols)),
+      padMissingFiles(spark, names, statsFrame(Store.readParquet(spark, path), cols)),
       cols, groupSize, names)
   }
 
@@ -303,7 +303,7 @@ object StoreIndex {
     val aligned =
       if (before.isEmpty) df
       else {
-        val standing = spark.read.parquet(path).columns
+        val standing = Store.readParquet(spark, path).columns
         require(standing.sorted.sameElements(df.columns.sorted),
           s"append column set ${df.columns.sorted.mkString(",")} != store ${standing.sorted.mkString(",")}")
         df.select(standing.map(col(_)): _*)
@@ -550,7 +550,7 @@ object StoreIndex {
       c: String,
       keys: Seq[Any]): DataFrame = {
     require(keys.nonEmpty, "keys must be non-empty")
-    val full = spark.read.parquet(path)
+    val full = Store.readParquet(spark, path)
     val pred = col(c).isin(keys: _*)
     val filePred = keys.map(k => col(s"max_$c") >= lit(k) && col(s"min_$c") <= lit(k))
       .reduce(_ || _)
@@ -570,7 +570,7 @@ object StoreIndex {
       path: String,
       ranges: Seq[(String, Any, Any)]): DataFrame = {
     require(ranges.nonEmpty, "ranges must be non-empty")
-    val full = spark.read.parquet(path)
+    val full = Store.readParquet(spark, path)
     val pred = ranges.map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) }
       .reduce(_ && _)
     candidateFiles(spark, path, ranges) match {
@@ -616,7 +616,7 @@ object StoreIndex {
       lo: Any,
       hi: Any): DataFrame = {
     import spark.implicits._
-    val full = spark.read.parquet(path)
+    val full = Store.readParquet(spark, path)
     val pred = col(c).between(lit(lo), lit(hi))
     val filePred = col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
     candidateManifest(spark, path, Seq(c), filePred) match {
@@ -683,7 +683,7 @@ object StoreIndex {
       hi: Any,
       valueCols: Seq[String]): DataFrame = {
     import spark.implicits._
-    val full = spark.read.parquet(path)
+    val full = Store.readParquet(spark, path)
     val pred = col(c).between(lit(lo), lit(hi))
     def exact(df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),
@@ -804,7 +804,7 @@ object StoreIndex {
       hi: Any,
       valueCols: Seq[String]): DataFrame = {
     import spark.implicits._
-    val full = spark.read.parquet(path)
+    val full = Store.readParquet(spark, path)
     val pred = col(c).between(lit(lo), lit(hi))
     def exact(df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),

@@ -143,7 +143,8 @@ class KernelGoldenSpec extends SparkSpec {
         ArrayType(StructType(Seq(StructField("w1", StringType, nullable = false),
           StructField("w2", StringType, nullable = false))), containsNull = false),
         true, false, "graft_token_pairs requires string, got INT")),
-      "bloom_probe" -> (("graft_bloom_probe(s, s2, [J@, 128, 2, x)", "graft_bloom_probe(s, s2)",
+      "bloom_probe" -> (("graft_bloom_probe(s, s2, [J@, 128, 2, x)",
+        "graft_bloom_probe(s, s2, 61b3cb0a, 128, 2, 'x')",
         BooleanType, true, false, "graft_bloom_probe requires (string, string), got (INT, INT)")),
       "bpe_count" -> (("graft_bpe_count(s, (t,h), (th,e))", "graft_bpe_count(s)", IntegerType,
         true, false, "graft_bpe_count requires string, got INT")),
@@ -166,11 +167,11 @@ class KernelGoldenSpec extends SparkSpec {
           containsNull = false), true, false, "graft_html_blocks requires string, got INT")),
       "dot" -> (("graft_dot(vec, vec)", "graft_dot(vec, vec)", DoubleType, true, true,
         "graft_dot requires two numeric arrays, got INT and INT")),
-      "pq_adc" -> (("graft_pq_adc(vec, 1.0, 0.0, 0.0, 1.0, 0, 2)", "graft_pq_adc(vec)",
+      "pq_adc" -> (("graft_pq_adc(vec, 1.0, 0.0, 0.0, 1.0, 0, 2)", "graft_pq_adc(vec, 73dd6222, 0, 2)",
         ArrayType(DoubleType, containsNull = true), true, true,
         "graft_pq_adc requires a numeric array, got INT")),
       "pq_argbest" -> (("graft_pq_argbest(vec, 1.0, 0.0, 0.0, 1.0, 1.0, 1.0, 0, 2)",
-        "graft_pq_argbest(vec)", IntegerType, true, true,
+        "graft_pq_argbest(vec, 73dd6222, 7b80af00, 0, 2)", IntegerType, true, true,
         "graft_pq_argbest requires a numeric array, got INT")))
   }
 
@@ -186,6 +187,21 @@ class KernelGoldenSpec extends SparkSpec {
     assert(df.columns.toSeq === Seq("graft_minhash(toks, 4)", "graft_minhash(toks, 8)"))
     assert(df.select(col("`graft_minhash(toks, 8)`")).columns.toSeq ===
       Seq("graft_minhash(toks, 8)"))
+  }
+
+  test("unaliased calls that differ only in a codebook or a filter get distinct column names") {
+    val other = Array(words(1), words(0))
+    val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema(nullable = true))
+      .select(
+        VectorExpressions.pqAdcTable(col("vec"), codebook, 0, 2),
+        VectorExpressions.pqAdcTable(col("vec"), Vector(0.0, 1.0, 1.0, 0.0), 0, 2),
+        VectorExpressions.pqArgBest(col("vec"), codebook, Vector(1.0, 1.0), 0, 2),
+        VectorExpressions.pqArgBest(col("vec"), codebook, Vector(1.0, 2.0), 0, 2),
+        DedupExpressions.bloomProbeOf(col("s"), col("s2"), words, 128, 2, "x"),
+        DedupExpressions.bloomProbeOf(col("s"), col("s2"), other, 128, 2, "x"),
+        DedupExpressions.bloomProbeOf(col("s"), col("s2"), words, 128, 2, "y"))
+    assert(df.columns.distinct.length === 7)
+    df.columns.foreach(c => assert(df.select(col(s"`$c`")).columns.toSeq === Seq(c)))
   }
 
   for (k <- kernels) test(s"${k.name}: toString, sql, dataType, nullable and type-check text") {
