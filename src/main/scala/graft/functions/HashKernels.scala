@@ -741,6 +741,10 @@ case class BloomProbe(
 private[functions] sealed trait BpeKernel extends UnaryExpression {
   def merges: Seq[(String, String)]
 
+  // the merges table is part of the call: Spark names an unaliased column
+  // by its `sql`, so two calls over different tables must not print alike
+  override def sql: String = s"$prettyName(${child.sql}, ${ArgDigest(merges)})"
+
   @transient protected lazy val ranks: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer](merges.size * 2)
     merges.zipWithIndex.foreach { case ((a, b), i) => m.put(a + " " + b, Integer.valueOf(i)) }

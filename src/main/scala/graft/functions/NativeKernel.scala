@@ -229,17 +229,31 @@ case object HtmlBlocks extends NativeKernel("graft_html_blocks",
     StructField("chars", IntegerType))), containsNull = false))
 
 /** How a kernel's `sql` prints a plan-time array argument (a codebook, a
-  * filter's words): the first 8 hex digits of the SHA-256 of its content,
-  * so two calls that differ only in that array name their columns apart
-  * without the array being printed. */
+  * filter's words, a BPE merges table): the first 8 hex digits of the
+  * SHA-256 of its content, so two calls that differ only in that array
+  * name their columns apart without the array being printed. */
 private[functions] object ArgDigest {
+  private def of(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+      .take(4).map(b => f"${b & 0xff}%02x").mkString
+
   def apply(values: Array[Long]): String = {
     val bytes = java.nio.ByteBuffer.allocate(8 * values.length)
     values.foreach(bytes.putLong)
-    java.security.MessageDigest.getInstance("SHA-256").digest(bytes.array())
-      .take(4).map(b => f"${b & 0xff}%02x").mkString
+    of(bytes.array())
   }
 
   def apply(values: Seq[Double]): String =
     apply(values.map(java.lang.Double.doubleToLongBits).toArray)
+
+  /** String pairs, each string length-prefixed so that no two tables
+    * share an encoding. */
+  def apply(pairs: Seq[(String, String)])(implicit d: DummyImplicit): String = {
+    val out = new java.io.ByteArrayOutputStream
+    val data = new java.io.DataOutputStream(out)
+    pairs.foreach { case (a, b) =>
+      Seq(a, b).map(_.getBytes("UTF-8")).foreach { s => data.writeInt(s.length); data.write(s) }
+    }
+    of(out.toByteArray)
+  }
 }

@@ -205,30 +205,6 @@ object Similarity {
     rankTopK(scored, k, idType)
   }
 
-  /** Window-rank form of [[bruteForceTopK]] — kept as the executable
-    * specification the aggregator path is property-tested against. */
-  def bruteForceTopKWindow(
-      queries: DataFrame,
-      corpus: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      corpusIdCol: String,
-      corpusVecCol: String,
-      k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
-    val q = queries.select(col(queryIdCol).as("query_id"), col(queryVecCol).as("qv"),
-      l2Norm(col(queryVecCol)).as("qn"))
-    val c = corpus.select(col(corpusIdCol).as("corpus_id"), col(corpusVecCol).as("cv"),
-      l2Norm(col(corpusVecCol)).as("cn"))
-    val scored = c.join(broadcast(q),
-        if (excludeSelf) col("query_id") =!= col("corpus_id") else lit(true))
-      .withColumn("cos", round(cosFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn")), 6))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "corpus_id", "cos", "rank")
-  }
-
   /** Approximate top-k via SRP-LSH bucketing: candidates are corpus vectors
     * sharing any of the query's `tables` bucket keys; exact cosine ranks
     * within candidates. Vectors in other buckets are never touched — that's

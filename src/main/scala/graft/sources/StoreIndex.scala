@@ -2,9 +2,12 @@ package graft.sources
 
 import java.net.URI
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** File-level min/max statistics index ("skipping manifest") and
   * locality-preserving store layouts (range-sorted, Z-ordered) — the
@@ -309,19 +312,23 @@ object StoreIndex {
         df.select(standing.map(col(_)): _*)
       }
     val oldManifest = Store.readParquetSafe(spark, statsManifestPath(path))
-      .filter { m =>
-        cols.forall(c => m.columns.contains(s"min_$c")) &&
-          summaryProvesListing(spark, path, m, before).getOrElse {
-            // flat fallback (no summary, or a summary not token-tied to
-            // these slices): one collected name per manifest row — the
-            // pre-two-level manifest's O(files) check, paid only when the
-            // O(groups) proof is unavailable (spec-pinned)
-            m.select("file").collect().map(_.getString(0)).toSet == before
-          }
-      }
-      // materialize the surviving rows NOW: the manifest overwrite below
+      .filter(m => cols.forall(c => m.columns.contains(s"min_$c")))
+      // materialize the standing rows NOW: the manifest overwrite below
       // would otherwise delete the files this frame still plans to read
       .map(m => m.collect().toSeq -> m.schema)
+      .filter { case (rows, schema) =>
+        // freshness: the O(groups) fingerprint proof when the summary is
+        // token-tied to these rows (a writeManifestGrouped commit stamps
+        // every row alike, so one row's token suffices); otherwise (no
+        // summary, or one from another commit's crash window) the flat
+        // name comparison over the rows already in hand (spec-pinned)
+        val token = rows.headOption.filter(_ => schema.fieldNames.contains("grouping_token"))
+          .map(_.getAs[String]("grouping_token"))
+        readSummary(spark, path, cols, lit(false)).filter(s => token.contains(s.token)) match {
+          case Some(s) => s.fp == fileSetFingerprint(before)
+          case None => rows.map(_.getAs[String]("file")).toSet == before
+        }
+      }
     aligned.repartitionByRange(numFiles, sortCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode("append").parquet(path)
@@ -329,8 +336,10 @@ object StoreIndex {
     val fresh = (after -- before).toSeq
     oldManifest match {
       case Some((oldRows, oldSchema)) if fresh.nonEmpty =>
-        val newStats = padMissingFiles(spark, fresh, statsFrame(
-          spark.read.parquet(fresh.map(f => s"$path/$f"): _*), cols))
+        // the fresh files hold exactly the frame just written: read them
+        // under its schema, no inference job
+        val newStats = padMissingFiles(spark, fresh,
+          statsFrame(readFiles(path, aligned, fresh), cols))
         // drop the old grouping and regroup the union: appended ranges may
         // land anywhere in the key space, and re-slicing (one narrow task
         // over O(files) short rows) keeps every group a contiguous key
@@ -350,38 +359,6 @@ object StoreIndex {
     }
   }
 
-  /** O(groups) freshness proof of a manifest frame against a file
-    * listing: the `_stats_summary`'s file-set fingerprint proves which
-    * file set the summary describes, and the shared grouping token ties
-    * the summary to THESE `_stats` slices — token tie + fingerprint match
-    * together prove the manifest's file set equals `names` WITHOUT
-    * collecting one row per data file (set equality up to md5-XOR
-    * collision, the fingerprint's documented strength). Some(false) =
-    * the summary is tied to these slices and its fingerprint differs —
-    * the manifest is provably stale. None = no usable summary or a
-    * summary from another commit (crash window): the caller falls back
-    * to the flat O(files) name comparison. */
-  private def summaryProvesListing(
-      spark: SparkSession,
-      path: String,
-      m: DataFrame,
-      names: Set[String]): Option[Boolean] =
-    Store.readParquetSafe(spark, manifestSummaryPath(path)).flatMap { sum =>
-      if (!Seq("fp_n", "fp_x1", "fp_x2", "grouping_token").forall(sum.columns.contains)
-          || !m.columns.contains("grouping_token")) None
-      else {
-        val fp = sum.select("fp_n", "fp_x1", "fp_x2", "grouping_token").limit(1).collect()
-        if (fp.isEmpty) None
-        else {
-          val tokenTied = m.select("grouping_token").limit(1).collect()
-            .headOption.exists(_.getString(0) == fp(0).getString(3))
-          if (!tokenTied) None
-          else Some((fp(0).getLong(0), fp(0).getLong(1), fp(0).getLong(2))
-            == fileSetFingerprint(names))
-        }
-      }
-    }
-
   /** Basenames of the store's data files (flat layout; anything under an
     * underscore/dot-prefixed directory — `_stats`, `_temporary` — is
     * metadata, not data). Pure filesystem listing: no footer is opened. */
@@ -395,110 +372,91 @@ object StoreIndex {
       .toSet
   }
 
-  /** Files the manifest proves CAN intersect the per-column [lo, hi]
-    * ranges (conjunction across `ranges`), or None when the manifest is
-    * missing, lacks a queried column, or is STALE (its file set no longer
-    * equals the store's — e.g. after a compaction that didn't rebuild it)
-    * — the caller then full-scans, trading speed for unconditional
-    * correctness. */
-  private def candidateFiles(
-      spark: SparkSession,
-      path: String,
-      ranges: Seq[(String, Any, Any)]): Option[Seq[String]] =
-    candidateFilesWith(spark, path, ranges.map(_._1).distinct,
-      ranges.map { case (c, lo, hi) =>
-        col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
-      }.reduce(_ && _))
+  /** `files` of the store at `path` under the schema of `like` (a frame of
+    * that store, or the batch just written to it): no inference job, and
+    * no files reads nothing. */
+  private def readFiles(path: String, like: DataFrame, files: Seq[String]): DataFrame =
+    if (files.isEmpty) like.limit(0)
+    else like.sparkSession.read.schema(like.schema).parquet(files.map(f => s"$path/$f"): _*)
 
-  /** Core of the manifest consultation: `pred` decides per manifest row
-    * (file) whether the file can matter; `statCols` are the columns
-    * whose stats it reads (all must be covered or the manifest is
-    * unusable for this query). */
-  private def candidateFilesWith(
+  /** Manifest-row test: the file's recorded [min, max] of `c` meets [lo, hi]. */
+  private def overlaps(c: String, lo: Any, hi: Any): Column =
+    col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
+
+  /** What one read of the `_stats_summary` tells a probe: the file set it
+    * describes (fingerprint), the grouping it describes (token), and the
+    * groups whose bounds the probe's predicate keeps. */
+  private final case class Summary(fp: (Long, Long, Long), token: String, groups: Seq[Int])
+
+  /** The `_stats_summary` in ONE collect of its O(groups) rows; None when
+    * it is absent, empty, or lacks a column the probe reads. The caller
+    * matches the fingerprint against the store listing and the token
+    * against the `_stats` slices it is about to trust: the fingerprint
+    * proves the summary describes these FILES, the token proves it
+    * describes this GROUPING of them. */
+  private def readSummary(
       spark: SparkSession,
       path: String,
       statCols: Seq[String],
-      pred: => Column): Option[Seq[String]] =
-    candidateManifest(spark, path, statCols, pred)
-      .map(_.select("file").collect().map(_.getString(0)).toSeq)
-
-  /** [[candidateFilesWith]]'s core, returning the PRUNED MANIFEST ROWS
-    * (file + per-column stats) instead of just names — [[countRange]]
-    * reads n_rows/null counts off these rows to answer without touching
-    * contained files. Same trust ladder: two-level fast path when the
-    * summary's fingerprint AND grouping token match, flat consult
-    * otherwise, None when the manifest cannot be trusted at all. */
-  private def candidateManifest(
-      spark: SparkSession,
-      path: String,
-      statCols: Seq[String],
-      pred: => Column): Option[DataFrame] = {
-    Store.readParquetSafe(spark, statsManifestPath(path)).flatMap { m =>
-      val haveStats = statCols.forall { c =>
-        m.columns.contains(s"min_$c") && m.columns.contains(s"max_$c")
-      }
-      if (!haveStats) None
-      else {
-        val names = dataFileNames(spark, path)
-        summaryGroups(spark, path, statCols, names, pred) match {
-          case Some((groups, token)) if m.columns.contains("group") &&
-              m.columns.contains("grouping_token") &&
-              // the summary must describe THESE slices: one slice row's
-              // token suffices (a writeManifestGrouped commit stamps all
-              // rows identically), and it guards the groups.isEmpty
-              // shortcut too — an old summary saying "nothing matches"
-              // over a regrouped manifest must not suppress the read
-              m.select("grouping_token").limit(1).collect()
-                .headOption.exists(_.getString(0) == token) =>
-            // two-level fast path: the group filter partition-prunes the
-            // manifest read, so a collect is bounded by the MATCHED
-            // slices (≈ ceil(files/groupSize) rows each), not O(files)
-            if (groups.isEmpty) Some(m.filter(pred).limit(0))
-            else Some(m.filter(col("group").isInCollection(groups)).filter(pred))
-          case _ =>
-            // flat consult (summary missing, stale, or a pre-two-level
-            // manifest): one short row per data file — the driver-side
-            // metadata budget a table format's planning pays
-            val manifestFiles = m.select("file").collect().map(_.getString(0)).toSet
-            if (manifestFiles != names) None
-            else Some(m.filter(pred))
-        }
-      }
-    }
-  }
-
-  /** Group-level consult of the two-level manifest: Some(matched groups +
-    * the summary's grouping token) when the summary exists, covers the
-    * queried columns, and its fingerprint equals the store's current file
-    * listing; None routes the caller to the flat consult. The caller must
-    * additionally match the token against the `_stats` slices it is about
-    * to trust — the fingerprint proves the summary describes these FILES,
-    * the token proves it describes this GROUPING of them. The summary
-    * read is O(groups). */
-  private def summaryGroups(
-      spark: SparkSession,
-      path: String,
-      statCols: Seq[String],
-      names: Set[String],
-      pred: => Column): Option[(Seq[Int], String)] =
+      pred: Column): Option[Summary] =
     Store.readParquetSafe(spark, manifestSummaryPath(path)).flatMap { sum =>
-      val usable =
-        Seq("group", "fp_n", "fp_x1", "fp_x2", "grouping_token")
-          .forall(sum.columns.contains) &&
-          statCols.forall { c =>
-            sum.columns.contains(s"min_$c") && sum.columns.contains(s"max_$c")
-          }
-      if (!usable) None
+      val need = Seq("group", "fp_n", "fp_x1", "fp_x2", "grouping_token") ++
+        statCols.flatMap(c => Seq(s"min_$c", s"max_$c"))
+      if (!need.forall(sum.columns.contains)) None
       else {
-        val fp = sum.select("fp_n", "fp_x1", "fp_x2", "grouping_token")
-          .limit(1).collect()
-        if (fp.isEmpty) { if (names.isEmpty) Some((Seq.empty, "")) else None }
-        else if ((fp(0).getLong(0), fp(0).getLong(1), fp(0).getLong(2))
-            != fileSetFingerprint(names)) None
-        else Some((sum.filter(pred).select(col("group").cast("int"))
-          .collect().map(_.getInt(0)).toSeq, fp(0).getString(3)))
+        val rows = sum.select(col("group").cast("int"), coalesce(pred, lit(false)),
+          col("fp_n"), col("fp_x1"), col("fp_x2"), col("grouping_token")).collect()
+        rows.headOption.map(r => Summary((r.getLong(2), r.getLong(3), r.getLong(4)),
+          r.getString(5), rows.filter(_.getBoolean(1)).map(_.getInt(0)).toSeq))
       }
     }
+
+  /** The manifest rows (file + per-column stats) of the files `pred` cannot
+    * exclude, collected once and handed back as a local frame (selecting
+    * from it runs no job), or None when the manifest cannot be trusted —
+    * missing, lacking a `statCols` stat, or STALE (its file set no longer
+    * equals the store's, e.g. after a compaction that didn't rebuild it) —
+    * and the caller full-scans, trading speed for unconditional
+    * correctness. Trust ladder: the two-level consult when the summary's
+    * fingerprint matches the listing AND its token matches the slices'
+    * (which guards the no-group shortcut too: an old summary saying
+    * "nothing matches" over a regrouped manifest must not suppress the
+    * read); else the flat consult, one short row per data file — the
+    * driver-side metadata budget a table format's planning pays. */
+  private def consult(
+      spark: SparkSession,
+      path: String,
+      statCols: Seq[String],
+      pred: Column): Option[DataFrame] =
+    Store.readParquetSafe(spark, statsManifestPath(path))
+      .filter(m => statCols.forall(c =>
+        m.columns.contains(s"min_$c") && m.columns.contains(s"max_$c")))
+      .flatMap { m =>
+        val names = dataFileNames(spark, path)
+        // manifest rows, each with `pred`'s verdict appended, in one collect
+        def flagged(df: DataFrame): Seq[Row] =
+          df.select(m.columns.map(col) :+ coalesce(pred, lit(false)): _*).collect().toSeq
+        // one row's token suffices: a writeManifestGrouped commit stamps
+        // every row alike
+        def tied(rows: Seq[Row], token: String): Boolean =
+          rows.headOption.exists(_.getAs[String]("grouping_token") == token)
+        readSummary(spark, path, statCols, pred)
+          .filter(s => s.fp == fileSetFingerprint(names) &&
+            Seq("group", "grouping_token").forall(m.columns.contains))
+          .flatMap { s =>
+            if (s.groups.isEmpty)
+              Some(Seq.empty[Row]).filter(_ =>
+                tied(m.select("grouping_token").limit(1).collect(), s.token))
+            // the group filter partition-prunes the manifest read: the
+            // collect is bounded by the MATCHED slices (≈ ceil(files /
+            // groupSize) rows each), not O(files)
+            else Some(flagged(m.filter(col("group").isInCollection(s.groups))))
+              .filter(tied(_, s.token))
+          }
+          .orElse(Some(flagged(m)).filter(_.map(_.getAs[String]("file")).toSet == names))
+          .map(rows => spark.createDataFrame(rows.filter(r => r.getBoolean(r.length - 1))
+            .map(r => Row.fromSeq(r.toSeq.init)).asJava, m.schema))
+      }
 
   /** Spec hook: the groups a conjunctive-range probe would read (None =
     * the probe would use the flat consult). */
@@ -506,11 +464,10 @@ object StoreIndex {
       spark: SparkSession,
       path: String,
       ranges: Seq[(String, Any, Any)]): Option[Seq[Int]] =
-    summaryGroups(spark, path, ranges.map(_._1).distinct,
-      dataFileNames(spark, path),
-      ranges.map { case (c, lo, hi) =>
-        col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
-      }.reduce(_ && _)).map(_._1)
+    readSummary(spark, path, ranges.map(_._1).distinct,
+      ranges.map { case (c, lo, hi) => overlaps(c, lo, hi) }.reduce(_ && _))
+      .filter(_.fp == fileSetFingerprint(dataFileNames(spark, path)))
+      .map(_.groups)
 
   /** Range read through the manifest: rows of the store at `path` with
     * `c BETWEEN lo AND hi`, reading only the files whose recorded
@@ -550,18 +507,8 @@ object StoreIndex {
       c: String,
       keys: Seq[Any]): DataFrame = {
     require(keys.nonEmpty, "keys must be non-empty")
-    val full = Store.readParquet(spark, path)
-    val pred = col(c).isin(keys: _*)
-    val filePred = keys.map(k => col(s"max_$c") >= lit(k) && col(s"min_$c") <= lit(k))
-      .reduce(_ || _)
-    candidateFilesWith(spark, path, Seq(c), filePred) match {
-      case None => full.filter(pred)
-      case Some(keep) if keep.isEmpty => full.filter(pred).limit(0)
-      case Some(keep) =>
-        spark.read.schema(full.schema)
-          .parquet(keep.map(f => s"$path/$f"): _*)
-          .filter(pred)
-    }
+    readPruned(spark, path, Seq(c), col(c).isin(keys: _*),
+      keys.map(k => overlaps(c, k, k)).reduce(_ || _))
   }
 
   /** General conjunctive-range read over the manifest. */
@@ -570,41 +517,42 @@ object StoreIndex {
       path: String,
       ranges: Seq[(String, Any, Any)]): DataFrame = {
     require(ranges.nonEmpty, "ranges must be non-empty")
+    readPruned(spark, path, ranges.map(_._1).distinct,
+      ranges.map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) }.reduce(_ && _),
+      ranges.map { case (c, lo, hi) => overlaps(c, lo, hi) }.reduce(_ && _))
+  }
+
+  /** The one pruned row read: the store's rows matching `rowPred`, read
+    * from only the files whose manifest rows satisfy `filePred` (the exact
+    * predicate re-applied over them; none kept reads nothing), or from the
+    * full store when the manifest cannot be trusted. */
+  private def readPruned(
+      spark: SparkSession,
+      path: String,
+      statCols: Seq[String],
+      rowPred: Column,
+      filePred: Column): DataFrame = {
     val full = Store.readParquet(spark, path)
-    val pred = ranges.map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) }
-      .reduce(_ && _)
-    candidateFiles(spark, path, ranges) match {
-      case None => full.filter(pred)
-      case Some(keep) if keep.isEmpty =>
-        // provably-empty result with the store's schema, zero files read
-        full.filter(pred).limit(0)
-      case Some(keep) =>
-        spark.read.schema(full.schema)
-          .parquet(keep.map(f => s"$path/$f"): _*)
-          .filter(pred)
-    }
+    consult(spark, path, statCols, filePred)
+      .map(m => readFiles(path, full, m.select("file").collect().map(_.getString(0)).toSeq))
+      .getOrElse(full)
+      .filter(rowPred)
   }
 
   /** METADATA-ONLY range count: `count(*) WHERE c BETWEEN lo AND hi`
     * answered from the stats manifest wherever possible — the aggregate
     * pushdown a table format's planning layer performs (Iceberg/Snowflake
     * answer these from file metadata; parquet footers carry the same
-    * min/max/null-count triple this manifest mirrors).
-    *
-    * Per candidate file: a file wholly CONTAINED in the range
-    * (min ≥ lo ∧ max ≤ hi, null count known) contributes
-    * `n_rows - nulls` straight from its manifest row — no data IO at
-    * all; only BOUNDARY files (intersecting but not contained) are
-    * scanned, single-column and predicate-pushed. On a range-sorted or
-    * z-ordered store a range of any width touches at most the two edge
-    * files, so at 100 TB the count costs O(matched manifest slices)
-    * planning + two column-pruned file reads where a naive count scans
-    * the table. Files with no recorded null count (legacy manifest rows)
-    * demote to boundary — scanned, never guessed. Any manifest doubt
-    * (missing, stale, un-covered column) falls back to the exact full
-    * filtered count. Intended for the store-layout key columns
-    * (integral/string/date); NaN-bearing double keys belong in the
-    * fallback path, as NaN breaks min/max containment reasoning.
+    * min/max/null-count triple this manifest mirrors). A file wholly
+    * CONTAINED in the range contributes `n_rows - nulls` straight from
+    * its manifest row, even when it holds null keys; only boundary files
+    * are scanned (see [[rollup]]). On a range-sorted or z-ordered store a
+    * range of any width touches at most the two edge files, so at 100 TB
+    * the count costs O(matched manifest slices) planning + two
+    * column-pruned file reads where a naive count scans the table.
+    * Intended for the store-layout key columns (integral/string/date);
+    * NaN-bearing double keys belong in the fallback path, as NaN breaks
+    * min/max containment reasoning.
     *
     * @return one row, `n_rows: bigint` — always equal to the full
     *         filtered count
@@ -614,57 +562,14 @@ object StoreIndex {
       path: String,
       c: String,
       lo: Any,
-      hi: Any): DataFrame = {
-    import spark.implicits._
-    val full = Store.readParquet(spark, path)
-    val pred = col(c).between(lit(lo), lit(hi))
-    val filePred = col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
-    candidateManifest(spark, path, Seq(c), filePred) match {
-      case None => full.filter(pred).agg(count(lit(1)).as("n_rows"))
-      case Some(cand) =>
-        // coalesce: contained must be two-valued — a NULL (a stats gap on
-        // a candidate row) would make when(contained)/when(!contained)
-        // BOTH miss the file, silently dropping its rows from the count
-        val contained =
-          if (cand.columns.contains(s"nulls_$c"))
-            coalesce(
-              col(s"min_$c") >= lit(lo) && col(s"max_$c") <= lit(hi) &&
-                col(s"nulls_$c").isNotNull,
-              lit(false))
-          else lit(false)
-        // ONE bounded aggregate over the pruned manifest rows: the
-        // contained files' row contribution plus the boundary file list
-        // (collect_list drops the nulls the when() leaves for contained
-        // files). Driver state is O(candidate files of this range).
-        val row = cand.agg(
-          sum(when(contained, col("n_rows") - col(s"nulls_$c"))
-            .otherwise(lit(0L))).as("interior"),
-          collect_list(when(!contained, col("file"))).as("boundary"))
-          .collect()(0)
-        val interior = if (row.isNullAt(0)) 0L else row.getLong(0)
-        val boundary = row.getSeq[String](1)
-        if (boundary.isEmpty) Seq(interior).toDF("n_rows")
-        else spark.read.schema(full.schema)
-          .parquet(boundary.map(f => s"$path/$f"): _*)
-          .select(col(c)).filter(pred)
-          .agg((count(lit(1)) + lit(interior)).cast("long").as("n_rows"))
-    }
-  }
+      hi: Any): DataFrame =
+    rollup(spark, path, c, lo, hi, Nil)
 
   /** METADATA-FIRST range rollup: `count(*)` plus `sum(<v>)` per value
     * column `WHERE c BETWEEN lo AND hi` — [[countRange]] extended to the
     * measure sums the manifest records per file ([[statsFrame]]'s
-    * `sum_<c>` quad for numeric stats columns). A file may contribute
-    * its stored sums without being opened only when it is wholly
-    * contained AND has ZERO null keys (a null-key row's measure is in
-    * the stored sum but outside the predicate) AND its value-column null
-    * counts are recorded (legacy manifest rows aren't — they demote to
-    * the scan, never to a guess). Boundary and demoted files are scanned
-    * key+measures only, predicate-pushed. Sum-of-null-measures
-    * semantics match SQL exactly: the result sum is NULL iff no matched
-    * row has a non-null measure, tracked via the per-file non-null
-    * counts. Any manifest doubt falls back to the exact full filtered
-    * aggregate.
+    * `sum_<c>` quad for numeric stats columns; see [[rollup]] for when a
+    * file may lend them unopened).
     *
     * Sum determinism note: per-file partial sums re-associate the
     * addition, exact for integral and decimal measures — at 100 TB put
@@ -681,116 +586,14 @@ object StoreIndex {
       c: String,
       lo: Any,
       hi: Any,
-      valueCols: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val full = Store.readParquet(spark, path)
-    val pred = col(c).between(lit(lo), lit(hi))
-    def exact(df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-        valueCols.map(v => sum(col(v)).as(s"sum_$v")): _*)
-    // derivation only (nothing executes): the exact path's result dtypes,
-    // which the metadata-path literals must reproduce bit-for-bit
-    val target = exact(full.filter(pred)).schema
-    val filePred = col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
-    candidateManifest(spark, path, Seq(c), filePred) match {
-      case None => exact(full.filter(pred))
-      case Some(cand) =>
-        val sumsRecorded = cand.columns.contains(s"nulls_$c") &&
-          valueCols.forall(v =>
-            cand.columns.contains(s"sum_$v") && cand.columns.contains(s"nulls_$v"))
-        if (!sumsRecorded) {
-          // key pruning still applies, but no file may contribute
-          // metadata-only (the sum/null-count columns are absent, so the
-          // per-row expressions below would not even resolve): exact
-          // aggregate over the candidate files, key+measures only
-          val files = cand.select("file").collect().map(_.getString(0)).toSeq
-          return exact(
-            if (files.isEmpty) full.filter(pred).limit(0)
-            else spark.read.schema(full.schema)
-              .parquet(files.map(f => s"$path/$f"): _*)
-              .select(col(c) +: valueCols.map(col): _*).filter(pred))
-        }
-        // coalesce: a NULL verdict (stats gap on a candidate row) would
-        // drop the file from BOTH the interior arithmetic and the
-        // boundary list — force it to the boundary scan instead.
-        //
-        // Per value column a file may contribute metadata-only ONLY when
-        // its sum is actually RECORDED: a legacy (pre-sum-quad) manifest
-        // row gains a NULL sum_<v> when a later appendStoreSorted unions
-        // the manifests with allowMissingColumns — its nulls_<v> is
-        // non-null, so the null-count test alone would admit it and the
-        // coalesce(sum, 0) below would contribute 0 for real measures
-        // (a silently wrong non-NULL sum). A NULL sum is legitimate only
-        // when every measure in the file is null (nulls_<v> = n_rows);
-        // otherwise the row demotes to the boundary scan — the scaladoc's
-        // "demote to the scan, never to a guess", enforced.
-        val contained = coalesce(
-          valueCols.map(v => col(s"nulls_$v").isNotNull &&
-              (col(s"sum_$v").isNotNull || col(s"nulls_$v") === col("n_rows")))
-            .foldLeft(col(s"min_$c") >= lit(lo) && col(s"max_$c") <= lit(hi) &&
-              col(s"nulls_$c") === 0)(_ && _),
-          lit(false))
-        val aggs =
-          sum(when(contained, col("n_rows") - col(s"nulls_$c"))
-            .otherwise(lit(0L))).as("__n") +:
-          collect_list(when(!contained, col("file"))).as("__boundary") +:
-          valueCols.flatMap(v => Seq(
-            sum(when(contained, coalesce(col(s"sum_$v"), lit(0)))).as(s"__sum_$v"),
-            sum(when(contained, col("n_rows") - col(s"nulls_$v"))
-              .otherwise(lit(0L))).as(s"__cnt_$v")))
-        val row = cand.agg(aggs.head, aggs.tail: _*).collect()(0)
-        def longAt(name: String): Long =
-          if (row.isNullAt(row.fieldIndex(name))) 0L
-          else row.getLong(row.fieldIndex(name))
-        val interiorN = longAt("__n")
-        val boundary = row.getSeq[String](row.fieldIndex("__boundary"))
-        def sumLit(v: String): Column = {
-          val i = row.fieldIndex(s"__sum_$v")
-          (if (row.isNullAt(i)) lit(0) else lit(row.get(i)))
-            .cast(target(s"sum_$v").dataType)
-        }
-        val base: DataFrame =
-          if (boundary.isEmpty)
-            Seq(1).toDF("__k").select(
-              lit(0L).as("__bn") +: valueCols.flatMap(v => Seq(
-                lit(null).cast(target(s"sum_$v").dataType).as(s"__bsum_$v"),
-                lit(0L).as(s"__bcnt_$v"))): _*)
-          else
-            spark.read.schema(full.schema)
-              .parquet(boundary.map(f => s"$path/$f"): _*)
-              .select(col(c) +: valueCols.map(col): _*).filter(pred)
-              .agg(count(lit(1)).as("__bn"),
-                valueCols.flatMap(v => Seq(
-                  sum(col(v)).as(s"__bsum_$v"),
-                  count(col(v)).as(s"__bcnt_$v"))): _*)
-        base.select(
-          (lit(interiorN) + col("__bn")).cast("long").as("n_rows") +:
-          valueCols.map { v =>
-            val t = target(s"sum_$v").dataType
-            when(lit(longAt(s"__cnt_$v")) + col(s"__bcnt_$v") === 0, lit(null).cast(t))
-              .otherwise((sumLit(v) + coalesce(col(s"__bsum_$v"), lit(0)).cast(t)).cast(t))
-              .as(s"sum_$v")
-          }: _*)
-    }
-  }
+      valueCols: Seq[String]): DataFrame =
+    rollup(spark, path, c, lo, hi, valueCols)
+      .select(col("n_rows") +: valueCols.map(v => col(s"sum_$v")): _*)
 
   /** METADATA-FIRST full range rollup: `count(*)` plus `sum/min/max/avg`
     * per value column `WHERE c BETWEEN lo AND hi` — [[aggRange]] extended
-    * to the whole manifest quad. A wholly-contained file (same containment
-    * contract as [[aggRange]]: zero null keys, value null counts AND sums
-    * recorded) contributes its row count, stored sum, and recorded
-    * min/max with zero data IO — min/max were already in the manifest;
-    * avg is sum over non-null count, free. Boundary and demoted files are
-    * scanned key+measures only, predicate-pushed.
-    *
-    * Null semantics match SQL exactly: min/max ignore null measures (an
-    * all-null interior file's recorded min/max are NULL and contribute
-    * nothing; `least`/`greatest` skip them), sum/avg are NULL iff no
-    * matched row has a non-null measure. avg is DEFINED as
-    * `double(sum) / count(non-null)` — one double division over exact
-    * (integral/decimal) totals, so metadata and exact paths are
-    * bit-identical by construction. Any manifest doubt falls back to the
-    * exact full filtered aggregate.
+    * to the whole manifest quad: a contained file also lends its recorded
+    * min/max, and avg is sum over non-null count, free.
     *
     * @return one row: `n_rows: bigint`, then `sum_<v>, min_<v>, max_<v>,
     *         avg_<v>: double` per value column — always equal to the
@@ -802,10 +605,43 @@ object StoreIndex {
       c: String,
       lo: Any,
       hi: Any,
+      valueCols: Seq[String]): DataFrame =
+    rollup(spark, path, c, lo, hi, valueCols)
+
+  /** The one range rollup behind [[countRange]], [[aggRange]] and
+    * [[statsRange]]: `n_rows`, then `sum_<v>, min_<v>, max_<v>, avg_<v>`
+    * per value column, over the rows with `c BETWEEN lo AND hi`.
+    *
+    * Per candidate file of the manifest consult: a file wholly CONTAINED
+    * in the range, with its null counts recorded, contributes from its
+    * manifest row with zero data IO; BOUNDARY files (intersecting, not
+    * contained) and demoted ones are scanned key+measures only,
+    * predicate-pushed. A null key comes off `n_rows` through `nulls_<c>`,
+    * but its measures sit inside the stored sum/min/max, so a file lends
+    * measures only with zero null keys. A manifest without the recorded
+    * null counts, sums and bounds keeps its key pruning but every
+    * candidate file is scanned; any manifest doubt falls back to the exact
+    * full filtered aggregate.
+    *
+    * Null semantics match SQL exactly: min/max ignore null measures (an
+    * all-null interior file's recorded min/max are NULL; `least`/
+    * `greatest` skip them), sum/avg are NULL iff no matched row has a
+    * non-null measure, tracked via the per-file non-null counts. avg is
+    * DEFINED as `double(sum) / count(non-null)` — one double division over
+    * exact (integral/decimal) totals, so metadata and exact paths are
+    * bit-identical by construction. */
+  private def rollup(
+      spark: SparkSession,
+      path: String,
+      c: String,
+      lo: Any,
+      hi: Any,
       valueCols: Seq[String]): DataFrame = {
     import spark.implicits._
     val full = Store.readParquet(spark, path)
     val pred = col(c).between(lit(lo), lit(hi))
+    def matched(df: DataFrame): DataFrame =
+      df.select(col(c) +: valueCols.map(col): _*).filter(pred)
     def exact(df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),
         valueCols.flatMap(v => Seq(
@@ -816,33 +652,43 @@ object StoreIndex {
     // derivation only (nothing executes): the exact path's result dtypes,
     // which the metadata-path literals must reproduce bit-for-bit
     val target = exact(full.filter(pred)).schema
-    val filePred = col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
-    candidateManifest(spark, path, Seq(c), filePred) match {
+    def typ(name: String): DataType = target(name).dataType
+    val recorded = s"nulls_$c" +:
+      valueCols.flatMap(v => Seq("sum_", "nulls_", "min_", "max_").map(_ + v))
+    consult(spark, path, Seq(c), overlaps(c, lo, hi)) match {
       case None => exact(full.filter(pred))
+      case Some(cand) if !recorded.forall(cand.columns.contains) =>
+        // key pruning still applies, but no file may contribute
+        // metadata-only (the per-row expressions below would not even
+        // resolve): exact aggregate over the candidate files
+        exact(matched(readFiles(path, full,
+          cand.select("file").collect().map(_.getString(0)).toSeq)))
       case Some(cand) =>
-        val quadRecorded = cand.columns.contains(s"nulls_$c") &&
-          valueCols.forall(v =>
-            cand.columns.contains(s"sum_$v") && cand.columns.contains(s"nulls_$v") &&
-              cand.columns.contains(s"min_$v") && cand.columns.contains(s"max_$v"))
-        if (!quadRecorded) {
-          // key pruning still applies, but no file may contribute
-          // metadata-only: exact aggregate over the candidate files
-          val files = cand.select("file").collect().map(_.getString(0)).toSeq
-          return exact(
-            if (files.isEmpty) full.filter(pred).limit(0)
-            else spark.read.schema(full.schema)
-              .parquet(files.map(f => s"$path/$f"): _*)
-              .select(col(c) +: valueCols.map(col): _*).filter(pred))
-        }
-        // same containment ladder as aggRange, including the legacy-row
-        // demotion: a NULL recorded sum is trusted only when the file's
-        // measures are all null (nulls_<v> = n_rows)
+        // coalesce: containment must be two-valued — a NULL verdict (a
+        // stats gap on a candidate row) would drop the file from BOTH the
+        // interior arithmetic and the boundary list; force it to the scan.
+        //
+        // Per value column a file may contribute metadata-only ONLY when
+        // its sum is actually RECORDED: a legacy (pre-sum-quad) manifest
+        // row gains a NULL sum_<v> when a later appendStoreSorted unions
+        // the manifests with allowMissingColumns — its nulls_<v> is
+        // non-null, so the null-count test alone would admit it and the
+        // coalesce(sum, 0) below would contribute 0 for real measures
+        // (a silently wrong non-NULL sum). A NULL sum is legitimate only
+        // when every measure in the file is null (nulls_<v> = n_rows);
+        // otherwise the row demotes to the boundary scan — "demote to the
+        // scan, never to a guess", enforced.
+        val keyContained = col(s"min_$c") >= lit(lo) && col(s"max_$c") <= lit(hi) &&
+          (if (valueCols.isEmpty) col(s"nulls_$c").isNotNull else col(s"nulls_$c") === 0)
         val contained = coalesce(
           valueCols.map(v => col(s"nulls_$v").isNotNull &&
               (col(s"sum_$v").isNotNull || col(s"nulls_$v") === col("n_rows")))
-            .foldLeft(col(s"min_$c") >= lit(lo) && col(s"max_$c") <= lit(hi) &&
-              col(s"nulls_$c") === 0)(_ && _),
+            .foldLeft(keyContained)(_ && _),
           lit(false))
+        // ONE bounded aggregate over the pruned manifest rows: the
+        // contained files' contributions plus the boundary file list
+        // (collect_list drops the nulls the when() leaves for contained
+        // files). Driver state is O(candidate files of this range).
         val aggs =
           sum(when(contained, col("n_rows") - col(s"nulls_$c"))
             .otherwise(lit(0L))).as("__n") +:
@@ -854,33 +700,22 @@ object StoreIndex {
             min(when(contained, col(s"min_$v"))).as(s"__min_$v"),
             max(when(contained, col(s"max_$v"))).as(s"__max_$v")))
         val row = cand.agg(aggs.head, aggs.tail: _*).collect()(0)
-        def longAt(name: String): Long =
-          if (row.isNullAt(row.fieldIndex(name))) 0L
-          else row.getLong(row.fieldIndex(name))
-        val interiorN = longAt("__n")
+        // the contained files' total `name` as a literal of type `t`
+        def interior(name: String, ifNull: Any, t: DataType): Column = {
+          val i = row.fieldIndex(s"__$name")
+          lit(if (row.isNullAt(i)) ifNull else row.get(i)).cast(t)
+        }
         val boundary = row.getSeq[String](row.fieldIndex("__boundary"))
-        def sumLit(v: String): Column = {
-          val i = row.fieldIndex(s"__sum_$v")
-          (if (row.isNullAt(i)) lit(0) else lit(row.get(i)))
-            .cast(target(s"sum_$v").dataType)
-        }
-        def boundLit(v: String, side: String): Column = {
-          val i = row.fieldIndex(s"__${side}_$v")
-          (if (row.isNullAt(i)) lit(null) else lit(row.get(i)))
-            .cast(target(s"${side}_$v").dataType)
-        }
         val base: DataFrame =
           if (boundary.isEmpty)
             Seq(1).toDF("__k").select(
               lit(0L).as("__bn") +: valueCols.flatMap(v => Seq(
-                lit(null).cast(target(s"sum_$v").dataType).as(s"__bsum_$v"),
+                lit(null).cast(typ(s"sum_$v")).as(s"__bsum_$v"),
                 lit(0L).as(s"__bcnt_$v"),
-                lit(null).cast(target(s"min_$v").dataType).as(s"__bmin_$v"),
-                lit(null).cast(target(s"max_$v").dataType).as(s"__bmax_$v"))): _*)
+                lit(null).cast(typ(s"min_$v")).as(s"__bmin_$v"),
+                lit(null).cast(typ(s"max_$v")).as(s"__bmax_$v"))): _*)
           else
-            spark.read.schema(full.schema)
-              .parquet(boundary.map(f => s"$path/$f"): _*)
-              .select(col(c) +: valueCols.map(col): _*).filter(pred)
+            matched(readFiles(path, full, boundary))
               .agg(count(lit(1)).as("__bn"),
                 valueCols.flatMap(v => Seq(
                   sum(col(v)).as(s"__bsum_$v"),
@@ -888,17 +723,19 @@ object StoreIndex {
                   min(col(v)).as(s"__bmin_$v"),
                   max(col(v)).as(s"__bmax_$v"))): _*)
         base.select(
-          (lit(interiorN) + col("__bn")).cast("long").as("n_rows") +:
+          (interior("n", 0L, LongType) + col("__bn")).cast("long").as("n_rows") +:
           valueCols.flatMap { v =>
-            val t = target(s"sum_$v").dataType
-            val cnt = lit(longAt(s"__cnt_$v")) + col(s"__bcnt_$v")
+            val t = typ(s"sum_$v")
+            val cnt = interior(s"cnt_$v", 0L, LongType) + col(s"__bcnt_$v")
             val total =
               when(cnt === 0, lit(null).cast(t))
-                .otherwise((sumLit(v) + coalesce(col(s"__bsum_$v"), lit(0)).cast(t)).cast(t))
+                .otherwise((interior(s"sum_$v", 0, t) +
+                  coalesce(col(s"__bsum_$v"), lit(0)).cast(t)).cast(t))
             Seq(
               total.as(s"sum_$v"),
-              least(boundLit(v, "min"), col(s"__bmin_$v")).as(s"min_$v"),
-              greatest(boundLit(v, "max"), col(s"__bmax_$v")).as(s"max_$v"),
+              least(interior(s"min_$v", null, typ(s"min_$v")), col(s"__bmin_$v")).as(s"min_$v"),
+              greatest(interior(s"max_$v", null, typ(s"max_$v")), col(s"__bmax_$v"))
+                .as(s"max_$v"),
               when(cnt === 0, lit(null).cast("double"))
                 .otherwise(total.cast("double") / cnt).as(s"avg_$v"))
           }: _*)

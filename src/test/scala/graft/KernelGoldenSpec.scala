@@ -146,9 +146,9 @@ class KernelGoldenSpec extends SparkSpec {
       "bloom_probe" -> (("graft_bloom_probe(s, s2, [J@, 128, 2, x)",
         "graft_bloom_probe(s, s2, 61b3cb0a, 128, 2, 'x')",
         BooleanType, true, false, "graft_bloom_probe requires (string, string), got (INT, INT)")),
-      "bpe_count" -> (("graft_bpe_count(s, (t,h), (th,e))", "graft_bpe_count(s)", IntegerType,
-        true, false, "graft_bpe_count requires string, got INT")),
-      "bpe_encode" -> (("graft_bpe_encode(s, (t,h), (th,e))", "graft_bpe_encode(s)",
+      "bpe_count" -> (("graft_bpe_count(s, (t,h), (th,e))", "graft_bpe_count(s, 383ef607)",
+        IntegerType, true, false, "graft_bpe_count requires string, got INT")),
+      "bpe_encode" -> (("graft_bpe_encode(s, (t,h), (th,e))", "graft_bpe_encode(s, 383ef607)",
         ArrayType(IntegerType, containsNull = false), true, false,
         "graft_bpe_encode requires string, got INT")),
       "http_parse" -> (("graft_http_parse(bin)", "graft_http_parse(bin)",
@@ -199,8 +199,10 @@ class KernelGoldenSpec extends SparkSpec {
         VectorExpressions.pqArgBest(col("vec"), codebook, Vector(1.0, 2.0), 0, 2),
         DedupExpressions.bloomProbeOf(col("s"), col("s2"), words, 128, 2, "x"),
         DedupExpressions.bloomProbeOf(col("s"), col("s2"), other, 128, 2, "x"),
-        DedupExpressions.bloomProbeOf(col("s"), col("s2"), words, 128, 2, "y"))
-    assert(df.columns.distinct.length === 7)
+        DedupExpressions.bloomProbeOf(col("s"), col("s2"), words, 128, 2, "y"),
+        DedupExpressions.bpeCountOf(col("s"), merges),
+        DedupExpressions.bpeCountOf(col("s"), merges.take(1)))
+    assert(df.columns.distinct.length === 9)
     df.columns.foreach(c => assert(df.select(col(s"`$c`")).columns.toSeq === Seq(c)))
   }
 

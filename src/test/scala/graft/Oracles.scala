@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, Similarity, TextAnalysis}
 
 /** Executable specifications the kernel-parity specs compare the
   * codegen'd kernels against: each states its kernel's law in plain
@@ -274,4 +275,25 @@ object Oracles {
     when(length(t) >= n,
       transform(sequence(lit(1), length(t) - (n - 1)), i => t.substr(i, lit(n))))
       .otherwise(array().cast("array<string>"))
+
+  /** Window-rank cosine top-k: the law of `Similarity.bruteForceTopK`'s
+    * bounded-heap aggregator path (ties break on corpus_id ascending). */
+  def bruteForceTopKWindow(
+      queries: DataFrame,
+      corpus: DataFrame,
+      queryIdCol: String,
+      queryVecCol: String,
+      corpusIdCol: String,
+      corpusVecCol: String,
+      k: Int,
+      excludeSelf: Boolean = true): DataFrame = {
+    val q = queries.select(col(queryIdCol).as("query_id"), col(queryVecCol).as("qv"))
+    val c = corpus.select(col(corpusIdCol).as("corpus_id"), col(corpusVecCol).as("cv"))
+    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("corpus_id").asc)
+    c.join(broadcast(q), if (excludeSelf) col("query_id") =!= col("corpus_id") else lit(true))
+      .withColumn("cos", round(Similarity.cosine(col("qv"), col("cv")), 6))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("query_id", "corpus_id", "cos", "rank")
+  }
 }

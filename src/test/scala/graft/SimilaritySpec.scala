@@ -85,7 +85,7 @@ class SimilaritySpec extends SparkSpec {
     val q = vecs.filter($"vec_id" < 3)
     val a = Similarity.bruteForceTopK(q, vecs, "vec_id", "embedding", "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val w = Similarity.bruteForceTopKWindow(q, vecs, "vec_id", "embedding", "vec_id", "embedding", 3)
+    val w = Oracles.bruteForceTopKWindow(q, vecs, "vec_id", "embedding", "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     assert(a === w)
   }

@@ -189,4 +189,17 @@ class StoreReadSpec extends SparkSpec {
     assert(read.get.count() === 4)
     assert(asOf.get.filter(col("k") === "c").count() === 1)
   }
+
+  test("an append onto a manifested store reads its fresh files under the written schema") {
+    val dir = tmp("append") + "/store"
+    StoreIndex.writeStoreSorted(spark.range(0, 1000).select(col("id").as("k"), col("id").as("v")),
+      dir, Seq("k"), numFiles = 4)
+    val (_, jobs) = jobsOf(StoreIndex.appendStoreSorted(
+      spark.range(5000, 5500).select(col("id").as("k"), col("id").as("v")), dir, Seq("k")))
+    // the fresh files are read under the written schema (no inference
+    // job), and the freshness proof checks the token on the manifest rows
+    // the append collects anyway
+    assert(jobs === 12)
+    assert(spark.read.parquet(StoreIndex.statsManifestPath(dir)).count() === 5)
+  }
 }
