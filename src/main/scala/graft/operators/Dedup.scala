@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Store
+
 /** Document deduplication for large-scale training-data pipelines.
   *
   * North-star extension (BASELINE.json `north_star`; not present in the
@@ -650,7 +652,6 @@ object Dedup {
       spansPath: String,
       k: Int = 50,
       stride: Int = 1): Seq[Long] = {
-    import graft.sources.Store
     gramKeyFormatGuard(spark, gramsPath)
     Store.readParquetSafe(spark, idsPath) match {
       case None => Seq.empty
@@ -693,7 +694,7 @@ object Dedup {
         else {
           val affectedSet = affected.toSet
           val docs = survivors.select(col(idCol).as("id"), col(textCol).as("t"))
-          def gramsOf(b: Long) = spark.read.parquet(gramsPath)
+          def gramsOf(b: Long) = Store.readParquet(spark, gramsPath)
             .filter(col("ingest_batch").cast("long") === b).select("gh")
           // ---- phase 0, read-only planning: everything the rewrites
           // consume is checkpointed or collected here, so no later write
@@ -706,7 +707,7 @@ object Dedup {
             // inner join against the survivor store additionally drops
             // ids whose documents are already gone (takedown deletes the
             // doc store first)
-            b -> spark.read.parquet(idsPath)
+            b -> Store.readParquet(spark, idsPath)
               .filter(col("ingest_batch") === b).select("id")
               .join(ids, Seq("id"), "left_anti")
               .localCheckpoint()
@@ -716,7 +717,7 @@ object Dedup {
           // caller supplies the earlier affected batches' survivor grams,
           // which ascending iteration has already produced)
           def standingFor(b: Long, mem: Map[Long, DataFrame]) =
-            (spark.read.parquet(gramsPath)
+            (Store.readParquet(spark, gramsPath)
               .filter(col("ingest_batch").cast("long") < b &&
                 !col("ingest_batch").cast("long").isInCollection(affected))
               .select("gh")
@@ -750,7 +751,7 @@ object Dedup {
           }.reduce(_ unionByName _).groupBy("gh").agg(min(col("lb")).as("lb"))
           // post-purge first occurrence of each withdrawn gram: unaffected
           // partitions as they stand, plus the survivor contributions
-          val postGrams = (spark.read.parquet(gramsPath)
+          val postGrams = (Store.readParquet(spark, gramsPath)
             .filter(!col("ingest_batch").cast("long").isInCollection(affected))
             .select(col("gh"), col("ingest_batch").cast("long").as("pb"))
             +: survivorGrams.toSeq.map { case (b, g) =>
@@ -776,7 +777,7 @@ object Dedup {
           // are unchanged); still before any gram/ids rewrite
           dependent.foreach { b =>
             graft.CacheScope.withScope { scope =>
-              val batchIds = spark.read.parquet(idsPath)
+              val batchIds = Store.readParquet(spark, idsPath)
                 .filter(col("ingest_batch").cast("long") === b).select("id")
               val batchDocs = scope.persist(batchIds.join(docs, Seq("id")))
               incrementalDuplicatedSpans(
@@ -833,7 +834,7 @@ object Dedup {
     // ONE checkpoint of every replay batch's survivor ids (not one per
     // batch): localCheckpoint severs the lineage from the ids parquet so
     // the ids phase can overwrite the partitions it was read from
-    val survivorAll = spark.read.parquet(idsPath)
+    val survivorAll = Store.readParquet(spark, idsPath)
       .select(col("ingest_batch").cast("long").as("__b"), col("id"))
       .filter(col("__b").isInCollection(replay))
       .join(ids, Seq("id"), "left_anti")
@@ -851,7 +852,7 @@ object Dedup {
       stampGramKeyFormat(spark, gramsPath)
       runConcurrently(replay.map(b => () =>
         incrementalDuplicatedSpans(batchDocs(b), "id", "t",
-            spark.read.parquet(gramsPath)
+            Store.readParquet(spark, gramsPath)
               .filter(col("ingest_batch").cast("long") < b).select("gh"),
             k, stride, scope)
           .write.mode("overwrite").parquet(s"$spansPath/ingest_batch=$b")))
@@ -1879,17 +1880,14 @@ object Dedup {
     }
   }
 
-  /** The driver fast path's union-find over a collected canonical edge
-    * set: path-compressed find, union roots toward the SMALLER id under
-    * the type's own ordering (numeric for integral ids, lexicographic
-    * for strings — exactly the `min` the distributed loop aggregates
-    * with), so every component is named by its minimum member. Output
-    * rows keep the input id type. */
-  private def driverComponents(
-      spark: org.apache.spark.sql.SparkSession,
-      canon: DataFrame): DataFrame = {
-    val dt = canon.schema("src").dataType
-    val lt: (Any, Any) => Boolean = dt match {
+  /** The driver fast paths' union-find over ids of type `dt`:
+    * path-compressed find, union roots toward the SMALLER id under the
+    * type's own ordering (numeric for integral ids, lexicographic for
+    * strings — exactly the `min` the distributed loop aggregates with), so
+    * every component is named by its minimum member. */
+  private final class MinUnionFind(dt: org.apache.spark.sql.types.DataType) {
+    private val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    private val lt: (Any, Any) => Boolean = dt match {
       case org.apache.spark.sql.types.StringType =>
         // UTF-8 BYTE order, not Java's UTF-16 code-unit order: the
         // distributed loop's `min` aggregates UTF8String binary
@@ -1903,7 +1901,6 @@ object Dedup {
       case _ =>
         (a, b) => a.asInstanceOf[Number].longValue < b.asInstanceOf[Number].longValue
     }
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent(r)
@@ -1911,29 +1908,45 @@ object Dedup {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    val rows = canon.collect()
-    canon.unpersist(blocking = false)
-    rows.foreach { e =>
-      val (a, b) = (e.get(0), e.get(1))
+    def union(a: Any, b: Any): Unit = {
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) {
-        if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
-      }
-      // register both endpoints even when already rooted (singleton init)
-      parent.getOrElseUpdate(a, find(a))
-      parent.getOrElseUpdate(b, find(b))
-      ()
+      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
-    val out = rows.iterator
-      .flatMap(e => Iterator(e.get(0), e.get(1)))
-      .toSet[Any].toSeq
-      .map(id => org.apache.spark.sql.Row(id, find(id)))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", dt, nullable = false),
-      org.apache.spark.sql.types.StructField("cluster_id", dt, nullable = false)))
+    /** Every id a union moved, with its root. Keys SNAPSHOT first:
+      * find() path-compresses (mutates the map), and mutating a mutable
+      * HashMap under its own keysIterator silently skips entries. */
+    def moved: Map[Any, Any] = parent.keys.toArray
+      .flatMap(k => { val r = find(k); if (r != k) Some(k -> r) else None })
+      .toMap
+  }
+
+  /** A driver-built frame of `rows`, one non-null column of type `dt` per
+    * name in `columns`. */
+  private def localFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      dt: org.apache.spark.sql.types.DataType,
+      columns: String*)(rows: Seq[org.apache.spark.sql.Row]): DataFrame =
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(out).asJava), schema)
+        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
+      org.apache.spark.sql.types.StructType(columns.map(
+        org.apache.spark.sql.types.StructField(_, dt, nullable = false))))
+
+  /** The driver fast path of [[duplicateClusters]] over a collected
+    * canonical edge set: one [[MinUnionFind]] over every edge. Output rows
+    * keep the input id type. */
+  private def driverComponents(
+      spark: org.apache.spark.sql.SparkSession,
+      canon: DataFrame): DataFrame = {
+    val dt = canon.schema("src").dataType
+    val uf = new MinUnionFind(dt)
+    val rows = canon.collect()
+    canon.unpersist(blocking = false)
+    rows.foreach(e => uf.union(e.get(0), e.get(1)))
+    localFrame(spark, dt, "id", "cluster_id")(rows.iterator
+      .flatMap(e => Iterator(e.get(0), e.get(1)))
+      .toSet[Any].toSeq
+      .map(id => org.apache.spark.sql.Row(id, uf.find(id))))
   }
 
   /** Cheap between-rounds stall signal: sum of per-label hashes. Null on
@@ -2214,76 +2227,36 @@ object Dedup {
       canon: DataFrame): DataFrame = {
     val spark = labels.sparkSession
     val dt = canon.schema("a").dataType
-    val lt: (Any, Any) => Boolean = dt match {
-      case org.apache.spark.sql.types.StringType =>
-        // UTF-8 byte order = the distributed min's UTF8String ordering
-        (x, y) => org.apache.spark.unsafe.types.UTF8String
-          .fromString(x.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String
-            .fromString(y.asInstanceOf[String])) < 0
-      case _ =>
-        (x, y) => x.asInstanceOf[Number].longValue < y.asInstanceOf[Number].longValue
-    }
     val pairsLocal = canon.collect().map(r => (r.get(0), r.get(1)))
     canon.unpersist(blocking = false)
     val endpoints = pairsLocal.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
     // endpoint-label lookup: batch-bounded output, broadcast semi-join —
     // the corpus-sized labeling streams map-side, nothing shuffles
-    val endsDf = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          endpoints.toSeq.map(org.apache.spark.sql.Row(_))).asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", dt, nullable = false))))
+    val endsDf = localFrame(spark, dt, "id")(endpoints.toSeq.map(org.apache.spark.sql.Row(_)))
     val labMap: Map[Any, Any] = labels
       .join(broadcast(endsDf), Seq("id"), "left_semi")
       .collect().map(r => r.get(0) -> r.get(1)).toMap
     def lblOf(id: Any): Any = labMap.getOrElse(id, id)
     // union-find over the CONDENSED edges, roots elected toward the min
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
+    val uf = new MinUnionFind(dt)
     pairsLocal.foreach { case (a, b) =>
       val (la, lb) = (lblOf(a), lblOf(b))
-      if (la != lb) {
-        val (ra, rb) = (find(la), find(lb))
-        if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-      }
+      if (la != lb) uf.union(la, lb)
     }
     // remap only labels the repair actually MOVED — identity rows would
-    // bloat the broadcast for nothing. Keys SNAPSHOT first: find()
-    // path-compresses (mutates the map), and mutating a mutable HashMap
-    // under its own keysIterator silently skips entries
-    val moved = parent.keys.toArray
-      .flatMap(k => { val r = find(k); if (r != k) Some(k -> r) else None })
-      .toMap
-    val outType = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", dt, nullable = false),
-      org.apache.spark.sql.types.StructField("cluster_id", dt, nullable = false)))
+    // bloat the broadcast for nothing
+    val moved = uf.moved
     val relabeled =
       if (moved.isEmpty) labels.select(col("id"), col("cluster_id"))
       else {
-        val remapDf = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              moved.toSeq.map { case (o, n) => org.apache.spark.sql.Row(o, n) }).asJava),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("cluster_id", dt, nullable = false),
-            org.apache.spark.sql.types.StructField("__new", dt, nullable = false))))
+        val remapDf = localFrame(spark, dt, "cluster_id", "__new")(
+          moved.toSeq.map { case (o, n) => org.apache.spark.sql.Row(o, n) })
         labels.join(broadcast(remapDf), Seq("cluster_id"), "left_outer")
           .select(col("id"), coalesce(col("__new"), col("cluster_id")).as("cluster_id"))
       }
     val freshRows = endpoints.toSeq.filterNot(labMap.contains)
       .map(id => org.apache.spark.sql.Row(id, { val l = lblOf(id); moved.getOrElse(l, l) }))
-    val freshDf = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(freshRows).asJava), outType)
-    relabeled.unionByName(freshDf)
+    relabeled.unionByName(localFrame(spark, dt, "id", "cluster_id")(freshRows))
   }
 
   /** Remove a batch of document ids from a standing [[duplicateClusters]]
@@ -2366,7 +2339,6 @@ object Dedup {
       labelsGenerations: Int = 0,
       purgeRetained: Boolean = false,
       purgeGraceMillis: Long = 0L): Unit = {
-    import graft.sources.Store
     val ids = removed.select(col(removed.columns.head).as("id")).distinct()
     Store.deleteFromStore(spark, indexPath, ids, "id")
     // swap-committed: a rename gap must not read as "nothing to repair"

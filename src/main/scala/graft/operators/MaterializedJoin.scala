@@ -250,7 +250,7 @@ object MaterializedJoin {
     // later batch ids after compaction. No broadcast hint: tombstones
     // accumulate between compactions and may outgrow a broadcast —
     // AQE picks the strategy from the actual size
-    val kept = spark.read.parquet(path).join(ids, idCols, "left_anti")
+    val kept = graft.sources.Store.readParquet(spark, path).join(ids, idCols, "left_anti")
     graft.sources.Store.writeStoreSwap(kept, path, Seq("ingest_batch"))
     applied.foreach { p =>
       val pp = new org.apache.hadoop.fs.Path(p)

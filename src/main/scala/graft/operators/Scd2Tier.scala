@@ -104,32 +104,25 @@ object Scd2Tier {
     * flat store the same runs would have produced. None until the first
     * run commits.
     *
-    * Each tier's schema is read from one parquet footer on the driver
-    * ([[Store.readParquet]]): building this frame runs no Spark job, and
-    * a count over it runs two. A tier falls back to Spark's own schema
-    * inference only where that footer cannot decide (a non-Spark writer,
-    * `spark.sql.parquet.mergeSchema` on); a tier with no data files
-    * (an archive holding only a failed append's empty `run=` directory)
-    * reads as absent, as before. */
+    * Each tier is listed once and its schema read from one parquet footer
+    * on the driver ([[Store.readParquet]]): building this frame runs no
+    * Spark job, and a count over it runs two. A tier racing a swap's
+    * rename gap (active: a concurrent run; archive: [[compactHistory]])
+    * reads from its `.old` aside, and a tier reads as absent only when
+    * both are missing or it holds no data file (an archive with only a
+    * failed append's empty `run=` directory) — [[Store.readThroughSwap]].
+    * Any other failure of either tier throws: an archive read as absent
+    * would make every closed version vanish from this read. */
   def readTiered(
       spark: SparkSession,
       activePath: String,
-      historyPath: String): Option[DataFrame] = {
-    // a reader racing a swap's rename gap (active: a concurrent run;
-    // history: compactHistory) sees the target missing while the `.old`
-    // aside holds the complete pre-swap store — fall through to it
-    // rather than silently reading "no store": for the archive that
-    // would mean every past version vanishing from this read
-    def readWithAside(p: String) =
-      Store.readParquetSafe(spark, p)
-        .orElse(Store.readParquetSafe(spark, p + ".old"))
-    readWithAside(activePath).map { active =>
-      readWithAside(historyPath)
+      historyPath: String): Option[DataFrame] =
+    Store.readThroughSwap(spark, activePath).map { active =>
+      Store.readThroughSwap(spark, historyPath)
         .map(h => h.drop("run").select(active.columns.map(col).toSeq: _*)
           .unionByName(active))
         .getOrElse(active)
     }
-  }
 
   /** Point-in-time read over the tiered store. Both validity bounds push
     * to the parquet scans of BOTH tiers; the archive's immutability makes

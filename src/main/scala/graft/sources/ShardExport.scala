@@ -125,7 +125,7 @@ object ShardExport {
           lit("expected exactly one part file per (shard, file_idx) dir, found "),
           size(col("__fns")).cast("string"), lit(" for shard="), col("shard"),
           lit("/file_idx="), col("file_idx"))))
-      spark.read.parquet(dir)
+      Store.readParquet(spark, dir)
         // partition-column inference narrows to int; restore the
         // assignment's long dtypes so the manifest schema is stable
         .select(col("shard").cast("long").as("shard"),
@@ -152,7 +152,7 @@ object ShardExport {
 
   /** The latest generation's manifest: (shard, file_idx, n_seqs, file). */
   def shardManifest(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"${latestGen(spark, path)}/$ManifestDir")
+    Store.readParquet(spark, s"${latestGen(spark, path)}/$ManifestDir")
 
   /** One shard file of the latest generation, by its deterministic
     * (shard, file_idx) address RESOLVED THROUGH THE MANIFEST to the
@@ -161,19 +161,19 @@ object ShardExport {
     * manifest lookup per call; no directory listing. */
   def readShard(spark: SparkSession, path: String, shard: Long, fileIdx: Long): DataFrame = {
     val gen = latestGen(spark, path)
-    val hits = spark.read.parquet(s"$gen/$ManifestDir")
+    val hits = Store.readParquet(spark, s"$gen/$ManifestDir")
       .filter(col("shard") === shard && col("file_idx") === fileIdx)
       .select("file").collect()
     require(hits.length == 1,
       s"shard=$shard/file_idx=$fileIdx resolves to ${hits.length} manifest rows in $gen")
-    spark.read.parquet(s"$gen/${hits.head.getString(0)}")
+    Store.readParquet(spark, s"$gen/${hits.head.getString(0)}")
   }
 
   /** Every sequence of the latest generation with its (shard, file_idx)
     * re-attached from the directory layout — the round-trip read the
     * specs pin against the input. */
   def readAllShards(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(latestGen(spark, path))
+    Store.readParquet(spark, latestGen(spark, path))
 
   /** Every (shard, pack_id) key across ALL committed generations — the
     * id-novelty absorber's probe side. Column-pruned: only the two key
@@ -182,7 +182,7 @@ object ShardExport {
     val gens = Store.listGenerations(spark, path)
     if (gens.isEmpty) None
     else Some(gens.map { g =>
-      spark.read.parquet(Store.generationPath(path, g))
+      Store.readParquet(spark, Store.generationPath(path, g))
         .select(col("shard").cast("long").as("shard"), col("pack_id"))
     }.reduce(_ unionByName _).distinct())
   }

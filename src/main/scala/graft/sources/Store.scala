@@ -3,14 +3,14 @@ package graft.sources
 import java.net.URI
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetReadSupport}
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.meta.MetaColumns
 
@@ -83,100 +83,81 @@ object Store {
     df.write.mode("overwrite").orc(path)
 
   /** `spark.read.parquet(path)` without its schema-inference job: the
-    * same frame (schema, partition columns, rows), with the schema read
-    * from one footer on the driver.
+    * same frame (schema, partition columns, rows, input files), built on
+    * one listing of the path by Spark's own file index.
     *
-    * With `mergeSchema` off, Spark infers a parquet directory's schema
-    * from ONE file — a `_common_metadata`, else a `_metadata` summary,
-    * else the data file first in full-path order — but ships that footer
-    * read as a one-task job. Here the driver reads the same footer's
-    * Spark schema (`ParquetReadSupport.SPARK_METADATA_KEY`) and pins it
-    * on the read. Partition columns stay with Spark's path inference, so
-    * keys like "007" come back inferred exactly as before. Finding the
-    * file lists only the directories on the way to it (see
-    * [[schemaFile]]).
+    * With `mergeSchema` off, Spark infers a parquet read's data schema
+    * from ONE file of its `InMemoryFileIndex` — sorted by full path, the
+    * first `_common_metadata`, else the first `_metadata`, else the first
+    * data file (`ParquetUtils.inferSchema`) — but ships that footer read
+    * as a one-task job. Here the driver reads the same footer's Spark
+    * schema (`ParquetReadSupport.SPARK_METADATA_KEY`) and builds the
+    * relation on the same index, so the store is listed once, exactly as
+    * `spark.read.parquet` lists it. Partition columns are the index's own
+    * discovery, so keys like "007" come back inferred exactly as before.
     *
     * The read falls back to plain `spark.read.parquet(path)` — its job,
-    * or its error — whenever the footer alone cannot decide: a missing,
-    * glob or single-file path; no data file; a data file under a
-    * directory that is not a `col=value` partition; a footer without the
-    * Spark key (a non-Spark writer) or naming a partition column; an
-    * unreadable footer; or `spark.sql.parquet.mergeSchema` on. */
+    * or its error — whenever the footer alone cannot decide: a glob path;
+    * `spark.sql.parquet.mergeSchema` on; a failed listing (a missing path
+    * included); no data file; a footer without the Spark key (a non-Spark
+    * writer) or naming a partition column; or an unreadable footer. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path).flatMap(s => Try(spark.read.schema(s)).toOption)
-      .getOrElse(spark.read).parquet(path)
+    readParquetPaths(spark, Seq(path))
 
-  /** The schema Spark's inference would give `path`'s data columns, read
-    * on the driver; None where [[readParquet]] falls back. */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val merging = spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean
+  /** [[readParquet]] over one or more roots: `spark.read.parquet(paths: _*)`
+    * on one listing of them all. */
+  private[graft] def readParquetPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
     // Spark globs any path holding one of these (SparkHadoopUtil.isGlobPath)
-    if (merging || path.exists("{}[]*?\\".contains(_))) None
-    else Try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val root = new Path(path)
-      val fs = root.getFileSystem(conf)
-      if (!fs.getFileStatus(root).isDirectory) None
-      else schemaFile(fs, root).flatMap { case (file, partitions) =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
-          HadoopReadOptions.builder(conf)
-            .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-        val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get(ParquetReadSupport.SPARK_METADATA_KEY)
-        finally reader.close()
-        Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
-          .filterNot(_.fieldNames.exists(f => partitions.exists(_.equalsIgnoreCase(f))))
-      }
-    }.toOption.flatten
+    Some(paths).filterNot(_.exists(_.exists("{}[]*?\\".contains(_))))
+      .flatMap(ps => Try(listParquet(spark, ps)).toOption)
+      .flatMap(footerRelation(spark, _))
+      .getOrElse(spark.read.parquet(paths: _*))
+
+  /** Spark's file index over `paths`, qualified as `spark.read` qualifies
+    * them: the one listing a store read makes. A missing root lists as
+    * empty. */
+  private def listParquet(spark: SparkSession, paths: Seq[String]): InMemoryFileIndex = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val roots = paths.map { p => val path = new Path(p); path.getFileSystem(conf).makeQualified(path) }
+    new InMemoryFileIndex(spark, roots, Map.empty, None, FileStatusCache.getOrCreate(spark))
   }
 
-  /** The file Spark's parquet schema inference reads under the directory
-    * `root`, with the partition column names on the way to it; None when
-    * there is none, or when the first data file sits below a directory
-    * that is not a `col=value` partition (Spark's partition discovery
-    * decides those layouts).
-    *
-    * Spark sorts every visible leaf file by its full path and takes the
-    * first `_common_metadata`, else the first `_metadata`, else the first
-    * data file (`ParquetUtils.splitFiles`). The first data file in
-    * full-path order is the first leaf of a depth-first walk that orders
-    * each directory's children by `name` for files and `name + "/"` for
-    * directories and skips directories with no data file, so only the
-    * directories on the way to it are listed. Summary files are looked
-    * for in those directories: parquet-mr writes them at the root of a
-    * job's output. Hidden names are the listing's
-    * (`HadoopFSUtils.shouldFilterOutPathName`). */
-  private def schemaFile(fs: FileSystem, root: Path): Option[(FileStatus, Seq[String])] = {
-    import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
-    def hidden(name: String) =
-      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-        name.endsWith("._COPYING_")) &&
-        !(name.startsWith(PARQUET_COMMON_METADATA_FILE) || name.startsWith(PARQUET_METADATA_FILE))
-    def summary(s: FileStatus) = s.isFile &&
-      Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)(s.getPath.getName)
-    val summaries = Seq.newBuilder[FileStatus]
-    def firstLeaf(dir: Path, chain: List[String]): Option[(FileStatus, List[String])] = {
-      val (sums, children) = fs.listStatus(dir).filterNot(s => hidden(s.getPath.getName))
-        .partition(summary)
-      summaries ++= sums
-      children.sortBy(s => s.getPath.getName + (if (s.isDirectory) "/" else "")).iterator
-        .map(s => if (s.isDirectory) firstLeaf(s.getPath, s.getPath.getName :: chain)
-          else Some(s -> chain))
-        .collectFirst { case Some(leaf) => leaf }
-    }
-    val leaf = firstLeaf(root, Nil)
-    val bySpark = summaries.result().sortBy(_.getPath.toString)
-    Seq(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE).iterator
-      .flatMap(n => bySpark.find(_.getPath.getName == n)).map(_ -> Nil).nextOption()
-      .orElse(leaf.filter(_._2.forall(_.contains("="))))
-      .map { case (file, chain) => file -> chain.map(_.takeWhile(_ != '=')) }
+  private val SummaryFiles = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+
+  /** The relation over `index` whose data schema is the Spark schema of
+    * the footer Spark's inference would read, made nullable as Spark makes
+    * it; None where that footer cannot decide (see [[readParquet]]). */
+  private def footerRelation(spark: SparkSession, index: InMemoryFileIndex): Option[DataFrame] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean) None
+    else Try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = index.allFiles().sortBy(_.getPath.toString)
+      def named(name: String) = files.find(_.getPath.getName == name)
+      val partitions = index.partitionSchema
+      named(PARQUET_COMMON_METADATA_FILE).orElse(named(PARQUET_METADATA_FILE))
+        .orElse(files.find(f => !SummaryFiles(f.getPath.getName)))
+        .flatMap(file => Option(ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS).getFileMetaData.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY)))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .filterNot(_.fieldNames.exists(f => partitions.fieldNames.exists(_.equalsIgnoreCase(f))))
+        .map(schema => spark.baseRelationToDataFrame(HadoopFsRelation(index, partitions,
+          nullable(schema).asInstanceOf[StructType], None, new ParquetFileFormat, Map.empty)(spark)))
+    }.toOption.flatten
+
+  /** `dt` with every field, element and value nullable: the data schema
+    * Spark gives a file relation (`DataType.asNullable`). */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** Safe Parquet read: None when the path is missing/unreadable
-    * (SCDHelpers.py:276-281 returns None on any error). The schema comes
-    * from one footer read on the driver ([[readParquet]]); where the
-    * footer cannot decide, Spark infers it as before, and a path with no
-    * data files still reads as None. */
+    * (SCDHelpers.py:276-281 returns None on any error), a path with no
+    * data files included; otherwise [[readParquet]]. */
   def readParquetSafe(spark: SparkSession, path: String): Option[DataFrame] =
     Try(readParquet(spark, path)).toOption
 
@@ -239,7 +220,7 @@ object Store {
     * bucket pruning for point lookups via the same derivation. */
   def writeStoreBucketed(df: DataFrame, path: String, buckets: Int = 256): Unit = {
     require(buckets >= 1 && buckets <= 65536, "buckets must be in [1, 65536]")
-    import org.apache.spark.sql.functions.{col, conv, lit, pmod}
+    import org.apache.spark.sql.functions.{conv, lit, pmod}
     // range-partition by (bucket, hash) then sort within tasks: write
     // parallelism stays at spark.sql.shuffle.partitions even for small
     // bucket counts (hash-repartitioning on the bucket alone would cap
@@ -299,7 +280,6 @@ object Store {
     * the rows in the table. Callers whose `rows` is an anti-join against
     * the table (the CDC delta) converge by re-running the same batch. */
   private[graft] def appendStoreTable(rows: DataFrame, table: String): Unit = {
-    import org.apache.spark.sql.functions.col
     val spark = rows.sparkSession
     // the command's rows are filtered driver-side: a filter in the plan
     // would cost a Spark job per commit
@@ -361,7 +341,6 @@ object Store {
   /** Bucket-pruned read of the rows that can contain `keyHash`: resolves the
     * bucket driver-side and reads only that directory's row groups. */
   def readStoreBucket(spark: SparkSession, path: String, keyHash: String, buckets: Int = 256): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val bucket = (Integer.parseInt(keyHash.substring(0, 4), 16) % buckets + buckets) % buckets
     readParquet(spark, path).filter(col(KeyBucket) === bucket).drop(KeyBucket)
   }
@@ -419,6 +398,29 @@ object Store {
       schema: Option[StructType] = None): Option[DataFrame] =
     if (!healSwap(spark, path)) None
     else Some(schema.fold(readParquet(spark, path))(spark.read.schema(_).parquet(path)))
+
+  /** The reader-side read of a [[writeStoreSwap]] store: a reader racing
+    * a swap's rename gap finds `path` missing while its `.old` aside holds
+    * the complete pre-swap store, so it reads the aside (and repairs
+    * nothing — healing is the writer's, [[readForSwap]]). None only when
+    * both are missing, or when the store's listing holds no data file
+    * (e.g. an archive holding only a failed append's empty `run=`
+    * directory); any other failure (a corrupt footer, an IO error)
+    * propagates naming the path: a reader that took it for "no store"
+    * would silently drop every row the store holds. */
+  private[graft] def readThroughSwap(spark: SparkSession, path: String): Option[DataFrame] = {
+    val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
+    Seq(path, path + ".old").find(p => fs.exists(new Path(p))).flatMap { p =>
+      try {
+        val index = listParquet(spark, Seq(p))
+        if (index.allFiles().forall(f => SummaryFiles(f.getPath.getName))) None
+        else Some(footerRelation(spark, index).getOrElse(spark.read.parquet(p)))
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          throw new java.io.IOException(s"cannot read the store at $p", e)
+      }
+    }
+  }
 
   /** Repair a crashed [[writeStoreSwap]] and say whether the store is
     * present: a missing target beside its `.old` aside means the crash
@@ -665,7 +667,6 @@ object Store {
       removed: DataFrame,
       idCol: String,
       partitionColumns: Seq[String] = Nil): Map[Long, Long] = {
-    import org.apache.spark.sql.functions.broadcast
     val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     val root = new Path(path)
     val preGens = listGenerations(spark, path)
@@ -718,8 +719,7 @@ object Store {
     * whatever column happened to be first would typically anti-join on
     * nothing and report a compliance erasure as done while the targeted
     * rows survive. */
-  private def removalIds(removed: DataFrame, idCol: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+  private def removalIds(removed: DataFrame, idCol: String): DataFrame = {
     if (removed.columns.contains(idCol)) removed.select(col(idCol)).distinct()
     else {
       require(removed.columns.length == 1,
@@ -1003,7 +1003,7 @@ object Store {
         val gens = listGenerations(spark, root).filter(x => x >= base && x <= pin)
         require(gens.nonEmpty,
           s"no committed generations at $root in [$base, $pin]")
-        name -> spark.read.parquet(gens.map(generationPath(root, _)): _*)
+        name -> readParquetPaths(spark, gens.map(generationPath(root, _)))
       }
       g -> (full ++ deltas)
     }
@@ -1303,7 +1303,6 @@ object Store {
       idCol: String,
       partitionColumns: Seq[String] = Nil,
       countDeleted: Boolean = false): Option[Long] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     // a rename gap read as "no store" would skip the takedown
     readForSwap(spark, path) match {
       case Some(df) =>
@@ -1346,7 +1345,6 @@ object Store {
       partitionColumns: Seq[String] = Nil,
       targetBytes: Long = 512L * 1024 * 1024): (Long, Long) = {
     require(targetBytes >= 1, "targetBytes must be positive")
-    import org.apache.spark.sql.functions.col
     val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     val before = countParquetFiles(fs, new Path(path))
     val bytes = fs.getContentSummary(new Path(path)).getLength
@@ -1376,7 +1374,6 @@ object Store {
     * a partitioned read — both in fastparquet (main.py:33) and in Spark
     * (SURVEY.md §7.4#6). */
   def canonicalize(df: DataFrame, schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.functions.col
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
   }
 }

@@ -173,6 +173,25 @@ class Scd2TierSpec extends SparkSpec {
     }
   }
 
+  test("a corrupt archive fails the tiered read instead of reading as absent") {
+    val base = Files.createTempDirectory("graft-tier-corrupt").toString
+    runAll(base)
+    val archived = Files.walk(java.nio.file.Paths.get(s"$base/history")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.toString.endsWith(".parquet"))
+    assert(archived.nonEmpty)
+    archived.foreach { f =>
+      Files.write(f, "not a parquet file".getBytes)
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    }
+    // read as absent, the archive would drop every closed version and
+    // leave only the active rows
+    val ex = intercept[java.io.IOException](
+      Scd2Tier.readTiered(spark, s"$base/active", s"$base/history"))
+    assert(ex.getMessage.contains(s"$base/history"))
+    intercept[java.io.IOException](
+      Scd2Tier.asOfTiered(spark, s"$base/active", s"$base/history", "2024-01-02"))
+  }
+
   test("bootstrap over a standing archive is refused, not silently re-genesised") {
     val base = Files.createTempDirectory("graft-tier-regen").toString
     runAll(base)

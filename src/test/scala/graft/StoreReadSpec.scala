@@ -13,9 +13,9 @@ import graft.sources.{Store, StoreIndex}
 
 /** [[Store.readParquet]] is `spark.read.parquet` with the schema read
   * from one footer on the driver: for every layout graft writes it gives
-  * the same schema (partition columns included) and the same rows, it
-  * runs no Spark job, and where the footer cannot decide it falls back to
-  * Spark's own inference. */
+  * the same schema (partition columns included), rows and input files,
+  * it lists the store no more often, it runs no Spark job, and where the
+  * footer cannot decide it falls back to Spark's own inference. */
 class StoreReadSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,11 +23,13 @@ class StoreReadSpec extends SparkSpec {
 
   private def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
 
-  private def assertSameRead(path: String): Unit = {
-    val ours = Store.readParquet(spark, path)
-    val inferred = spark.read.parquet(path)
-    assert(ours.schema === inferred.schema, path)
-    assert(rows(ours) === rows(inferred), path)
+  private def assertSameRead(paths: String*): Unit = {
+    val ours = Store.readParquetPaths(spark, paths)
+    val inferred = spark.read.parquet(paths: _*)
+    val at = paths.mkString(", ")
+    assert(ours.schema === inferred.schema, at)
+    assert(rows(ours) === rows(inferred), at)
+    assert(ours.inputFiles.sorted.toSeq === inferred.inputFiles.sorted.toSeq, at)
   }
 
   /** Spark jobs started while `body` runs. The listener bus is
@@ -97,6 +99,19 @@ class StoreReadSpec extends SparkSpec {
     StoreIndex.writeStoreSorted(df, s"$base/indexed", Seq("n"), numFiles = 4)
     assert(Files.isDirectory(Paths.get(StoreIndex.statsManifestPath(s"$base/indexed"))))
     assertSameRead(s"$base/indexed")
+  }
+
+  test("several roots, a partitioned export and one of its files read as spark.read does") {
+    val base = tmp("roots")
+    val gens = (1 to 3).map(i =>
+      Store.writeStoreGeneration(Seq((i, s"v$i")).toDF("n", "v"), s"$base/deltas", keep = 5))
+    val dirs = gens.map(Store.generationPath(s"$base/deltas", _))
+    assertSameRead(dirs: _*)
+    assert(jobsOf(Store.readParquetPaths(spark, dirs))._2 === 0)
+    Seq((0L, 0L, "x"), (0L, 1L, "y"), (1L, 0L, "z")).toDF("shard", "file_idx", "v")
+      .write.partitionBy("shard", "file_idx").parquet(s"$base/shards")
+    assertSameRead(s"$base/shards")
+    assertSameRead(partFile(s"$base/shards/shard=0/file_idx=1").toString)
   }
 
   test("two files with different schemas: the file Spark's inference reads wins") {
@@ -190,6 +205,30 @@ class StoreReadSpec extends SparkSpec {
     assert(asOf.get.filter(col("k") === "c").count() === 1)
   }
 
+  test("a store read lists each tier exactly as often as spark.read.parquet does") {
+    val base = tmp("lists")
+    // four days, a changing daily: the archive holds three run partitions
+    tiered(base, (1 to 4).map(v => Seq("a" -> v.toString, "b" -> "1")))
+    val (active, history) = (s"$base/active", s"$base/history")
+    def lists(body: => Any): Int = {
+      val before = ListCountingFileSystem.lists.get
+      body
+      ListCountingFileSystem.lists.get - before
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[ListCountingFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try {
+      val bySpark = Seq(active, history).map(p => p -> lists(spark.read.parquet(p))).toMap
+      assert(bySpark.values.forall(_ > 0), bySpark)
+      for (p <- Seq(active, history)) assert(lists(Store.readParquet(spark, p)) === bySpark(p), p)
+      assert(lists(Scd2Tier.readTiered(spark, active, history)) === bySpark.values.sum)
+    } finally {
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
   test("an append onto a manifested store reads its fresh files under the written schema") {
     val dir = tmp("append") + "/store"
     StoreIndex.writeStoreSorted(spark.range(0, 1000).select(col("id").as("k"), col("id").as("v")),
@@ -202,4 +241,24 @@ class StoreReadSpec extends SparkSpec {
     assert(jobs === 12)
     assert(spark.read.parquet(StoreIndex.statsManifestPath(dir)).count() === 5)
   }
+}
+
+/** The local file system counting directory listings. Counters are
+  * static: with `fs.file.impl.disable.cache` every lookup makes a new
+  * instance. */
+class ListCountingFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path, RemoteIterator}
+  import ListCountingFileSystem.lists
+  override def listStatus(f: Path): Array[FileStatus] = { lists.incrementAndGet(); super.listStatus(f) }
+  override def listStatusIterator(p: Path): RemoteIterator[FileStatus] = {
+    lists.incrementAndGet(); super.listStatusIterator(p)
+  }
+  override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
+    lists.incrementAndGet(); super.listLocatedStatus(f)
+  }
+  override def globStatus(p: Path): Array[FileStatus] = { lists.incrementAndGet(); super.globStatus(p) }
+}
+
+object ListCountingFileSystem {
+  val lists = new AtomicInteger
 }
